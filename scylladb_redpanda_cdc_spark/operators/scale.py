@@ -74,7 +74,8 @@ BROADCAST_INFEASIBLE_BYTES = int(
 
 def fs_bytes(spark: SparkSession, path: str) -> int | None:
     """On-disk bytes under ``path`` via the Hadoop FS API (local, HDFS and
-    S3 priced identically — the same call ``state_file_count`` uses), or
+    S3 priced identically — the same call that prices each foreachBatch
+    state version), or
     ``None`` on any failure (missing path, no filesystem, py4j hiccup).
     Driver-side metadata only; never launches a Spark job."""
     try:

@@ -3178,8 +3178,8 @@ def x61_boilerplate_strip(spark, sf_dir):
 
     Scale shape: two corpus passes by necessity (pass 1 builds the
     100-row boilerplate list — a global artifact; pass 2 strips), with
-    the list BROADCAST; coverage resolution is one hit-sized shuffle
-    (doc_id, pos) -> per-doc interval-union fold. Round 16 (§1.2 step 2):
+    the list BROADCAST; coverage resolution is a per-doc aggregate of
+    the hit positions -> interval-union fold. Round 16 (§1.2 step 2):
     the old form exploded 5 covered positions per hit and distinct-ed
     them — at the ×100 decade the top grams hit most rows of a
     template-saturated corpus, so the 5× exploded (doc, pos) stream blew
@@ -3188,7 +3188,11 @@ def x61_boilerplate_strip(spark, sf_dir):
     so |[p, p+4] ∪ …| is computable exactly by a sorted integer fold:
     contribution of p = greatest(p+4, end) − greatest(p−1, end) — pure
     integer algebra, bit-identical to counting distinct covered
-    positions, with nothing exploded and one exchange fewer."""
+    positions, with nothing exploded. The exchange count is unchanged
+    (``explain()``): the old 4-HashAggregate distinct cascade becomes one
+    partial+final ObjectHashAggregate pair (collect_list), and neither
+    form adds an exchange of its own, because ``_docs_fanned``'s doc_id
+    repartition already clusters the hits by doc."""
     d = _docs_fanned(spark, sf_dir)
     toks = d.select("doc_id", words(F.col("text")).alias("ws"))
     top = (

@@ -106,9 +106,7 @@ _SCRATCH_DISK_ROOT = os.environ.get("SG_SCRATCH_DIR") or tempfile.gettempdir()
 #: coalesce/width knobs, fixed with the same 32 MB gate discipline:
 #: below the gate (every fixture SF) placement is byte-identical to the
 #: old behavior, so floors are untouched.
-SCRATCH_TMPFS_GATE_BYTES = int(
-    os.environ.get("SG_SCRATCH_TMPFS_GATE_BYTES", str(32 * 1024 * 1024))
-)
+SCRATCH_TMPFS_GATE_BYTES = 32 * 1024 * 1024
 
 
 def tmpdir(prefix: str, bytes_hint: int | None = None) -> str:
@@ -160,9 +158,10 @@ def staged_dir_valid(path: str | None) -> bool:
 @contextmanager
 def scoped_conf(spark: SparkSession, key: str, value: str):
     """Temporarily set a SQL conf, restoring the caller's value (or unset)
-    on exit — same discipline as :func:`scoped_shuffle` but for an arbitrary
-    key. Use for confs that only need to cover an eager batch read/write,
-    never for confs a lazily-executed stream will need at run time."""
+    on exit. The scope must cover every execution that needs the value:
+    an eager batch read/write, or a stream run to completion under
+    availableNow (synchronous) — never a lazily-executed stream that
+    outlives it."""
     try:
         prev = spark.conf.get(key)
     except Exception:
@@ -231,9 +230,7 @@ STREAM_SINK_SHUFFLE_PARTITIONS = int(os.environ.get("SG_STREAM_SINK_SHUFFLE", "1
 #: gate discipline as ``operators/scale.py::FANOUT_GATE_BYTES``: every
 #: graded SF sits far below it, so fixture plans and floors are
 #: byte-identical; only corpus-scale streams size up.
-STREAM_WIDTH_GATE_BYTES = int(
-    os.environ.get("SG_STREAM_WIDTH_GATE_BYTES", str(32 * 1024 * 1024))
-)
+STREAM_WIDTH_GATE_BYTES = 32 * 1024 * 1024
 
 #: Target staged-source parquet bytes per micro-batch shuffle task above
 #: the gate. Parquet expands ~4x in flight (decompression + row overhead,
@@ -241,14 +238,12 @@ STREAM_WIDTH_GATE_BYTES = int(
 #: in-flight volume at ~32 MB — and at the round-13 x100 corpus
 #: (~175 MB staged changelog) yields a width in the same band as the
 #: hand-set SG_STREAM_SINK_SHUFFLE=32 the decade probes validated.
-STREAM_TARGET_TASK_SOURCE_BYTES = int(
-    os.environ.get("SG_STREAM_TARGET_TASK_SOURCE_BYTES", str(8 * 1024 * 1024))
-)
+STREAM_TARGET_TASK_SOURCE_BYTES = 8 * 1024 * 1024
 
 #: Hard cap on the adaptive width — past this a deployment resizes the
 #: target instead (the FANOUT_MAX_PARTITIONS convention, scaled to the
 #: per-micro-batch volumes streams actually carry).
-STREAM_WIDTH_MAX = int(os.environ.get("SG_STREAM_WIDTH_MAX", "2048"))
+STREAM_WIDTH_MAX = 2048
 
 _FILE_SOURCE_RE = re.compile(r"FileSource\[([^\]]+)\]")
 
@@ -306,95 +301,24 @@ from scylladb_redpanda_cdc_spark.operators.scale import (  # noqa: E402
 #: Target on-disk parquet bytes per file for foreachBatch STATE writes.
 #: 32 MB of parquet ≈ 100-150 MB of in-flight rows per write task — small
 #: enough to bound task memory, large enough to keep file counts sane.
-STATE_TARGET_FILE_BYTES = int(
-    os.environ.get("SG_STATE_TARGET_FILE_BYTES", str(32 * 1024 * 1024))
-)
+STATE_TARGET_FILE_BYTES = 32 * 1024 * 1024
 
 
-def _uri_to_local(path: str) -> str:
-    """file:///x and file:/x both normalize to /x (non-file URIs pass
-    through unchanged)."""
-    if path.startswith("file:"):
-        path = path[len("file:"):]
-        while path.startswith("//"):
-            path = path[1:]
-    return path
-
-
-def batch_source_bytes(checkpoint_dir: str, batch_id: int) -> int:
-    """On-disk bytes of the files a FileStreamSource admitted at
-    ``batch_id``, read from the stream's checkpoint source log
-    (``<ckpt>/sources/<i>/<batch_id>`` — one JSON line per file) —
-    driver-side metadata only, ``0`` when unpriceable (non-file sources,
-    compacted-away or missing log entries). The ``batch_df`` a
-    ``foreachBatch`` body receives is a bare LogicalRDD and exposes no
-    file metadata, so the checkpoint log is the authoritative record of
-    the batch's contribution; the foreachBatch state writers size their
-    state-version writes with it (prev + batch — VERDICT r15 task 1)."""
-    import glob as _glob
-    import json as _json
-
-    total = 0
-    try:
-        for srcdir in _glob.glob(os.path.join(checkpoint_dir, "sources", "*")):
-            logf = os.path.join(srcdir, str(batch_id))
-            entries = []
-            if os.path.isfile(logf):
-                with open(logf, encoding="utf-8") as fh:
-                    entries = [
-                        _json.loads(ln)
-                        for ln in fh
-                        if ln.lstrip().startswith("{")
-                    ]
-            else:  # compacted log: entries carry their batchId
-                compact = os.path.join(srcdir, f"{batch_id}.compact")
-                if os.path.isfile(compact):
-                    with open(compact, encoding="utf-8") as fh:
-                        entries = [
-                            e
-                            for ln in fh
-                            if ln.lstrip().startswith("{")
-                            for e in (_json.loads(ln),)
-                            if e.get("batchId") == batch_id
-                        ]
-            for e in entries:
-                path = _uri_to_local(e.get("path", ""))
-                try:
-                    total += os.path.getsize(path)
-                except OSError:
-                    pass
-    except Exception:
-        return 0
-    return total
-
-
-def state_file_count(
-    spark: SparkSession,
-    prev_path: str | None,
-    floor: int,
-    extra_bytes: int = 0,
-    prev_bytes: int | None = None,
-) -> int:
+def state_file_count(nbytes: int, floor: int) -> int:
     """Partition count for a foreachBatch state-version write: target
-    ~:data:`STATE_TARGET_FILE_BYTES` of parquet per file, estimated from
-    the PREVIOUS version's on-disk size PLUS the arriving batch's
-    contribution (``extra_bytes`` — the batch's priced source bytes, see
-    :func:`batch_input_bytes`), floored at the caller's fixed count so
-    fixture-scale plans and floors stay byte-identical.
+    ~:data:`STATE_TARGET_FILE_BYTES` of parquet per file for an estimated
+    ``nbytes`` written, floored at the caller's fixed count so
+    fixture-scale plans and floors stay byte-identical, capped at 4096.
 
-    Round 16 (VERDICT r15 task 1): sizing from the previous version ALONE
-    lags the written size by one batch — bounded ≤2× under steady drains,
-    but the r14 ×1000 s22 drill measured the v2 write at 302 MB/task
-    because it was sized from v1 (~2/3 of the final state) during a
-    3-batch full-history catch-up. prev + batch bounds the estimate from
-    ABOVE the written size (the merge never emits more than state ∪
-    batch), so the write task volume stays ≤ the per-file target at any
-    drain shape; the cost of an over-estimate is only smaller files.
-
-    ``prev_bytes``: callers that already track the previous version's
-    on-disk size (priced once per write) pass it here and no filesystem
-    call is made; ``None`` keeps the old behavior of pricing
-    ``prev_path`` via the Hadoop FS API.
+    The foreachBatch runner (``streaming/ops.py::_StateRunner``) passes
+    the previous version's on-disk bytes PLUS the drained log's staged
+    bytes. Every availableNow batch is a subset of the staged log and the
+    merge never emits more than state ∪ batch, so prev + log bounds the
+    written version from ABOVE: the write task volume stays ≤ the
+    per-file target at any drain shape (sizing from prev ALONE lagged the
+    written size by one batch — the r14 ×1000 s22 drill measured a
+    302 MB write task during a 3-batch catch-up); the cost of the looser
+    bound is only smaller files.
 
     Why not a bare ``coalesce(floor)``: coalesce propagates UP the
     physical plan — it caps the parallelism of the entire final merge
@@ -402,34 +326,15 @@ def state_file_count(
     measured that collapse as a 643 MB single task on s17's state merge
     (16 tasks each dragging state/16 of join+union work); another decade
     would put one task past executor memory. Sizing the count from the
-    state's actual bytes keeps per-task volume bounded at ANY corpus
-    size while file count stays proportional to data — the "target file
-    SIZE" rule real lakehouse writers use. The Hadoop FS API prices
-    HDFS/S3 state dirs the same way as local ones; on any failure the
-    floor is returned (never wrong, merely small)."""
-    nbytes = int(extra_bytes or 0)
-    if prev_bytes is not None:
-        nbytes += prev_bytes
-    elif prev_path:
-        try:
-            jvm = spark._jvm
-            p = jvm.org.apache.hadoop.fs.Path(prev_path)
-            fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
-            nbytes += fs.getContentSummary(p).getLength()
-        except Exception:
-            return floor
-    if nbytes <= 0:
-        return floor
+    state's bytes keeps per-task volume bounded at ANY corpus size while
+    file count stays proportional to data — the "target file SIZE" rule
+    real lakehouse writers use."""
     import math
 
     return max(floor, min(4096, math.ceil(nbytes / STATE_TARGET_FILE_BYTES)))
 
 
-def state_merge_width(
-    spark: SparkSession,
-    prev_path: str | None,
-    prev_bytes: int | None = None,
-) -> int | None:
+def state_merge_width(spark: SparkSession, prev_bytes: int) -> int | None:
     """Per-BATCH plan width for a foreachBatch state merge, sized from the
     PREVIOUS state version's on-disk bytes — or ``None`` when the ambient
     width already suffices (the caller then changes nothing).
@@ -455,18 +360,8 @@ def state_merge_width(
     ambient ``spark.sql.shuffle.partitions``. Results are width-invariant
     for every merge that runs under it (``tests/test_knob_invariance.py``
     pins the stream family), so this trades only task volume against
-    per-task overhead.
-
-    ``prev_bytes`` (round 16): callers that track the previous version's
-    size (priced once per write) pass it and NO per-batch filesystem call
-    is made — the round-15 form paid one ``getContentSummary`` per
-    micro-batch in five stream kernels for a guard that is dormant at
-    every fixture SF."""
-    if prev_bytes is None:
-        if not prev_path:
-            return None
-        prev_bytes = _fs_bytes(spark, prev_path)
-    if prev_bytes is None or prev_bytes < STREAM_WIDTH_GATE_BYTES:
+    per-task overhead."""
+    if prev_bytes < STREAM_WIDTH_GATE_BYTES:
         return None
     import math
 
@@ -481,66 +376,18 @@ def state_merge_width(
 
 
 @contextmanager
-def scoped_state_merge_width(
-    spark: SparkSession,
-    prev_path: str | None,
-    batch_session: SparkSession | None = None,
-    prev_bytes: int | None = None,
-):
-    """``scoped_shuffle`` at :func:`state_merge_width`'s state-sized width
-    for ONE merge batch's planning — a no-op (ambient width untouched)
-    whenever the helper returns ``None``, i.e. at every fixture SF.
-
-    ``batch_session`` (round 16, ADVICE r15): ``foreachBatch`` hands the
-    body a ``batch_df`` bound to the stream's CLONED session, and an
-    executed plan takes its shuffle width from the receiver Dataset's own
-    session — so a width set only on the outer session never reaches
-    batch-rooted plans (s14's classify write; s10/s22's merge unions that
-    reference ``batch_df``). Pass ``batch_df.sparkSession`` and the width
-    is scoped (set + restored) on BOTH sessions."""
-    n = state_merge_width(spark, prev_path, prev_bytes=prev_bytes)
-    if n is None:
-        yield
-        return
-    with scoped_shuffle(spark, n):
-        if batch_session is not None and batch_session is not spark:
-            with scoped_shuffle(batch_session, n):
-                yield
-        else:
-            yield
-
-
-@contextmanager
 def scoped_stream_shuffle(sdf: DataFrame):
-    """:func:`scoped_shuffle` at the width :func:`stream_shuffle_width`
-    derives from ``sdf``'s own staged file source(s) — the one entry point
-    every stream-run helper uses, so a corpus-scale staged stream plans
-    its micro-batches at a data-sized width with no hand-set knob."""
+    """Scope ``spark.sql.shuffle.partitions`` to the width
+    :func:`stream_shuffle_width` derives from ``sdf``'s own staged file
+    source(s) while a test-sink stream runs to completion (availableNow is
+    synchronous, so the scope covers all micro-batch planning) — the one
+    entry point every stream-run helper uses, so a corpus-scale staged
+    stream plans its micro-batches at a data-sized width with no hand-set
+    knob."""
     spark = sdf.sparkSession
-    with scoped_shuffle(spark, stream_shuffle_width(spark, sdf)):
+    width = stream_shuffle_width(spark, sdf)
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", str(width)):
         yield
-
-
-@contextmanager
-def scoped_shuffle(spark: SparkSession, n: int = -1):
-    """Temporarily set ``spark.sql.shuffle.partitions`` while a test-sink
-    stream runs to completion (availableNow is synchronous, so the scope
-    covers all micro-batch planning), restoring the caller's value after."""
-    if n < 0:
-        n = STREAM_SINK_SHUFFLE_PARTITIONS
-    key = "spark.sql.shuffle.partitions"
-    try:
-        prev = spark.conf.get(key)
-    except Exception:
-        prev = None
-    spark.conf.set(key, str(n))
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def run_to_table(sdf: DataFrame, mode: str = "append") -> DataFrame:

@@ -19,17 +19,17 @@ commit (Delta/Iceberg MERGE); the DAG is the same.
 from __future__ import annotations
 
 import os
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
 
 from scylladb_redpanda_cdc_spark.operators.cdc import materialize_latest
 from scylladb_redpanda_cdc_spark.sources.changelog import synth_changelog
+from scylladb_redpanda_cdc_spark.streaming import core
 from scylladb_redpanda_cdc_spark.streaming.core import (
     _fs_bytes,
-    batch_source_bytes,
     scoped_conf,
-    scoped_state_merge_width,
     scoped_stream_shuffle,
     staged_dir_valid,
     state_file_count,
@@ -57,14 +57,22 @@ _staged_changelogs: dict[tuple[str, str, int], str] = {}
 #: from 1.76 GB of orders parquet = 3.6×; 4 adds headroom — the same
 #: conservative posture as b31's fact-side multiplier, decade-checked
 #: there at ~2.2× actual).
-CHANGELOG_INFLIGHT_MULTIPLIER = int(
-    os.environ.get("SG_CHANGELOG_INFLIGHT_MULTIPLIER", "4")
-)
+CHANGELOG_INFLIGHT_MULTIPLIER = 4
 
 #: Target in-flight bytes per staging-WRITE task above the gate.
-STAGE_WRITE_TARGET_TASK_BYTES = int(
-    os.environ.get("SG_STAGE_WRITE_TARGET_TASK_BYTES", str(128 * 1024 * 1024))
-)
+STAGE_WRITE_TARGET_TASK_BYTES = 128 * 1024 * 1024
+
+
+def _pin_mtimes(paths: list[str]) -> None:
+    """Give ``paths`` strictly increasing mtimes in list order, all in
+    the past. FileStreamSource drains oldest-mtime first, so list order
+    becomes stream order, and under ``maxFilesPerTrigger=k`` each run of
+    k consecutive files becomes one micro-batch."""
+    import time
+
+    base = time.time() - 600 - len(paths)
+    for j, p in enumerate(paths):
+        os.utime(p, (base + j, base + j))
 
 
 def _changelog_files_per_batch(spark: SparkSession, sf_dir: str, n_files: int) -> int:
@@ -79,12 +87,8 @@ def _changelog_files_per_batch(spark: SparkSession, sf_dir: str, n_files: int) -
     (``state_file_count``'s docstring). Deterministic per (dataset,
     n_files): driver-side metadata only, so the reader can recompute the
     trigger cap without the stager threading it through the cache."""
-    from scylladb_redpanda_cdc_spark.streaming.core import (
-        STREAM_WIDTH_GATE_BYTES,
-    )
-
     src_bytes = table_bytes(spark, sf_dir, "orders") or 0
-    if src_bytes < STREAM_WIDTH_GATE_BYTES:
+    if src_bytes < core.STREAM_WIDTH_GATE_BYTES:
         return 1
     import math
 
@@ -120,7 +124,6 @@ def stage_changelog_stream(
     only; below the gate the layout, trigger cap and plans are
     byte-identical to the shipped fixture shape."""
     import glob as _glob
-    import time as _time
 
     inner = _changelog_files_per_batch(spark, sf_dir, n_files)
     cache_key = (spark.sparkContext.applicationId, sf_dir, n_files)
@@ -130,14 +133,8 @@ def stage_changelog_stream(
             "overwrite"
         ).parquet(stage)
         if inner > 1:
-            # pin file→batch grouping: part files sort in partition
-            # order; give batch i's files mtimes strictly older than
-            # batch i+1's so oldest-first draining groups them.
-            now = _time.time()
-            parts = sorted(_glob.glob(os.path.join(stage, "part-*.parquet")))
-            for j, p in enumerate(parts):
-                mtime = now - 600 + (j // inner) * 60 + (j % inner)
-                os.utime(p, (mtime, mtime))
+            # pin file→batch grouping: part files sort in partition order
+            _pin_mtimes(sorted(_glob.glob(os.path.join(stage, "part-*.parquet"))))
         _staged_changelogs[cache_key] = stage
     return (
         spark.readStream.schema(CHANGELOG_STREAM_DDL)
@@ -172,7 +169,6 @@ def stage_late_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap rules that out. Staged once per (session, dataset)."""
     import glob
     import shutil
-    import time as _time
 
     from pyspark.sql import functions as F
 
@@ -214,7 +210,7 @@ def stage_late_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 1
             ).write.partitionBy("file_rank").mode("overwrite").parquet(scratch)
         stage = tmpdir("late_events", bytes_hint=table_bytes(spark, sf_dir, "events"))
-        now = _time.time()
+        staged = []
         for i in range(3):
             found = glob.glob(
                 os.path.join(scratch, f"file_rank={i}", "part-*.parquet")
@@ -224,13 +220,116 @@ def stage_late_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             (src,) = found
             dst = os.path.join(stage, f"{i:02d}.parquet")
             shutil.move(src, dst)
-            mtime = now - 300 + i * 100
-            os.utime(dst, (mtime, mtime))
+            staged.append(dst)
+        _pin_mtimes(staged)
         _staged_late_events[cache_key] = stage
     return (
         spark.readStream.schema(EVENTS_NORMALIZED_DDL)
         .option("maxFilesPerTrigger", 1)
         .parquet(_staged_late_events[cache_key])
+    )
+
+
+class _StateRunner:
+    """The foreachBatch state machinery every incremental kernel shares
+    (S10/S22 merge, S14 dedup index, S15 heavy hitters, S17 MV): one
+    availableNow drain of ``changes`` in which each micro-batch reads the
+    current parquet version of its named states and writes each as
+    ``<state dir>/v{batch_id}``. The kernels keep only their per-batch
+    DataFrame logic; the runner owns the scratch and checkpoint dirs, the
+    version pointer, each version's priced bytes, the version sizing and
+    the per-batch merge-width scope.
+
+    Sizing: ``log_bytes`` is the staged log's on-disk size, priced once
+    per drain. The drain is availableNow, so every batch is a subset of
+    the staged log and prev + log bounds the written version from above
+    (see :func:`~scylladb_redpanda_cdc_spark.streaming.core.state_file_count`).
+
+    The version pointer lives in this object, not in the checkpoint: a
+    drain restarted on the same checkpoint would skip committed batches
+    but start from empty state, so every drain gets a fresh checkpoint."""
+
+    def __init__(self, changes: DataFrame, *states: str):
+        self.changes = changes
+        self.spark = changes.sparkSession
+        self.log_bytes = stream_source_bytes(changes) or 0
+        self._dirs = {s: tmpdir(s, bytes_hint=self.log_bytes) for s in states}
+        self.path: dict[str, str | None] = dict.fromkeys(states)
+        self.bytes: dict[str, int] = dict.fromkeys(states, 0)
+
+    def read(self, state: str) -> DataFrame | None:
+        """The current version of ``state``, or None before its first write."""
+        path = self.path[state]
+        return None if path is None else self.spark.read.parquet(path)
+
+    def write(
+        self, state: str, df: DataFrame, batch_id: int, floor: int, log: bool = True
+    ) -> None:
+        """Write ``df`` as ``state``'s version for ``batch_id`` in
+        ``state_file_count(prev + log, floor)`` files (prev alone with
+        ``log=False``), then price it for the next batch."""
+        nbytes = self.bytes[state] + (self.log_bytes if log else 0)
+        path = os.path.join(self._dirs[state], f"v{batch_id}")
+        df.coalesce(state_file_count(nbytes, floor)).write.mode("overwrite").parquet(path)
+        self.path[state] = path
+        self.bytes[state] = _fs_bytes(self.spark, path) or 0
+
+    def drain(self, body: Callable[[DataFrame, int], None]) -> None:
+        """Run ``body(batch_df, batch_id)`` on every micro-batch of an
+        availableNow drain, at the stream's source-sized width.
+
+        Each batch plans under ``state_merge_width`` of the FIRST state's
+        previous version (a no-op below its gate, i.e. at every fixture
+        SF), scoped on the outer session AND on ``batch_df``'s own cloned
+        session: an executed plan takes its shuffle width from the
+        receiver Dataset's session, so batch-rooted plans (s14's classify
+        write, the merge unions that reference ``batch_df``) would never
+        see an outer-only width."""
+        first = next(iter(self.path))
+
+        def batch(batch_df: DataFrame, batch_id: int) -> None:
+            # a module lookup, so a patched core.state_merge_width is seen
+            n = core.state_merge_width(self.spark, self.bytes[first])
+            with ExitStack() as scope:
+                if n is not None:
+                    for session in (self.spark, batch_df.sparkSession):
+                        scope.enter_context(
+                            scoped_conf(session, "spark.sql.shuffle.partitions", str(n))
+                        )
+                body(batch_df, batch_id)
+
+        with scoped_stream_shuffle(self.changes):
+            q = (
+                self.changes.writeStream.foreachBatch(batch)
+                .option("checkpointLocation", tmpdir("ckpt"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+
+
+def _split_touched(
+    prev: DataFrame, batch_latest: DataFrame, key_cols: list[str], n_batch_keys: int
+) -> tuple[DataFrame, DataFrame]:
+    """Split ``prev`` state rows into (untouched, touched) by the keys of
+    ``batch_latest``. One key probe marks touched keys and both sides are
+    filters on the marker (anti + semi as two joins would probe the same
+    hash table twice). The key set is broadcast only while it is small —
+    a catch-up batch past BROADCAST_KEY_CAP keys shuffles instead (AQE may
+    still re-plan it)."""
+    from pyspark.sql import functions as F
+
+    batch_keys = (
+        batch_latest.select(*key_cols)
+        .dropDuplicates(key_cols)
+        .withColumn("__hit", F.lit(1))
+    )
+    if n_batch_keys <= BROADCAST_KEY_CAP:
+        batch_keys = F.broadcast(batch_keys)
+    marked = prev.join(batch_keys, key_cols, "left")
+    return (
+        marked.filter(F.col("__hit").isNull()).drop("__hit"),
+        marked.filter(F.col("__hit").isNotNull()).drop("__hit"),
     )
 
 
@@ -257,11 +356,7 @@ def _run_incremental_merge(changes: DataFrame, key_cols: list[str], compact) -> 
     version write for a MERGE INTO on such a table; everything above
     the write (the touched-key discipline) transfers unchanged.
     """
-    from pyspark.sql import functions as F
-
-    spark = changes.sparkSession
-    base = tmpdir("state", bytes_hint=stream_source_bytes(changes))
-    current: dict[str, str | int | None] = {"path": None, "bytes": 0}
+    run = _StateRunner(changes, "state")
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
         # Scale shape: the full state is NEVER shuffled. Keys untouched by
@@ -275,91 +370,28 @@ def _run_incremental_merge(changes: DataFrame, key_cols: list[str], compact) -> 
         # persist: batch_latest feeds three consumers (key broadcast x2 +
         # union) and prev two (anti + semi) — without caching each would
         # recompute/rescan per consumer.
-        # Round 15 (VERDICT r14 task 3): the touched-key recompute's
-        # volume tracks accumulated STATE, not the arriving batch (a
-        # catch-up batch touching most keys re-leads most of the
-        # history), so the batch plans under a state-sized width when the
-        # state outgrows the ambient one (the continuous-trigger catch-up
-        # posture; the availableNow harness's source-sized ambient width
-        # already covers it). No-op below the 32 MB gate — fixture plans
-        # byte-identical. Round 16: the width is scoped on the BATCH
-        # session too (batch-rooted plans take their width from it —
-        # ADVICE r15), and the state size is the one priced at the last
-        # write, so the hot loop makes no filesystem calls here.
-        with scoped_state_merge_width(
-            spark,
-            current["path"],
-            batch_session=batch_df.sparkSession,
-            prev_bytes=current["bytes"],
-        ):
-            _merge_inner(batch_df, batch_id)
-
-    def _merge_inner(batch_df: DataFrame, batch_id: int) -> None:
         batch_latest = compact(batch_df).persist()
         n_batch_keys = batch_latest.count()
-        prev = (
-            spark.read.parquet(current["path"]).persist()
-            if current["path"] is not None
-            else None
-        )
+        prev = run.read("state")
         if prev is None:
             merged = batch_latest
         else:
-            # one key probe marks touched keys; split by the marker
-            # (anti+semi as two joins would probe the same hash table
-            # twice). Broadcast only while the batch key set is small —
-            # a catch-up batch past BROADCAST_KEY_CAP keys shuffles
-            # instead (AQE may still re-plan it).
-            batch_keys = (
-                batch_latest.select(*key_cols)
-                .dropDuplicates(key_cols)
-                .withColumn("__hit", F.lit(1))
-            )
-            if n_batch_keys <= BROADCAST_KEY_CAP:
-                batch_keys = F.broadcast(batch_keys)
-            marked = prev.join(batch_keys, key_cols, "left")
-            unaffected = marked.filter(F.col("__hit").isNull()).drop("__hit")
-            affected = (
-                marked.filter(F.col("__hit").isNotNull())
-                .drop("__hit")
-                .unionByName(batch_latest)
-            )
-            merged = unaffected.unionByName(compact(affected))
-        new_path = os.path.join(base, f"v{batch_id}")
+            prev = prev.persist()
+            untouched, touched = _split_touched(prev, batch_latest, key_cols, n_batch_keys)
+            merged = untouched.unionByName(compact(touched.unionByName(batch_latest)))
         # cap state-file count: unaffected keeps prev's partitioning and
         # affected adds the window's shuffle partitions, so without a
         # coalesce the state gains ~shuffle.partitions files per batch
-        # (compounding read fan-out). Real deployments target file SIZE
-        # here; a fixed small count is the local equivalent. Sized from
-        # prev + this batch's contribution (round 16 — the prev-only
-        # estimate lagged the written size by one batch: the r14 ×1000
-        # s22 drill's 302 MB write task).
-        merged.coalesce(
-            state_file_count(
-                spark,
-                current["path"],
-                16,
-                extra_bytes=batch_source_bytes(ckpt, batch_id),
-                prev_bytes=current["bytes"],
-            )
-        ).write.mode("overwrite").parquet(new_path)
-        current["path"] = new_path
-        current["bytes"] = _fs_bytes(spark, new_path) or 0
+        # (compounding read fan-out)
+        run.write("state", merged, batch_id, 16)
         batch_latest.unpersist()
         if prev is not None:
             prev.unpersist()
 
-    ckpt = tmpdir("ckpt")
-    with scoped_stream_shuffle(changes):
-        q = (
-            changes.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    assert current["path"] is not None, "stream produced no batches"
-    return spark.read.parquet(current["path"])
+    run.drain(merge)
+    state = run.read("state")
+    assert state is not None, "stream produced no batches"
+    return state
 
 
 def foreachbatch_upsert(
@@ -445,7 +477,6 @@ def stage_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, dataset)."""
     import glob
     import shutil
-    import time as _time
 
     from pyspark.sql import functions as F
 
@@ -467,7 +498,7 @@ def stage_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .parquet(scratch)
         )
         stage = tmpdir("docs_stream", bytes_hint=table_bytes(spark, sf_dir, "documents"))
-        now = _time.time()
+        staged = []
         for i in range(2):
             found = glob.glob(os.path.join(scratch, f"b={i}", "part-*.parquet"))
             if not found:
@@ -475,8 +506,8 @@ def stage_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             (src,) = found
             dst = os.path.join(stage, f"{i:02d}.parquet")
             shutil.move(src, dst)
-            mtime = now - 300 + i * 100
-            os.utime(dst, (mtime, mtime))
+            staged.append(dst)
+        _pin_mtimes(staged)
         _staged_doc_streams[cache_key] = stage
     return (
         spark.readStream.schema(DOCS_STREAM_DDL)
@@ -502,30 +533,10 @@ def incremental_dedup_stream(docs: DataFrame) -> DataFrame:
     join (same result, AQE re-plans), mirroring foreachbatch_upsert."""
     from pyspark.sql import functions as F
 
-    spark = docs.sparkSession
-    docs_hint = stream_source_bytes(docs)
-    out = tmpdir("dedup_out", bytes_hint=docs_hint)
-    idx_base = tmpdir("dedup_idx", bytes_hint=docs_hint)
-    current: dict[str, str | int | None] = {"path": None, "bytes": 0}
+    run = _StateRunner(docs, "dedup_idx")
+    out = tmpdir("dedup_out", bytes_hint=run.log_bytes)
 
     def classify(batch_df: DataFrame, batch_id: int) -> None:
-        # State-sized batch width above the gate (the shuffled-join
-        # fallback past BROADCAST_KEY_CAP probes the index, whose volume
-        # tracks the standing state); no-op at every fixture SF. Round 16:
-        # scoped on the batch session too — the classify write is rooted
-        # at batch_df, which plans under the stream's CLONED session, so
-        # the outer-session width never reached it (ADVICE r15) — and the
-        # state size is the one priced at the last write (no per-batch
-        # filesystem call).
-        with scoped_state_merge_width(
-            spark,
-            current["path"],
-            batch_session=batch_df.sparkSession,
-            prev_bytes=current["bytes"],
-        ):
-            _classify_inner(batch_df, batch_id)
-
-    def _classify_inner(batch_df: DataFrame, batch_id: int) -> None:
         hashed = batch_df.select(
             "doc_id", F.sha2(F.lower(F.trim("text")), 256).alias("text_hash")
         ).persist()
@@ -534,11 +545,7 @@ def incremental_dedup_stream(docs: DataFrame) -> DataFrame:
         ).persist()
         n_hashes = firsts.count()
         small = n_hashes <= BROADCAST_KEY_CAP
-        idx = (
-            spark.read.parquet(current["path"])
-            if current["path"] is not None
-            else None
-        )
+        idx = run.read("dedup_idx")
         if idx is None:
             hits = None
         else:
@@ -560,14 +567,11 @@ def incremental_dedup_stream(docs: DataFrame) -> DataFrame:
             .when(F.col("doc_id") > F.col("first_id"), "dup_in_batch")
             .otherwise("keep")
         )
-        # verdicts are batch-sized: size their file count from the batch's
-        # own priced bytes (round 16 — the index-prev proxy under-sized a
-        # catch-up batch's write by the same one-batch-lag class as s22's)
-        batch_bytes = batch_source_bytes(ckpt, batch_id)
+        # verdicts are batch-sized, and the drained log bounds any batch
         enriched.select(
             "doc_id", "text_hash", verdict.alias("verdict")
         ).coalesce(
-            state_file_count(spark, None, 4, extra_bytes=batch_bytes)
+            state_file_count(run.log_bytes, 4)
         ).write.mode("append").parquet(out)
         new_hashes = firsts.select("text_hash")
         merged = (
@@ -575,31 +579,12 @@ def incremental_dedup_stream(docs: DataFrame) -> DataFrame:
             if idx is None
             else idx.unionByName(new_hashes).distinct()
         )
-        new_path = os.path.join(idx_base, f"v{batch_id}")
-        merged.coalesce(
-            state_file_count(
-                spark,
-                current["path"],
-                8,
-                extra_bytes=batch_bytes,
-                prev_bytes=current["bytes"],
-            )
-        ).write.mode("overwrite").parquet(new_path)
-        current["path"] = new_path
-        current["bytes"] = _fs_bytes(spark, new_path) or 0
+        run.write("dedup_idx", merged, batch_id, 8)
         hashed.unpersist()
         firsts.unpersist()
 
-    ckpt = tmpdir("ckpt")
-    with scoped_stream_shuffle(docs):
-        q = (
-            docs.writeStream.foreachBatch(classify)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.read.parquet(out)
+    run.drain(classify)
+    return run.spark.read.parquet(out)
 
 
 def incremental_mv_stream(
@@ -621,16 +606,7 @@ def incremental_mv_stream(
     corpus-sized moves when a small delta lands."""
     from pyspark.sql import functions as F
 
-    spark = changes.sparkSession
-    log_hint = stream_source_bytes(changes)
-    state_base = tmpdir("mv_state", bytes_hint=log_hint)
-    mv_base = tmpdir("mv_agg", bytes_hint=log_hint)
-    current: dict[str, str | int | None] = {
-        "state": None,
-        "mv": None,
-        "state_bytes": 0,
-        "mv_bytes": 0,
-    }
+    run = _StateRunner(changes, "mv_state", "mv_agg")
     cents = F.floor(F.col("totalprice") * 100).cast("long")
 
     def contrib(df: DataFrame) -> DataFrame:
@@ -641,45 +617,21 @@ def incremental_mv_stream(
         )
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        # State-sized batch width above the gate (s10's discipline — see
-        # _run_incremental_merge); no-op at every fixture SF. Round 16:
-        # scoped on the batch session too, state size from the last
-        # write's pricing (no per-batch filesystem call).
-        with scoped_state_merge_width(
-            spark,
-            current["state"],
-            batch_session=batch_df.sparkSession,
-            prev_bytes=current["state_bytes"],
-        ):
-            _merge_inner(batch_df, batch_id)
-
-    def _merge_inner(batch_df: DataFrame, batch_id: int) -> None:
         batch_latest = materialize_latest(
             batch_df, key_cols, drop_deletes=False
         ).persist()
         n_batch_keys = batch_latest.count()
-        prev = (
-            spark.read.parquet(current["state"]).persist()
-            if current["state"] is not None
-            else None
-        )
+        prev = run.read("mv_state")
         if prev is None:
             affected_old = None
             merged_affected = batch_latest
             merged = batch_latest
         else:
-            batch_keys = batch_latest.select(*key_cols).withColumn(
-                "__hit", F.lit(1)
+            prev = prev.persist()
+            unaffected, affected_old = _split_touched(
+                prev, batch_latest, key_cols, n_batch_keys
             )
-            if n_batch_keys <= BROADCAST_KEY_CAP:
-                batch_keys = F.broadcast(batch_keys)
-            marked = prev.join(batch_keys, key_cols, "left")
-            unaffected = marked.filter(F.col("__hit").isNull()).drop("__hit")
-            affected_old = (
-                marked.filter(F.col("__hit").isNotNull())
-                .drop("__hit")
-                .persist()
-            )
+            affected_old = affected_old.persist()
             merged_affected = materialize_latest(
                 affected_old.unionByName(batch_latest),
                 key_cols,
@@ -692,11 +644,7 @@ def incremental_mv_stream(
             if affected_old is not None
             else new_c.limit(0)
         )
-        mv_prev = (
-            spark.read.parquet(current["mv"])
-            if current["mv"] is not None
-            else None
-        )
+        mv_prev = run.read("mv_agg")
         z = F.lit(0).cast("long")
         diff = (
             new_c.withColumnRenamed("n", "n_n").withColumnRenamed("c", "n_c")
@@ -722,50 +670,18 @@ def incremental_mv_stream(
                 + F.coalesce("n_c", z)
             ).alias("revenue_cents"),
         )
-        state_path = os.path.join(state_base, f"v{batch_id}")
-        mv_path = os.path.join(mv_base, f"v{batch_id}")
-        batch_bytes = batch_source_bytes(ckpt, batch_id)
-        merged.coalesce(
-            state_file_count(
-                spark,
-                current["state"],
-                16,
-                extra_bytes=batch_bytes,
-                prev_bytes=current["state_bytes"],
-            )
-        ).write.mode("overwrite").parquet(state_path)
+        run.write("mv_state", merged, batch_id, 16)
         # the MV is customers-sized: a batch's contribution to it is
-        # bounded by the batch itself, so prev + batch bounds the write
-        mv_new.coalesce(
-            state_file_count(
-                spark,
-                current["mv"],
-                4,
-                extra_bytes=batch_bytes,
-                prev_bytes=current["mv_bytes"],
-            )
-        ).write.mode("overwrite").parquet(mv_path)
-        current["state"] = state_path
-        current["mv"] = mv_path
-        current["state_bytes"] = _fs_bytes(spark, state_path) or 0
-        current["mv_bytes"] = _fs_bytes(spark, mv_path) or 0
+        # bounded by the batch itself, so prev + log bounds the write
+        run.write("mv_agg", mv_new, batch_id, 4)
         batch_latest.unpersist()
         if prev is not None:
             prev.unpersist()
         if affected_old is not None:
             affected_old.unpersist()
 
-    ckpt = tmpdir("ckpt")
-    with scoped_stream_shuffle(changes):
-        q = (
-            changes.writeStream.foreachBatch(merge)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    final = spark.read.parquet(current["mv"])
-    return final.filter(F.col("n_live") > 0)
+    run.drain(merge)
+    return run.read("mv_agg").filter(F.col("n_live") > 0)
 
 
 def heavy_hitters_stream(docs: DataFrame) -> DataFrame:
@@ -790,9 +706,7 @@ def heavy_hitters_stream(docs: DataFrame) -> DataFrame:
 
     from scylladb_redpanda_cdc_spark.operators.llm import words
 
-    spark = docs.sparkSession
-    state_base = tmpdir("hh_state")
-    current: dict[str, str | int | None] = {"path": None, "bytes": 0}
+    run = _StateRunner(docs, "hh_state")
 
     def update(batch_df: DataFrame, batch_id: int) -> None:
         counts = (
@@ -800,35 +714,20 @@ def heavy_hitters_stream(docs: DataFrame) -> DataFrame:
             .groupBy("tok")
             .agg(F.count("*").alias("n"))
         )
-        if current["path"] is not None:
-            state = spark.read.parquet(current["path"])
+        state = run.read("hh_state")
+        if state is not None:
             counts = (
                 state.unionByName(counts)
                 .groupBy("tok")
                 .agg(F.sum("n").alias("n"))
             )
-        new_path = os.path.join(state_base, f"v{batch_id}")
         # vocabulary-sized state: the batch's NEW-token contribution is
-        # zipf-bounded, far under the batch's raw bytes — prev alone (from
-        # the last write's pricing, no filesystem call) is the honest
-        # estimate here
-        counts.coalesce(
-            state_file_count(
-                spark, current["path"], 8, prev_bytes=current["bytes"]
-            )
-        ).write.mode("overwrite").parquet(new_path)
-        current["path"] = new_path
-        current["bytes"] = _fs_bytes(spark, new_path) or 0
+        # zipf-bounded, far under the log's raw bytes — prev alone is the
+        # honest estimate here
+        run.write("hh_state", counts, batch_id, 8, log=False)
 
-    with scoped_stream_shuffle(docs):
-        q = (
-            docs.writeStream.foreachBatch(update)
-            .option("checkpointLocation", tmpdir("ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    final = spark.read.parquet(current["path"])
+    run.drain(update)
+    final = run.read("hh_state")
     return (
         final.select("tok", F.col("n").cast("long").alias("n"))
         .orderBy(F.col("n").desc(), F.col("tok").asc())
@@ -897,7 +796,6 @@ def stage_events_split_stream(
     S19's dedup fixture. Staged once per (session, dataset, shape)."""
     import glob
     import shutil
-    import time as _time
 
     from pyspark.sql import functions as F  # noqa: F401  (parity with peers)
 
@@ -918,17 +816,17 @@ def stage_events_split_stream(
             scratch = tmpdir("evsplit_scratch", bytes_hint=table_bytes(spark, sf_dir, "events"))
             raw.repartition(n_files).write.mode("overwrite").parquet(scratch)
         stage = tmpdir("evsplit", bytes_hint=table_bytes(spark, sf_dir, "events"))
-        now = _time.time()
         parts = sorted(glob.glob(os.path.join(scratch, "part-*.parquet")))
+        staged = []
         for i, src in enumerate(parts):
             dst = os.path.join(stage, f"{i:02d}.parquet")
             shutil.move(src, dst)
-            mtime = now - 600 + i * 60
-            os.utime(dst, (mtime, mtime))
+            staged.append(dst)
         if redeliver:
             dup = os.path.join(stage, "99_redelivered.parquet")
             shutil.copyfile(os.path.join(stage, "00.parquet"), dup)
-            os.utime(dup, (now, now))
+            staged.append(dup)
+        _pin_mtimes(staged)
         _staged_event_splits[cache_key] = stage
     return (
         spark.readStream.schema(EVENTS_NORMALIZED_DDL)

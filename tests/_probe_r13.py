@@ -81,12 +81,14 @@ def _drive_stream(spark, changes, body) -> float:
     """Drain ``changes`` through foreachBatch(body) with availableNow;
     return wall seconds."""
     from scylladb_redpanda_cdc_spark.streaming.core import (
-        scoped_shuffle,
+        STREAM_SINK_SHUFFLE_PARTITIONS,
+        scoped_conf,
         tmpdir,
     )
 
     t0 = time.perf_counter()
-    with scoped_shuffle(spark):
+    width = str(STREAM_SINK_SHUFFLE_PARTITIONS)
+    with scoped_conf(spark, "spark.sql.shuffle.partitions", width):
         q = (
             changes.writeStream.foreachBatch(body)
             .option("checkpointLocation", tmpdir("ckpt_probe"))

@@ -47,8 +47,8 @@ def test_cc_loop_shuffle_width_is_result_invariant(
 def test_stream_sink_shuffle_width_is_result_invariant(
     spark, sf_dir, specs, monkeypatch
 ):
-    """scoped_shuffle defaults to STREAM_SINK_SHUFFLE_PARTITIONS (read per
-    call from streaming.core): stateful-stream results are
+    """stream_shuffle_width floors at STREAM_SINK_SHUFFLE_PARTITIONS (read
+    per call from streaming.core): stateful-stream results are
     partitioning-invariant — the knob trades state-store count for
     per-store overhead, nothing else."""
     from scylladb_redpanda_cdc_spark.streaming import core

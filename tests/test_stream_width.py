@@ -165,108 +165,89 @@ def test_state_merge_width_gate_formula_and_ambient_floor(
     sdf, staged = _staged_stream(spark, sf_dir)  # any real parquet dir
     nbytes = core._fs_bytes(spark, staged)
     assert nbytes < core.STREAM_WIDTH_GATE_BYTES
-    assert core.state_merge_width(spark, staged) is None
-    assert core.state_merge_width(spark, None) is None
-    assert core.state_merge_width(spark, "/root/testdata/nope/missing") is None
+    assert core.state_merge_width(spark, nbytes) is None
+    assert core.state_merge_width(spark, 0) is None
     monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
     target = max(1, nbytes // 24)
     monkeypatch.setattr(core, "STREAM_TARGET_TASK_SOURCE_BYTES", target)
     ambient = int(spark.conf.get("spark.sql.shuffle.partitions"))
     expected = math.ceil(nbytes / target)
-    assert core.state_merge_width(spark, staged) == (
+    assert core.state_merge_width(spark, nbytes) == (
         expected if expected > ambient else None
     )
     monkeypatch.setattr(core, "STREAM_WIDTH_MAX", 4)
-    assert core.state_merge_width(spark, staged) == (4 if 4 > ambient else None)
+    assert core.state_merge_width(spark, nbytes) == (4 if 4 > ambient else None)
     # ambient already wide enough -> None (the caller changes nothing)
     monkeypatch.setattr(core, "STREAM_WIDTH_MAX", 2048)
-    with core.scoped_shuffle(spark, expected + 7):
-        assert core.state_merge_width(spark, staged) is None
-    # the scoped wrapper: applies exactly the computed width inside, and
-    # restores the ambient conf after
-    before = spark.conf.get("spark.sql.shuffle.partitions")
-    with core.scoped_state_merge_width(spark, staged):
-        inner = spark.conf.get("spark.sql.shuffle.partitions")
-        assert inner == (str(expected) if expected > int(before) else before)
-    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    with core.scoped_conf(spark, "spark.sql.shuffle.partitions", str(expected + 7)):
+        assert core.state_merge_width(spark, nbytes) is None
 
 
 def test_state_merge_width_reaches_batch_rooted_plans(
     spark, sf_dir, monkeypatch
 ):
-    """Round 16 (ADVICE r15 medium): foreachBatch hands the body a
-    batch_df bound to the stream's CLONED session, and an executed plan
-    takes its shuffle width from the receiver Dataset's own session — so
-    the round-15 outer-session-only scope silently never reached
-    batch-rooted plans (s14's classify write, the merge unions that
-    reference batch_df). With the gate forced open: inside the scope BOTH
-    sessions carry the state-sized width, a batch-rooted shuffle actually
-    EXECUTES at it, and both confs are restored after."""
+    """foreachBatch hands the body a batch_df bound to the stream's CLONED
+    session, and an executed plan takes its shuffle width from the
+    receiver Dataset's own session — so an outer-session-only scope would
+    never reach batch-rooted plans (s14's classify write, the merge
+    unions that reference batch_df). With the gate forced open and a
+    standing state priced at the staged log's size, the state runner's
+    per-batch scope gives BOTH sessions the state-sized width, a
+    batch-rooted shuffle actually EXECUTES at it, and both confs are
+    restored after."""
     from pyspark.sql import functions as F
+
+    from scylladb_redpanda_cdc_spark.streaming import ops
 
     sdf, staged = _staged_stream(spark, sf_dir)
     nbytes = core._fs_bytes(spark, staged)
     monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
     # a width that beats any plausible ambient conf, so the helper fires
-    # both outside and inside the floored stream run
+    # inside the floored stream run
     target = max(1, nbytes // 48)
     monkeypatch.setattr(core, "STREAM_TARGET_TASK_SOURCE_BYTES", target)
     expected = math.ceil(nbytes / target)
-    assert core.state_merge_width(spark, staged) in (expected, None)
     assert expected > 32
+    # run at the fixture floor (width 1) so the ambient width is narrow
+    monkeypatch.setattr(core, "stream_shuffle_width", lambda _spark, _sdf: 1)
     outer_before = spark.conf.get("spark.sql.shuffle.partitions")
+    run = ops._StateRunner(sdf, "smw")
+    run.bytes["smw"] = nbytes
     seen: list[tuple] = []
+    sessions = []
 
     def body(batch_df, _bid):
         bs = batch_df.sparkSession
-        with core.scoped_state_merge_width(
-            spark, staged, batch_session=bs, prev_bytes=nbytes
+        sessions.append(bs)
+        # AQE coalescing off for the assertion only: the executed
+        # partition count must BE the scoped width, not a coalesced-down
+        # one.
+        with core.scoped_conf(
+            bs, "spark.sql.adaptive.coalescePartitions.enabled", "false"
         ):
-            # AQE coalescing off for the assertion only: the executed
-            # partition count must BE the scoped width, not a
-            # coalesced-down one.
-            with core.scoped_conf(
-                bs, "spark.sql.adaptive.coalescePartitions.enabled", "false"
-            ):
-                n_parts = (
-                    batch_df.groupBy("op")
-                    .agg(F.count("*").alias("n"))
-                    .rdd.getNumPartitions()
-                )
-            seen.append(
-                (
-                    spark.conf.get("spark.sql.shuffle.partitions"),
-                    bs.conf.get("spark.sql.shuffle.partitions"),
-                    n_parts,
-                )
+            n_parts = (
+                batch_df.groupBy("op")
+                .agg(F.count("*").alias("n"))
+                .rdd.getNumPartitions()
             )
         seen.append(
             (
                 spark.conf.get("spark.sql.shuffle.partitions"),
                 bs.conf.get("spark.sql.shuffle.partitions"),
+                n_parts,
             )
         )
 
-    # run at the fixture floor (width 1) so the ambient width is narrow
-    with core.scoped_shuffle(spark, 1):
-        q = (
-            sdf.writeStream.foreachBatch(body)
-            .option("checkpointLocation", core.tmpdir("smw_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    run.drain(body)
     assert spark.conf.get("spark.sql.shuffle.partitions") == outer_before
-    inner = [s for s in seen if len(s) == 3]
-    after = [s for s in seen if len(s) == 2]
-    assert inner and after
-    for outer_w, batch_w, n_parts in inner:
+    assert seen
+    for outer_w, batch_w, n_parts in seen:
         assert outer_w == str(expected)
         assert batch_w == str(expected)
         assert n_parts == expected  # the executed batch-rooted shuffle
     # restored after the scope: the stream's own (floor) width
-    for outer_w, batch_w in after:
-        assert outer_w == "1" and batch_w == "1"
+    for bs in sessions:
+        assert bs.conf.get("spark.sql.shuffle.partitions") == "1"
 
 
 def test_changelog_staging_bounds_write_tasks_above_gate(
@@ -279,7 +260,12 @@ def test_changelog_staging_bounds_write_tasks_above_gate(
     (mtime-grouped, maxFilesPerTrigger drains one group per trigger);
     batch COUNT — the declared semantics — is unchanged, and so is the
     drained row set. Below the gate (every fixture SF) inner == 1 and
-    the layout is byte-identical to the shipped shape."""
+    the layout is byte-identical to the shipped shape.
+
+    The second input forces ``inner >= 62``: part files must carry
+    strictly increasing mtimes in part order, or batch i's last files
+    would sort after batch i+1's first ones (the old ``60 s per batch +
+    1 s per file`` pinning collided past 60 files per batch)."""
     import glob
     import os
 
@@ -288,42 +274,45 @@ def test_changelog_staging_bounds_write_tasks_above_gate(
 
     # fixture discipline: below the gate one file per batch
     assert ops._changelog_files_per_batch(spark, sf_dir, 3) == 1
-    n_files = 5  # a key no other test stages, so the cache stays clean
     monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
     src = core.table_bytes(spark, sf_dir, "orders")
-    monkeypatch.setattr(
-        ops,
-        "STAGE_WRITE_TARGET_TASK_BYTES",
-        max(1, src * ops.CHANGELOG_INFLIGHT_MULTIPLIER // (n_files * 3)),
-    )
-    inner = ops._changelog_files_per_batch(spark, sf_dir, n_files)
-    assert inner >= 3
-    key = (spark.sparkContext.applicationId, sf_dir, n_files)
-    ops._staged_changelogs.pop(key, None)
-    try:
-        sdf = ops.stage_changelog_stream(spark, sf_dir, n_files=n_files)
-        staged = ops._staged_changelogs[key]
-        parts = sorted(glob.glob(os.path.join(staged, "part-*.parquet")))
-        assert len(parts) == n_files * inner
-        # mtimes group consecutive `inner` files into one batch
-        mts = [os.path.getmtime(p) for p in parts]
-        assert mts == sorted(mts)
-        batches: list[int] = []
-
-        def body(batch_df, _bid):
-            batches.append(batch_df.count())
-
-        q = (
-            sdf.writeStream.foreachBatch(body)
-            .option("checkpointLocation", core.tmpdir("clg_ckpt"))
-            .trigger(availableNow=True)
-            .start()
+    n_rows = synth_changelog(spark, sf_dir).count()
+    # n_files values no other test stages, so the cache stays clean
+    for n_files, min_inner in ((5, 3), (6, 62)):
+        monkeypatch.setattr(
+            ops,
+            "STAGE_WRITE_TARGET_TASK_BYTES",
+            max(1, src * ops.CHANGELOG_INFLIGHT_MULTIPLIER // (n_files * min_inner)),
         )
-        q.awaitTermination()
-        assert len(batches) == n_files  # batch count is declared semantics
-        assert sum(batches) == synth_changelog(spark, sf_dir).count()
-    finally:
+        inner = ops._changelog_files_per_batch(spark, sf_dir, n_files)
+        assert inner >= min_inner
+        key = (spark.sparkContext.applicationId, sf_dir, n_files)
         ops._staged_changelogs.pop(key, None)
+        try:
+            sdf = ops.stage_changelog_stream(spark, sf_dir, n_files=n_files)
+            staged = ops._staged_changelogs[key]
+            parts = sorted(glob.glob(os.path.join(staged, "part-*.parquet")))
+            assert len(parts) == n_files * inner
+            # strictly increasing mtimes group consecutive `inner` files
+            # into one batch
+            mts = [os.path.getmtime(p) for p in parts]
+            assert all(a < b for a, b in zip(mts, mts[1:])), n_files
+            batches: list[int] = []
+
+            def body(batch_df, _bid):
+                batches.append(batch_df.count())
+
+            q = (
+                sdf.writeStream.foreachBatch(body)
+                .option("checkpointLocation", core.tmpdir("clg_ckpt"))
+                .trigger(availableNow=True)
+                .start()
+            )
+            q.awaitTermination()
+            assert len(batches) == n_files  # batch count is declared semantics
+            assert sum(batches) == n_rows
+        finally:
+            ops._staged_changelogs.pop(key, None)
 
 
 def test_scratch_routing_by_bytes_hint(monkeypatch):
