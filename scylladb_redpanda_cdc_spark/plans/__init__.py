@@ -61,9 +61,9 @@ _REWRITTEN: tuple[str, ...] = (
     # from prev + the batch's checkpoint-log-priced contribution; the
     # state-sized width scoped on the batch session; per-batch FS calls
     # removed — VERDICT r15 tasks 1-2), s15 whose state writer gained
-    # the same prev-bytes threading, x39 because its sizing guard's
-    # admit contract changed underneath it (_is_materialized refuses
-    # bare scans now — task 7), and x61 whose covered-position kernel
+    # the same prev-bytes threading, x39 because its sizing guard moved
+    # from a priced postings count to the count-free documents-bytes
+    # estimate x11 uses, and x61 whose covered-position kernel
     # was rewritten (explode+distinct -> interval-union fold). Below
     # the 32 MB gates — every graded SF — the streaming plans are
     # byte-identical to the floored ones, but the builder bodies
@@ -238,14 +238,6 @@ def clear_session_frame_caches() -> int:
                             # Session/JVM already gone: nothing to release.
                             pass
                 val.clear()
-    # operators/scale's memoized sizing counts are session-scoped state
-    # too (ints only — no storage to release, but a probe that re-stages
-    # data at the same source path and calls this to force a cold build
-    # must not silently ride a stale count — ADVICE r15).
-    from scylladb_redpanda_cdc_spark.operators import scale as _scale
-
-    n += len(_scale._rows_cache)
-    _scale._rows_cache.clear()
     return n
 
 

@@ -42,10 +42,7 @@ from scylladb_redpanda_cdc_spark.operators.llm import (
 )
 from scylladb_redpanda_cdc_spark.operators.checkpoint import stage_checkpoint
 from scylladb_redpanda_cdc_spark.operators.rank import ranged_rank
-from scylladb_redpanda_cdc_spark.operators.scale import (
-    fanout_partitions,
-    fanout_partitions_by_bytes,
-)
+from scylladb_redpanda_cdc_spark.operators.scale import fanout_partitions_by_bytes
 from scylladb_redpanda_cdc_spark.plans import QuerySpec
 from scylladb_redpanda_cdc_spark.sources.tables import load_table as _T
 
@@ -1688,6 +1685,14 @@ def x38_doc_chunk(spark, sf_dir):
     )
 
 
+#: x39's in-flight span-postings bytes per byte of documents parquet —
+#: the count-free sizing multiplier, x11's recipe. Measured: df-capped
+#: distinct span postings × 24 B/row (two longs + shuffle overhead) =
+#: 1.17× the parquet bytes at sf0.01 and 1.28× at sf0.1; 1.7 adds ~30%
+#: headroom, and overestimating only shrinks tasks.
+X39_POSTINGS_BYTES_PER_SOURCE_BYTE = 1.7
+
+
 def x39_dedup_containment(spark, sf_dir):
     """Near-CONTAINMENT detection (doc A largely inside doc B) — the
     asymmetric complement of x33's span dedup and x11's symmetric Jaccard:
@@ -1725,18 +1730,14 @@ def x39_dedup_containment(spark, sf_dir):
     # Same scale guard as x11: above the parquet-size gate, give the
     # self-join a data-sized exchange on the posting key (both aliased
     # sides share the identical repartition subplan, so Spark reuses ONE
-    # exchange). The checkpointed frame makes the sizing count a cheap
-    # columnar scan, and count_key memoizes it per (session, source) so
-    # repeat builds (bench best-of-N) never re-count (round 15, VERDICT
-    # r14 task 1). None at every fixture SF — plan byte-identical.
-    # ~24 B/row: two longs + shuffle overhead.
-    n_fan = fanout_partitions(
+    # exchange), sized from the documents parquet bytes — a driver-side
+    # metadata call, no count job. None at every fixture SF — plan
+    # byte-identical.
+    n_fan = fanout_partitions_by_bytes(
         spark,
         os.path.join(sf_dir, "documents.parquet"),
-        sp,
-        row_bytes=24,
+        bytes_multiplier=X39_POSTINGS_BYTES_PER_SOURCE_BYTE,
         sides=2,
-        count_key="x39_spans",
     )
     sizes = sp.groupBy("doc_id").agg(F.count("*").alias("n"))
     fan = sp if n_fan is None else sp.repartition(n_fan, "span_hash")

@@ -31,6 +31,13 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from scylladb_redpanda_cdc_spark.operators import scale
+from scylladb_redpanda_cdc_spark.operators.scale import (
+    _session_shuffle_partitions,
+    fs_bytes,
+    sized_count,
+)
+
 #: Explicit source schema (file streams cannot infer; SURVEY.md §1.3 —
 #: schema drift must fail loudly, as in Kafka Connect). ``ts``'s physical
 #: type has varied across fixture vintages (TIMESTAMP(NANOS) -> long under
@@ -98,16 +105,6 @@ _SCRATCH_ROOT = os.environ.get("SG_SCRATCH_DIR") or (
 #: everything.
 _SCRATCH_DISK_ROOT = os.environ.get("SG_SCRATCH_DIR") or tempfile.gettempdir()
 
-#: Expected-volume bytes above which a scratch dir is placed on DISK even
-#: when tmpfs is the preferred root. tmpfs is RAM: the round-14 ×1000
-#: probe OOM-killed the JVM when two drills' ~8 GB state versions landed
-#: on /dev/shm (78 GB of tmpfs = 78 GB of physical memory gone) — the
-#: same fixture-constant-becomes-corpus-hazard class as the fixed
-#: coalesce/width knobs, fixed with the same 32 MB gate discipline:
-#: below the gate (every fixture SF) placement is byte-identical to the
-#: old behavior, so floors are untouched.
-SCRATCH_TMPFS_GATE_BYTES = 32 * 1024 * 1024
-
 
 def tmpdir(prefix: str, bytes_hint: int | None = None) -> str:
     """Per-run scratch dir (checkpoints, file-stream staging, sinks). Left
@@ -115,11 +112,13 @@ def tmpdir(prefix: str, bytes_hint: int | None = None) -> str:
 
     ``bytes_hint``: the caller's estimate of the volume this dir will
     hold (source-table or staged-stream bytes — driver-side metadata).
-    At or above :data:`SCRATCH_TMPFS_GATE_BYTES` the dir is created on
-    disk instead of RAM-backed tmpfs; below it (or with no hint — the
-    metadata-sized checkpoint/sink dirs) placement is unchanged."""
+    At or above the sizing gate (``operators/scale.py::GATE_BYTES``) the
+    dir is created on disk instead of RAM-backed tmpfs — tmpfs is RAM,
+    and the round-14 ×1000 probe OOM-killed the JVM on ~8 GB state
+    versions in /dev/shm; below it (or with no hint — the metadata-sized
+    checkpoint/sink dirs) placement is unchanged."""
     root = _SCRATCH_ROOT
-    if bytes_hint is not None and bytes_hint >= SCRATCH_TMPFS_GATE_BYTES:
+    if bytes_hint is not None and bytes_hint >= scale.GATE_BYTES:
         root = _SCRATCH_DISK_ROOT
     return tempfile.mkdtemp(prefix=f"sg_{prefix}_", dir=root)
 
@@ -127,7 +126,7 @@ def tmpdir(prefix: str, bytes_hint: int | None = None) -> str:
 def table_bytes(spark: SparkSession, sf_dir: str, table: str) -> int | None:
     """On-disk bytes of a fixture table's parquet — the standard
     ``bytes_hint`` for scratch that stages or derives from that table."""
-    return _fs_bytes(spark, os.path.join(sf_dir, f"{table}.parquet"))
+    return fs_bytes(spark, os.path.join(sf_dir, f"{table}.parquet"))
 
 
 def stream_source_bytes(sdf: DataFrame | None) -> int | None:
@@ -138,7 +137,7 @@ def stream_source_bytes(sdf: DataFrame | None) -> int | None:
         return None
     total = 0
     for path in stream_source_paths(sdf):
-        nbytes = _fs_bytes(sdf.sparkSession, path)
+        nbytes = fs_bytes(sdf.sparkSession, path)
         if nbytes is not None:
             total += nbytes
     return total or None
@@ -225,13 +224,6 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: these helpers and keeps the session's own setting.
 STREAM_SINK_SHUFFLE_PARTITIONS = int(os.environ.get("SG_STREAM_SINK_SHUFFLE", "1"))
 
-#: Staged-source bytes below which the micro-batch plan width stays at the
-#: fixture floor (:data:`STREAM_SINK_SHUFFLE_PARTITIONS`) — the same 32 MB
-#: gate discipline as ``operators/scale.py::FANOUT_GATE_BYTES``: every
-#: graded SF sits far below it, so fixture plans and floors are
-#: byte-identical; only corpus-scale streams size up.
-STREAM_WIDTH_GATE_BYTES = 32 * 1024 * 1024
-
 #: Target staged-source parquet bytes per micro-batch shuffle task above
 #: the gate. Parquet expands ~4x in flight (decompression + row overhead,
 #: the decade-4 b31 measurement), so 8 MB of source per task bounds
@@ -270,9 +262,9 @@ def stream_shuffle_width(spark: SparkSession, sdf: DataFrame | None) -> int:
     a fixture knob, not a deployment posture: at x100 it serialized
     5.5 M-row merge joins on one core and the probes had to hand-set
     ``SG_STREAM_SINK_SHUFFLE=32``. This helper applies the
-    ``state_file_count`` discipline to the PLAN width: below
-    :data:`STREAM_WIDTH_GATE_BYTES` of staged source (every fixture SF —
-    a driver-side Hadoop FS call, no Spark job) it returns the floor and
+    ``state_file_count`` discipline to the PLAN width: below the sizing
+    gate of staged source (every fixture SF — a driver-side Hadoop FS
+    call, no Spark job) it returns the floor and
     micro-batch plans are byte-identical to the floored ones; above it,
     the width targets ~:data:`STREAM_TARGET_TASK_SOURCE_BYTES` of source
     parquet per task, capped at :data:`STREAM_WIDTH_MAX`. Multiple file
@@ -280,27 +272,19 @@ def stream_shuffle_width(spark: SparkSession, sdf: DataFrame | None) -> int:
     width-invariant for every operator that runs under it
     (``tests/test_knob_invariance.py``), so this trades only per-store
     fixed cost against per-task volume."""
-    floor = STREAM_SINK_SHUFFLE_PARTITIONS
-    total = stream_source_bytes(sdf) or 0
-    if total < STREAM_WIDTH_GATE_BYTES:
-        return floor
-    import math
-
-    return max(
-        floor, min(STREAM_WIDTH_MAX, math.ceil(total / STREAM_TARGET_TASK_SOURCE_BYTES))
+    return sized_count(
+        stream_source_bytes(sdf) or 0,
+        STREAM_TARGET_TASK_SOURCE_BYTES,
+        STREAM_SINK_SHUFFLE_PARTITIONS,
+        STREAM_WIDTH_MAX,
     )
 
-
-# One implementation of the Hadoop getContentSummary pricing call for the
-# whole package (round-14 advice: this module carried a byte-identical
-# copy). Kept under the private name existing callers/probes use.
-from scylladb_redpanda_cdc_spark.operators.scale import (  # noqa: E402
-    fs_bytes as _fs_bytes,
-)
 
 #: Target on-disk parquet bytes per file for foreachBatch STATE writes.
 #: 32 MB of parquet ≈ 100-150 MB of in-flight rows per write task — small
 #: enough to bound task memory, large enough to keep file counts sane.
+#: Equal to the sizing gate, so below it ``ceil(nbytes / target) <= 1``
+#: and the gate never changes a count.
 STATE_TARGET_FILE_BYTES = 32 * 1024 * 1024
 
 
@@ -329,9 +313,7 @@ def state_file_count(nbytes: int, floor: int) -> int:
     state's bytes keeps per-task volume bounded at ANY corpus size while
     file count stays proportional to data — the "target file SIZE" rule
     real lakehouse writers use."""
-    import math
-
-    return max(floor, min(4096, math.ceil(nbytes / STATE_TARGET_FILE_BYTES)))
+    return sized_count(nbytes, STATE_TARGET_FILE_BYTES, floor, 4096)
 
 
 def state_merge_width(spark: SparkSession, prev_bytes: int) -> int | None:
@@ -350,10 +332,9 @@ def state_merge_width(spark: SparkSession, prev_bytes: int) -> int | None:
     cannot fire there (round-16 attribution); it exists for the
     continuous-trigger deployment posture, where the session width is a
     fixed cluster conf and a standing state outgrows it during catch-up.
-    Same gate discipline as every sizing guard: below
-    :data:`STREAM_WIDTH_GATE_BYTES` of state (every fixture SF) this
-    returns ``None`` and micro-batch plans stay byte-identical to the
-    floored ones; above it, the width targets
+    Same gate discipline as every sizing guard: below the sizing gate of
+    state (every fixture SF) this returns ``None`` and micro-batch plans
+    stay byte-identical to the floored ones; above it, the width targets
     ~:data:`STREAM_TARGET_TASK_SOURCE_BYTES` of state parquet per task
     (the same ~4× in-flight expansion estimate), capped at
     :data:`STREAM_WIDTH_MAX`, and is returned only when it beats the
@@ -361,18 +342,8 @@ def state_merge_width(spark: SparkSession, prev_bytes: int) -> int | None:
     for every merge that runs under it (``tests/test_knob_invariance.py``
     pins the stream family), so this trades only task volume against
     per-task overhead."""
-    if prev_bytes < STREAM_WIDTH_GATE_BYTES:
-        return None
-    import math
-
-    n = min(
-        STREAM_WIDTH_MAX, math.ceil(prev_bytes / STREAM_TARGET_TASK_SOURCE_BYTES)
-    )
-    try:
-        ambient = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except Exception:
-        ambient = 200
-    return n if n > ambient else None
+    n = sized_count(prev_bytes, STREAM_TARGET_TASK_SOURCE_BYTES, 1, STREAM_WIDTH_MAX)
+    return n if n > _session_shuffle_partitions(spark) else None
 
 
 @contextmanager

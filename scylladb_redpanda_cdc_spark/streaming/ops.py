@@ -25,10 +25,10 @@ from contextlib import ExitStack
 from pyspark.sql import DataFrame, SparkSession
 
 from scylladb_redpanda_cdc_spark.operators.cdc import materialize_latest
+from scylladb_redpanda_cdc_spark.operators.scale import fs_bytes, sized_count
 from scylladb_redpanda_cdc_spark.sources.changelog import synth_changelog
 from scylladb_redpanda_cdc_spark.streaming import core
 from scylladb_redpanda_cdc_spark.streaming.core import (
-    _fs_bytes,
     scoped_conf,
     scoped_stream_shuffle,
     staged_dir_valid,
@@ -87,21 +87,11 @@ def _changelog_files_per_batch(spark: SparkSession, sf_dir: str, n_files: int) -
     (``state_file_count``'s docstring). Deterministic per (dataset,
     n_files): driver-side metadata only, so the reader can recompute the
     trigger cap without the stager threading it through the cache."""
-    src_bytes = table_bytes(spark, sf_dir, "orders") or 0
-    if src_bytes < core.STREAM_WIDTH_GATE_BYTES:
-        return 1
-    import math
-
-    return max(
+    return sized_count(
+        table_bytes(spark, sf_dir, "orders") or 0,
+        STAGE_WRITE_TARGET_TASK_BYTES * n_files / CHANGELOG_INFLIGHT_MULTIPLIER,
         1,
-        min(
-            256,
-            math.ceil(
-                src_bytes
-                * CHANGELOG_INFLIGHT_MULTIPLIER
-                / (n_files * STAGE_WRITE_TARGET_TASK_BYTES)
-            ),
-        ),
+        256,
     )
 
 
@@ -272,7 +262,7 @@ class _StateRunner:
         path = os.path.join(self._dirs[state], f"v{batch_id}")
         df.coalesce(state_file_count(nbytes, floor)).write.mode("overwrite").parquet(path)
         self.path[state] = path
-        self.bytes[state] = _fs_bytes(self.spark, path) or 0
+        self.bytes[state] = fs_bytes(self.spark, path) or 0
 
     def drain(self, body: Callable[[DataFrame, int], None]) -> None:
         """Run ``body(batch_df, batch_id)`` on every micro-batch of an

@@ -3,7 +3,7 @@
 The decade-3 probe (`_probe_r13b.py`) measured x11's max task growing
 53 → 119 MB across ×10 → ×100 under a FIXED shuffle-partition count —
 the postings exchange was sized by a global conf, not by the data.
-`operators/scale.py::fanout_partitions` now sizes that exchange from
+`operators/scale.py::sized_count` now sizes that exchange from
 the counted postings above a 32 MB source-parquet gate.
 
 This probe measures the guard's effect where it matters: the ×100
@@ -77,12 +77,12 @@ def main():
     print(f"== {qid} at x100, 32-partition session")
     # restore the DEPLOYED gate (env override included), not a re-typed
     # constant — cell B must measure the configuration actually shipped
-    deployed_gate = scale.FANOUT_GATE_BYTES
+    deployed_gate = scale.GATE_BYTES
     try:
-        scale.FANOUT_GATE_BYTES = 1 << 60
+        scale.GATE_BYTES = 1 << 60
         a = cell(spark, specs, qid, r13b.X100_DIR, "A guard disabled (conf-sized)")
     finally:
-        scale.FANOUT_GATE_BYTES = deployed_gate
+        scale.GATE_BYTES = deployed_gate
     b = cell(spark, specs, qid, r13b.X100_DIR, "B guard active (data-sized)")
     print(f"  pair sets equal-count: {a == b}")
     spark.stop()

@@ -43,6 +43,7 @@ def main():
     app = r12._app_id()
 
     # Show the widths the helper would pick for the x100 staged sources.
+    from scylladb_redpanda_cdc_spark.operators.scale import fs_bytes
     from scylladb_redpanda_cdc_spark.streaming import core as score
     from scylladb_redpanda_cdc_spark.streaming.ops import (
         stage_changelog_stream,
@@ -57,7 +58,7 @@ def main():
         ),
     ):
         paths = score.stream_source_paths(sdf)
-        nbytes = sum(score._fs_bytes(spark, p) or 0 for p in paths)
+        nbytes = sum(fs_bytes(spark, p) or 0 for p in paths)
         print(
             f"  {label:24s} staged {nbytes / 1e6:7.1f} MB -> width "
             f"{score.stream_shuffle_width(spark, sdf)}"

@@ -235,3 +235,32 @@ for qid in ("flagship_cdc_materialize", "x2_dedup_fuzzy_minhash",
         timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-2000:]
+
+
+def test_package_env_knobs_are_exactly_the_declared_set():
+    """Knob creep guard: the package reads exactly these environment
+    variables. A sizing target or gate is a module constant (tests
+    monkeypatch the attribute), not a new env knob; adding one means
+    updating this set on purpose."""
+    import glob
+    import re
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scylladb_redpanda_cdc_spark",
+    )
+    read = re.compile(r"""(?:environ\.get\(|environ\[|getenv\()\s*["']([^"']+)["']""")
+    names = set()
+    for path in glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True):
+        with open(path, encoding="utf-8") as f:
+            names.update(read.findall(f.read()))
+    assert names == {
+        "SG_SCRATCH_DIR",
+        "SG_STREAM_SINK_SHUFFLE",
+        "SG_BROADCAST_KEY_CAP",
+        "SG_PACK_SHARDS",
+        "SG_CC_LOOP_SHUFFLE",
+        "SPARK_MASTER",
+        "SPARK_GRAFT_CPUS",
+        "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+    }

@@ -1,14 +1,16 @@
-"""operators/scale.py — data-adaptive fan-out sizing (round 13).
+"""operators/scale.py — the one sizing gate and formula.
 
-Pins the three contracts the x11/x39 scale guard rests on:
+Pins the three contracts every sized count rests on:
 
-1. The parquet-size GATE: at every fixture SF the helper returns None
-   without running a Spark job, so the floored plans are byte-identical.
-2. The sizing formula above the gate: count-based, targets
-   FANOUT_TARGET_PARTITION_BYTES per task, floored by the session
-   shuffle-partition count, capped at FANOUT_MAX_PARTITIONS.
+1. The GATE: below GATE_BYTES of source bytes (every fixture SF) a sized
+   count is its floor and the fan-out helper returns None, so the floored
+   plans are byte-identical.
+2. The formula above the gate: ceil(bytes / per-task bytes), clamped to
+   [floor, cap]; the fan-out helper folds its in-flight multiplier into
+   the per-task bytes and is further floored by the session
+   shuffle-partition count.
 3. Semantics under the guard: forcing the adaptive path at fixture scale
-   changes x11's RESULT not at all (same pairs, same jaccard values).
+   changes x11's and x39's RESULTS not at all.
 """
 
 from __future__ import annotations
@@ -31,149 +33,20 @@ def test_fs_bytes_none_on_missing_path(spark):
     assert scale.fs_bytes(spark, "/root/testdata/nope/does-not-exist") is None
 
 
-def test_gate_short_circuits_at_fixture_scale(spark, sf_dir):
-    """Fixture documents.parquet is far below the 32 MB gate: None, and
-    the postings argument is never touched (passing a poison object in
-    place of a DataFrame proves no count job can have run)."""
-
-    class Poison:
-        def count(self):  # pragma: no cover - the assertion IS non-use
-            raise AssertionError("gate must short-circuit before count()")
-
-    out = scale.fanout_partitions(
-        spark, os.path.join(sf_dir, "documents.parquet"), Poison(), row_bytes=56
-    )
-    assert out is None
-
-
-def test_sizing_formula_above_gate(spark, sf_dir, monkeypatch):
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
-    monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 1000)
-    rows = spark.range(500).persist()  # 500 rows * 56 B / 1000 B -> 28
-    try:
-        sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        n = scale.fanout_partitions(
-            spark, os.path.join(sf_dir, "documents.parquet"), rows, row_bytes=56
-        )
-        expected = -(-500 * 56 // 1000)  # ceil
-        assert n == (expected if expected > sess else None)
-        # Make the target small enough that n must beat any session setting.
-        monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 56)
-        assert scale.fanout_partitions(
-            spark, os.path.join(sf_dir, "documents.parquet"), rows, row_bytes=56
-        ) == 500
-    finally:
-        rows.unpersist()
-
-
-def test_session_floor_and_hard_cap(spark, sf_dir, monkeypatch):
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
-    rows = spark.range(10).persist()
-    try:
-        # Tiny postings at the default 64 MB target: session default wins.
-        assert (
-            scale.fanout_partitions(
-                spark, os.path.join(sf_dir, "documents.parquet"), rows, row_bytes=56
-            )
-            is None
-        )
-        monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 1)
-        monkeypatch.setattr(scale, "FANOUT_MAX_PARTITIONS", 64)
-        assert (
-            scale.fanout_partitions(
-                spark, os.path.join(sf_dir, "documents.parquet"), rows, row_bytes=56
-            )
-            == 64
-        )
-    finally:
-        rows.unpersist()
-
-
-def test_unmaterialized_postings_rejected_above_gate(spark, sf_dir, monkeypatch):
-    """The sizing count must never replay corpus-sized lineage: above the
-    gate, a frame that is neither persisted nor checkpointed is a caller
-    bug and raises ``RuntimeError`` (not ``assert`` — the contract must
-    survive ``python -O``; round-14 advice); the same frame sails through
-    with a pre-counted rows= (no count job, frame untouched)."""
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
-    monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 56)
-    raw = spark.range(500).selectExpr("id * 2 AS id")  # real lineage, unpersisted
-    path = os.path.join(sf_dir, "documents.parquet")
-    with pytest.raises(RuntimeError, match="persisted or"):
-        scale.fanout_partitions(spark, path, raw, row_bytes=56)
-    # rows= bypasses both the contract check and the count.
-    assert scale.fanout_partitions(spark, path, raw, row_bytes=56, rows=500) == 500
-    # a localCheckpoint'ed frame satisfies the contract too (x39's path).
-    ck = spark.range(500).selectExpr("id * 2 AS id").localCheckpoint(eager=True)
-    assert scale.fanout_partitions(spark, path, ck, row_bytes=56) == 500
-
-
-def test_bare_relation_refused_above_gate(spark, sf_dir, monkeypatch):
-    """Round 16 (VERDICT r15 task 7): an un-persisted bare source scan is
-    REFUSED, not admitted-with-a-warning — counting it re-scans the
-    relation, exactly what the contract exists to prevent. Storage level
-    or checkpoint evidence (LogicalRDD) are the only admit paths now."""
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
-    path = os.path.join(sf_dir, "documents.parquet")
-    bare = spark.read.parquet(path)  # bare relation, no storage level
-    assert not scale._is_materialized(bare)
-    with pytest.raises(RuntimeError, match="persisted or"):
-        scale.fanout_partitions(spark, path, bare, row_bytes=56)
-    # persisting the same frame flips the verdict (and rows= still
-    # bypasses the contract entirely)
-    bare2 = spark.read.parquet(path).persist()
-    try:
-        assert scale._is_materialized(bare2)
-    finally:
-        bare2.unpersist()
-    assert scale.fanout_partitions(spark, path, bare, row_bytes=56, rows=10**9)
-
-
-def test_count_key_memoizes_the_priced_count(spark, sf_dir, monkeypatch):
-    """count_key= prices the postings count ONCE per (session, source,
-    kernel): the second call must return the same width without touching
-    the frame at all (a poison count proves no job ran), and a DIFFERENT
-    count_key over the same source re-counts (distinct kernels must not
-    collide) — round 15, VERDICT r14 task 1."""
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
-    monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 56)
-    path = os.path.join(sf_dir, "documents.parquet")
-    counted = spark.range(500).persist()
-
-    class Poison:
-        storageLevel = property(lambda self: (_ for _ in ()).throw(ValueError))
-
-        def count(self):  # pragma: no cover - non-use IS the assertion
-            raise AssertionError("memo hit must not count()")
-
-    try:
-        first = scale.fanout_partitions(
-            spark, path, counted, row_bytes=56, count_key="t_memo"
-        )
-        assert first == 500
-        assert scale.fanout_partitions(
-            spark, path, Poison(), row_bytes=56, count_key="t_memo"
-        ) == 500
-        # same memoized count, different formula params -> fresh width
-        assert scale.fanout_partitions(
-            spark, path, Poison(), row_bytes=112, count_key="t_memo"
-        ) == 1000
-        # a different kernel tag re-counts: the memo MISS reaches
-        # Poison.count() (its storageLevel raising inside
-        # _is_materialized's try admits the frame), so the specific
-        # poison AssertionError proves the count was attempted — not the
-        # materialization contract's RuntimeError (ADVICE r15: the broad
-        # Exception masked which guard fired)
-        with pytest.raises(AssertionError, match="memo hit must not count"):
-            scale.fanout_partitions(
-                spark, path, Poison(), row_bytes=56, count_key="t_memo_other"
-            )
-        # no count_key -> no memo read (the count is attempted again)
-        with pytest.raises(AssertionError, match="memo hit must not count"):
-            scale.fanout_partitions(spark, path, Poison(), row_bytes=56)
-    finally:
-        counted.unpersist()
-        scale._rows_cache.clear()
+def test_sized_count_gate_formula_cap_and_floor(monkeypatch):
+    gate = scale.GATE_BYTES
+    for nbytes, per_task, floor, cap, expected in (
+        (0, 1, 16, 4096, 16),  # below the gate: the floor, whatever the target
+        (gate - 1, 1, 3, 4096, 3),
+        (gate, gate / 4, 1, 4096, 4),  # at the gate: the formula
+        (gate + 1, gate / 4, 1, 4096, 5),  # ceil, not floor
+        (gate * 100, 1024, 1, 64, 64),  # the cap
+        (gate, gate / 4, 16, 4096, 16),  # above the gate the floor still wins
+    ):
+        assert scale.sized_count(nbytes, per_task, floor, cap) == expected
+    # the gate is read per call, so tests can open it
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
+    assert scale.sized_count(10, 3, 1, 4096) == 4
 
 
 def test_session_conf_read_defensive():
@@ -205,7 +78,7 @@ def test_bytes_variant_gate_formula_and_floor(spark, sf_dir, monkeypatch):
         scale.fanout_partitions_by_bytes(spark, path, bytes_multiplier=1e9)
         is None
     )
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     nbytes = os.path.getsize(path)
     sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
     # Multiplier sized so n = 4 * sess: must return exactly that.
@@ -218,6 +91,26 @@ def test_bytes_variant_gate_formula_and_floor(spark, sf_dir, monkeypatch):
     assert (
         scale.fanout_partitions_by_bytes(spark, path, bytes_multiplier=sess)
         is None
+    )
+
+
+def test_session_floor_and_hard_cap(spark, sf_dir, monkeypatch):
+    path = os.path.join(sf_dir, "lineitem.parquet")
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
+    sess = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    # Tiny source at the default 64 MB target: the session default wins.
+    assert (
+        scale.fanout_partitions_by_bytes(spark, path, bytes_multiplier=1)
+        is None
+    )
+    # The hard cap bounds a runaway count.
+    monkeypatch.setattr(
+        scale, "FANOUT_TARGET_PARTITION_BYTES", os.path.getsize(path)
+    )
+    monkeypatch.setattr(scale, "FANOUT_MAX_PARTITIONS", 2 * sess)
+    assert (
+        scale.fanout_partitions_by_bytes(spark, path, bytes_multiplier=4 * sess)
+        == 2 * sess
     )
 
 
@@ -238,7 +131,7 @@ def test_b31_result_invariant_under_forced_adaptive_path(
         )
 
     baseline = agg()
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(scale, "BROADCAST_INFEASIBLE_BYTES", 0)
     monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 1024)
     forced = agg()
@@ -249,40 +142,57 @@ def test_b31_result_invariant_under_forced_adaptive_path(
 def test_x11_result_invariant_under_forced_adaptive_path(
     spark, sf_dir, monkeypatch
 ):
-    """Force the gate open at sf0.001 so x11 takes the repartitioned
-    plan, and compare the full (doc_a, doc_b, jaccard) set against the
-    default plan: the guard must be a physical-layout change only."""
-    from scylladb_redpanda_cdc_spark.plans import llm_queries
-
-    def pairs():
-        df = llm_queries.x11_dedup_ngram_jaccard(spark, sf_dir)
-        return {
-            (r["doc_a"], r["doc_b"], round(r["jaccard"], 12))
-            for r in df.collect()
-        }
-
-    clear_session_frame_caches()
-    baseline = pairs()
-
-    clear_session_frame_caches()
-    monkeypatch.setattr(scale, "FANOUT_GATE_BYTES", 0)
-    # Target one posting row per partition-byte bucket: guarantees the
-    # adaptive count beats the session setting even on tiny fixtures.
-    monkeypatch.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 4096)
-    monkeypatch.setattr(scale, "FANOUT_MAX_PARTITIONS", 96)
-    forced = pairs()
-
-    # The mechanism, not just the result: the forced plan carries the
-    # guard's numbered repartition on the join key (REPARTITION_BY_NUM
-    # survives AQE), which the fixture-scale default plan must not.
+    """Force the gate open at sf0.001 so x11 and x39 take their
+    repartitioned plans, and compare each full result set against the
+    default plan's: the guard must be a physical-layout change only."""
     import io
     from contextlib import redirect_stdout
 
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        llm_queries._x11_cache.clear()  # bypass cache, keep blocks alive
-        llm_queries.x11_dedup_ngram_jaccard(spark, sf_dir).explain(True)
-    clear_session_frame_caches()
-    assert "REPARTITION_BY_NUM" in buf.getvalue()
+    from scylladb_redpanda_cdc_spark.plans import llm_queries
 
-    assert forced == baseline and len(baseline) > 0
+    def x11():
+        df = llm_queries.x11_dedup_ngram_jaccard(spark, sf_dir)
+        rows = {
+            (r["doc_a"], r["doc_b"], round(r["jaccard"], 12))
+            for r in df.collect()
+        }
+        return df, rows
+
+    def x39():
+        df = llm_queries.x39_dedup_containment(spark, sf_dir)
+        rows = {
+            (
+                r["doc_a"],
+                r["doc_b"],
+                r["n_shared_spans"],
+                r["n_spans_a"],
+                round(r["containment"], 12),
+            )
+            for r in df.collect()
+        }
+        return df, rows
+
+    for kernel in (x11, x39):
+        with monkeypatch.context() as m:
+            clear_session_frame_caches()
+            _, baseline = kernel()
+
+            clear_session_frame_caches()
+            m.setattr(scale, "GATE_BYTES", 0)
+            # A tiny per-task target guarantees the adaptive count beats
+            # the session setting even on tiny fixtures.
+            m.setattr(scale, "FANOUT_TARGET_PARTITION_BYTES", 4096)
+            m.setattr(scale, "FANOUT_MAX_PARTITIONS", 96)
+            df, forced = kernel()
+
+            # The mechanism, not just the result: the forced plan carries
+            # the guard's numbered repartition on the join key
+            # (REPARTITION_BY_NUM survives AQE), which the fixture-scale
+            # default plan must not.
+            buf = io.StringIO()
+            with redirect_stdout(buf):
+                df.explain(True)
+            clear_session_frame_caches()
+            assert "REPARTITION_BY_NUM" in buf.getvalue(), kernel.__name__
+
+        assert forced == baseline and len(baseline) > 0, kernel.__name__

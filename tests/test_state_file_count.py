@@ -21,6 +21,7 @@ import os
 import pandas as pd
 from pyspark.sql import functions as F
 
+from scylladb_redpanda_cdc_spark.operators import scale
 from scylladb_redpanda_cdc_spark.streaming import core
 
 
@@ -34,8 +35,8 @@ def test_missing_path_degrades_to_floor(spark, tmp_path):
     a version the filesystem cannot price counts as empty, so the next
     write keeps the floor."""
     missing = str(tmp_path / "never-written")
-    assert core._fs_bytes(spark, missing) is None
-    assert core.state_file_count(core._fs_bytes(spark, missing) or 0, 8) == 8
+    assert scale.fs_bytes(spark, missing) is None
+    assert core.state_file_count(scale.fs_bytes(spark, missing) or 0, 8) == 8
 
 
 def test_fixture_scale_state_keeps_floor(spark, tmp_path):
@@ -44,13 +45,15 @@ def test_fixture_scale_state_keeps_floor(spark, tmp_path):
     recorded floors) byte-identical to the pre-helper constants."""
     p = str(tmp_path / "v0")
     spark.range(100).write.parquet(p)
-    assert core.state_file_count(core._fs_bytes(spark, p), 16) == 16
+    assert core.state_file_count(scale.fs_bytes(spark, p), 16) == 16
 
 
 def test_count_scales_with_state_bytes(monkeypatch):
     """Once the estimate exceeds the target, the count is
-    ceil(bytes/target) — proportional to data, not a fixed cap."""
+    ceil(bytes/target) — proportional to data, not a fixed cap. (The
+    target shrinks below the sizing gate, so the gate is opened too.)"""
     nbytes = 100_000
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", nbytes // 3)
     assert core.state_file_count(nbytes, 1) == math.ceil(nbytes / (nbytes // 3))
     # the floor still wins when it is larger than the byte-derived count
@@ -58,6 +61,7 @@ def test_count_scales_with_state_bytes(monkeypatch):
 
 
 def test_count_is_capped_at_4096(monkeypatch):
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", 1)
     assert core.state_file_count(1_000_000, 4) == 4096
 
@@ -69,6 +73,7 @@ def test_write_sized_from_prev_plus_batch_contribution(monkeypatch):
     drained log's bytes (every availableNow batch is a subset of the
     log), which bounds the written size from above."""
     prev = 50_000
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", prev)
     assert core.state_file_count(prev, 1) == 1
     # extra bytes twice the state triple the estimate
@@ -114,7 +119,7 @@ def test_runner_sizes_each_version_from_prev_plus_log(spark, sf_dir, monkeypatch
     log = core.stream_source_bytes(sdf)
     assert log
     target = max(1, log // 24)
-    monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(core, "STATE_TARGET_FILE_BYTES", target)
     monkeypatch.setattr(ops, "state_file_count", record)
     sdf, sized = drain()
@@ -133,5 +138,5 @@ def test_runner_sizes_each_version_from_prev_plus_log(spark, sf_dir, monkeypatch
         assert n == max(16, math.ceil((prev + log) / target))
         # coalesce only lowers the partition count: at most n files
         assert 1 <= len(glob.glob(os.path.join(path, "part-*"))) <= n
-        prev = core._fs_bytes(spark, path)
+        prev = scale.fs_bytes(spark, path)
     assert max(n for _, _, n in seen) > 16  # the count left the floor

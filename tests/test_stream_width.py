@@ -26,6 +26,7 @@ import os
 import pandas as pd
 import pytest
 
+from scylladb_redpanda_cdc_spark.operators import scale
 from scylladb_redpanda_cdc_spark.streaming import core
 
 
@@ -63,7 +64,7 @@ def test_width_is_floor_at_fixture_scale(spark, sf_dir):
     the fixture floor, so micro-batch plans are byte-identical to the
     floored ones."""
     sdf, staged = _staged_stream(spark, sf_dir)
-    assert core._fs_bytes(spark, staged) < core.STREAM_WIDTH_GATE_BYTES
+    assert scale.fs_bytes(spark, staged) < scale.GATE_BYTES
     assert core.stream_shuffle_width(spark, sdf) == core.STREAM_SINK_SHUFFLE_PARTITIONS
     # Non-file and absent sources also take the floor.
     assert core.stream_shuffle_width(spark, None) == core.STREAM_SINK_SHUFFLE_PARTITIONS
@@ -71,8 +72,8 @@ def test_width_is_floor_at_fixture_scale(spark, sf_dir):
 
 def test_sizing_formula_above_gate(spark, sf_dir, monkeypatch):
     sdf, staged = _staged_stream(spark, sf_dir)
-    nbytes = core._fs_bytes(spark, staged)
-    monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
+    nbytes = scale.fs_bytes(spark, staged)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     target = max(1, nbytes // 24)  # ~24 sized tasks
     monkeypatch.setattr(core, "STREAM_TARGET_TASK_SOURCE_BYTES", target)
     assert core.stream_shuffle_width(spark, sdf) == math.ceil(nbytes / target)
@@ -91,14 +92,17 @@ def test_multi_source_streams_sum_their_bytes(spark, sf_dir, monkeypatch):
     joined = sdf.alias("a").join(sdf.alias("b"), ["customer_id", "order_id"])
     paths = core.stream_source_paths(joined)
     assert paths == [staged, staged]
-    nbytes = core._fs_bytes(spark, staged)
-    monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
+    nbytes = scale.fs_bytes(spark, staged)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(core, "STREAM_TARGET_TASK_SOURCE_BYTES", nbytes)
     assert core.stream_shuffle_width(spark, joined) == 2
 
 
 def test_fs_bytes_defensive(spark):
-    assert core._fs_bytes(spark, "/root/testdata/nope/missing") is None
+    """The streaming layer prices sources through the shared helper: a
+    missing path is unpriceable (None), never an exception."""
+    assert core.fs_bytes(spark, "/root/testdata/nope/missing") is None
+    assert core.table_bytes(spark, "/root/testdata/nope", "missing") is None
 
 
 def test_width_reaches_the_micro_batch_plan(spark, sf_dir, monkeypatch):
@@ -106,8 +110,8 @@ def test_width_reaches_the_micro_batch_plan(spark, sf_dir, monkeypatch):
     the micro-batch plans under IS the computed width (captured inside a
     foreachBatch while the stream runs), and it is restored after."""
     sdf, staged = _staged_stream(spark, sf_dir)
-    nbytes = core._fs_bytes(spark, staged)
-    monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
+    nbytes = scale.fs_bytes(spark, staged)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     target = max(1, nbytes // 7)
     monkeypatch.setattr(core, "STREAM_TARGET_TASK_SOURCE_BYTES", target)
     expected = core.stream_shuffle_width(spark, sdf)
@@ -146,7 +150,7 @@ def test_s17_s19_results_invariant_under_forced_adaptive_width(
         qid: _canon(specs[qid].build(spark, sf_dir).toPandas())
         for qid in ("s17_stream_incremental_mv", "s19_stream_redelivery_dedup")
     }
-    monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     monkeypatch.setattr(core, "STREAM_TARGET_TASK_SOURCE_BYTES", 4096)
     for qid, expected in base.items():
         forced = _canon(specs[qid].build(spark, sf_dir).toPandas())
@@ -163,11 +167,11 @@ def test_state_merge_width_gate_formula_and_ambient_floor(
     STREAM_TARGET_TASK_SOURCE_BYTES of state parquet per task, capped,
     and returned only when it beats the ambient conf."""
     sdf, staged = _staged_stream(spark, sf_dir)  # any real parquet dir
-    nbytes = core._fs_bytes(spark, staged)
-    assert nbytes < core.STREAM_WIDTH_GATE_BYTES
+    nbytes = scale.fs_bytes(spark, staged)
+    assert nbytes < scale.GATE_BYTES
     assert core.state_merge_width(spark, nbytes) is None
     assert core.state_merge_width(spark, 0) is None
-    monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     target = max(1, nbytes // 24)
     monkeypatch.setattr(core, "STREAM_TARGET_TASK_SOURCE_BYTES", target)
     ambient = int(spark.conf.get("spark.sql.shuffle.partitions"))
@@ -200,8 +204,8 @@ def test_state_merge_width_reaches_batch_rooted_plans(
     from scylladb_redpanda_cdc_spark.streaming import ops
 
     sdf, staged = _staged_stream(spark, sf_dir)
-    nbytes = core._fs_bytes(spark, staged)
-    monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
+    nbytes = scale.fs_bytes(spark, staged)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     # a width that beats any plausible ambient conf, so the helper fires
     # inside the floored stream run
     target = max(1, nbytes // 48)
@@ -274,7 +278,7 @@ def test_changelog_staging_bounds_write_tasks_above_gate(
 
     # fixture discipline: below the gate one file per batch
     assert ops._changelog_files_per_batch(spark, sf_dir, 3) == 1
-    monkeypatch.setattr(core, "STREAM_WIDTH_GATE_BYTES", 0)
+    monkeypatch.setattr(scale, "GATE_BYTES", 0)
     src = core.table_bytes(spark, sf_dir, "orders")
     n_rows = synth_changelog(spark, sf_dir).count()
     # n_files values no other test stages, so the cache stays clean
@@ -324,11 +328,11 @@ def test_scratch_routing_by_bytes_hint(monkeypatch):
     import os
 
     assert core.tmpdir("hint_none").startswith(core._SCRATCH_ROOT)
-    small = core.SCRATCH_TMPFS_GATE_BYTES - 1
+    small = scale.GATE_BYTES - 1
     assert core.tmpdir("hint_small", bytes_hint=small).startswith(
         core._SCRATCH_ROOT
     )
-    big = core.tmpdir("hint_big", bytes_hint=core.SCRATCH_TMPFS_GATE_BYTES)
+    big = core.tmpdir("hint_big", bytes_hint=scale.GATE_BYTES)
     assert big.startswith(core._SCRATCH_DISK_ROOT)
     if core._SCRATCH_ROOT != core._SCRATCH_DISK_ROOT:
         assert not big.startswith(core._SCRATCH_ROOT)
@@ -342,7 +346,7 @@ def test_bytes_hint_helpers_price_fixture_sources(spark, sf_dir):
     nb = core.table_bytes(spark, sf_dir, "events")
     assert nb == os.path.getsize(os.path.join(sf_dir, "events.parquet"))
     sdf, staged = _staged_stream(spark, sf_dir)
-    assert core.stream_source_bytes(sdf) == core._fs_bytes(spark, staged)
+    assert core.stream_source_bytes(sdf) == scale.fs_bytes(spark, staged)
     assert core.stream_source_bytes(None) is None
 
 
