@@ -1967,9 +1967,6 @@ SELECT s.user_id, s.day,
 FROM spine s LEFT JOIN daily d ON s.user_id = d.user_id AND s.day = d.day"""
 
 
-_mf_staged: dict[tuple[str, str], str] = {}
-
-
 def b46_agg_cube(spark, sf_dir):
     """Full CUBE over (returnflag, linestatus): all four grouping sets —
     detail, each single-dimension margin, and the grand total — in one
@@ -2361,26 +2358,22 @@ def b43_multiformat_scan(spark, sf_dir):
     by line); explicit schema keeps a single pass; the verdict agg is
     formats x sources-sized with map-side combine. Staged once per
     (session, dataset)."""
-    from scylladb_redpanda_cdc_spark.streaming.core import tmpdir
+    from scylladb_redpanda_cdc_spark.streaming.core import staged, table_bytes
 
-    d = _T(spark, sf_dir, "documents")
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _mf_staged:
-        from scylladb_redpanda_cdc_spark.streaming.core import table_bytes
-
-        # CSV + JSONL are UNCOMPRESSED text: the staged dir holds several
-        # times the parquet bytes (estimated ~6.3x at sf0.1: ~3.7 MB of
-        # csv+jsonl content from 0.59 MB of parquet), so the tmpfs-routing
-        # hint scales the source bytes accordingly (round-14 advice; 8x
-        # adds headroom — hint errors only shift scratch placement).
-        _hint = table_bytes(spark, sf_dir, "documents")
-        base = tmpdir(
-            "multiformat", bytes_hint=None if _hint is None else 8 * _hint
-        )
+    def write(base: str) -> None:
+        d = _T(spark, sf_dir, "documents")
         d.write.mode("overwrite").option("header", True).csv(base + "/csv")
         d.write.mode("overwrite").json(base + "/jsonl")
-        _mf_staged[key] = base
-    base = _mf_staged[key]
+
+    # CSV + JSONL are UNCOMPRESSED text: the staged dir holds several
+    # times the parquet bytes (estimated ~6.3x at sf0.1: ~3.7 MB of
+    # csv+jsonl content from 0.59 MB of parquet), so the tmpfs-routing
+    # hint scales the source bytes accordingly (round-14 advice; 8x
+    # adds headroom — hint errors only shift scratch placement).
+    _hint = table_bytes(spark, sf_dir, "documents")
+    base = staged(
+        spark, "multiformat", (sf_dir,), None if _hint is None else 8 * _hint, write
+    )
     ddl = (
         "doc_id bigint, text string, lang string, source string, "
         "n_chars bigint"

@@ -11,9 +11,11 @@ BACK through the normal scan path, and proves the round trip equals the
 DuckDB oracle computed on the original table — so the layout machinery
 can never silently drop or duplicate rows.
 
-Staging is cached per (session, sf_dir): bench best-of-2 and repeated
-grading calls re-read the same layout instead of re-writing it (same
-policy as batch_queries._mf_staged).
+Each layout is staged once per (session, sf_dir) through
+``streaming.core.staged``: bench best-of-2 and repeated grading calls
+re-read the same layout instead of re-writing it. Its tmpfs-vs-disk
+routing hint is the parquet bytes of the fixture table the layout
+re-encodes.
 
 Determinism rules (same contract as batch_queries): partition/bucket keys
 are exact integer floor-division buckets (never sampled range boundaries
@@ -38,35 +40,29 @@ from scylladb_redpanda_cdc_spark.plans import QuerySpec
 from scylladb_redpanda_cdc_spark.sources.tables import load_table as _T
 from scylladb_redpanda_cdc_spark.streaming.core import (
     scoped_conf,
-    staged_dir_valid,
-    tmpdir,
+    staged,
+    table_bytes,
 )
-
-# per-(applicationId, sf_dir, layout) staged directory cache
-_staged: dict[tuple[str, str, str], str] = {}
-
-
-def _stage(spark, sf_dir: str, name: str, write_fn, table: str = "lineitem") -> str:
-    """Write a layout once per (session, dataset); re-stage if scratch was
-    reaped (tmpfs — streaming.core.staged_dir_valid). ``table`` names the
-    fixture table ``write_fn`` actually stages, so the tmpfs-vs-disk
-    routing hint tracks the real volume (round-14 advice: hinting
-    lineitem bytes for a documents/events layout can flip placement at
-    the wrong corpus size; a layout re-encodes its source as parquet, so
-    source parquet bytes are the right estimate)."""
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    if not staged_dir_valid(_staged.get(key)):
-        from scylladb_redpanda_cdc_spark.streaming.core import table_bytes
-
-        base = tmpdir(f"o_{name}", bytes_hint=table_bytes(spark, sf_dir, table))
-        write_fn(base)
-        _staged[key] = base
-    return _staged[key]
 
 
 # ---------------------------------------------------------------------------
 # O1 partitioned write (hive-style partition pruning layout)
 # ---------------------------------------------------------------------------
+
+
+def _o1_layout(spark, sf_dir) -> str:
+    """o1's staged layout (o7 reads the same one)."""
+
+    def write(base: str) -> None:
+        (
+            _T(spark, sf_dir, "lineitem")
+            .repartition("l_returnflag", "l_linestatus")
+            .write.mode("overwrite")
+            .partitionBy("l_returnflag", "l_linestatus")
+            .parquet(base)
+        )
+
+    return staged(spark, "o_o1", (sf_dir,), table_bytes(spark, sf_dir, "lineitem"), write)
 
 
 def o1_partitioned_write(spark, sf_dir):
@@ -83,18 +79,7 @@ def o1_partitioned_write(spark, sf_dir):
     key is owned by one task (no small-file explosion: files ==
     partitions, not tasks x partitions); the read-back agg rides the
     partition columns, map-side combined."""
-
-    def write(base: str) -> None:
-        (
-            _T(spark, sf_dir, "lineitem")
-            .repartition("l_returnflag", "l_linestatus")
-            .write.mode("overwrite")
-            .partitionBy("l_returnflag", "l_linestatus")
-            .parquet(base)
-        )
-
-    base = _stage(spark, sf_dir, "o1", write)
-    back = spark.read.parquet(base)
+    back = spark.read.parquet(_o1_layout(spark, sf_dir))
     return (
         back.groupBy("l_returnflag", "l_linestatus")
         .agg(
@@ -152,7 +137,7 @@ def o2_compact_small_files(spark, sf_dir):
                     .parquet(base + "/compact")
                 )
 
-    base = _stage(spark, sf_dir, "o2", write, table="documents")
+    base = staged(spark, "o_o2", (sf_dir,), table_bytes(spark, sf_dir, "documents"), write)
     # Before/after stats in ONE aggregation over a side-tagged union — no
     # join of any kind (the former 1-row x 1-row crossJoin planned as a
     # BroadcastNestedLoopJoin and needed a plan-sweep exemption). Partial
@@ -196,19 +181,8 @@ FROM documents"""
 _O3_DAYS_PER_BUCKET = 64
 
 
-def o3_clustered_write(spark, sf_dir):
-    """Range-clustered time layout: lineitem bucketed into 64-day epochs
-    (exact integer floor division — NOT repartitionByRange, whose sampled
-    boundaries the oracle could never reproduce), one file per bucket,
-    rows sorted by ship date WITHIN each file (sortWithinPartitions).
-    Output is each bucket's min/max day + row count; bucket ranges are
-    disjoint by construction, so a time-range query skips every
-    non-overlapping file on parquet min/max alone.
-
-    Scale: one shuffle on the bucket key; in-file sort is a per-task
-    spillable sort, no global ordering anywhere. tests/test_storage_layout
-    additionally pins the physical claims the agg can't see: one file per
-    bucket and in-file sortedness (via pyarrow row order)."""
+def _o3_layout(spark, sf_dir) -> str:
+    """o3's staged layout (o9 reports over the same one)."""
     # l_shipdate is TIMESTAMP_NTZ; session tz is pinned UTC (sources.tables),
     # so the cast to instant-timestamp is tz-independent (b42's idiom).
     us = "unix_micros(cast(l_shipdate as timestamp))"
@@ -233,8 +207,23 @@ def o3_clustered_write(spark, sf_dir):
             .parquet(base)
         )
 
-    base = _stage(spark, sf_dir, "o3", write)
-    back = spark.read.parquet(base)
+    return staged(spark, "o_o3", (sf_dir,), table_bytes(spark, sf_dir, "lineitem"), write)
+
+
+def o3_clustered_write(spark, sf_dir):
+    """Range-clustered time layout: lineitem bucketed into 64-day epochs
+    (exact integer floor division — NOT repartitionByRange, whose sampled
+    boundaries the oracle could never reproduce), one file per bucket,
+    rows sorted by ship date WITHIN each file (sortWithinPartitions).
+    Output is each bucket's min/max day + row count; bucket ranges are
+    disjoint by construction, so a time-range query skips every
+    non-overlapping file on parquet min/max alone.
+
+    Scale: one shuffle on the bucket key; in-file sort is a per-task
+    spillable sort, no global ordering anywhere. tests/test_storage_layout
+    additionally pins the physical claims the agg can't see: one file per
+    bucket and in-file sortedness (via pyarrow row order)."""
+    back = spark.read.parquet(_o3_layout(spark, sf_dir))
     return back.groupBy(F.col("bucket").cast("long").alias("bucket")).agg(
         F.min("day").alias("min_day"),
         F.max("day").alias("max_day"),
@@ -308,7 +297,7 @@ def o4_zorder_layout(spark, sf_dir):
             .parquet(base)
         )
 
-    base = _stage(spark, sf_dir, "o4", write)
+    base = staged(spark, "o_o4", (sf_dir,), table_bytes(spark, sf_dir, "lineitem"), write)
     back = spark.read.parquet(base)
     return back.groupBy(
         F.col("zbucket").cast("long").alias("zbucket")
@@ -384,7 +373,7 @@ def o5_dynamic_partition_overwrite(spark, sf_dir):
             .parquet(base)
         )
 
-    base = _stage(spark, sf_dir, "o5", write, table="events")
+    base = staged(spark, "o_o5", (sf_dir,), table_bytes(spark, sf_dir, "events"), write)
     back = spark.read.parquet(base)
     return back.groupBy(F.col("day").cast("long").alias("day")).agg(
         F.count("*").alias("n_events"),
@@ -433,7 +422,7 @@ def o6_schema_merge_read(spark, sf_dir):
         old.write.mode("overwrite").parquet(base + "/batch=0")
         new.write.mode("overwrite").parquet(base + "/batch=1")
 
-    base = _stage(spark, sf_dir, "o6", write, table="documents")
+    base = staged(spark, "o_o6", (sf_dir,), table_bytes(spark, sf_dir, "documents"), write)
     back = spark.read.option("mergeSchema", "true").parquet(base)
     return back.groupBy(
         F.coalesce("lang", F.lit("missing")).alias("lang_out")
@@ -468,18 +457,7 @@ def o7_file_metadata_columns(spark, sf_dir):
 
     Scale: ``_metadata`` is populated by the scan at zero IO cost (it's
     already known per split); the agg is partition-keyed."""
-
-    def write(base: str) -> None:
-        (
-            _T(spark, sf_dir, "lineitem")
-            .repartition("l_returnflag", "l_linestatus")
-            .write.mode("overwrite")
-            .partitionBy("l_returnflag", "l_linestatus")
-            .parquet(base)
-        )
-
-    base = _stage(spark, sf_dir, "o1", write)  # share o1's layout
-    back = spark.read.parquet(base).select(
+    back = spark.read.parquet(_o1_layout(spark, sf_dir)).select(
         "l_returnflag", "l_linestatus", F.col("_metadata.file_path").alias("fp")
     )
     return back.groupBy("l_returnflag", "l_linestatus").agg(
@@ -547,7 +525,7 @@ def o8_partition_evolution(spark, sf_dir):
             .parquet(base + "/v_day")
         )
 
-    base = _stage(spark, sf_dir, "o8", write, table="events")
+    base = staged(spark, "o_o8", (sf_dir,), table_bytes(spark, sf_dir, "events"), write)
     v1 = spark.read.parquet(base + "/v_month").select("day", "vm")
     v2 = spark.read.parquet(base + "/v_day").select("day", "vm")
     return (
@@ -586,8 +564,7 @@ def o9_stats_skipping_report(spark, sf_dir):
 
     Scale: one pass over footer-cheap columns + a files-sized agg; the
     report is bucket-count rows regardless of data volume."""
-    o3_clustered_write(spark, sf_dir)  # ensures the o3 layout is staged
-    base = _staged[(spark.sparkContext.applicationId, sf_dir, "o3")]
+    base = _o3_layout(spark, sf_dir)
     us = "unix_micros(cast(l_shipdate as timestamp))"
     day = f"({us} - pmod({us}, 86400000000)) DIV 86400000000"
     back = spark.read.parquet(base).select(
@@ -666,7 +643,7 @@ def o10_compaction_planner(spark, sf_dir):
                 .parquet(f"{base}/o_orderpriority={prio}")
             )
 
-    base = _stage(spark, sf_dir, "o10", write, table="orders")
+    base = staged(spark, "o_o10", (sf_dir,), table_bytes(spark, sf_dir, "orders"), write)
     back = spark.read.parquet(base).select(
         "o_orderpriority", F.col("_metadata.file_path").alias("fp")
     )
@@ -774,7 +751,7 @@ def o12_max_records_per_file(spark, sf_dir):
             .parquet(base)
         )
 
-    base = _stage(spark, sf_dir, "o12", write)
+    base = staged(spark, "o_o12", (sf_dir,), table_bytes(spark, sf_dir, "lineitem"), write)
     per_file = (
         spark.read.parquet(base)
         .select(F.col("_metadata.file_path").alias("fp"))
@@ -1041,8 +1018,9 @@ def o16_dynamic_partition_pruning(spark, sf_dir):
             .parquet(base)
         )
 
-    fact = spark.read.parquet(_stage(spark, sf_dir, "o16_fact", write_fact, table="orders"))
-    dim = spark.read.parquet(_stage(spark, sf_dir, "o16_dim", write_dim, table="orders"))
+    hint = table_bytes(spark, sf_dir, "orders")
+    fact = spark.read.parquet(staged(spark, "o_o16_fact", (sf_dir,), hint, write_fact))
+    dim = spark.read.parquet(staged(spark, "o_o16_dim", (sf_dir,), hint, write_dim))
     picked = dim.filter(F.col("pri_code") <= 2)
     joined = fact.join(
         F.broadcast(picked), fact["o_orderpriority"] == picked["pri"]

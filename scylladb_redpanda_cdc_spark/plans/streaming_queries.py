@@ -27,9 +27,11 @@ from scylladb_redpanda_cdc_spark.plans.llm_queries import _X87_SQL
 from scylladb_redpanda_cdc_spark.sources.changelog import CHANGELOG_SQL_CTE
 from scylladb_redpanda_cdc_spark.sources.tables import load_table as _T
 from scylladb_redpanda_cdc_spark.streaming.core import (
+    drain,
     events_stream,
     run_to_parquet,
     run_to_table,
+    staged,
     table_bytes,
     tmpdir,
 )
@@ -267,9 +269,6 @@ def s10_foreachbatch_upsert(spark, sf_dir):
     )
 
 
-_x87_log_stage: dict[tuple[str, str], str] = {}
-
-
 def s21_stream_corpus_sync(spark, sf_dir):
     """S21: x87's CDC-maintained corpus, arriving as a STREAM — the
     document changelog drained one file per micro-batch through the same
@@ -286,21 +285,19 @@ def s21_stream_corpus_sync(spark, sf_dir):
         x87_changelog,
         x87_project_state,
     )
-    from scylladb_redpanda_cdc_spark.streaming.core import staged_dir_valid
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if not staged_dir_valid(_x87_log_stage.get(key)):
-        stage = tmpdir("x87log", bytes_hint=table_bytes(spark, sf_dir, "orders"))
+    def write(stage: str) -> None:
         x87_changelog(spark, sf_dir).repartition(3).write.mode(
             "overwrite"
         ).parquet(stage)
-        _x87_log_stage[key] = stage
+
+    hint = table_bytes(spark, sf_dir, "orders")
     changes = (
         spark.readStream.schema(
             "doc_id bigint, text string, op string, offset bigint"
         )
         .option("maxFilesPerTrigger", 1)
-        .parquet(_x87_log_stage[key])
+        .parquet(staged(spark, "x87log", (sf_dir,), hint, write))
     )
     state = foreachbatch_upsert(changes, ["doc_id"])
     return x87_project_state(state)
@@ -335,9 +332,6 @@ def s12_watermark_late_drop_observed(spark, sf_dir):
     )
 
 
-_evo_src_dirs: dict[str, str] = {}
-
-
 def s13_stream_schema_evolution(spark, sf_dir):
     """S13: a17's mixed-version topic decoded mid-STREAM. An ALTER TABLE
     lands while the connector is live, so one continuous query sees v1 and
@@ -357,15 +351,15 @@ def s13_stream_schema_evolution(spark, sf_dir):
         evolution_records,
     )
     from scylladb_redpanda_cdc_spark.schemas import RECORD_SCHEMA
-    from scylladb_redpanda_cdc_spark.streaming.core import staged_dir_valid
 
-    if not staged_dir_valid(_evo_src_dirs.get("evo")):
-        stage = tmpdir("evo_src")
+    def write(stage: str) -> None:
         with open(_os.path.join(stage, "records.jsonl"), "w") as f:
             for r in evolution_records():
                 f.write(_json.dumps(r) + "\n")
-        _evo_src_dirs["evo"] = stage
-    raw = spark.readStream.schema(RECORD_SCHEMA).json(_evo_src_dirs["evo"])
+
+    raw = spark.readStream.schema(RECORD_SCHEMA).json(
+        staged(spark, "evo_src", (), None, write)
+    )
     return run_to_table(evolution_decode(raw))
 
 
@@ -484,8 +478,6 @@ def s20_stream_partitioned_sink(spark, sf_dir):
     Scale: per batch, one shuffle on day (so files per batch = days
     touched, not tasks x days — o1's writer contract); the lake gains
     files per batch, which o2's compaction pass then bounds."""
-    from scylladb_redpanda_cdc_spark.streaming.core import scoped_stream_shuffle
-
     ev = stage_events_split_stream(spark, sf_dir, n_files=4)
     base = tmpdir("s20_lake", bytes_hint=table_bytes(spark, sf_dir, "events"))
     day = "(unix_micros(ts) - pmod(unix_micros(ts), 86400000000)) DIV 86400000000"
@@ -503,14 +495,12 @@ def s20_stream_partitioned_sink(spark, sf_dir):
             .parquet(base)
         )
 
-    with scoped_stream_shuffle(ev):
-        q = (
-            ev.writeStream.foreachBatch(sink)
-            .option("checkpointLocation", tmpdir("s20_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        ev,
+        ev.writeStream.foreachBatch(sink).option(
+            "checkpointLocation", tmpdir("s20_ckpt")
+        ),
+    )
     back = spark.read.parquet(base)
     return back.groupBy(F.col("day").cast("long").alias("day")).agg(
         F.count("*").alias("n_events"),
@@ -635,10 +625,7 @@ def s23_stream_observed_metrics(spark, sf_dir):
     Scale: metrics fold into each batch's scan as accumulator-style
     partials; the per-trigger fold below walks progress METADATA
     (batch-count-sized, never data)."""
-    from scylladb_redpanda_cdc_spark.streaming.core import (
-        _fresh,
-        scoped_stream_shuffle,
-    )
+    from scylladb_redpanda_cdc_spark.streaming.core import _fresh
 
     ev = events_stream(spark, sf_dir).select("event_id", _val_micros())
     observed = ev.observe(
@@ -646,16 +633,10 @@ def s23_stream_observed_metrics(spark, sf_dir):
         F.count(F.lit(1)).alias("n_rows"),
         F.sum("value_micros").alias("vmass"),
     )
-    name = _fresh("sg_mem")
-    with scoped_stream_shuffle(observed):
-        q = (
-            observed.writeStream.format("memory")
-            .queryName(name)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    q = drain(
+        observed,
+        observed.writeStream.format("memory").queryName(_fresh("sg_mem")),
+    )
     n_rows, vmass, n_batches = 0, 0, 0
     for p in q.recentProgress:
         m = p.observedMetrics.get("s23_metrics")
@@ -699,25 +680,13 @@ def s24_stream_state_recovery(spark, sf_dir):
     import os as _os
     import shutil as _shutil
 
-    from scylladb_redpanda_cdc_spark.sources.tables import normalize_event_ts
-    from scylladb_redpanda_cdc_spark.streaming.core import (
-        EVENTS_NORMALIZED_DDL,
-        events_stream_ddl,
-        scoped_conf,
-        scoped_stream_shuffle,
-    )
+    from scylladb_redpanda_cdc_spark.streaming.core import EVENTS_NORMALIZED_DDL
 
     # Stage 4 split files in scratch; reveal 2 now, 2 after the restart.
-    with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
-        raw = normalize_event_ts(
-            spark.read.schema(events_stream_ddl(sf_dir)).parquet(
-                _os.path.join(sf_dir, "events.parquet")
-            )
-        )
-        scratch = tmpdir("s24_scratch", bytes_hint=table_bytes(spark, sf_dir, "events"))
-        raw.repartition(4).write.mode("overwrite").parquet(scratch)
-    parts = sorted(_glob.glob(_os.path.join(scratch, "part-*.parquet")))
     _ev_hint = table_bytes(spark, sf_dir, "events")
+    scratch = tmpdir("s24_scratch", bytes_hint=_ev_hint)
+    _T(spark, sf_dir, "events").repartition(4).write.mode("overwrite").parquet(scratch)
+    parts = sorted(_glob.glob(_os.path.join(scratch, "part-*.parquet")))
     src, out, ckpt = (
         tmpdir("s24_src", bytes_hint=_ev_hint),
         tmpdir("s24_out", bytes_hint=_ev_hint),
@@ -740,15 +709,12 @@ def s24_stream_state_recovery(spark, sf_dir):
         def emit(batch_df, _bid):
             batch_df.write.mode("overwrite").parquet(out)
 
-        with scoped_stream_shuffle(agg):
-            q = (
-                agg.writeStream.foreachBatch(emit)
-                .outputMode("complete")
-                .option("checkpointLocation", ckpt)
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        drain(
+            agg,
+            agg.writeStream.foreachBatch(emit)
+            .outputMode("complete")
+            .option("checkpointLocation", ckpt),
+        )
 
     run_query()  # phase 1: first half of the log
     for p in parts[2:]:  # the events that arrive while the worker is down

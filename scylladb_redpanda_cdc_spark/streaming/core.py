@@ -4,8 +4,9 @@ The reference pipeline is a daemon stream: Kafka Connect polls the CDC log,
 produces to Redpanda, consumers materialize state (reference
 connect-standalone.properties:1-5, README.md:180,206-215). Its Spark
 restatement is ``readStream -> transform -> writeStream``. Tests and the
-driver run Kafka-less: a file-stream source over the same parquet fixtures
-with ``trigger(availableNow=True)`` — the downstream DAG is identical by
+driver run Kafka-less: a file-stream source over the same parquet fixtures,
+each input staged once per session by :func:`staged`, drained under an
+availableNow trigger by :func:`drain` — the downstream DAG is identical by
 construction, so semantics transfer to the Kafka source unchanged (S1).
 
 Driver contract note: every S* query must come back as a *batch* DataFrame
@@ -26,10 +27,11 @@ import itertools
 import os
 import re
 import tempfile
+from collections.abc import Callable
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 from scylladb_redpanda_cdc_spark.operators import scale
 from scylladb_redpanda_cdc_spark.operators.scale import (
@@ -146,8 +148,8 @@ def stream_source_bytes(sdf: DataFrame | None) -> int | None:
 def staged_dir_valid(path: str | None) -> bool:
     """True iff a cached staging dir still exists and is non-empty. Scratch
     lives under tmpfs (/dev/shm) which the OS may reap mid-session; a cache
-    hit on a reaped path would silently yield an EMPTY stream, so callers
-    must re-stage when this is False."""
+    hit on a reaped path would silently yield an EMPTY stream, so
+    :func:`staged` re-stages when this is False."""
     try:
         return path is not None and os.path.isdir(path) and bool(os.listdir(path))
     except OSError:
@@ -175,23 +177,27 @@ def scoped_conf(spark: SparkSession, key: str, value: str):
             spark.conf.set(key, prev)
 
 
-_events_src_dirs: dict[str, str] = {}
+_staged: dict[tuple, str] = {}
 
 
-def _events_source_dir(sf_dir: str) -> str:
-    """The file-stream source needs a DIRECTORY it can monitor (the fixture
-    dir holds ten unrelated tables, and a bare file path trips the source's
-    basePath/partition-inference machinery). Stage a one-symlink directory
-    per sf_dir — zero data copied, created once per process."""
-    if not staged_dir_valid(_events_src_dirs.get(sf_dir)):
-        # a one-symlink dir: zero bytes copied, no hint needed
-        stage = tmpdir("events_src")
-        os.symlink(
-            os.path.join(sf_dir, "events.parquet"),
-            os.path.join(stage, "events.parquet"),
-        )
-        _events_src_dirs[sf_dir] = stage
-    return _events_src_dirs[sf_dir]
+def staged(
+    spark: SparkSession,
+    name: str,
+    key: tuple,
+    bytes_hint: int | None,
+    write: Callable[[str], None],
+) -> str:
+    """The scratch dir holding a stage-once input, written once per
+    (session, ``name``, ``key``): on a miss, or when the cached dir fails
+    :func:`staged_dir_valid` (reaped tmpfs), ``write`` fills a fresh
+    ``tmpdir(name, bytes_hint)``. Every staged file-stream transport and
+    storage layout goes through here, so a reaped stage always re-stages."""
+    k = (spark.sparkContext.applicationId, name, *key)
+    if not staged_dir_valid(_staged.get(k)):
+        stage = tmpdir(name, bytes_hint)
+        write(stage)
+        _staged[k] = stage
+    return _staged[k]
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -204,10 +210,19 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from scylladb_redpanda_cdc_spark.sources.tables import normalize_event_ts
 
+    def link(stage: str) -> None:
+        os.symlink(
+            os.path.join(sf_dir, "events.parquet"),
+            os.path.join(stage, "events.parquet"),
+        )
+
+    # The file-stream source needs a DIRECTORY it can monitor (the fixture
+    # dir holds ten unrelated tables, and a bare file path trips the
+    # source's basePath/partition-inference machinery): a one-symlink
+    # dir, zero bytes copied, no hint needed.
+    src = staged(spark, "events_src", (sf_dir,), None, link)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.readStream.schema(events_stream_ddl(sf_dir)).parquet(
-        _events_source_dir(sf_dir)
-    )
+    raw = spark.readStream.schema(events_stream_ddl(sf_dir)).parquet(src)
     return normalize_event_ts(raw)
 
 
@@ -346,19 +361,21 @@ def state_merge_width(spark: SparkSession, prev_bytes: int) -> int | None:
     return n if n > _session_shuffle_partitions(spark) else None
 
 
-@contextmanager
-def scoped_stream_shuffle(sdf: DataFrame):
-    """Scope ``spark.sql.shuffle.partitions`` to the width
+def drain(sdf: DataFrame, writer: DataStreamWriter) -> StreamingQuery:
+    """Run ``writer`` (a ``sdf.writeStream`` chain) to completion under
+    availableNow and return the finished query. While it runs,
+    ``spark.sql.shuffle.partitions`` is scoped to the width
     :func:`stream_shuffle_width` derives from ``sdf``'s own staged file
-    source(s) while a test-sink stream runs to completion (availableNow is
-    synchronous, so the scope covers all micro-batch planning) — the one
-    entry point every stream-run helper uses, so a corpus-scale staged
-    stream plans its micro-batches at a data-sized width with no hand-set
-    knob."""
+    source(s) — availableNow is synchronous, so the scope covers all
+    micro-batch planning, and a corpus-scale staged stream plans its
+    micro-batches at a data-sized width with no hand-set knob. The one
+    place every stream run starts and awaits."""
     spark = sdf.sparkSession
     width = stream_shuffle_width(spark, sdf)
     with scoped_conf(spark, "spark.sql.shuffle.partitions", str(width)):
-        yield
+        q = writer.trigger(availableNow=True).start()
+        q.awaitTermination()
+    return q
 
 
 def run_to_table(sdf: DataFrame, mode: str = "append") -> DataFrame:
@@ -369,15 +386,7 @@ def run_to_table(sdf: DataFrame, mode: str = "append") -> DataFrame:
     "update" for stateful operators emitting per-key updates.
     """
     name = _fresh("sg_mem")
-    with scoped_stream_shuffle(sdf):
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(sdf, sdf.writeStream.format("memory").queryName(name).outputMode(mode))
     return sdf.sparkSession.table(name)
 
 
@@ -389,13 +398,10 @@ def run_to_parquet(
     connect-standalone.properties:4-5: offsets file + 10 s flush cadence;
     here: checkpointLocation + availableNow). Restarting with the same
     checkpoint reprocesses nothing (exactly-once within the sink)."""
-    with scoped_stream_shuffle(sdf):
-        q = (
-            sdf.writeStream.format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", checkpoint_dir)
-            .outputMode(mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    drain(
+        sdf,
+        sdf.writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode(mode),
+    )

@@ -18,7 +18,9 @@ commit (Delta/Iceberg MERGE); the DAG is the same.
 
 from __future__ import annotations
 
+import glob
 import os
+import shutil
 from collections.abc import Callable, Iterator
 from contextlib import ExitStack
 
@@ -27,11 +29,12 @@ from pyspark.sql import DataFrame, SparkSession
 from scylladb_redpanda_cdc_spark.operators.cdc import materialize_latest
 from scylladb_redpanda_cdc_spark.operators.scale import fs_bytes, sized_count
 from scylladb_redpanda_cdc_spark.sources.changelog import synth_changelog
+from scylladb_redpanda_cdc_spark.sources.tables import load_table
 from scylladb_redpanda_cdc_spark.streaming import core
 from scylladb_redpanda_cdc_spark.streaming.core import (
+    EVENTS_NORMALIZED_DDL,
     scoped_conf,
-    scoped_stream_shuffle,
-    staged_dir_valid,
+    staged,
     state_file_count,
     stream_source_bytes,
     table_bytes,
@@ -49,8 +52,6 @@ CHANGELOG_STREAM_DDL = (
 #: those would blow the driver/executor broadcast limit, so past the cap
 #: the merge falls back to a shuffled join and lets AQE pick the strategy.
 BROADCAST_KEY_CAP = int(os.environ.get("SG_BROADCAST_KEY_CAP", "2000000"))
-
-_staged_changelogs: dict[tuple[str, str, int], str] = {}
 
 #: Measured in-flight bytes per orders-parquet byte for the synthesized
 #: changelog's staging write (round-16 ×1000 drill: 6.3 GB shuffled rows
@@ -73,6 +74,37 @@ def _pin_mtimes(paths: list[str]) -> None:
     base = time.time() - 600 - len(paths)
     for j, p in enumerate(paths):
         os.utime(p, (base + j, base + j))
+
+
+def _place_ordered(
+    stage: str, ranks: list[list[str]], redeliver: bool = False
+) -> None:
+    """Move rank ``i``'s one part file to ``stage/{i:02d}.parquet`` (an
+    empty rank — possible at tiny fixture scale — is skipped) and pin
+    strictly increasing mtimes in rank order, so the stream drains rank
+    by rank. ``redeliver`` appends ``99_redelivered.parquet``, a
+    byte-identical copy of rank 0, as the newest file."""
+    placed = []
+    for i, found in enumerate(ranks):
+        if not found:
+            continue
+        (src,) = found
+        dst = os.path.join(stage, f"{i:02d}.parquet")
+        shutil.move(src, dst)
+        placed.append(dst)
+    if redeliver:
+        dup = os.path.join(stage, "99_redelivered.parquet")
+        shutil.copyfile(placed[0], dup)
+        placed.append(dup)
+    _pin_mtimes(placed)
+
+
+def _partition_files(scratch: str, col: str, n: int) -> list[list[str]]:
+    """The part files of ``scratch``'s ``col=0`` .. ``col=n-1`` dirs."""
+    return [
+        glob.glob(os.path.join(scratch, f"{col}={i}", "part-*.parquet"))
+        for i in range(n)
+    ]
 
 
 def _changelog_files_per_batch(spark: SparkSession, sf_dir: str, n_files: int) -> int:
@@ -113,27 +145,24 @@ def stage_changelog_stream(
     invariance family pins it), so the above-gate regrouping is physical
     only; below the gate the layout, trigger cap and plans are
     byte-identical to the shipped fixture shape."""
-    import glob as _glob
-
     inner = _changelog_files_per_batch(spark, sf_dir, n_files)
-    cache_key = (spark.sparkContext.applicationId, sf_dir, n_files)
-    if not staged_dir_valid(_staged_changelogs.get(cache_key)):
-        stage = tmpdir("changelog", bytes_hint=table_bytes(spark, sf_dir, "orders"))
+
+    def write(stage: str) -> None:
         synth_changelog(spark, sf_dir).repartition(n_files * inner).write.mode(
             "overwrite"
         ).parquet(stage)
         if inner > 1:
             # pin file→batch grouping: part files sort in partition order
-            _pin_mtimes(sorted(_glob.glob(os.path.join(stage, "part-*.parquet"))))
-        _staged_changelogs[cache_key] = stage
+            _pin_mtimes(sorted(glob.glob(os.path.join(stage, "part-*.parquet"))))
+
+    stage = staged(
+        spark, "changelog", (sf_dir, n_files), table_bytes(spark, sf_dir, "orders"), write
+    )
     return (
         spark.readStream.schema(CHANGELOG_STREAM_DDL)
         .option("maxFilesPerTrigger", inner)
-        .parquet(_staged_changelogs[cache_key])
+        .parquet(stage)
     )
-
-
-_staged_late_events: dict[tuple[str, str], str] = {}
 
 
 def stage_late_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -157,66 +186,33 @@ def stage_late_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ⟹ window.end ≤ mid − 10 min. Only "file 2 inside the very first
     batch" would break determinism, and mtime ordering plus the trigger
     cap rules that out. Staged once per (session, dataset)."""
-    import glob
-    import shutil
-
     from pyspark.sql import functions as F
 
-    from scylladb_redpanda_cdc_spark.sources.tables import normalize_event_ts
-    from scylladb_redpanda_cdc_spark.streaming.core import (
-        EVENTS_NORMALIZED_DDL,
-        events_stream_ddl,
-    )
+    hint = table_bytes(spark, sf_dir, "events")
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if not staged_dir_valid(_staged_late_events.get(cache_key)):
-        # The legacy conf is only needed for this eager batch read of the
-        # source fixture (only the nanos vintage depends on it); the staged
-        # files below store ts normalized to TimestampType micros, so the
-        # lazily-run readStream at the end does not depend on it — safe to
-        # scope and restore.
-        with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
-            raw = normalize_event_ts(
-                spark.read.schema(events_stream_ddl(sf_dir)).parquet(
-                    os.path.join(sf_dir, "events.parquet")
-                )
-            )
-            us = F.unix_micros(F.col("ts"))
-            bounds = raw.agg(
-                ((F.min(us) + F.max(us)) / F.lit(2)).cast("long").alias("mid_us")
-            )
-            tagged = raw.crossJoin(F.broadcast(bounds))
-            straggler = (F.col("event_id") % 2 == 1) & (
-                us < F.col("mid_us") - F.lit(4_200_000_000)
-            )
-            rank = (
-                F.when(straggler, 2).when(us >= F.col("mid_us"), 1).otherwise(0)
-            )
-            # One pass: write all three stream files via a partitioned layout,
-            # then flatten rank=K/part-*.parquet to K.parquet with mtimes
-            # pinning the stream order.
-            scratch = tmpdir("late_scratch", bytes_hint=table_bytes(spark, sf_dir, "events"))
-            tagged.withColumn("file_rank", rank).drop("mid_us").repartition(
-                1
-            ).write.partitionBy("file_rank").mode("overwrite").parquet(scratch)
-        stage = tmpdir("late_events", bytes_hint=table_bytes(spark, sf_dir, "events"))
-        staged = []
-        for i in range(3):
-            found = glob.glob(
-                os.path.join(scratch, f"file_rank={i}", "part-*.parquet")
-            )
-            if not found:  # a rank can be empty at tiny fixture scale
-                continue
-            (src,) = found
-            dst = os.path.join(stage, f"{i:02d}.parquet")
-            shutil.move(src, dst)
-            staged.append(dst)
-        _pin_mtimes(staged)
-        _staged_late_events[cache_key] = stage
+    def write(stage: str) -> None:
+        raw = load_table(spark, sf_dir, "events")
+        us = F.unix_micros(F.col("ts"))
+        bounds = raw.agg(
+            ((F.min(us) + F.max(us)) / F.lit(2)).cast("long").alias("mid_us")
+        )
+        tagged = raw.crossJoin(F.broadcast(bounds))
+        straggler = (F.col("event_id") % 2 == 1) & (
+            us < F.col("mid_us") - F.lit(4_200_000_000)
+        )
+        rank = F.when(straggler, 2).when(us >= F.col("mid_us"), 1).otherwise(0)
+        # One pass: write all three stream files via a partitioned layout,
+        # then flatten rank=K/part-*.parquet to K.parquet.
+        scratch = tmpdir("late_scratch", bytes_hint=hint)
+        tagged.withColumn("file_rank", rank).drop("mid_us").repartition(
+            1
+        ).write.partitionBy("file_rank").mode("overwrite").parquet(scratch)
+        _place_ordered(stage, _partition_files(scratch, "file_rank", 3))
+
     return (
         spark.readStream.schema(EVENTS_NORMALIZED_DDL)
         .option("maxFilesPerTrigger", 1)
-        .parquet(_staged_late_events[cache_key])
+        .parquet(staged(spark, "late_events", (sf_dir,), hint, write))
     )
 
 
@@ -288,14 +284,12 @@ class _StateRunner:
                         )
                 body(batch_df, batch_id)
 
-        with scoped_stream_shuffle(self.changes):
-            q = (
-                self.changes.writeStream.foreachBatch(batch)
-                .option("checkpointLocation", tmpdir("ckpt"))
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination()
+        core.drain(
+            self.changes,
+            self.changes.writeStream.foreachBatch(batch).option(
+                "checkpointLocation", tmpdir("ckpt")
+            ),
+        )
 
 
 def _split_touched(
@@ -439,8 +433,6 @@ def foreachbatch_scd2(
     )
 
 
-_staged_doc_streams: dict[tuple[str, str], str] = {}
-
 DOCS_STREAM_DDL = (
     "doc_id bigint, text string, lang string, source string, n_chars bigint"
 )
@@ -465,14 +457,12 @@ def stage_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``doc_id + 1_000_000`` and identical text. File order is pinned by
     mtime (FileStreamSource drains oldest first). Staged once per
     (session, dataset)."""
-    import glob
-    import shutil
-
     from pyspark.sql import functions as F
 
-    cache_key = (spark.sparkContext.applicationId, sf_dir)
-    if not staged_dir_valid(_staged_doc_streams.get(cache_key)):
-        scratch = tmpdir("docs_scratch", bytes_hint=table_bytes(spark, sf_dir, "documents"))
+    hint = table_bytes(spark, sf_dir, "documents")
+
+    def write(stage: str) -> None:
+        scratch = tmpdir("docs_scratch", bytes_hint=hint)
         d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         recrawl = (
             d.filter((F.col("doc_id") % 10).isin(0, 5))
@@ -487,22 +477,12 @@ def stage_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             .mode("overwrite")
             .parquet(scratch)
         )
-        stage = tmpdir("docs_stream", bytes_hint=table_bytes(spark, sf_dir, "documents"))
-        staged = []
-        for i in range(2):
-            found = glob.glob(os.path.join(scratch, f"b={i}", "part-*.parquet"))
-            if not found:
-                continue
-            (src,) = found
-            dst = os.path.join(stage, f"{i:02d}.parquet")
-            shutil.move(src, dst)
-            staged.append(dst)
-        _pin_mtimes(staged)
-        _staged_doc_streams[cache_key] = stage
+        _place_ordered(stage, _partition_files(scratch, "b", 2))
+
     return (
         spark.readStream.schema(DOCS_STREAM_DDL)
         .option("maxFilesPerTrigger", 1)
-        .parquet(_staged_doc_streams[cache_key])
+        .parquet(staged(spark, "docs_stream", (sf_dir,), hint, write))
     )
 
 
@@ -768,9 +748,6 @@ def user_running_state(events: DataFrame) -> DataFrame:
     )
 
 
-_staged_event_splits: dict[tuple[str, str, int, bool], str] = {}
-
-
 def stage_events_split_stream(
     spark: SparkSession, sf_dir: str, n_files: int = 4, redeliver: bool = False
 ) -> DataFrame:
@@ -784,42 +761,18 @@ def stage_events_split_stream(
     (the broker re-serves everything since the last offset flush,
     connect-standalone.properties:5) arriving in a LATER micro-batch —
     S19's dedup fixture. Staged once per (session, dataset, shape)."""
-    import glob
-    import shutil
+    hint = table_bytes(spark, sf_dir, "events")
 
-    from pyspark.sql import functions as F  # noqa: F401  (parity with peers)
-
-    from scylladb_redpanda_cdc_spark.sources.tables import normalize_event_ts
-    from scylladb_redpanda_cdc_spark.streaming.core import (
-        EVENTS_NORMALIZED_DDL,
-        events_stream_ddl,
-    )
-
-    cache_key = (spark.sparkContext.applicationId, sf_dir, n_files, redeliver)
-    if not staged_dir_valid(_staged_event_splits.get(cache_key)):
-        with scoped_conf(spark, "spark.sql.legacy.parquet.nanosAsLong", "true"):
-            raw = normalize_event_ts(
-                spark.read.schema(events_stream_ddl(sf_dir)).parquet(
-                    os.path.join(sf_dir, "events.parquet")
-                )
-            )
-            scratch = tmpdir("evsplit_scratch", bytes_hint=table_bytes(spark, sf_dir, "events"))
-            raw.repartition(n_files).write.mode("overwrite").parquet(scratch)
-        stage = tmpdir("evsplit", bytes_hint=table_bytes(spark, sf_dir, "events"))
+    def write(stage: str) -> None:
+        scratch = tmpdir("evsplit_scratch", bytes_hint=hint)
+        load_table(spark, sf_dir, "events").repartition(n_files).write.mode(
+            "overwrite"
+        ).parquet(scratch)
         parts = sorted(glob.glob(os.path.join(scratch, "part-*.parquet")))
-        staged = []
-        for i, src in enumerate(parts):
-            dst = os.path.join(stage, f"{i:02d}.parquet")
-            shutil.move(src, dst)
-            staged.append(dst)
-        if redeliver:
-            dup = os.path.join(stage, "99_redelivered.parquet")
-            shutil.copyfile(os.path.join(stage, "00.parquet"), dup)
-            staged.append(dup)
-        _pin_mtimes(staged)
-        _staged_event_splits[cache_key] = stage
+        _place_ordered(stage, [[p] for p in parts], redeliver)
+
     return (
         spark.readStream.schema(EVENTS_NORMALIZED_DDL)
         .option("maxFilesPerTrigger", 1)
-        .parquet(_staged_event_splits[cache_key])
+        .parquet(staged(spark, "evsplit", (sf_dir, n_files, redeliver), hint, write))
     )

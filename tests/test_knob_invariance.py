@@ -264,3 +264,51 @@ def test_package_env_knobs_are_exactly_the_declared_set():
         "SPARK_GRAFT_CPUS",
         "SPARK_GRAFT_SHUFFLE_PARTITIONS",
     }
+
+
+def _package_hits(pattern: str) -> list[tuple[str, str | None]]:
+    """(package-relative path, enclosing top-level def or class) for every
+    occurrence of ``pattern`` in the package source."""
+    import ast
+    import glob
+
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scylladb_redpanda_cdc_spark",
+    )
+    hits = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path, encoding="utf-8") as f:
+            src = f.read()
+        if pattern not in src:
+            continue
+        rel = os.path.relpath(path, pkg).replace(os.sep, "/")
+        defs = [
+            (n.lineno, n.end_lineno, n.name)
+            for n in ast.parse(src).body
+            if isinstance(n, (ast.FunctionDef, ast.ClassDef))
+        ]
+        for i, line in enumerate(src.splitlines(), 1):
+            owner = next((name for a, b, name in defs if a <= i <= b), None)
+            hits += [(rel, owner)] * line.count(pattern)
+    return hits
+
+
+def test_stage_drain_and_raw_events_read_have_one_owner():
+    """Re-copy guard: every stream run starts and awaits in
+    ``core.drain``, every stage-once scratch input is validated in
+    ``core.staged``, and the raw-events nanos conf is set only by the
+    session, the batch loader and the events file stream — a hand-copied
+    drain block, stage cache or raw-events read fails here."""
+    assert _package_hits("trigger(availableNow=True)") == [("streaming/core.py", "drain")]
+    assert sorted(_package_hits("staged_dir_valid(")) == [
+        ("streaming/core.py", "staged"),
+        ("streaming/core.py", "staged_dir_valid"),  # its def line
+    ]
+    nanos = _package_hits("legacy.parquet.nanosAsLong")
+    assert ("streaming/core.py", "events_stream") in nanos
+    for rel, owner in nanos:
+        assert rel in ("session.py", "sources/tables.py") or (rel, owner) == (
+            "streaming/core.py",
+            "events_stream",
+        ), (rel, owner)

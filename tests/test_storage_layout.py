@@ -16,12 +16,23 @@ import pytest
 from pyspark.sql import functions as F
 
 from scylladb_redpanda_cdc_spark.plans import storage_queries as SQ
+from scylladb_redpanda_cdc_spark.streaming import core
+
+
+def _layout(spark, sf_dir, name):
+    """The dir layout ``name`` was staged in, read from the one staging
+    memo; a miss fails instead of staging."""
+
+    def unstaged(_base):
+        raise AssertionError(f"layout {name} was not staged")
+
+    return core.staged(spark, f"o_{name}", (sf_dir,), None, unstaged)
 
 
 @pytest.fixture(scope="module")
 def o1_base(spark, sf_dir):
     SQ.o1_partitioned_write(spark, sf_dir).collect()
-    return SQ._staged[(spark.sparkContext.applicationId, sf_dir, "o1")]
+    return _layout(spark, sf_dir, "o1")
 
 
 def test_o1_layout_is_hive_partitioned(o1_base):
@@ -51,7 +62,7 @@ def test_o1_read_back_prunes_partitions(spark, o1_base):
 
 def test_o2_compaction_file_counts(spark, sf_dir):
     SQ.o2_compact_small_files(spark, sf_dir).collect()
-    base = SQ._staged[(spark.sparkContext.applicationId, sf_dir, "o2")]
+    base = _layout(spark, sf_dir, "o2")
     small = glob.glob(os.path.join(base, "small", "*.parquet"))
     compact = glob.glob(os.path.join(base, "compact", "*.parquet"))
     assert len(small) == 64
@@ -60,7 +71,7 @@ def test_o2_compaction_file_counts(spark, sf_dir):
 
 def test_o3_files_sorted_within_and_disjoint_across(spark, sf_dir):
     rows = SQ.o3_clustered_write(spark, sf_dir).collect()
-    base = SQ._staged[(spark.sparkContext.applicationId, sf_dir, "o3")]
+    base = _layout(spark, sf_dir, "o3")
     # bucket ranges disjoint by construction -> every [min,max] interval
     # is inside its 64-day epoch and no two buckets overlap
     spans = sorted((r.bucket, r.min_day, r.max_day) for r in rows)
@@ -126,7 +137,7 @@ def test_o5_only_min_day_restated(spark, sf_dir):
 
 def test_o6_merge_read_nulls_only_old_vintage(spark, sf_dir):
     SQ.o6_schema_merge_read(spark, sf_dir).collect()
-    base = SQ._staged[(spark.sparkContext.applicationId, sf_dir, "o6")]
+    base = _layout(spark, sf_dir, "o6")
     back = spark.read.option("mergeSchema", "true").parquet(base)
     rows = back.groupBy((F.col("doc_id") % 2).alias("par")).agg(
         F.count("*").alias("n"),
@@ -194,7 +205,7 @@ def test_o8_both_vintages_keep_their_own_pruning(spark, sf_dir):
     month convention (day DIV 32) — the predicate mapping a catalog
     records at the cutover."""
     SQ.o8_partition_evolution(spark, sf_dir).collect()
-    base = SQ._staged[(spark.sparkContext.applicationId, sf_dir, "o8")]
+    base = _layout(spark, sf_dir, "o8")
 
     # new vintage: native day pruning
     v2 = spark.read.parquet(base + "/v_day")

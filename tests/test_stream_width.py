@@ -36,14 +36,10 @@ def _canon(pdf: pd.DataFrame) -> list[tuple]:
 
 
 def _staged_stream(spark, sf_dir):
-    from scylladb_redpanda_cdc_spark.streaming.ops import (
-        _staged_changelogs,
-        stage_changelog_stream,
-    )
+    from scylladb_redpanda_cdc_spark.streaming.ops import stage_changelog_stream
 
     sdf = stage_changelog_stream(spark, sf_dir, n_files=4)
-    staged = _staged_changelogs[(spark.sparkContext.applicationId, sf_dir, 4)]
-    return sdf, staged
+    return sdf, core.stream_source_paths(sdf)[0]
 
 
 def test_source_paths_recovered_through_transformations(spark, sf_dir):
@@ -122,14 +118,12 @@ def test_width_reaches_the_micro_batch_plan(spark, sf_dir, monkeypatch):
     def capture(batch_df, batch_id):
         seen.append(batch_df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
 
-    with core.scoped_stream_shuffle(sdf):
-        q = (
-            sdf.writeStream.foreachBatch(capture)
-            .option("checkpointLocation", core.tmpdir("width_ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    core.drain(
+        sdf,
+        sdf.writeStream.foreachBatch(capture).option(
+            "checkpointLocation", core.tmpdir("width_ckpt")
+        ),
+    )
     assert seen and set(seen) == {str(expected)}
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
@@ -272,6 +266,7 @@ def test_changelog_staging_bounds_write_tasks_above_gate(
     1 s per file`` pinning collided past 60 files per batch)."""
     import glob
     import os
+    import shutil
 
     from scylladb_redpanda_cdc_spark.sources.changelog import synth_changelog
     from scylladb_redpanda_cdc_spark.streaming import ops
@@ -281,7 +276,8 @@ def test_changelog_staging_bounds_write_tasks_above_gate(
     monkeypatch.setattr(scale, "GATE_BYTES", 0)
     src = core.table_bytes(spark, sf_dir, "orders")
     n_rows = synth_changelog(spark, sf_dir).count()
-    # n_files values no other test stages, so the cache stays clean
+    # n_files values no other test stages; each stage is deleted after
+    # its check, so the memo re-stages it on any later call
     for n_files, min_inner in ((5, 3), (6, 62)):
         monkeypatch.setattr(
             ops,
@@ -290,11 +286,9 @@ def test_changelog_staging_bounds_write_tasks_above_gate(
         )
         inner = ops._changelog_files_per_batch(spark, sf_dir, n_files)
         assert inner >= min_inner
-        key = (spark.sparkContext.applicationId, sf_dir, n_files)
-        ops._staged_changelogs.pop(key, None)
+        sdf = ops.stage_changelog_stream(spark, sf_dir, n_files=n_files)
+        staged = core.stream_source_paths(sdf)[0]
         try:
-            sdf = ops.stage_changelog_stream(spark, sf_dir, n_files=n_files)
-            staged = ops._staged_changelogs[key]
             parts = sorted(glob.glob(os.path.join(staged, "part-*.parquet")))
             assert len(parts) == n_files * inner
             # strictly increasing mtimes group consecutive `inner` files
@@ -316,7 +310,7 @@ def test_changelog_staging_bounds_write_tasks_above_gate(
             assert len(batches) == n_files  # batch count is declared semantics
             assert sum(batches) == n_rows
         finally:
-            ops._staged_changelogs.pop(key, None)
+            shutil.rmtree(staged)
 
 
 def test_scratch_routing_by_bytes_hint(monkeypatch):
