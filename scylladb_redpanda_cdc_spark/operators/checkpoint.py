@@ -23,9 +23,16 @@ through :func:`stage_checkpoint`, which picks the reliable path when the
 session sets ``spark.sg.checkpointDir`` and the local path otherwise.
 Nothing changes on the default local run — the conf is unset, so plans,
 floors and oracles are untouched.
+
+A frame that several queries share is built once per session by a
+builder wrapped in :func:`session_frame`; the builder still picks its own
+materialization (``stage_checkpoint``, ``persist`` or none).
 """
 
 from __future__ import annotations
+
+import functools
+import inspect
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
@@ -147,3 +154,63 @@ def stage_checkpoint(df: DataFrame) -> DataFrame:
 
 #: {applicationId: last conf value passed to setCheckpointDir} — see above.
 _APPLIED_DIR: dict[str, str] = {}
+
+
+#: {(sessionUUID, builder, *bound args): frame} — see session_frame.
+_FRAMES: dict[tuple, DataFrame] = {}
+
+
+def session_frame(build):
+    """Memoize ``build(spark, *args)`` per JVM session and bound arguments.
+
+    The key is the session's ``sessionUUID()``: stable across calls on one
+    session and distinct for every ``spark.newSession()`` sibling, so a
+    sibling never reads a frame built (and checkpointed) under another
+    session's confs. Arguments are bound with their defaults applied, so
+    ``f(spark)`` and ``f(spark, extended=False)`` share one entry."""
+    sig = inspect.signature(build)
+
+    @functools.wraps(build)
+    def memo(spark, *args, **kwargs):
+        bound = sig.bind(spark, *args, **kwargs)
+        bound.apply_defaults()
+        key = (
+            spark._jsparkSession.sessionUUID(),
+            build,
+            *tuple(bound.arguments.values())[1:],
+        )
+        if key not in _FRAMES:
+            _FRAMES[key] = build(spark, *args, **kwargs)
+        return _FRAMES[key]
+
+    return memo
+
+
+def clear_session_frame_caches() -> int:
+    """Drop every :func:`session_frame` entry (MinHash bands, pair sets,
+    k-means assignments, the golden decode, b35's hour rollup, …) and
+    return how many were dropped.
+
+    The frames pin executor blocks (persist / localCheckpoint) or
+    checkpoint files (reliable path). Frames are per session, but a test
+    that flips ``spark.sg.checkpointDir`` within ONE session calls this
+    before AND after, so frames built under one checkpoint regime never
+    satisfy builds under the other; a long-lived session can call it to
+    release staged storage.
+
+    Each dropped frame is ``unpersist()``-ed, so block release is
+    immediate rather than left to JVM GC + ContextCleaner timing; the
+    next builder call rebuilds from source. Reliable checkpoint FILES are
+    reclaimed asynchronously (the ContextCleaner deletes them once the
+    JVM-side RDD is GC'd; ``spark.cleaner.referenceTracking.cleanCheckpoints``
+    is set by ``session.get_session`` — ``tests/test_checkpoint_helper.py``
+    pins the reclaim)."""
+    n = len(_FRAMES)
+    for frame in _FRAMES.values():
+        try:
+            frame.unpersist(blocking=False)
+        except Exception:
+            # Session/JVM already gone: nothing to release.
+            pass
+    _FRAMES.clear()
+    return n

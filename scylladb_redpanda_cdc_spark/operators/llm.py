@@ -304,14 +304,13 @@ def connected_components_min_label(edges, node_col: str = "doc_a", nbr_col: str 
     """
     import os as _os
 
-    spark = edges.sparkSession
-    shuffle_key = "spark.sql.shuffle.partitions"
-    try:
-        prev_shuffle = spark.conf.get(shuffle_key)
-    except Exception:
-        prev_shuffle = None
-    spark.conf.set(shuffle_key, _os.environ.get("SG_CC_LOOP_SHUFFLE", "8"))
-    try:
+    from scylladb_redpanda_cdc_spark.streaming.core import scoped_conf
+
+    with scoped_conf(
+        edges.sparkSession,
+        "spark.sql.shuffle.partitions",
+        _os.environ.get("SG_CC_LOOP_SHUFFLE", "8"),
+    ):
         # Eager stage_checkpoint, NOT persist: persist caches execution but
         # the LOGICAL plan still nests — each round's plan embeds the
         # previous round's twice (neighbor join + self union), doubling the
@@ -368,8 +367,3 @@ def connected_components_min_label(edges, node_col: str = "doc_a", nbr_col: str 
                 "diameter exceeds the round cap"
             )
         return labels.select(F.col("doc_id").alias(node_col), "cluster_id")
-    finally:
-        if prev_shuffle is None:
-            spark.conf.unset(shuffle_key)
-        else:
-            spark.conf.set(shuffle_key, prev_shuffle)

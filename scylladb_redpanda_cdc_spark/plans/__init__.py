@@ -19,6 +19,10 @@ from types import MappingProxyType
 
 from pyspark.sql import DataFrame, SparkSession
 
+from scylladb_redpanda_cdc_spark.operators.checkpoint import (  # noqa: F401 (re-export)
+    clear_session_frame_caches,
+)
+
 
 @dataclass(frozen=True)
 class QuerySpec:
@@ -85,6 +89,13 @@ _REWRITTEN: tuple[str, ...] = (
     "s21_stream_corpus_sync",
     "s22_stream_scd2",
     "x61_boilerplate_strip",
+    # The x11-graph and x2-graph CC labels now share one
+    # ``_component_labels`` kernel (plans byte-identical; builder
+    # bodies changed), so their consumers re-prove.
+    "x21_dedup_cluster_cc",
+    "x30_canonical_select",
+    "x85_dedup_method_report",
+    "x86_minhash_dedup_e2e",
 )
 
 # The round-9 name `_REPROOF` was kept as an alias through rounds 10-11
@@ -175,70 +186,6 @@ _HISTORY_CACHE: dict[
     str,
     tuple[tuple, tuple[frozenset[str], frozenset[str], "MappingProxyType"]],
 ] = {}
-
-
-def clear_session_frame_caches() -> int:
-    """Drop every session-scoped cached DataFrame the plan modules keep
-    (the ``*_cache`` dicts keyed by (applicationId, sf_dir) — MinHash
-    bands, pair sets, k-means assignments, …). Returns the number of
-    entries dropped.
-
-    The caches exist because the driver grades one pass per query and
-    several queries share an expensive upstream frame. They hold
-    checkpointed or persisted DataFrames, which pin executor blocks
-    (persist / localCheckpoint) or checkpoint files (reliable path) — a
-    test that flips ``spark.sg.checkpointDir`` calls this before AND
-    after, so frames built under one checkpoint regime never leak into
-    the other, and a long-lived session can call it to release staged
-    storage.
-
-    Storage release is IMMEDIATE for blocks, not just eventual: each
-    dropped frame is explicitly ``unpersist()``-ed (round-12 advice —
-    clearing only the Python dicts left release to JVM GC +
-    ContextCleaner timing, so stale blocks could linger in a long-lived
-    session after a checkpoint-regime flip). Unpersisting a
-    checkpointed frame is safe here because the next builder call
-    rebuilds from source — nothing re-reads a cleared cache entry.
-    Reliable checkpoint FILES are still reclaimed asynchronously (the
-    ContextCleaner deletes them once the JVM-side RDD is GC'd;
-    ``spark.cleaner.referenceTracking.cleanCheckpoints`` is set by
-    ``session.get_session`` — ``tests/test_checkpoint_helper.py`` pins
-    the reclaim). b35's hour-rollup cache lives as an attribute on its
-    session object by design and dies with the session, not here."""
-    from scylladb_redpanda_cdc_spark.plans import (
-        batch_queries,
-        cdc_queries,
-        fn_queries,
-        llm_queries,
-        storage_queries,
-        streaming_queries,
-        udx_queries,
-        window_queries,
-    )
-
-    n = 0
-    for mod in (
-        window_queries,
-        fn_queries,
-        udx_queries,
-        streaming_queries,
-        batch_queries,
-        cdc_queries,
-        llm_queries,
-        storage_queries,
-    ):
-        for name, val in vars(mod).items():
-            if name.endswith("_cache") and isinstance(val, dict):
-                n += len(val)
-                for frame in val.values():
-                    if isinstance(frame, DataFrame):
-                        try:
-                            frame.unpersist(blocking=False)
-                        except Exception:
-                            # Session/JVM already gone: nothing to release.
-                            pass
-                val.clear()
-    return n
 
 
 def registry() -> dict[str, QuerySpec]:

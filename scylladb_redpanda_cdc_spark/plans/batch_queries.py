@@ -24,7 +24,10 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from scylladb_redpanda_cdc_spark.operators.checkpoint import stage_checkpoint
+from scylladb_redpanda_cdc_spark.operators.checkpoint import (
+    session_frame,
+    stage_checkpoint,
+)
 from scylladb_redpanda_cdc_spark.operators import scale as _scale
 from scylladb_redpanda_cdc_spark.operators.rank import ranged_rank
 from scylladb_redpanda_cdc_spark.plans import QuerySpec
@@ -1454,14 +1457,26 @@ def b34_unpivot(spark, sf_dir):
     )
 
 
-# Per-session hour-rollup cache, stored as an attribute ON the session
-# object (same discipline as Engine._VIEWS_ATTR): a persisted DataFrame is
-# only valid in the session that built it, ``spark.newSession()`` siblings
-# share an applicationId but must not share it, and the attribute — plus
-# its pinned blocks' lineage handle — dies with the session instead of
-# accumulating in module state. Entries are per sf_dir; the dataset count
-# per process is tiny (3 driver fixtures) so no eviction is needed.
-_B35_CACHE_ATTR = "_sg_b35_hour_cache"
+@session_frame
+def _b35_hour(spark, sf_dir):
+    """b35's hour-level rollup, persisted once per (session, dataset) —
+    the continuous aggregate's stored finest level (see b35)."""
+    e = _T(spark, sf_dir, "events")
+    hour = (
+        e.select(
+            "event_type",
+            F.unix_millis(F.date_trunc("hour", F.col("ts"))).alias("bucket_ms"),
+            F.floor(F.col("value") * 1_000_000)
+            .cast("long")
+            .alias("value_micros"),
+        )
+        .groupBy("event_type", "bucket_ms")
+        .agg(
+            F.count("*").alias("n_events"),
+            F.sum("value_micros").alias("value_micros_sum"),
+        )
+    )
+    return hour.persist()
 
 
 def b35_time_bucket_rollup(spark, sf_dir):
@@ -1482,28 +1497,7 @@ def b35_time_bucket_rollup(spark, sf_dir):
     date_trunc in session-UTC, day via integer modulus on the hour
     bucket); value sums are exact integer micros (floor-then-sum, the S3
     discipline)."""
-    e = _T(spark, sf_dir, "events")
-    hour = (
-        e.select(
-            "event_type",
-            F.unix_millis(F.date_trunc("hour", F.col("ts"))).alias("bucket_ms"),
-            F.floor(F.col("value") * 1_000_000)
-            .cast("long")
-            .alias("value_micros"),
-        )
-        .groupBy("event_type", "bucket_ms")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum("value_micros").alias("value_micros_sum"),
-        )
-    )
-    cache = getattr(spark, _B35_CACHE_ATTR, None)
-    if cache is None:
-        cache = {}
-        setattr(spark, _B35_CACHE_ATTR, cache)
-    if sf_dir not in cache:
-        cache[sf_dir] = hour.persist()
-    hour = cache[sf_dir]
+    hour = _b35_hour(spark, sf_dir)
     day = (
         hour.select(
             "event_type",

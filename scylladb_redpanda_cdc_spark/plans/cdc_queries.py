@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import IntegerType, LongType, StringType, StructField, StructType
 
 from scylladb_redpanda_cdc_spark.operators import cdc
+from scylladb_redpanda_cdc_spark.operators.checkpoint import session_frame
 from scylladb_redpanda_cdc_spark.plans import QuerySpec
 from scylladb_redpanda_cdc_spark.sources.cdc_fixture import (
     TOPIC,
@@ -28,10 +29,7 @@ from scylladb_redpanda_cdc_spark.sources.changelog import CHANGELOG_SQL_CTE, syn
 # ---------------------------------------------------------------------------
 
 
-_decoded_cache: dict[tuple[str, bool], DataFrame] = {}
-_state_cache: dict[tuple[str, bool], DataFrame] = {}
-
-
+@session_frame
 def _decoded_df(spark: SparkSession, extended: bool = False) -> DataFrame:
     """Golden records -> flat typed columns (the A2/A3 decode, flattened).
 
@@ -41,9 +39,6 @@ def _decoded_df(spark: SparkSession, extended: bool = False) -> DataFrame:
     driver's one-pass-per-query grading (the decode itself stays exercised:
     the first materialization runs it, and a2/a3's values are its output).
     """
-    cache_key = (spark.sparkContext.applicationId, extended)
-    if cache_key in _decoded_cache:
-        return _decoded_cache[cache_key]
     df = cdc.decode_key(cdc.decode_envelope(golden_stream_df(spark, extended)))
     e = F.col("envelope")
     src = e.getField("source")
@@ -70,8 +65,7 @@ def _decoded_df(spark: SparkSession, extended: bool = False) -> DataFrame:
         src.getField("ts_ms").alias("source_ts_ms"),
         src.getField("ts_us").alias("source_ts_us"),
     )
-    _decoded_cache[cache_key] = flat.persist()
-    return _decoded_cache[cache_key]
+    return flat.persist()
 
 
 _DECODED_CTE = """
@@ -103,13 +97,11 @@ def _g(select_sql: str, extended: bool = False) -> str:
     return f"WITH {golden_raw_cte(extended)},{_DECODED_CTE}\n{select_sql}"
 
 
+@session_frame
 def _state_df(spark: SparkSession, extended: bool = False) -> DataFrame:
     """A6: materialized current state of the golden workload. Persisted per
     session for the same reason as :func:`_decoded_df` (several A specs
     derive from state; the compaction window runs once)."""
-    cache_key = (spark.sparkContext.applicationId, extended)
-    if cache_key in _state_cache:
-        return _state_cache[cache_key]
     events = _decoded_df(spark, extended).select(
         F.col("key_customer_id").alias("customer_id"),
         F.col("key_order_id").alias("order_id"),
@@ -117,10 +109,7 @@ def _state_df(spark: SparkSession, extended: bool = False) -> DataFrame:
         "op",
         "offset",
     )
-    _state_cache[cache_key] = cdc.materialize_latest(
-        events, ["customer_id", "order_id"]
-    ).persist()
-    return _state_cache[cache_key]
+    return cdc.materialize_latest(events, ["customer_id", "order_id"]).persist()
 
 
 _STATE_CTE = """

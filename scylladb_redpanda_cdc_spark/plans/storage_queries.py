@@ -882,9 +882,7 @@ def o14_cbo_stats_join(spark, sf_dir):
         shutil.rmtree(f"{wh}/{name}", ignore_errors=True)
         _T(spark, sf_dir, tbl).write.saveAsTable(name)
         spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS")
-    prev = spark.conf.get("spark.sql.cbo.enabled", "false")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    try:
+    with scoped_conf(spark, "spark.sql.cbo.enabled", "true"):
         out = spark.sql(
             """SELECT n_name, COUNT(*) AS n_customers,
                  CAST(SUM(CAST(FLOOR(c_acctbal * 100) AS BIGINT)) AS BIGINT)
@@ -899,8 +897,6 @@ def o14_cbo_stats_join(spark, sf_dir):
         # restored. `.schema` alone only runs the analyzer — measured:
         # the cost plan then shows sizeInBytes but no rowCount.
         out._jdf.queryExecution().optimizedPlan()
-    finally:
-        spark.conf.set("spark.sql.cbo.enabled", prev)
     return out
 
 

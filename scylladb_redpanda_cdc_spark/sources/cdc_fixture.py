@@ -40,6 +40,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
+from scylladb_redpanda_cdc_spark.operators.checkpoint import session_frame
 from scylladb_redpanda_cdc_spark.schemas import RECORD_SCHEMA
 
 #: Topic name = ``{scylla.name}.{keyspace}.{table}``
@@ -145,19 +146,12 @@ def golden_records(extended: bool = False) -> list[dict[str, Any]]:
     return records
 
 
-_cached_dfs: dict[tuple[str, bool], DataFrame] = {}
-
-
+@session_frame
 def golden_stream_df(spark: SparkSession, extended: bool = False) -> DataFrame:
     """The golden capture (or its labeled extension) as a Spark DataFrame in
     the Kafka record frame. Cached per session: every A-group query decodes
     the same 7/8 rows, so the local relation is built once and reused."""
-    cache_key = (spark.sparkContext.applicationId, extended)
-    if cache_key not in _cached_dfs:
-        _cached_dfs[cache_key] = spark.createDataFrame(
-            golden_records(extended), RECORD_SCHEMA
-        )
-    return _cached_dfs[cache_key]
+    return spark.createDataFrame(golden_records(extended), RECORD_SCHEMA)
 
 
 def golden_values_sql(extended: bool = False) -> str:

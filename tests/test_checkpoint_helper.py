@@ -12,6 +12,9 @@ oracles byte-for-byte on the reliable path.
 
 from __future__ import annotations
 
+import ast
+import importlib
+import inspect
 import os
 
 import pytest
@@ -224,3 +227,93 @@ def test_heavy_consumers_match_oracle_on_reliable_path(
     finally:
         con.close()
     assert _ck_files(reliable_dir), f"{qid} never hit the reliable path"
+
+
+def test_sibling_session_builds_its_own_frames(spark, sf_dir, tmp_path):
+    """Session frames are per JVM session: a ``newSession()`` sibling that
+    sets ``spark.sg.checkpointDir`` must build (and reliably checkpoint)
+    its own x2/x21 frames under its own confs, never be served the frames
+    the first session built, and leave the first session's frames intact."""
+    from scylladb_redpanda_cdc_spark.plans.llm_queries import _cc_labels, _x2_pairs
+
+    qids = ("x2_dedup_fuzzy_minhash", "x21_dedup_cluster_cc")
+    for qid in qids:
+        _SPECS[qid].build(spark, sf_dir).count()
+    a_frames = (_x2_pairs(spark, sf_dir), _cc_labels(spark, sf_dir))
+    sibling = spark.newSession()
+    ck = str(tmp_path / "ck")
+    sibling.conf.set(CHECKPOINT_DIR_CONF, ck)
+    try:
+        for qid in qids:
+            df = _SPECS[qid].build(sibling, sf_dir)
+            assert df.sparkSession is sibling, qid
+            df.count()
+        assert _ck_files(ck), "the sibling session never hit the reliable path"
+        assert _x2_pairs(sibling, sf_dir) is not a_frames[0]
+        assert _x2_pairs(spark, sf_dir) is a_frames[0]
+        assert _cc_labels(spark, sf_dir) is a_frames[1]
+    finally:
+        # drop the sibling's frames (their files live under tmp_path)
+        clear_session_frame_caches()
+
+
+def _session_frame_builders() -> list[tuple[str, str]]:
+    """(module, function) for every ``@session_frame`` builder in the
+    package, found from the source so a new memoized builder is covered
+    without editing this list."""
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scylladb_redpanda_cdc_spark",
+    )
+    found = []
+    for dp, _dirs, fs in sorted(os.walk(pkg)):
+        for f in sorted(fs):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dp, f)
+            with open(path, encoding="utf-8") as fh:
+                tree = ast.parse(fh.read())
+            mod = "scylladb_redpanda_cdc_spark." + os.path.relpath(
+                path[: -len(".py")], pkg
+            ).replace(os.sep, ".")
+            found += [
+                (mod, n.name)
+                for n in tree.body
+                if isinstance(n, ast.FunctionDef)
+                and any(
+                    isinstance(d, ast.Name) and d.id == "session_frame"
+                    for d in n.decorator_list
+                )
+            ]
+    return found
+
+
+_BUILDERS = _session_frame_builders()
+
+
+def test_every_session_frame_builder_is_found():
+    # non-vacuous: the parametrized test below covers at least these
+    names = {name for _mod, name in _BUILDERS}
+    assert {"_decoded_df", "_x2_pairs", "_cc_labels", "_b35_hour"} <= names
+    assert len(_BUILDERS) >= 16
+
+
+@pytest.mark.parametrize(
+    "mod,name", _BUILDERS, ids=[name for _mod, name in _BUILDERS]
+)
+def test_session_frame_is_built_once_per_session(spark, sf_dir, mod, name):
+    """The single-session driver still builds every shared frame once:
+    two calls in one session return the same object."""
+    fn = getattr(importlib.import_module(mod), name)
+    args = (sf_dir,) if "sf_dir" in inspect.signature(fn).parameters else ()
+    assert fn(spark, *args) is fn(spark, *args)
+
+
+def test_session_frame_binds_default_args(spark):
+    """``_decoded_df(spark)`` and ``_decoded_df(spark, extended=False)``
+    are one entry (both call forms exist in the A group)."""
+    from scylladb_redpanda_cdc_spark.plans.cdc_queries import _decoded_df
+
+    assert _decoded_df(spark) is _decoded_df(spark, extended=False)
+    assert _decoded_df(spark, False) is _decoded_df(spark)
+    assert _decoded_df(spark, extended=True) is not _decoded_df(spark)

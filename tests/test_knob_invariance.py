@@ -33,13 +33,31 @@ def test_cc_loop_shuffle_width_is_result_invariant(
     spark, sf_dir, specs, monkeypatch
 ):
     """x21's min-label loop scopes shuffle width to SG_CC_LOOP_SHUFFLE
-    (read per call): cluster labels are partitioning-invariant."""
+    (read per call): cluster labels are partitioning-invariant. The
+    session frames are cleared before each width, and a spy proves the
+    loop really ran once per width (a memoized x21 frame would otherwise
+    answer both builds without running the loop at all)."""
+    from scylladb_redpanda_cdc_spark.plans import (
+        clear_session_frame_caches,
+        llm_queries,
+    )
+
+    ran = []
+    real = llm_queries.connected_components_min_label
+
+    def spy(*args, **kwargs):
+        ran.append(os.environ["SG_CC_LOOP_SHUFFLE"])
+        return real(*args, **kwargs)
+
+    monkeypatch.setattr(llm_queries, "connected_components_min_label", spy)
     outs = []
     for width in ("2", "16"):
         monkeypatch.setenv("SG_CC_LOOP_SHUFFLE", width)
+        clear_session_frame_caches()
         outs.append(
             _canon(specs["x21_dedup_cluster_cc"].build(spark, sf_dir).toPandas())
         )
+    assert ran == ["2", "16"]
     assert outs[0] == outs[1]
     assert outs[0]  # non-vacuous: the fixture has near-dup clusters
 
@@ -312,3 +330,42 @@ def test_stage_drain_and_raw_events_read_have_one_owner():
             "streaming/core.py",
             "events_stream",
         ), (rel, owner)
+
+
+def test_session_frames_have_one_memo():
+    """Re-copy guard: every per-session frame goes through
+    ``operators/checkpoint.py::session_frame`` (keyed by the JVM session).
+    ``applicationId`` keys only the two stage memos whose outputs siblings
+    may share (scratch dirs and catalog tables); no module binds a
+    hand-rolled ``*_cache`` dict, and b35's session-attribute cache is
+    gone."""
+    import ast
+    import glob
+
+    assert sorted(_package_hits("sparkContext.applicationId")) == [
+        ("plans/batch_queries.py", "stage_bucketed_tables"),
+        ("streaming/core.py", "staged"),
+    ]
+    pkg = os.path.join(
+        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+        "scylladb_redpanda_cdc_spark",
+    )
+    caches = []
+    for path in sorted(glob.glob(os.path.join(pkg, "**", "*.py"), recursive=True)):
+        with open(path, encoding="utf-8") as f:
+            body = ast.parse(f.read()).body
+        for node in body:
+            targets = (
+                node.targets
+                if isinstance(node, ast.Assign)
+                else [node.target]
+                if isinstance(node, ast.AnnAssign)
+                else []
+            )
+            caches += [
+                (os.path.relpath(path, pkg), t.id)
+                for t in targets
+                if isinstance(t, ast.Name) and t.id.endswith("_cache")
+            ]
+    assert caches == []
+    assert _package_hits("_sg_b35") == []

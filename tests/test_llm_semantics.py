@@ -1336,14 +1336,13 @@ def test_kmeans_assign_tiebreak_is_lowest_cid(spark):
 
 
 def test_session_caches_are_keyed_per_dataset(spark):
-    """The round-10 session caches (_x2_pairs/_minhash_bands and the
-    older _x29_assign convention) key on (applicationId, sf_dir): one
-    session touching two datasets must get dataset-correct results from
-    both, never the other dataset's cached frame."""
+    """Session frames (_x2_pairs/_minhash_bands and every other
+    ``@session_frame`` builder) key on the dataset dir: one session
+    touching two datasets must get dataset-correct results from both,
+    never the other dataset's frame."""
     from scylladb_redpanda_cdc_spark.plans.llm_queries import (
         _minhash_bands,
         _x2_pairs,
-        _x2_pairs_cache,
     )
 
     # sf0.001 and sf0.01 share a 500-doc documents fixture; sf0.1 has
@@ -1352,11 +1351,12 @@ def test_session_caches_are_keyed_per_dataset(spark):
     n_a = _minhash_bands(spark, a_dir).select("doc_id").distinct().count()
     n_b = _minhash_bands(spark, b_dir).select("doc_id").distinct().count()
     assert n_a != n_b, "fixtures unexpectedly equal-sized; test is vacuous"
-    _x2_pairs(spark, a_dir)
-    _x2_pairs(spark, b_dir)
-    app = spark.sparkContext.applicationId
-    assert (app, a_dir) in _x2_pairs_cache and (app, b_dir) in _x2_pairs_cache
-    # the cached frames reference their own dataset's doc-id universe
-    max_a = _x2_pairs(spark, a_dir).agg({"doc_b": "max"}).collect()[0][0]
-    max_b = _x2_pairs(spark, b_dir).agg({"doc_b": "max"}).collect()[0][0]
+    pairs_a = _x2_pairs(spark, a_dir)
+    pairs_b = _x2_pairs(spark, b_dir)
+    assert _x2_pairs(spark, a_dir) is pairs_a
+    assert _x2_pairs(spark, b_dir) is pairs_b
+    assert pairs_a is not pairs_b
+    # the frames reference their own dataset's doc-id universe
+    max_a = pairs_a.agg({"doc_b": "max"}).collect()[0][0]
+    max_b = pairs_b.agg({"doc_b": "max"}).collect()[0][0]
     assert max_a is None or max_b is None or max_a <= max_b
