@@ -106,6 +106,57 @@ def materialize_latest(
     return latest
 
 
+# -- A30 / S22 — the SCD2 version clock -------------------------------------
+def with_next_offset(events: DataFrame, key_cols: list[str]) -> DataFrame:
+    """Each event's successor offset on its key as ``next_offset`` (NULL on
+    the key's latest event): one lead() per key, offset-ordered. A30 runs
+    it once over the whole log; S22 re-runs it over the touched keys'
+    accumulated events per micro-batch — lead() over a key's complete
+    event set does not depend on how the events were batched."""
+    w = Window.partitionBy(*key_cols).orderBy("offset")
+    return events.withColumn("next_offset", F.lead("offset").over(w))
+
+
+def scd2_versions(history: DataFrame, key_cols: list[str]) -> DataFrame:
+    """SCD Type-2 version rows of the orders payload from
+    :func:`with_next_offset` history: each insert/update opens a version
+    valid from its own offset to ``next_offset - 1``; a delete closes the
+    open version without opening one, and a version with no successor is
+    current."""
+    return history.filter(F.col("op").isin("c", "u")).select(
+        *key_cols,
+        "totalprice",
+        "orderstatus",
+        F.col("offset").alias("valid_from"),
+        (F.col("next_offset") - 1).alias("valid_to"),
+        F.col("next_offset").isNull().alias("is_current"),
+    )
+
+
+# -- A20 / S17 — incremental MV apply ----------------------------------------
+def apply_mv_diff(diff: DataFrame) -> DataFrame:
+    """The per-customer MV after a delta: the standing ``n_live`` /
+    ``revenue_cents`` minus the affected keys' old contribution
+    (``o_n`` / ``o_c``) plus their new one (``n_n`` / ``n_c``), a missing
+    side counting zero. ``diff`` carries all six on ``customer_id`` (the
+    full outer join of MV, old and new contributions). BIGINT cents keep
+    prev − old + new exactly equal to a from-scratch aggregate."""
+    z = F.lit(0).cast("long")
+    return diff.select(
+        "customer_id",
+        (
+            F.coalesce("n_live", z)
+            - F.coalesce("o_n", z)
+            + F.coalesce("n_n", z)
+        ).alias("n_live"),
+        (
+            F.coalesce("revenue_cents", z)
+            - F.coalesce("o_c", z)
+            + F.coalesce("n_c", z)
+        ).alias("revenue_cents"),
+    )
+
+
 # -- A12 / A13 / A15 ---------------------------------------------------------
 def derive_topic_name(namespace: Column, keyspace: Column, table: Column) -> Column:
     """A12 ``topic_name_derive``: ``{scylla.name}.{keyspace}.{table}``

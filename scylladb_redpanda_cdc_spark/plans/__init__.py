@@ -54,7 +54,7 @@ class QuerySpec:
 #: rewrite are harmless but occupy head slots). Round 10: the map-only
 #: coarse-argmin family (x13/x29/x90/x114 via _kmeans_assign and
 #: x50/x94/x107 via _standin_assign), x12's widened+capped LSH join,
-#: x121's phase-2 rework, the _embs_fanned corpus-pass restructures
+#: x121's phase-2 rework, the embeddings ``_fanned`` corpus-pass restructures
 #: (x54/x111/x112/x113), and the _x2_pairs session cache (x2/x92/x97).
 _REWRITTEN: tuple[str, ...] = (
     # Round 16 (optimization round 2): the round-15 entries all earned
@@ -96,6 +96,16 @@ _REWRITTEN: tuple[str, ...] = (
     "x30_canonical_select",
     "x85_dedup_method_report",
     "x86_minhash_dedup_e2e",
+    # Kernel twins collapsed to one builder each (plans byte-identical):
+    # x43/x72 share ``_bm25_scored``; a30/s22 share the SCD2 clock and
+    # version projection, a20/s17 the MV apply (operators/cdc.py) — s17
+    # and s22 are already listed above. Not entered: a32/s25 (reach a30
+    # through an unchanged plan), the ``_fanned`` call sites (a rename of
+    # the fan-out helper) and b32/o11 (bucketed catalog table names only).
+    "x43_bm25_rank",
+    "x72_rank_fusion",
+    "a20_incremental_mv",
+    "a30_scd2_dimension_history",
 )
 
 # The round-9 name `_REPROOF` was kept as an alias through rounds 10-11

@@ -1366,8 +1366,18 @@ def b31_join_skew_salted(spark, sf_dir):
     )
 
 
-_bucket_counter = [0]
-_bucketed_stages: dict[tuple[str, str], tuple[str, str]] = {}
+#: b32/o11's bucketed layouts: (fixture table, columns), bucketed and
+#: sorted on the first column.
+_BUCKETED = (
+    ("orders", ("o_orderkey", "o_orderpriority")),
+    ("lineitem", ("l_orderkey", "l_quantity")),
+)
+
+
+def _bucketed_names(loc: str) -> tuple[str, str]:
+    """The bucketed tables' catalog names, derived from their staged dir."""
+    base = os.path.basename(loc)
+    return f"{base}_orders", f"{base}_lineitem"
 
 
 def stage_bucketed_tables(spark, sf_dir) -> tuple[str, str]:
@@ -1376,37 +1386,24 @@ def stage_bucketed_tables(spark, sf_dir) -> tuple[str, str]:
     shuffle once' half of the bucketing pattern, so re-staging per call
     only re-pays it. Shared by b32 (co-located join) and o11 (bucket
     pruning): both are read-side dividends of the same ingest-time
-    layout."""
-    from scylladb_redpanda_cdc_spark.streaming.core import tmpdir
+    layout. The names derive from the staged dir, so a re-stage (reaped
+    scratch) registers fresh tables instead of reading vanished paths."""
+    from scylladb_redpanda_cdc_spark.streaming.core import staged, table_bytes
 
-    stage_key = (spark.sparkContext.applicationId, sf_dir)
-    if stage_key not in _bucketed_stages:
-        _bucket_counter[0] += 1
-        suffix = _bucket_counter[0]
-        from scylladb_redpanda_cdc_spark.streaming.core import table_bytes
+    def write(loc: str) -> None:
+        for (table, cols), name in zip(_BUCKETED, _bucketed_names(loc)):
+            (
+                _T(spark, sf_dir, table)
+                .select(*cols)
+                .write.mode("overwrite")
+                .option("path", f"{loc}/{name}")
+                .bucketBy(8, cols[0])
+                .sortBy(cols[0])
+                .saveAsTable(name)
+            )
 
-        loc = tmpdir("bucketed", bytes_hint=table_bytes(spark, sf_dir, "lineitem"))
-        o_tbl, li_tbl = f"sg_orders_b{suffix}", f"sg_lineitem_b{suffix}"
-        (
-            _T(spark, sf_dir, "orders")
-            .select("o_orderkey", "o_orderpriority")
-            .write.mode("overwrite")
-            .option("path", f"{loc}/{o_tbl}")
-            .bucketBy(8, "o_orderkey")
-            .sortBy("o_orderkey")
-            .saveAsTable(o_tbl)
-        )
-        (
-            _T(spark, sf_dir, "lineitem")
-            .select("l_orderkey", "l_quantity")
-            .write.mode("overwrite")
-            .option("path", f"{loc}/{li_tbl}")
-            .bucketBy(8, "l_orderkey")
-            .sortBy("l_orderkey")
-            .saveAsTable(li_tbl)
-        )
-        _bucketed_stages[stage_key] = (o_tbl, li_tbl)
-    return _bucketed_stages[stage_key]
+    hint = table_bytes(spark, sf_dir, "lineitem")
+    return _bucketed_names(staged(spark, "bucketed", (sf_dir,), hint, write))
 
 
 def b32_join_bucketed_colocated(spark, sf_dir):

@@ -682,22 +682,9 @@ def a20_incremental_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     d_new = new_aff.groupBy("customer_id").agg(
         F.count("*").alias("n_n"), F.sum(cents).alias("n_c")
     )
-    z = F.lit(0).cast("long")
-    merged = (
-        mv_old.join(d_old, "customer_id", "full")
-        .join(d_new, "customer_id", "full")
-        .select(
-            "customer_id",
-            (
-                F.coalesce("n_live", z)
-                - F.coalesce("o_n", z)
-                + F.coalesce("n_n", z)
-            ).alias("n_live"),
-            (
-                F.coalesce("revenue_cents", z)
-                - F.coalesce("o_c", z)
-                + F.coalesce("n_c", z)
-            ).alias("revenue_cents"),
+    merged = cdc.apply_mv_diff(
+        mv_old.join(d_old, "customer_id", "full").join(
+            d_new, "customer_id", "full"
         )
     )
     return merged.filter(F.col("n_live") > 0)
@@ -1217,33 +1204,27 @@ def a30_scd2_dimension_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     already has), one lead() pass per key — history is never rescanned,
     and the output is append-friendly (closing a version touches only
     that key's open row). At 100 TB of log this is the same plan."""
+    keys = ["customer_id", "order_id"]
     log = synth_changelog(spark, sf_dir)
-    w = Window.partitionBy("customer_id", "order_id").orderBy("offset")
-    return (
-        log.withColumn("next_offset", F.lead("offset").over(w))
-        .filter(F.col("op").isin("c", "u"))
-        .select(
-            "customer_id",
-            "order_id",
-            "totalprice",
-            "orderstatus",
-            F.col("offset").alias("valid_from"),
-            (F.col("next_offset") - 1).alias("valid_to"),
-            F.col("next_offset").isNull().alias("is_current"),
-        )
-    )
+    return cdc.scd2_versions(cdc.with_next_offset(log, keys), keys)
 
 
-_A30_SQL = f"""WITH {CHANGELOG_SQL_CTE.strip()},
+#: DuckDB twin of :func:`a30_scd2_dimension_history`: the ``WITH`` head
+#: ending in ``h``, the SCD2 version rows — shared by the a30, a32 and
+#: s25 oracles.
+_SCD2_HISTORY_SQL = f"""WITH {CHANGELOG_SQL_CTE.strip()},
 v AS (
   SELECT *, LEAD("offset") OVER (
       PARTITION BY customer_id, order_id ORDER BY "offset") AS next_offset
-  FROM changelog)
-SELECT customer_id, order_id, totalprice, orderstatus,
-  "offset" AS valid_from,
-  next_offset - 1 AS valid_to,
-  next_offset IS NULL AS is_current
-FROM v WHERE op IN ('c', 'u')"""
+  FROM changelog),
+h AS (
+  SELECT customer_id, order_id, totalprice, orderstatus,
+    "offset" AS valid_from,
+    next_offset - 1 AS valid_to,
+    next_offset IS NULL AS is_current
+  FROM v WHERE op IN ('c', 'u'))"""
+
+_A30_SQL = f"{_SCD2_HISTORY_SQL}\nSELECT * FROM h"
 
 
 def a32_asof_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1287,15 +1268,7 @@ def a32_asof_point_in_time(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_A32_SQL = f"""WITH {CHANGELOG_SQL_CTE.strip()},
-v AS (
-  SELECT *, LEAD("offset") OVER (
-      PARTITION BY customer_id, order_id ORDER BY "offset") AS next_offset
-  FROM changelog),
-h AS (
-  SELECT customer_id, order_id, totalprice, orderstatus,
-    "offset" AS valid_from, next_offset - 1 AS valid_to
-  FROM v WHERE op IN ('c', 'u')),
+_A32_SQL = f"""{_SCD2_HISTORY_SQL},
 a AS (SELECT CAST(FLOOR(MAX(valid_from) * 6 / 10) AS BIGINT) AS asof_offset
       FROM h)
 SELECT customer_id, order_id, totalprice, orderstatus,

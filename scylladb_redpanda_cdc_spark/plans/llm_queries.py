@@ -70,9 +70,10 @@ _SHINGLES_CTE = (
 PACK_SHARDS = int(os.environ.get("SG_PACK_SHARDS", "32"))
 
 
-def _docs_fanned(spark, sf_dir):
-    """``documents``, fanned out for per-doc heavy map work (shingling,
-    hashing, Arrow-batched Python decode).
+def _fanned(spark, sf_dir, table, key_col):
+    """Fixture ``table``, fanned out on ``key_col`` for per-row heavy map
+    work (shingling, hashing, Arrow-batched Python decode on
+    ``documents``; the interpreted HOF dot/norm folds on ``embeddings``).
 
     The test fixture is ONE small parquet row group = one input split, which
     would serialize the heavy map stage on a single core. A 100 TB corpus
@@ -84,36 +85,19 @@ def _docs_fanned(spark, sf_dir):
     maxPartitionBytes into many tasks without any repartition.
 
     The split-count probe forces physical planning of the scan, so its
-    verdict is memoized per dataset dir — four X specs share one probe."""
-    d = _T(spark, sf_dir, "documents")
+    verdict is memoized per (dataset dir, table) — the X specs share one
+    probe per table."""
+    d = _T(spark, sf_dir, table)
     cores = spark.sparkContext.defaultParallelism
-    key = (sf_dir, cores)
+    key = (sf_dir, table, cores)
     if key not in _FAN_DECISION:
         _FAN_DECISION[key] = d.rdd.getNumPartitions() < cores
     if _FAN_DECISION[key]:
-        d = d.repartition(cores, "doc_id")
+        d = d.repartition(cores, key_col)
     return d
 
 
-_FAN_DECISION: dict[tuple[str, int], bool] = {}
-
-
-def _embs_fanned(spark, sf_dir):
-    """``embeddings``, fanned out for per-row heavy vector math (the
-    interpreted HOF dot/norm folds) — ``_docs_fanned``'s discipline on the
-    other fixture: fan out ONLY when the scan's split count cannot feed
-    the cluster. The sf0.1 fixture is one row group = ONE task, which
-    serializes a 64-dim cosine per (vector, centroid) pair on a single
-    core; a 100 TB embedding table already scans as ~10^6 splits, so at
-    scale this branch never fires and the plan stays scan -> narrow map."""
-    e = _T(spark, sf_dir, "embeddings")
-    cores = spark.sparkContext.defaultParallelism
-    key = (sf_dir + "#emb", cores)
-    if key not in _FAN_DECISION:
-        _FAN_DECISION[key] = e.rdd.getNumPartitions() < cores
-    if _FAN_DECISION[key]:
-        e = e.repartition(cores, "vec_id")
-    return e
+_FAN_DECISION: dict[tuple[str, str, int], bool] = {}
 
 
 #: Fixed evaluation probe-batch size (round 11): every evaluation-family
@@ -158,7 +142,7 @@ def x1_dedup_exact(spark, sf_dir):
     at 100 TB that is the difference between shuffling every doc and
     shuffling every *distinct* doc. Hash keys are uniform, no skew.
 
-    No ``_docs_fanned``: one sha256 per row is LIGHT map work, and the
+    No ``_fanned``: one sha256 per row is LIGHT map work, and the
     groupBy already redistributes — a pre-shuffle of the full text column
     would double the bytes moved for zero parallelism the agg doesn't
     already get (measured 2.3x slower at sf0.1)."""
@@ -222,7 +206,7 @@ def _minhash_bands(spark, sf_dir):
     shingle->sha60->16-band-min signature pass is the expensive stage,
     and each consumer otherwise re-tokenizes and re-hashes the corpus.
     The cached frame is 16 narrow rows per doc — bounded."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     sh = d.select("doc_id", words(F.col("text")).alias("_ws")).select(
         "doc_id", F.explode(word_shingles(F.col("_ws"))).alias("s")
     ).select("doc_id", hash60(F.col("s")).alias("h"))
@@ -310,7 +294,7 @@ def _simhash_sigs(spark, sf_dir):
     the measured ~45% of the pair's combined map CPU this frame saves.
     Bounded: one long per document (never corpus-text-sized), eagerly
     ``stage_checkpoint``-ed, session-cached per (session, dataset)."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     out = d.select(
         "doc_id", simhash32(words(F.col("text"))).alias("sig32")
     ).transform(stage_checkpoint)
@@ -470,7 +454,7 @@ def x12_dedup_embedding_cosine(spark, sf_dir):
     cluster — zero vectors, template boilerplate embeddings — otherwise
     lands m²/2 pairs on one task). Members of over-cap buckets are exact-
     or cluster-dup families, x1/x50's job, not pairwise enumeration's."""
-    e = _embs_fanned(spark, sf_dir)
+    e = _fanned(spark, sf_dir, "embeddings", "vec_id")
     bucketed = e.select(
         "vec_id",
         "embedding",
@@ -554,11 +538,10 @@ def x13_sim_ivf_probe(spark, sf_dir):
     # map-only array_max argmin over the broadcast centroid array (zero
     # exchanges; the corpus x K fan-out never materializes as rows),
     # same bit-exact dot/(na*nb) arithmetic as the cosine kernel. The
-    # assignment stream is _embs_fanned (the pre-pass stays on the raw
+    # assignment stream is _fanned (the pre-pass stays on the raw
     # scan: index structures are tiny, only the full pass needs cores).
-    assigned = _kmeans_assign(
-        _embs_fanned(spark, sf_dir).select("vec_id", "embedding"), cent
-    ).select("vec_id", "cid", "embedding")
+    ef = _fanned(spark, sf_dir, "embeddings", "vec_id").select("vec_id", "embedding")
+    assigned = _kmeans_assign(ef, cent).select("vec_id", "cid", "embedding")
     # the query's 2 nearest centroids
     q = pre.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
     probes = (
@@ -801,7 +784,7 @@ def x18_multimodal_decode(spark, sf_dir):
         fake_decode_batches,
     )
 
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     assembled = d.select(
         "doc_id",
         F.encode("text", "utf-8").alias("blob"),
@@ -1167,7 +1150,7 @@ def _x29_assign(spark, sf_dir):
     )
     # the two full assignment passes run over the fanned scan (the
     # centroid seeds stay on the raw one-split read: K rows)
-    ef = _embs_fanned(spark, sf_dir).select("vec_id", "embedding")
+    ef = _fanned(spark, sf_dir, "embeddings", "vec_id").select("vec_id", "embedding")
     a1 = _kmeans_assign(ef, cent0)
     comp = a1.select("cid", F.posexplode("embedding").alias("dim", "val"))
     micros = F.floor(F.col("val").cast("double") * F.lit(1000000.0)).alias("vm")
@@ -1352,7 +1335,7 @@ def x33_span_dedup(spark, sf_dir):
     Span hashes are uniform 60-bit — no skew key exists by construction
     (a span shared by millions of docs still aggregates map-side first).
     Strict oracle: spans are strings, hashes are portable ``hash60``."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     # Materialize the token array as a projected attribute first: slicing
     # inside transform() references a column, not the tokenize expression,
     # so tokenization runs once per doc (the _shingle_zip O(n^2) trap).
@@ -1410,7 +1393,7 @@ def _vocab_counts(spark, sf_dir):
     (x34/x35/x93/x100) otherwise each re-tokenize the corpus, and the
     rank kernel's range-boundary sampling pass re-reads this frame — the
     cache makes both read a vocabulary-sized two-column frame instead."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     tok = d.select(F.explode(words(F.col("text"))).alias("token"))
     out = (
         tok.groupBy("token")
@@ -1460,7 +1443,7 @@ def x35_tokens_to_ids(spark, sf_dir):
     (Python list) and a DuckDB array (numpy) differently even when the
     values are identical - the join sidesteps the representation, not the
     check. Array-typed consumers use the pre-join ``token_ids`` column."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     vocab = _vocab_ranked(spark, sf_dir).select(
         "token", F.col("rank").alias("token_id")
     )
@@ -1502,7 +1485,7 @@ def x36_incremental_dedup(spark, sf_dir):
     smaller, so the classify join is an equi-join the optimizer can
     broadcast from the shard side; within-shard dedup is a partial agg on
     the shard only. The raw corpus is never rescanned per batch."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     h = F.sha2(F.lower(F.trim("text")), 256)
     hashed = d.select("doc_id", h.alias("text_hash"))
     corpus_index = (
@@ -1574,7 +1557,7 @@ def x37_pii_redact(spark, sf_dir):
     at any corpus size. Counts are computed on the pre-redaction text (the
     patterns are mutually non-overlapping, so order cannot shift counts);
     replacement nests email -> id -> phone identically in both engines."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     aug = d.select("doc_id", _pii_salted_text().alias("t"))
     redacted = F.regexp_replace(
         F.regexp_replace(
@@ -1614,7 +1597,7 @@ def x38_doc_chunk(spark, sf_dir):
     projection) then a single explode — map-only, no shuffle, no skew
     (fan-out per doc is n/48). ``chunk_hash`` is the portable ``hash60``
     so the DuckDB twin pins the exact chunk text, not just the geometry."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     t = d.select("doc_id", words(F.col("text")).alias("ws"))
     n = F.size(F.col("ws")).cast("long")
     k = (
@@ -1682,7 +1665,7 @@ def x39_dedup_containment(spark, sf_dir):
     tokenize+span+hash pipeline per branch (6 corpus scans measured; 2
     after — the materialize-the-inverted-index-before-fan-out shape x11
     and x46 use)."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     t = d.select("doc_id", words(F.col("text")).alias("ws"))
     occ = (
         t.select("doc_id", F.explode(_spans8(F.col("ws"))).alias("s"))
@@ -1756,7 +1739,7 @@ def x40_ngram_topk(spark, sf_dir):
     the top-100 (per-partition heaps + driver merge of 100-row heads; NO
     global sort of the gram histogram). Ordering (n DESC, gram ASC) is a
     total order, so the cut line is deterministic in both engines."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     g = d.select(words(F.col("text")).alias("_ws")).select(
         F.explode(word_grams(F.col("_ws"), 5)).alias("gram")
     )
@@ -1780,7 +1763,7 @@ def x41_bpe_pair_counts(spark, sf_dir):
     on the pair key, whose cardinality is bounded by the symbol alphabet
     squared (~1.3k for [a-z0-9]), i.e. the shuffle is ALPHABET-sized no
     matter how big the corpus. TakeOrdered caps the result."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     w = d.select(F.explode(words(F.col("text"))).alias("w"))
     pairs = w.select(
         F.explode(
@@ -1818,7 +1801,7 @@ def x42_text_diversity(spark, sf_dir):
     combine collapses within-partition repeats — then a doc-keyed rollup
     that reuses the same partitioning. Empty docs emit nothing (mirrored
     by the oracle)."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     tok = d.select("doc_id", F.explode(words(F.col("text"))).alias("term"))
     tc = tok.groupBy("doc_id", "term").agg(F.count("*").alias("cnt"))
     per = tc.groupBy("doc_id").agg(
@@ -1848,24 +1831,17 @@ BM25_K1 = 1.2
 BM25_B = 0.75
 
 
-def x43_bm25_rank(spark, sf_dir):
-    """BM25 retrieval scoring: top-20 docs for a literal 3-term query —
-    the lexical-retrieval baseline every RAG/eval pipeline needs beside
-    the embedding path (x3/x32). Uses the x7 rational idf ((N+1)/(df+1))
-    rather than the log idf: same ordering for df < N, and it keeps the
-    score a fixed per-row expression tree over exact integers — one
-    division chain, NO engine-varying ``ln``.
+def _bm25_scored(spark, sf_dir):
+    """The BM25 kernel x43 and x72 share: ``(scored, bm25)`` — per-doc
+    ``dl`` and query-term ``tf_*`` joined with the one-row corpus stats
+    (N, total length, the three ``df_*``), and the score column over it.
 
     Float exactness: tf, dl, df, N are exact BIGINTs; avgdl is one double
     division; each term's score is a fixed expression tree evaluated in
     declaration order and the 3 terms fold left-to-right — bit-identical
-    in DuckDB (same parenthesization, mirrored literally).
-
-    Scale shape: per-doc tf/dl aggs are partial-agg shuffles on doc_id;
-    the corpus stats (N, total length, 3 dfs) are ONE broadcast row; the
-    final top-20 is TakeOrdered. The query-term filter prunes the tf agg
-    to matching tokens before any shuffle."""
-    d = _docs_fanned(spark, sf_dir)
+    in DuckDB (same parenthesization, mirrored literally by
+    :func:`_bm25_sql`)."""
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     tok = d.select("doc_id", F.explode(words(F.col("text"))).alias("term"))
     dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
     qtf = (
@@ -1903,7 +1879,23 @@ def x43_bm25_rank(spark, sf_dir):
         return idf * ((tf * F.lit(BM25_K1 + 1.0)) / denom)
 
     t1, t2, t3 = BM25_TERMS
-    score = (term_score(t1) + term_score(t2)) + term_score(t3)
+    return scored, (term_score(t1) + term_score(t2)) + term_score(t3)
+
+
+def x43_bm25_rank(spark, sf_dir):
+    """BM25 retrieval scoring: top-20 docs for a literal 3-term query —
+    the lexical-retrieval baseline every RAG/eval pipeline needs beside
+    the embedding path (x3/x32). Uses the x7 rational idf ((N+1)/(df+1))
+    rather than the log idf: same ordering for df < N, and it keeps the
+    score a fixed per-row expression tree over exact integers — one
+    division chain, NO engine-varying ``ln`` (exactness argument on
+    :func:`_bm25_scored`).
+
+    Scale shape: per-doc tf/dl aggs are partial-agg shuffles on doc_id;
+    the corpus stats (N, total length, 3 dfs) are ONE broadcast row; the
+    final top-20 is TakeOrdered. The query-term filter prunes the tf agg
+    to matching tokens before any shuffle."""
+    scored, score = _bm25_scored(spark, sf_dir)
     return (
         scored.select(
             "doc_id",
@@ -2050,7 +2042,7 @@ def x46_dedup_est_quality(spark, sf_dir):
     reservoir, per bucket), so hot strata are measured without the
     m²/2 fan-out the uncapped round-10 eval paid inside its own run;
     the DuckDB twin mirrors the identical draw."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     sh = d.select("doc_id", words(F.col("text")).alias("_ws")).select(
         "doc_id", F.explode(word_shingles(F.col("_ws"))).alias("s")
     ).select("doc_id", hash60(F.col("s")).alias("h"))
@@ -2149,7 +2141,7 @@ def x47_contamination_score(spark, sf_dir):
     through one explode + broadcast join + per-doc partial agg, never
     shuffling corpus-sized data (the agg key is doc_id, whose partial agg
     collapses map-side to one row per doc)."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     grams = d.select("doc_id", words(F.col("text")).alias("_ws")).select(
         "doc_id",
         F.explode(word_shingles(F.col("_ws"), 4)).alias("s"),
@@ -2198,7 +2190,7 @@ def _doc_stats(spark, sf_dir):
     tokens), bg_total/bg_distinct (bigram counts), n_ws_tokens
     (whitespace split), n_bpe_tokens (BPE-ish regex). All counts
     BIGINT."""
-    d = _docs_fanned(spark, sf_dir).select(
+    d = _fanned(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", "lang", "text", words(F.col("text")).alias("_ws")
     )
     ws = F.col("_ws")
@@ -2410,7 +2402,7 @@ def x49_token_budget_mix(spark, sf_dir):
     Scale shape: one source-keyed partial agg (output is sources-sized,
     i.e. tiny), then a 1-row broadcast of the source count — the corpus
     streams once, nothing corpus-sized shuffles twice."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     t = d.select("source", words(F.col("text")).alias("ws"))
     per = t.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -2479,8 +2471,9 @@ def _standin_assign(spark, sf_dir):
     )
     # _kmeans_assign's map-only array_max argmin (round-10; this was an
     # inline copy of the old window form) over the fanned scan
+    ef = _fanned(spark, sf_dir, "embeddings", "vec_id").select("vec_id", "embedding")
     assigned = (
-        _kmeans_assign(_embs_fanned(spark, sf_dir).select("vec_id", "embedding"), cent)
+        _kmeans_assign(ef, cent)
         .select("vec_id", "cid", "embedding")
         .transform(stage_checkpoint)
     )
@@ -2532,7 +2525,7 @@ def x51_dsir_proxy(spark, sf_dir):
     exploded token stream — x28's discipline; the corpus-sized flow is one
     explode + broadcast join + per-doc partial agg, never a corpus-sized
     shuffle on a skewed key."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     toks = d.select(
         "doc_id", "source", F.explode(words(F.col("text"))).alias("tok")
     )
@@ -2591,7 +2584,7 @@ def x52_tokenizer_fertility(spark, sf_dir):
     Scale shape: per-doc counting is map-only expression work; the only
     shuffle is the language-keyed partial agg whose output is
     languages-sized — constant in corpus size."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     n_ws = F.size(
         F.filter(
             F.split(F.col("text"), r"\s+"), lambda t: t != F.lit("")
@@ -2707,7 +2700,7 @@ def x55_source_drift(spark, sf_dir):
     corpus-sized flow is one explode + two partial aggs; the per-(source,
     tok) table joins the broadcast corpus table, and the final outputs are
     sources-sized."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     toks = d.select("source", F.explode(words(F.col("text"))).alias("tok"))
     c_tot = toks.agg(F.count("*").alias("c_n"))
     c_freq = (
@@ -2809,8 +2802,10 @@ def x54_pq_ann(spark, sf_dir):
     l2sq = _pq_l2sq
     # the corpus pass (x8 explode + per-(vec, m) L2 folds) rides the
     # fanned scan; the codebook/query branches stay on the raw read
-    corpus = _embs_fanned(spark, sf_dir).select("vec_id", "embedding", ms).select(
-        "vec_id", "m", sub.alias("vsub")
+    corpus = (
+        _fanned(spark, sf_dir, "embeddings", "vec_id")
+        .select("vec_id", "embedding", ms)
+        .select("vec_id", "m", sub.alias("vsub"))
     )
     codes = (
         corpus.join(F.broadcast(cent), "m")
@@ -2875,7 +2870,7 @@ def x56_mixture_sample(spark, sf_dir):
     Scale shape: the allocation is a sources-sized broadcast; the draw is
     map-only (hash + compare + bounded explode — the epoch cap bounds the
     fan-out at 3 copies); no corpus-sized shuffle at all."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     t = d.select("doc_id", "source", words(F.col("text")).alias("ws"))
     per = t.groupBy("source").agg(
         F.sum(F.size("ws").cast("long")).alias("n_tokens")
@@ -3034,7 +3029,7 @@ def x58_media_resize(spark, sf_dir):
         fake_resize_batches,
     )
 
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     assembled = d.select(
         "doc_id",
         (F.col("n_chars") % 640 + 1).cast("int").alias("width"),
@@ -3060,7 +3055,7 @@ def x59_media_features(spark, sf_dir):
         feature_extract_batches,
     )
 
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     assembled = d.select("doc_id", F.encode("text", "utf-8").alias("blob"))
     return assembled.mapInPandas(feature_extract_batches, FEATURE_SCHEMA)
 
@@ -3143,9 +3138,9 @@ def x61_boilerplate_strip(spark, sf_dir):
     positions, with nothing exploded. The exchange count is unchanged
     (``explain()``): the old 4-HashAggregate distinct cascade becomes one
     partial+final ObjectHashAggregate pair (collect_list), and neither
-    form adds an exchange of its own, because ``_docs_fanned``'s doc_id
+    form adds an exchange of its own, because ``_fanned``'s doc_id
     repartition already clusters the hits by doc."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     toks = d.select("doc_id", words(F.col("text")).alias("ws"))
     top = (
         toks.select(F.explode(word_grams(F.col("ws"), 5)).alias("gram"))
@@ -3316,7 +3311,7 @@ def x64_length_histogram(spark, sf_dir):
 
     Scale shape: map-only bucketing + one bucket-keyed partial agg whose
     output is ~log2(max_len) rows."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     t = d.select(F.size(words(F.col("text"))).cast("long").alias("n"))
     bucket = F.expr(
         "CASE WHEN n <= 0 THEN 0 WHEN n < 64 THEN 64 WHEN n < 128 THEN 128"
@@ -3360,7 +3355,7 @@ def x65_vocab_growth(spark, sf_dir):
     (zipf keys collapse map-side); the ordered window runs over
     CHUNK-count rows, bounded and tiny — x34's discipline applied to the
     growth dimension."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     toks = d.select("doc_id", F.explode(words(F.col("text"))).alias("tok"))
     first = toks.groupBy("tok").agg(F.min("doc_id").alias("first_doc"))
     per_chunk = (
@@ -3434,7 +3429,7 @@ def x66_countmin_sketch(spark, sf_dir):
     table (the point of a sketch: state independent of corpus size); the
     probe side broadcasts the sketch to 20 rows. At 100 TB the sketch
     rides map-side combine and the shuffle carries counters, not tokens."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     toks = d.select(F.explode(words(F.col("text"))).alias("tok"))
     h = hash60(F.col("tok"))
     # ONE corpus scan: each token explodes into its 4 (row, bucket) cells
@@ -3505,7 +3500,7 @@ def x67_weighted_sample(spark, sf_dir):
 
     Scale shape: rank is map-only; the selection is TakeOrdered top-k —
     no global sort, no shuffle beyond the k survivors."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     t = d.select(
         "doc_id", F.size(words(F.col("text"))).cast("long").alias("n_tokens")
     ).filter(F.col("n_tokens") > 0)
@@ -3581,7 +3576,7 @@ def x68_bpe_merge_apply(spark, sf_dir):
     Scale shape: the argmax pair is a 1-row broadcast; merge + re-pair
     are map-side expression algebra; both aggs shuffle alphabet²-sized
     keys regardless of corpus size."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     w = d.select(F.explode(words(F.col("text"))).alias("w"))
 
     def pair_counts(words_df, col):
@@ -3659,7 +3654,7 @@ def x69_collocation_lift(spark, sf_dir):
     zipf keys collapse map-side) + the unigram table BROADCAST twice onto
     the bigram table (x28's discipline), 1-row totals broadcast, TakeOrdered
     top-k. Nothing corpus-sized shuffles twice."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     toks = d.select(words(F.col("text")).alias("ws"))
     uni = (
         toks.select(F.explode("ws").alias("tok"))
@@ -3916,60 +3911,22 @@ ORDER BY centered_cos DESC, vec_id ASC LIMIT 10"""
 
 def x72_rank_fusion(spark, sf_dir):
     """Hybrid-search rank fusion (RRF, Cormack et al. 2009): fuse the
-    BM25 ranking (x43's scoring verbatim) with a query-likelihood ranking
-    (sum tf / dl) for the same literal query via reciprocal-rank fusion
-    ``sum 1/(60+rank)`` over each list's top-50 — THE standard way
-    production search merges lexical and secondary rankers without score
-    calibration.
+    BM25 ranking (x43's :func:`_bm25_scored` kernel) with a
+    query-likelihood ranking (sum tf / dl) for the same literal query via
+    reciprocal-rank fusion ``sum 1/(60+rank)`` over each list's top-50 —
+    THE standard way production search merges lexical and secondary
+    rankers without score calibration.
 
     Exactness: both scores are fixed expression trees over exact
-    integers (bit-identical per x43's argument); ranks are integers from
-    total orders; RRF adds two exact divisions in a fixed order.
+    integers (bit-identical per :func:`_bm25_scored`); ranks are
+    integers from total orders; RRF adds two exact divisions in a fixed
+    order.
 
     Scale shape: candidates are docs matching >=1 query term (pruned
     before any shuffle); each top-50 is TakeOrdered then ranked by a
     window over FIFTY rows; the fusion join is 50x50-bounded."""
-    d = _docs_fanned(spark, sf_dir)
-    tok = d.select("doc_id", F.explode(words(F.col("text"))).alias("term"))
-    dl = tok.groupBy("doc_id").agg(F.count("*").alias("dl"))
-    qtf = (
-        tok.filter(F.col("term").isin(*BM25_TERMS))
-        .groupBy("doc_id")
-        .agg(
-            *[
-                F.sum(F.when(F.col("term") == t, 1).otherwise(0)).alias(
-                    f"tf_{t}"
-                )
-                for t in BM25_TERMS
-            ]
-        )
-    )
-    stats = tok.agg(
-        F.countDistinct("doc_id").alias("n_docs"),
-        F.count("*").alias("total_len"),
-        *[
-            F.countDistinct(
-                F.when(F.col("term") == t, F.col("doc_id"))
-            ).alias(f"df_{t}")
-            for t in BM25_TERMS
-        ],
-    )
-    scored = dl.join(qtf, "doc_id").crossJoin(F.broadcast(stats))
-    avgdl = F.col("total_len").cast("double") / F.col("n_docs").cast("double")
-
-    def term_score(t: str):
-        tf = F.col(f"tf_{t}").cast("double")
-        idf = (F.col("n_docs").cast("double") + F.lit(1.0)) / (
-            F.col(f"df_{t}").cast("double") + F.lit(1.0)
-        )
-        denom = tf + F.lit(BM25_K1) * (
-            F.lit(1.0 - BM25_B)
-            + (F.lit(BM25_B) * F.col("dl").cast("double")) / avgdl
-        )
-        return idf * ((tf * F.lit(BM25_K1 + 1.0)) / denom)
-
+    scored, s_a = _bm25_scored(spark, sf_dir)
     t1, t2, t3 = BM25_TERMS
-    s_a = (term_score(t1) + term_score(t2)) + term_score(t3)
     s_b = (
         F.col(f"tf_{t1}") + F.col(f"tf_{t2}") + F.col(f"tf_{t3}")
     ).cast("double") / F.col("dl").cast("double")
@@ -4003,7 +3960,11 @@ def x72_rank_fusion(spark, sf_dir):
     )
 
 
-def _x72_sql() -> str:
+def _bm25_sql() -> tuple[str, str]:
+    """DuckDB twin of :func:`_bm25_scored`: the ``WITH`` head ending in the
+    per-doc ``dl``/``qtf`` and corpus ``stats`` CTEs, and the BM25 score
+    over ``dl JOIN qtf USING (doc_id) CROSS JOIN stats`` (same
+    parenthesization and fold order as the Spark expression)."""
     t1, t2, t3 = BM25_TERMS
     k1, k1p1, omb, b = (
         repr(BM25_K1),
@@ -4031,18 +3992,24 @@ def _x72_sql() -> str:
         for t in BM25_TERMS
     )
     in_list = ", ".join(f"'{t}'" for t in BM25_TERMS)
-    return f"""WITH {_TOKS_CTE},
+    ctes = f"""WITH {_TOKS_CTE},
 tok AS (SELECT doc_id, unnest(ws) AS term FROM toks),
 dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok GROUP BY 1),
 qtf AS (SELECT doc_id, {terms}
         FROM tok WHERE term IN ({in_list}) GROUP BY 1),
 stats AS (SELECT COUNT(DISTINCT doc_id) AS n_docs,
             COUNT(*) AS total_len, {dfs}
-          FROM tok),
+          FROM tok)"""
+    return ctes, f"({s(t1)} + {s(t2)}) + {s(t3)}"
+
+
+_BM25_CTES, _BM25_SCORE = _bm25_sql()
+
+_X72_SQL = f"""{_BM25_CTES},
 ranked AS (
   SELECT doc_id,
-    ({s(t1)} + {s(t2)}) + {s(t3)} AS s_a,
-    CAST(tf_{t1} + tf_{t2} + tf_{t3} AS DOUBLE) / CAST(dl AS DOUBLE) AS s_b
+    {_BM25_SCORE} AS s_a,
+    CAST({" + ".join(f"tf_{t}" for t in BM25_TERMS)} AS DOUBLE) / CAST(dl AS DOUBLE) AS s_b
   FROM dl JOIN qtf USING (doc_id) CROSS JOIN stats),
 la AS (SELECT doc_id, r AS rank_bm25 FROM (
     SELECT doc_id, ROW_NUMBER() OVER (ORDER BY s_a DESC, doc_id ASC) AS r
@@ -4055,9 +4022,6 @@ SELECT doc_id, rank_bm25, rank_ql,
   + COALESCE(1.0 / (60.0 + CAST(rank_ql AS DOUBLE)), 0.0) AS rrf_score
 FROM la FULL OUTER JOIN lb USING (doc_id)
 ORDER BY rrf_score DESC, doc_id ASC LIMIT 20"""
-
-
-_X72_SQL = _x72_sql()
 
 
 def x73_dataset_card(spark, sf_dir):
@@ -4074,7 +4038,7 @@ def x73_dataset_card(spark, sf_dir):
     Scale shape: ONE corpus pass feeding a per-doc (len, hash) frame;
     vocab and dup stats are partial aggs (hash/token keys collapse
     map-side); the card itself is a 1-row agg."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     per = d.select(
         "doc_id",
         "lang",
@@ -4214,15 +4178,26 @@ WHERE CAST(shared AS DOUBLE) / CAST(sa.n + sb.n - shared AS DOUBLE) >= 0.1"""
 
 _X11_SQL = f"WITH {_X11_CTES}\n{_X11_FINAL}"
 
-_X21_SQL = f"""WITH RECURSIVE {_X11_CTES},
-jpairs AS ({_X11_FINAL}),
-edges AS (SELECT doc_a AS a, doc_b AS b FROM jpairs
-          UNION ALL SELECT doc_b AS a, doc_a AS b FROM jpairs),
+
+def _cc_labels_sql(pair_ctes: str, pair_select: str) -> str:
+    """DuckDB twin of :func:`_component_labels`: the ``WITH RECURSIVE``
+    head ending in ``labels(doc_id, cluster_id)`` — each document's
+    minimum reachable doc id over the symmetric edges of the pair set
+    ``pair_select`` (a ``doc_a, doc_b`` select over ``pair_ctes``)."""
+    return f"""WITH RECURSIVE {pair_ctes},
+pairs AS ({pair_select}),
+edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
+          UNION ALL SELECT doc_b AS a, doc_a AS b FROM pairs),
 reach AS (SELECT doc_id, doc_id AS r FROM documents
           UNION
-          SELECT reach.doc_id, e.b AS r FROM reach JOIN edges e ON reach.r = e.a)
-SELECT doc_id, MIN(r) AS cluster_id, MIN(r) = doc_id AS is_canonical
-FROM reach GROUP BY doc_id"""
+          SELECT reach.doc_id, e.b AS r FROM reach JOIN edges e ON reach.r = e.a),
+labels AS (SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id)"""
+
+
+_X11_LABELS_SQL = _cc_labels_sql(_X11_CTES, _X11_FINAL)
+
+_X21_SQL = f"""{_X11_LABELS_SQL}
+SELECT doc_id, cluster_id, cluster_id = doc_id AS is_canonical FROM labels"""
 
 def _cos_sql(a: str, b: str) -> str:
     """DuckDB twin of operators.llm.cosine: same double-promotion order, so
@@ -4262,17 +4237,30 @@ def _lsh_bucket_sql(n_planes: int, emb: str = "embedding") -> str:
 _X2_BANDS_VALUES = ",\n  ".join(
     f"({b}, {a}, {c})" for b, (a, c) in enumerate(MINHASH_BANDS)
 )
-_X2_CTES = f"""{_TOKS_CTE},
+
+
+def _minhash_sigs_sql(key: str, grams: str) -> str:
+    """The MinHash chain over ``grams(key, s)`` (``grams`` is its select
+    over the shingle CTE ``sh``): ``hs(key, h)`` sha60 shingle hashes and
+    ``sigs(key, band, sig)``, the min re-mixed hash per (key, band)."""
+    return f"""{_TOKS_CTE},
 {_SHINGLES_CTE},
-grams AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-hs AS (SELECT doc_id,
+grams AS ({grams}),
+hs AS (SELECT {key},
          CAST(concat('0x', substr(sha256(s), 1, 15)) AS BIGINT) AS h
        FROM grams),
 bands(band, a, c) AS (VALUES
   {_X2_BANDS_VALUES}),
-sigs AS (SELECT doc_id, band,
+sigs AS (SELECT {key}, band,
            MIN(((h % {MINHASH_P}) * a + c) % {MINHASH_P}) AS sig
-         FROM hs CROSS JOIN bands GROUP BY doc_id, band),
+         FROM hs CROSS JOIN bands GROUP BY {key}, band)"""
+
+
+_DOC_MINHASH_SQL = _minhash_sigs_sql(
+    "doc_id", "SELECT doc_id, unnest(shingles) AS s FROM sh"
+)
+
+_X2_CTES = f"""{_DOC_MINHASH_SQL},
 kept AS (SELECT s.doc_id, s.band, s.sig FROM sigs s
          JOIN (SELECT band, sig FROM sigs GROUP BY band, sig
                HAVING COUNT(*) <= {X2_BUCKET_CAP}) ok
@@ -4470,12 +4458,16 @@ SELECT doc_a, doc_b, n_shared_spans, sa.n AS n_spans_a,
 FROM shared JOIN sizes sa ON doc_a = sa.doc_id
 WHERE CAST(n_shared_spans AS DOUBLE) / CAST(sa.n AS DOUBLE) >= 0.5"""
 
-#: x13 is seed-free (centroids by modulus, everything else cosine
-#: arithmetic), so unlike the xxhash64-based X ops it admits a full strict
-#: oracle: DuckDB recomputes the IVF pipeline — assignment, probe choice,
-#: and within-cluster exact search — end to end.
-_X13_SQL = f"""WITH cent AS (SELECT vec_id AS cid, embedding AS cemb
-              FROM embeddings WHERE vec_id % 25 = 0),
+#: The seed-free IVF centroid draw (every 25th vector) — the Spark side's
+#: ``F.col("vec_id") % 25 == 0``.
+_CENTROID_FILTER = "WHERE vec_id % 25 = 0"
+
+#: DuckDB twin of :func:`_kmeans_assign` over the drawn centroids:
+#: ``cent(cid, cemb)``, every (vector, centroid) cosine ``ac``, and each
+#: vector's best centroid ``assigned(vec_id, embedding, cid)`` (ties go to
+#: the lower cid).
+_IVF_ASSIGN_CTES = f"""cent AS (SELECT vec_id AS cid, embedding AS cemb
+              FROM embeddings {_CENTROID_FILTER}),
 ac AS (SELECT e.vec_id, e.embedding, c.cid,
               {_cos_sql('e.embedding', 'c.cemb')} AS c_cos
        FROM embeddings e CROSS JOIN cent c),
@@ -4483,7 +4475,13 @@ assigned AS (SELECT vec_id, embedding, cid FROM (
   SELECT vec_id, embedding, cid,
          ROW_NUMBER() OVER (PARTITION BY vec_id
                             ORDER BY c_cos DESC, cid ASC) AS rn
-  FROM ac) WHERE rn = 1),
+  FROM ac) WHERE rn = 1)"""
+
+#: x13 is seed-free (centroids by modulus, everything else cosine
+#: arithmetic), so unlike the xxhash64-based X ops it admits a full strict
+#: oracle: DuckDB recomputes the IVF pipeline — assignment, probe choice,
+#: and within-cluster exact search — end to end.
+_X13_SQL = f"""WITH {_IVF_ASSIGN_CTES},
 q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
 probes AS (SELECT cid FROM cent CROSS JOIN q
            ORDER BY {_cos_sql('cemb', 'qe')} DESC, cid ASC LIMIT 2)
@@ -4543,19 +4541,11 @@ def _x29_sql() -> str:
     """Both Lloyd iterations unrolled in DuckDB, mirroring x29's exact
     arithmetic: integer-micros centroid sums, one double division per
     mean component, the shared cosine fold."""
-    return f"""WITH cent0 AS (SELECT vec_id AS cid, embedding AS cemb
-              FROM embeddings WHERE vec_id % 25 = 0),
-ac1 AS (SELECT e.vec_id, e.embedding, c.cid,
-               {_cos_sql('e.embedding', 'c.cemb')} AS c_cos
-        FROM embeddings e CROSS JOIN cent0 c),
-a1 AS (SELECT vec_id, embedding, cid FROM (
-         SELECT *, ROW_NUMBER() OVER (PARTITION BY vec_id
-                    ORDER BY c_cos DESC, cid ASC) AS rn FROM ac1)
-       WHERE rn = 1),
+    return f"""WITH {_IVF_ASSIGN_CTES},
 comp AS (SELECT cid,
                 unnest(range(1, len(embedding) + 1)) AS dim,
                 unnest(embedding) AS val
-         FROM a1),
+         FROM assigned),
 sums AS (SELECT cid, dim,
                 CAST(SUM(CAST(FLOOR(CAST(val AS DOUBLE) * 1000000.0) AS BIGINT))
                      AS BIGINT) AS s,
@@ -4653,19 +4643,12 @@ SELECT doc_id, len(ws) AS n_words,
   {_SCORE_SQL} AS quality_score
 FROM toks"""
 
-_X30_SQL = f"""WITH RECURSIVE {_X11_CTES},
-jpairs AS ({_X11_FINAL}),
-edges AS (SELECT doc_a AS a, doc_b AS b FROM jpairs
-          UNION ALL SELECT doc_b AS a, doc_a AS b FROM jpairs),
-reach AS (SELECT doc_id, doc_id AS r FROM documents
-          UNION
-          SELECT reach.doc_id, e.b AS r FROM reach JOIN edges e ON reach.r = e.a),
-cl AS (SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id),
+_X30_SQL = f"""{_X11_LABELS_SQL},
 q AS (SELECT doc_id, {_SCORE_SQL} AS quality_score FROM toks)
 SELECT doc_id, cluster_id, quality_score,
   ROW_NUMBER() OVER (PARTITION BY cluster_id
                      ORDER BY quality_score DESC, doc_id ASC) = 1 AS keep
-FROM cl JOIN q USING (doc_id)"""
+FROM labels JOIN q USING (doc_id)"""
 
 _X32_SQL = f"""WITH q AS (SELECT vec_id AS qid, embedding AS qe
            FROM embeddings {_PROBE_SQL}),
@@ -4716,49 +4699,11 @@ FROM per"""
 #: x43's oracle embeds Python-computed float literals via repr() so both
 #: engines parse the exact same doubles (repr round-trips; DuckDB parses
 #: decimal literals to nearest double, which is the identical value).
-def _bm25_sql() -> str:
-    t1, t2, t3 = BM25_TERMS
-    k1, k1p1, omb, b = (
-        repr(BM25_K1),
-        repr(BM25_K1 + 1.0),
-        repr(1.0 - BM25_B),
-        repr(BM25_B),
-    )
-    avgdl = "(CAST(total_len AS DOUBLE) / CAST(n_docs AS DOUBLE))"
-
-    def s(t: str) -> str:
-        return (
-            f"((CAST(n_docs AS DOUBLE) + 1.0) / (CAST(df_{t} AS DOUBLE) + 1.0))"
-            f" * ((CAST(tf_{t} AS DOUBLE) * {k1p1})"
-            f" / (CAST(tf_{t} AS DOUBLE) + {k1} * ({omb}"
-            f" + ({b} * CAST(dl AS DOUBLE)) / {avgdl})))"
-        )
-
-    terms = ", ".join(
-        f"CAST(SUM(CASE WHEN term = '{t}' THEN 1 ELSE 0 END) AS BIGINT)"
-        f" AS tf_{t}"
-        for t in BM25_TERMS
-    )
-    dfs = ", ".join(
-        f"COUNT(DISTINCT CASE WHEN term = '{t}' THEN doc_id END) AS df_{t}"
-        for t in BM25_TERMS
-    )
-    in_list = ", ".join(f"'{t}'" for t in BM25_TERMS)
-    return f"""WITH {_TOKS_CTE},
-tok AS (SELECT doc_id, unnest(ws) AS term FROM toks),
-dl AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS dl FROM tok GROUP BY 1),
-qtf AS (SELECT doc_id, {terms}
-        FROM tok WHERE term IN ({in_list}) GROUP BY 1),
-stats AS (SELECT COUNT(DISTINCT doc_id) AS n_docs,
-            COUNT(*) AS total_len, {dfs}
-          FROM tok)
-SELECT doc_id, dl, tf_{t1}, tf_{t2}, tf_{t3},
-  ({s(t1)} + {s(t2)}) + {s(t3)} AS bm25
+_X43_SQL = f"""{_BM25_CTES}
+SELECT doc_id, dl, {", ".join(f"tf_{t}" for t in BM25_TERMS)},
+  {_BM25_SCORE} AS bm25
 FROM dl JOIN qtf USING (doc_id) CROSS JOIN stats
 ORDER BY bm25 DESC, doc_id ASC LIMIT 20"""
-
-
-_X43_SQL = _bm25_sql()
 
 _X44_SQL = """WITH per AS (
   SELECT lang, COUNT(*) AS n_docs FROM documents GROUP BY 1),
@@ -4793,17 +4738,7 @@ SELECT qid, CAST(COUNT(*) AS BIGINT) AS k,
     / CAST(COUNT(*) AS DOUBLE) AS recall_at_k
 FROM top GROUP BY qid"""
 
-_X46_SQL = f"""WITH {_TOKS_CTE},
-{_SHINGLES_CTE},
-grams AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
-hs AS (SELECT doc_id,
-         CAST(concat('0x', substr(sha256(s), 1, 15)) AS BIGINT) AS h
-       FROM grams),
-bands(band, a, c) AS (VALUES
-  {_X2_BANDS_VALUES}),
-sigs AS (SELECT doc_id, band,
-           MIN(((h % {MINHASH_P}) * a + c) % {MINHASH_P}) AS sig
-         FROM hs CROSS JOIN bands GROUP BY doc_id, band),
+_X46_SQL = f"""WITH {_DOC_MINHASH_SQL},
 kept AS (SELECT doc_id, band, sig FROM sigs
          QUALIFY ROW_NUMBER() OVER (PARTITION BY band, sig
            ORDER BY CAST(concat('0x',
@@ -4859,8 +4794,9 @@ SELECT sz.doc_id, sz.n_shingles,
     / CAST(sz.n_shingles AS DOUBLE) AS contamination_frac
 FROM sizes sz LEFT JOIN hits h USING (doc_id)"""
 
-_X48_SQL = f"""WITH {_TOKS_CTE},
-f AS (
+#: x48's features and linear score over a ``toks(doc_id, ws)`` CTE — the
+#: twin of :func:`quality_classify`, shared by x48's and s16's oracles.
+_X48_SCORE_SQL = f"""f AS (
   SELECT doc_id,
     LEAST(CAST(len(ws) AS BIGINT), 200) AS f_len,
     CAST(len(list_filter(ws, w -> w IN
@@ -4876,6 +4812,8 @@ SELECT doc_id, f_len, f_stop_ppm, f_ttr_ppm,
   ({X48_W_BIAS} + {X48_W_LEN} * f_len + {X48_W_STOP} * f_stop_ppm
     + {X48_W_TTR} * f_ttr_ppm) >= {X48_TAU} AS keep
 FROM f"""
+
+_X48_SQL = f"WITH {_TOKS_CTE},\n{_X48_SCORE_SQL}"
 
 _X49_SQL = """WITH toks AS (SELECT source,
   list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '') AS ws
@@ -4895,16 +4833,7 @@ FROM per CROSS JOIN tot""".format(
     cap=X49_MAX_EPOCHS_PPM, budget=X49_BUDGET_TOKENS
 )
 
-_X50_SQL = f"""WITH cent AS (SELECT vec_id AS cid, embedding AS cemb
-              FROM embeddings WHERE vec_id % 25 = 0),
-ac AS (SELECT e.vec_id, e.embedding, c.cid,
-              {_cos_sql('e.embedding', 'c.cemb')} AS c_cos
-       FROM embeddings e CROSS JOIN cent c),
-assigned AS (SELECT vec_id, embedding, cid FROM (
-  SELECT vec_id, embedding, cid,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY c_cos DESC, cid ASC) AS rn
-  FROM ac) WHERE rn = 1),
+_X50_SQL = f"""WITH {_IVF_ASSIGN_CTES},
 prior AS (SELECT a.vec_id,
                  MAX({_cos_sql('a.embedding', 'b.embedding')}) AS max_prior_cos
           FROM assigned a JOIN assigned b
@@ -4969,7 +4898,7 @@ _X54_SQL = f"""WITH ms AS (SELECT unnest(range(0, {X54_M})) AS m),
 cent AS (
   SELECT vec_id AS cid, m,
          embedding[m * {X54_SUB} + 1 : m * {X54_SUB} + {X54_SUB}] AS csub
-  FROM embeddings, ms WHERE vec_id % 25 = 0),
+  FROM embeddings, ms {_CENTROID_FILTER}),
 corpus AS (
   SELECT vec_id, m,
          embedding[m * {X54_SUB} + 1 : m * {X54_SUB} + {X54_SUB}] AS vsub
@@ -5821,19 +5750,10 @@ def x84_source_minhash_overlap(spark, sf_dir):
 
 
 def _x84_sql() -> str:
-    return f"""WITH {_TOKS_CTE},
-{_SHINGLES_CTE},
-grams AS (SELECT t.source, unnest(s2.shingles) AS s
+    grams = """SELECT t.source, unnest(s2.shingles) AS s
           FROM sh s2 JOIN (SELECT doc_id, source FROM documents) t
-            ON s2.doc_id = t.doc_id),
-hs AS (SELECT source,
-         CAST(concat('0x', substr(sha256(s), 1, 15)) AS BIGINT) AS h
-       FROM grams),
-bands(band, a, c) AS (VALUES
-  {_X2_BANDS_VALUES}),
-sigs AS (SELECT source, band,
-           MIN(((h % {MINHASH_P}) * a + c) % {MINHASH_P}) AS sig
-         FROM hs CROSS JOIN bands GROUP BY source, band),
+            ON s2.doc_id = t.doc_id"""
+    return f"""WITH {_minhash_sigs_sql("source", grams)},
 agree AS (SELECT x.source AS source_a, y.source AS source_b,
             CAST(SUM(CASE WHEN x.sig = y.sig THEN 1 ELSE 0 END) AS BIGINT)
               AS n_agree
@@ -5959,18 +5879,11 @@ def _x86_labels(spark, sf_dir):
     return _component_labels(spark, sf_dir, x2_dedup_fuzzy_minhash(spark, sf_dir))
 
 
-_X86_SQL = f"""WITH RECURSIVE {_X2_CTES},
-mpairs AS ({_X2_FINAL}),
-edges AS (SELECT doc_a AS a, doc_b AS b FROM mpairs
-          UNION ALL SELECT doc_b AS a, doc_a AS b FROM mpairs),
-reach AS (SELECT doc_id, doc_id AS r FROM documents
-          UNION
-          SELECT reach.doc_id, e.b AS r FROM reach JOIN edges e ON reach.r = e.a),
-lab AS (SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id),
+_X86_SQL = f"""{_cc_labels_sql(_X2_CTES, _X2_FINAL)},
 sz AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS n_members
-       FROM lab GROUP BY 1)
+       FROM labels GROUP BY 1)
 SELECT l.doc_id, l.cluster_id, l.cluster_id = l.doc_id AS keep, sz.n_members
-FROM lab l JOIN sz USING (cluster_id)"""
+FROM labels l JOIN sz USING (cluster_id)"""
 
 
 def x87_cdc_corpus_sync(spark, sf_dir):
@@ -6243,9 +6156,10 @@ def x90_ivf_pq_ann(spark, sf_dir):
     # coarse assignment = _kmeans_assign's map-only array_max argmin over
     # the broadcast centroid array (zero exchanges, no materialized
     # fan-out); the full pass runs over the fanned scan
-    assigned = _kmeans_assign(
-        _embs_fanned(spark, sf_dir).select("vec_id", "embedding"), cent
-    ).select("vec_id", F.col("cid").alias("coarse_cid"))
+    ef = _fanned(spark, sf_dir, "embeddings", "vec_id").select("vec_id", "embedding")
+    assigned = _kmeans_assign(ef, cent).select(
+        "vec_id", F.col("cid").alias("coarse_cid")
+    )
     q = pre.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
     probes = (
         cent.crossJoin(F.broadcast(q))
@@ -6310,26 +6224,17 @@ def x90_ivf_pq_ann(spark, sf_dir):
     )
 
 
-_X90_SQL = f"""WITH cent AS (SELECT vec_id AS cid, embedding AS cemb
-              FROM embeddings WHERE vec_id % 25 = 0),
-ac AS (SELECT e.vec_id, c.cid,
-              {_cos_sql('e.embedding', 'c.cemb')} AS c_cos
-       FROM embeddings e CROSS JOIN cent c),
-assigned AS (SELECT vec_id, cid AS coarse_cid FROM (
-  SELECT vec_id, cid,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY c_cos DESC, cid ASC) AS rn
-  FROM ac) WHERE rn = 1),
+_X90_SQL = f"""WITH {_IVF_ASSIGN_CTES},
 q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0),
-probes AS (SELECT cid AS coarse_cid FROM cent CROSS JOIN q
+probes AS (SELECT cid FROM cent CROSS JOIN q
            ORDER BY {_cos_sql('cemb', 'qe')} DESC, cid ASC LIMIT 2),
-cand AS (SELECT vec_id, coarse_cid FROM assigned JOIN probes
-         USING (coarse_cid) WHERE vec_id <> 0),
+cand AS (SELECT vec_id, cid AS coarse_cid FROM assigned JOIN probes
+         USING (cid) WHERE vec_id <> 0),
 ms AS (SELECT unnest(range(0, {X54_M})) AS m),
 centpq AS (
   SELECT vec_id AS cid, m,
          embedding[m * {X54_SUB} + 1 : m * {X54_SUB} + {X54_SUB}] AS csub
-  FROM embeddings, ms WHERE vec_id % 25 = 0),
+  FROM embeddings, ms {_CENTROID_FILTER}),
 corpus AS (
   SELECT e.vec_id, m,
          embedding[m * {X54_SUB} + 1 : m * {X54_SUB} + {X54_SUB}] AS vsub
@@ -6385,7 +6290,7 @@ def x91_shard_pack(spark, sf_dir):
     (tokens x N x 1e6; a DECIMAL widen is the 100-TB-corpus variant).
     Complements x24 (packs WITHIN a shard into context windows) and x81
     (epoch-level order shuffle)."""
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     per_doc = d.select(
         (
             hash60(F.concat(F.lit("shard:"), F.col("doc_id").cast("string")))
@@ -6501,7 +6406,7 @@ def x93_oov_rate(spark, sf_dir):
         .filter(F.col("rank") <= X93_VOCAB)
         .select("token", F.lit(1).alias("_in"))
     )
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     tok = d.select("doc_id", F.explode(words(F.col("text"))).alias("token"))
     per = (
         tok.join(F.broadcast(kept), "token", "left")
@@ -6576,16 +6481,7 @@ def x94_semdedup_sweep(spark, sf_dir):
     )
 
 
-_X94_SQL = f"""WITH cent AS (SELECT vec_id AS cid, embedding AS cemb
-              FROM embeddings WHERE vec_id % 25 = 0),
-ac AS (SELECT e.vec_id, e.embedding, c.cid,
-              {_cos_sql('e.embedding', 'c.cemb')} AS c_cos
-       FROM embeddings e CROSS JOIN cent c),
-assigned AS (SELECT vec_id, embedding, cid FROM (
-  SELECT vec_id, embedding, cid,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY c_cos DESC, cid ASC) AS rn
-  FROM ac) WHERE rn = 1),
+_X94_SQL = f"""WITH {_IVF_ASSIGN_CTES},
 prior AS (SELECT a.vec_id,
                  MAX({_cos_sql('a.embedding', 'b.embedding')}) AS max_prior_cos
           FROM assigned a JOIN assigned b
@@ -7045,7 +6941,7 @@ def x100_vocab_budget_sweep(spark, sf_dir):
     (budget, doc) rollup is one keyed partial agg, budgets x docs rows;
     output is 5 rows at any corpus size."""
     ranked = _vocab_ranked(spark, sf_dir).select("token", "rank")
-    d = _docs_fanned(spark, sf_dir)
+    d = _fanned(spark, sf_dir, "documents", "doc_id")
     tok = d.select("doc_id", F.explode(words(F.col("text"))).alias("token"))
     tr = tok.join(F.broadcast(ranked), "token")
     fan = tr.select(
@@ -7163,7 +7059,7 @@ def x101_simhash_hamming_pairs(spark, sf_dir):
     Hamming distances."""
     # Round 14: the signature map is the shared _simhash_sigs frame
     # (one tokenize + sha + 32-fold serves x10 AND this query; the frame
-    # build rides _docs_fanned — 32 sha256+vote folds per token is HEAVY
+    # build rides _fanned — 32 sha256+vote folds per token is HEAVY
     # map work, and the fixture is one input split, measured 4.5 s ->
     # ~1 s at sf0.1 from the fan-out alone).
     sigs = _simhash_sigs(spark, sf_dir).select(
@@ -7283,7 +7179,7 @@ def x102_winnowing_overlap(spark, sf_dir):
     # the W shifted slices below would otherwise each re-run the
     # tokenize+gram+hash chain.
     ws = words(F.col("text"))
-    d = _docs_fanned(spark, sf_dir).select(
+    d = _fanned(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", F.transform(word_grams(ws, 3), hash60).alias("_hs")
     )
     hs = F.col("_hs")
@@ -7617,14 +7513,7 @@ def x104_leakage_free_split(spark, sf_dir):
     )
 
 
-_X104_SQL = f"""WITH RECURSIVE {_X11_CTES},
-jpairs AS ({_X11_FINAL}),
-edges AS (SELECT doc_a AS a, doc_b AS b FROM jpairs
-          UNION ALL SELECT doc_b AS a, doc_a AS b FROM jpairs),
-reach AS (SELECT doc_id, doc_id AS r FROM documents
-          UNION
-          SELECT reach.doc_id, e.b AS r FROM reach JOIN edges e ON reach.r = e.a),
-labels AS (SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id),
+_X104_SQL = f"""{_X11_LABELS_SQL},
 buckets AS (SELECT doc_id,
   CAST(concat('0x', substr(sha256(lower(trim(text))), 1, 4)) AS BIGINT) % 100
     AS bucket
@@ -7872,16 +7761,7 @@ def x107_ivf_balance_report(spark, sf_dir):
     )
 
 
-_X107_SQL = f"""WITH cent AS (SELECT vec_id AS cid, embedding AS cemb
-              FROM embeddings WHERE vec_id % 25 = 0),
-ac AS (SELECT e.vec_id, c.cid,
-              {_cos_sql('e.embedding', 'c.cemb')} AS c_cos
-       FROM embeddings e CROSS JOIN cent c),
-assigned AS (SELECT vec_id, cid FROM (
-  SELECT vec_id, cid,
-         ROW_NUMBER() OVER (PARTITION BY vec_id
-                            ORDER BY c_cos DESC, cid ASC) AS rn
-  FROM ac) WHERE rn = 1),
+_X107_SQL = f"""WITH {_IVF_ASSIGN_CTES},
 counts AS (SELECT cid, CAST(COUNT(*) AS BIGINT) AS n_vecs
            FROM assigned GROUP BY cid),
 occ AS (SELECT cent.cid, CAST(COALESCE(n_vecs, 0) AS BIGINT) AS n_vecs
@@ -7963,15 +7843,7 @@ def x108_dedup_lineage(spark, sf_dir):
     )
 
 
-_X108_SQL = f"""WITH RECURSIVE {_X11_CTES},
-jpairs AS ({_X11_FINAL}),
-cedges AS (SELECT doc_a AS a, doc_b AS b FROM jpairs
-           UNION ALL SELECT doc_b AS a, doc_a AS b FROM jpairs),
-reach AS (SELECT doc_id, doc_id AS r FROM documents
-          UNION
-          SELECT reach.doc_id, e.b AS r FROM reach JOIN cedges e
-            ON reach.r = e.a),
-labels AS (SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id),
+_X108_SQL = f"""{_X11_LABELS_SQL},
 exact AS (SELECT doc_id,
             MIN(doc_id) OVER (PARTITION BY sha256(lower(trim(text))))
               AS ex_surv
@@ -8056,7 +7928,7 @@ def _x111_varr(spark, sf_dir):
     (the ``_cc_labels`` rationale)."""
     # the Gram pass is the one corpus scan — fan it out (splits < cores
     # otherwise serialize the d² accumulator work on one task)
-    e = _embs_fanned(spark, sf_dir).select(
+    e = _fanned(spark, sf_dir, "embeddings", "vec_id").select(
         "vec_id", _vm_micros(F.col("embedding")).alias("vm")
     )
     dims = e.select("vec_id", F.posexplode("vm").alias("dim", "val"))
@@ -8213,7 +8085,7 @@ def x112_common_direction_removal(spark, sf_dir):
     engines. Scale shape: x111's cached 1-row direction broadcasts; the
     removal is map-only over the fanned scan; retrieval is x3's
     broadcast-query + TakeOrdered shape — one corpus pass end to end."""
-    e = _embs_fanned(spark, sf_dir).select(
+    e = _fanned(spark, sf_dir, "embeddings", "vec_id").select(
         "vec_id", _vm_micros(F.col("embedding")).alias("vm")
     )
     dims = e.select("vec_id", F.posexplode("vm").alias("dim", "val"))
@@ -8350,14 +8222,7 @@ def x115_soft_dedup_reweight(spark, sf_dir):
     )
 
 
-_X115_SQL = f"""WITH RECURSIVE {_X11_CTES},
-jpairs AS ({_X11_FINAL}),
-edges AS (SELECT doc_a AS a, doc_b AS b FROM jpairs
-          UNION ALL SELECT doc_b AS a, doc_a AS b FROM jpairs),
-reach AS (SELECT doc_id, doc_id AS r FROM documents
-          UNION
-          SELECT reach.doc_id, e.b AS r FROM reach JOIN edges e ON reach.r = e.a),
-labels AS (SELECT doc_id, MIN(r) AS cluster_id FROM reach GROUP BY doc_id),
+_X115_SQL = f"""{_X11_LABELS_SQL},
 csize AS (SELECT cluster_id, CAST(COUNT(*) AS BIGINT) AS cluster_size
           FROM labels GROUP BY 1),
 tk AS (SELECT doc_id, CAST(len(ws) AS BIGINT) AS n_tokens FROM toks)
@@ -8585,7 +8450,9 @@ def x113_knn_label_eval(spark, sf_dir):
     )
     # corpus side of the scored pass rides the fanned scan (probe batch
     # broadcasts either way); WindowGroupLimit prunes to top-k per task
-    corpus = _embs_fanned(spark, sf_dir).select("vec_id", "embedding", "label")
+    corpus = _fanned(spark, sf_dir, "embeddings", "vec_id").select(
+        "vec_id", "embedding", "label"
+    )
     scored = (
         corpus.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("qid"))
@@ -8901,7 +8768,7 @@ def x118_paragraph_dedup(spark, sf_dir):
     partition but as a bounded run — count per hash, not corpus-sized);
     the per-doc rollup is one partial-agg shuffle on doc_id. No pair join
     anywhere — dedup by grouping, never by self-join."""
-    t = _docs_fanned(spark, sf_dir).select(
+    t = _fanned(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", words(F.col("text")).alias("ws")
     ).filter(F.size("ws") > 0)
     n_blocks = F.ceil(F.size("ws") / F.lit(X118_PARA_W)).cast("int")
@@ -8994,7 +8861,7 @@ def x119_template_prefix_cluster(spark, sf_dir):
     Scale: map-side prefix hash, one partial-agg shuffle on the 60-bit
     hash (uniform), clusters joined back by the same equi-key. No text
     self-join; cluster metadata is cluster-count-sized."""
-    t = _docs_fanned(spark, sf_dir).select(
+    t = _fanned(spark, sf_dir, "documents", "doc_id").select(
         "doc_id", "source", words(F.col("text")).alias("ws")
     ).filter(F.size("ws") >= X119_PREFIX_W)
     occ = t.select(

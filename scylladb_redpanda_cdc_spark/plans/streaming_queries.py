@@ -20,10 +20,12 @@ from pyspark.sql import functions as F
 from scylladb_redpanda_cdc_spark.plans import QuerySpec
 from scylladb_redpanda_cdc_spark.plans.cdc_queries import (
     EVOLUTION_SQL,
+    _SCD2_HISTORY_SQL,
     _A20_SQL as _A20_ORACLE,
     _A30_SQL as _A30_ORACLE,
 )
-from scylladb_redpanda_cdc_spark.plans.llm_queries import _X87_SQL
+from scylladb_redpanda_cdc_spark.plans.llm_queries import _X48_SCORE_SQL, _X87_SQL
+from scylladb_redpanda_cdc_spark.plans.window_queries import _W6_SQL
 from scylladb_redpanda_cdc_spark.sources.changelog import CHANGELOG_SQL_CTE
 from scylladb_redpanda_cdc_spark.sources.tables import load_table as _T
 from scylladb_redpanda_cdc_spark.streaming.core import (
@@ -522,25 +524,6 @@ def s11_stateful_running_state(spark, sf_dir):
 # Registry
 # ---------------------------------------------------------------------------
 
-_S5_SQL = """WITH marked AS (
-  SELECT user_id, ts,
-    CASE WHEN lag(ts) OVER w IS NULL
-           OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-         THEN 1 ELSE 0 END AS brk
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sessioned AS (
-  SELECT user_id, ts,
-    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts
-                   ROWS UNBOUNDED PRECEDING) AS sid
-  FROM marked
-)
-SELECT user_id,
-  epoch_ms(MIN(ts)) AS sess_start_ms,
-  epoch_ms(MAX(ts) + INTERVAL 30 MINUTE) AS sess_end_ms,
-  COUNT(*) AS n_events
-FROM sessioned GROUP BY user_id, sid"""
-
 _S9_SQL = """SELECT c.event_id AS click_id, p.event_id AS purchase_id,
   c.user_id,
   epoch_ms(p.ts) - epoch_ms(c.ts) AS gap_ms
@@ -558,39 +541,14 @@ ranked AS (
 SELECT customer_id, order_id, totalprice, orderstatus
 FROM ranked WHERE rn = 1 AND op <> 'd'"""
 
-def _s16_sql() -> str:
-    from scylladb_redpanda_cdc_spark.plans.llm_queries import (
-        X48_TAU,
-        X48_W_BIAS,
-        X48_W_LEN,
-        X48_W_STOP,
-        X48_W_TTR,
-    )
-
-    return f"""WITH aug AS (
+_S16_SQL = f"""WITH aug AS (
   SELECT doc_id, text FROM documents
   UNION ALL
   SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 IN (0, 5)),
 toks AS (SELECT doc_id,
   list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')
     AS ws FROM aug),
-f AS (SELECT doc_id,
-    LEAST(CAST(len(ws) AS BIGINT), 200) AS f_len,
-    CAST(len(list_filter(ws, w -> w IN
-      ('the','a','and','of','to','in','is','on'))) AS BIGINT) * 1000000
-      // CAST(len(ws) AS BIGINT) AS f_stop_ppm,
-    CAST(len(list_distinct(ws)) AS BIGINT) * 1000000
-      // CAST(len(ws) AS BIGINT) AS f_ttr_ppm
-  FROM toks WHERE len(ws) > 0)
-SELECT doc_id, f_len, f_stop_ppm, f_ttr_ppm,
-  {X48_W_BIAS} + {X48_W_LEN} * f_len + {X48_W_STOP} * f_stop_ppm
-    + {X48_W_TTR} * f_ttr_ppm AS margin_micro,
-  ({X48_W_BIAS} + {X48_W_LEN} * f_len + {X48_W_STOP} * f_stop_ppm
-    + {X48_W_TTR} * f_ttr_ppm) >= {X48_TAU} AS keep
-FROM f"""
-
-
-_S16_SQL = _s16_sql()
+{_X48_SCORE_SQL}"""
 
 
 def s22_stream_scd2(spark, sf_dir):
@@ -789,15 +747,7 @@ def s25_stream_before_image(spark, sf_dir):
     return run_to_table(out, mode="append")
 
 
-_S25_SQL = f"""WITH {CHANGELOG_SQL_CTE.strip()},
-v AS (
-  SELECT *, LEAD("offset") OVER (
-      PARTITION BY customer_id, order_id ORDER BY "offset") AS next_offset
-  FROM changelog),
-h AS (
-  SELECT customer_id, order_id, totalprice, orderstatus,
-    "offset" AS valid_from, next_offset - 1 AS valid_to
-  FROM v WHERE op IN ('c', 'u')),
+_S25_SQL = f"""{_SCD2_HISTORY_SQL},
 ev AS (SELECT * FROM changelog WHERE op IN ('u', 'd'))
 SELECT ev."offset", ev.op, ev.customer_id, ev.order_id,
   h.totalprice AS prior_totalprice, h.orderstatus AS prior_orderstatus,
@@ -850,7 +800,7 @@ SPECS = [
         "S",
         "30-minute-gap session windows per user",
         s5_stream_session_window,
-        _S5_SQL,
+        _W6_SQL,  # w6's batch sessions: the stream must land the same ones
     ),
     QuerySpec(
         "s6_watermark_late_drop",

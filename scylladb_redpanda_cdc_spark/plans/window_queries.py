@@ -51,19 +51,25 @@ def w6_win_sessionize(spark, sf_dir):
     ).drop("sid")
 
 
-_W6_SQL = """WITH marked AS (
-  SELECT user_id, ts, event_id,
+#: Gaps-and-islands sessionization of ``events`` (30-minute gap, ``>=``
+#: breaks, (ts, event_id) order): the ``WITH`` head ending in
+#: ``sessioned(user_id, ts, value, sid)`` — shared by the w6, w7 and s5
+#: oracles.
+_SESSIONS_SQL = """WITH marked AS (
+  SELECT user_id, ts, event_id, value,
     CASE WHEN lag(ts) OVER w IS NULL
            OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
          THEN 1 ELSE 0 END AS brk
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 ), sessioned AS (
-  SELECT user_id, ts,
+  SELECT user_id, ts, value,
     SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
                    ROWS UNBOUNDED PRECEDING) AS sid
   FROM marked
-)
+)"""
+
+_W6_SQL = f"""{_SESSIONS_SQL}
 SELECT user_id,
   epoch_ms(MIN(ts)) AS sess_start_ms,
   epoch_ms(MAX(ts)) + 1800000 AS sess_end_ms,
@@ -106,19 +112,7 @@ def w7_session_window_native(spark, sf_dir):
     )
 
 
-_W7_SQL = """WITH marked AS (
-  SELECT user_id, ts, event_id, value,
-    CASE WHEN lag(ts) OVER w IS NULL
-           OR ts - lag(ts) OVER w >= INTERVAL 30 MINUTE
-         THEN 1 ELSE 0 END AS brk
-  FROM events
-  WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
-), sessioned AS (
-  SELECT user_id, ts, value,
-    SUM(brk) OVER (PARTITION BY user_id ORDER BY ts, event_id
-                   ROWS UNBOUNDED PRECEDING) AS sid
-  FROM marked
-)
+_W7_SQL = f"""{_SESSIONS_SQL}
 SELECT user_id,
   epoch_ms(MIN(ts)) AS sess_start_ms,
   epoch_ms(MAX(ts)) + 1800000 AS sess_end_ms,

@@ -26,7 +26,12 @@ from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
 
-from scylladb_redpanda_cdc_spark.operators.cdc import materialize_latest
+from scylladb_redpanda_cdc_spark.operators.cdc import (
+    apply_mv_diff,
+    materialize_latest,
+    scd2_versions,
+    with_next_offset,
+)
 from scylladb_redpanda_cdc_spark.operators.scale import fs_bytes, sized_count
 from scylladb_redpanda_cdc_spark.sources.changelog import synth_changelog
 from scylladb_redpanda_cdc_spark.sources.tables import load_table
@@ -411,26 +416,15 @@ def foreachbatch_scd2(
 
     Returns version rows: key cols + payload + valid_from / valid_to /
     is_current (deletes close history without emitting a version)."""
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
     def compact(df: DataFrame) -> DataFrame:
-        w = Window.partitionBy(*key_cols).orderBy("offset")
-        return (
-            df.drop("next_offset")
-            .dropDuplicates([*key_cols, "offset"])
-            .withColumn("next_offset", F.lead("offset").over(w))
+        return with_next_offset(
+            df.drop("next_offset").dropDuplicates([*key_cols, "offset"]),
+            key_cols,
         )
 
     state = _run_incremental_merge(changes, key_cols, compact)
-    return state.filter(F.col("op").isin("c", "u")).select(
-        *key_cols,
-        "totalprice",
-        "orderstatus",
-        F.col("offset").alias("valid_from"),
-        (F.col("next_offset") - 1).alias("valid_to"),
-        F.col("next_offset").isNull().alias("is_current"),
-    )
+    return scd2_versions(state, key_cols)
 
 
 DOCS_STREAM_DDL = (
@@ -615,7 +609,6 @@ def incremental_mv_stream(
             else new_c.limit(0)
         )
         mv_prev = run.read("mv_agg")
-        z = F.lit(0).cast("long")
         diff = (
             new_c.withColumnRenamed("n", "n_n").withColumnRenamed("c", "n_c")
         ).join(
@@ -626,20 +619,9 @@ def incremental_mv_stream(
         if mv_prev is not None:
             diff = mv_prev.join(diff, "customer_id", "full")
         else:
+            z = F.lit(0).cast("long")
             diff = diff.withColumn("n_live", z).withColumn("revenue_cents", z)
-        mv_new = diff.select(
-            "customer_id",
-            (
-                F.coalesce("n_live", z)
-                - F.coalesce("o_n", z)
-                + F.coalesce("n_n", z)
-            ).alias("n_live"),
-            (
-                F.coalesce("revenue_cents", z)
-                - F.coalesce("o_c", z)
-                + F.coalesce("n_c", z)
-            ).alias("revenue_cents"),
-        )
+        mv_new = apply_mv_diff(diff)
         run.write("mv_state", merged, batch_id, 16)
         # the MV is customers-sized: a batch's contribution to it is
         # bounded by the batch itself, so prev + log bounds the write

@@ -47,7 +47,7 @@ from scylladb_redpanda_cdc_spark.operators.llm import (
 )
 from scylladb_redpanda_cdc_spark.plans.llm_queries import (
     X102_WINNOW_W,
-    _docs_fanned,
+    _fanned,
     minhash_remix,
 )
 from scylladb_redpanda_cdc_spark.plans import clear_session_frame_caches
@@ -68,7 +68,7 @@ def main():
     spark = r12._session()
     spark.sparkContext.setLogLevel("ERROR")
     sf = r13b.X100_DIR
-    d = _docs_fanned(spark, sf)
+    d = _fanned(spark, sf, "documents", "doc_id")
     ws = words(F.col("text"))
 
     a = timed("A scan+tokenize (sum of token counts)", d.select(F.size(ws).alias("n")).groupBy().sum("n"))

@@ -335,15 +335,14 @@ def test_stage_drain_and_raw_events_read_have_one_owner():
 def test_session_frames_have_one_memo():
     """Re-copy guard: every per-session frame goes through
     ``operators/checkpoint.py::session_frame`` (keyed by the JVM session).
-    ``applicationId`` keys only the two stage memos whose outputs siblings
-    may share (scratch dirs and catalog tables); no module binds a
-    hand-rolled ``*_cache`` dict, and b35's session-attribute cache is
-    gone."""
+    ``applicationId`` keys only ``core.staged``, the one stage memo whose
+    outputs siblings may share (scratch dirs, and the catalog tables
+    named after them); no module binds a hand-rolled ``*_cache`` dict,
+    and b35's session-attribute cache is gone."""
     import ast
     import glob
 
-    assert sorted(_package_hits("sparkContext.applicationId")) == [
-        ("plans/batch_queries.py", "stage_bucketed_tables"),
+    assert _package_hits("sparkContext.applicationId") == [
         ("streaming/core.py", "staged"),
     ]
     pkg = os.path.join(
@@ -369,3 +368,34 @@ def test_session_frames_have_one_memo():
             ]
     assert caches == []
     assert _package_hits("_sg_b35") == []
+
+
+#: twin name -> (shared fragment, its one (module, enclosing def) owner).
+_TWINS = {
+    # DuckDB oracle twins
+    "cc_labels": (
+        "reach AS (SELECT doc_id, doc_id AS r FROM documents",
+        ("plans/llm_queries.py", "_cc_labels_sql"),
+    ),
+    "ivf_centroids": ("WHERE vec_id % 25 = 0", ("plans/llm_queries.py", None)),
+    "minhash_sigs": (
+        "bands(band, a, c) AS (VALUES",
+        ("plans/llm_queries.py", "_minhash_sigs_sql"),
+    ),
+    "sessions": ("lag(ts) OVER w IS NULL", ("plans/window_queries.py", None)),
+    "scd2_history_sql": ('LEAD("offset") OVER', ("plans/cdc_queries.py", None)),
+    # Spark kernel twins
+    "bm25_score": ("def term_score", ("plans/llm_queries.py", "_bm25_scored")),
+    "scd2_next_offset": ('F.lead("offset")', ("operators/cdc.py", "with_next_offset")),
+    "mv_apply": ('F.coalesce("n_live", z)', ("operators/cdc.py", "apply_mv_diff")),
+}
+
+
+@pytest.mark.parametrize("twin", sorted(_TWINS))
+def test_shared_twins_have_one_definition(twin):
+    """Re-copy guard: each shared kernel — a DuckDB oracle CTE or a Spark
+    kernel that a batch/stream pair or several oracles use — is written
+    once and reached through its builder, so a fix to it reaches every
+    user. A hand-copied twin fails here."""
+    fragment, owner = _TWINS[twin]
+    assert _package_hits(fragment) == [owner]

@@ -1,7 +1,7 @@
 """streaming/core.py::staged — the one stage-once scratch memo.
 
 Every staged input (file-stream transports, storage layouts, b43's
-multi-format copies) is written once per session and re-staged when its
+multi-format copies, b32/o11's bucketed tables) is written once per session and re-staged when its
 scratch dir was reaped (tmpfs may be cleared mid-session). The ordered
 stagers pin their stream order by mtime; these tests pin both contracts.
 """
@@ -43,6 +43,12 @@ _INPUTS = [
         "b43",
         lambda spark, sf: _batch_rows(BQ.b43_multiformat_scan(spark, sf)),
         "multiformat",
+        (),
+    ),
+    (
+        "b32",
+        lambda spark, sf: _batch_rows(BQ.b32_join_bucketed_colocated(spark, sf)),
+        "bucketed",
         (),
     ),
     (
