@@ -50,9 +50,15 @@ from scylladb_redpanda_cdc_spark.plans import QuerySpec
 from scylladb_redpanda_cdc_spark.sources.tables import load_table as _T
 
 # Shared DuckDB CTEs (lockstep twins of operators.llm helpers).
+def _words_sql(col: str = "text") -> str:
+    """DuckDB twin of ``operators.llm.words``: lower-cased alphanumeric
+    tokens of ``col``, empty tokens dropped."""
+    return f"list_filter(string_split_regex(lower({col}), '[^a-z0-9]+'), w -> w <> '')"
+
+
 _TOKS_CTE = (
     "toks AS (SELECT doc_id, lang, text,\n"
-    "  list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')"
+    f"  {_words_sql()}"
     " AS ws\n"
     "  FROM documents)"
 )
@@ -3373,9 +3379,8 @@ def x65_vocab_growth(spark, sf_dir):
     )
 
 
-_X64_SQL = """WITH t AS (
-  SELECT CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-    w -> w <> '')) AS BIGINT) AS n
+_X64_SQL = f"""WITH t AS (
+  SELECT CAST(len({_words_sql()}) AS BIGINT) AS n
   FROM documents),
 b AS (SELECT n,
     CASE WHEN n <= 0 THEN 0 WHEN n < 64 THEN 64 WHEN n < 128 THEN 128
@@ -3392,10 +3397,9 @@ SELECT len_bucket, n_docs, n_tokens, pad_tokens,
   pad_tokens * 1000000 // (n_tokens + pad_tokens) AS waste_ppm
 FROM agg"""
 
-_X65_SQL = """WITH t AS (
+_X65_SQL = f"""WITH t AS (
   SELECT doc_id,
-    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-      w -> w <> '')) AS tok
+    unnest({_words_sql()}) AS tok
   FROM documents),
 first AS (SELECT tok, MIN(doc_id) AS first_doc FROM t GROUP BY tok),
 pc AS (SELECT first_doc // 100 AS chunk,
@@ -3525,8 +3529,7 @@ _X66_SQL_ROWS = ",\n  ".join(
 )
 
 _X66_SQL = f"""WITH t AS (
-  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-    w -> w <> '')) AS tok
+  SELECT unnest({_words_sql()}) AS tok
   FROM documents),
 rp(r, a, c) AS (VALUES {_X66_SQL_ROWS}),
 hashed AS (
@@ -3548,10 +3551,9 @@ SELECT tok, true_n, CAST(MIN(c) AS BIGINT) AS cms_estimate,
 FROM probes JOIN sketch USING (r, bucket)
 GROUP BY tok, true_n"""
 
-_X67_SQL = """WITH t AS (
+_X67_SQL = f"""WITH t AS (
   SELECT doc_id,
-    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-      w -> w <> '')) AS BIGINT) AS n_tokens
+    CAST(len({_words_sql()}) AS BIGINT) AS n_tokens
   FROM documents),
 r AS (
   SELECT doc_id, n_tokens,
@@ -3615,9 +3617,8 @@ def x68_bpe_merge_apply(spark, sf_dir):
     )
 
 
-_X68_SQL = """WITH t AS (
-  SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-    x -> x <> '')) AS w
+_X68_SQL = f"""WITH t AS (
+  SELECT unnest({_words_sql()}) AS w
   FROM documents),
 p1 AS (
   SELECT unnest(list_transform(range(1, length(w)), i -> substring(w, i, 2)))
@@ -3696,9 +3697,8 @@ def x69_collocation_lift(spark, sf_dir):
     )
 
 
-_X69_SQL = """WITH t AS (
-  SELECT list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                     w -> w <> '') AS ws
+_X69_SQL = f"""WITH t AS (
+  SELECT {_words_sql()} AS ws
   FROM documents),
 uni AS (SELECT unnest(ws) AS tok FROM t),
 uc AS (SELECT tok, CAST(COUNT(*) AS BIGINT) AS n_uni FROM uni GROUP BY tok),
@@ -4083,16 +4083,14 @@ def x73_dataset_card(spark, sf_dir):
     )
 
 
-_X73_SQL = """WITH per AS (
+_X73_SQL = f"""WITH per AS (
   SELECT doc_id, lang, source,
-    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-      w -> w <> '')) AS BIGINT) AS n_tok,
+    CAST(len({_words_sql()}) AS BIGINT) AS n_tok,
     sha256(lower(trim(text))) AS h
   FROM documents),
 vocab AS (
   SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS n_vocab FROM (
-    SELECT unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-      w -> w <> '')) AS tok FROM documents) t),
+    SELECT unnest({_words_sql()}) AS tok FROM documents) t),
 dups AS (SELECT h, COUNT(*) AS n FROM per GROUP BY h),
 ds AS (SELECT CAST(SUM(n) AS BIGINT) AS n_docs_h,
          CAST(SUM(n - 1) AS BIGINT) AS n_dups FROM dups)
@@ -4179,15 +4177,22 @@ WHERE CAST(shared AS DOUBLE) / CAST(sa.n + sb.n - shared AS DOUBLE) >= 0.1"""
 _X11_SQL = f"WITH {_X11_CTES}\n{_X11_FINAL}"
 
 
+def _pair_edges_sql(pair_ctes: str, pair_select: str, a: str, b: str) -> str:
+    """``pair_ctes`` followed by ``pairs`` (the ``doc_a, doc_b`` select
+    ``pair_select``) and its symmetric ``edges(a, b)`` — both directions of
+    every pair, under the column names ``a`` and ``b``."""
+    return f"""{pair_ctes},
+pairs AS ({pair_select}),
+edges AS (SELECT doc_a AS {a}, doc_b AS {b} FROM pairs
+          UNION ALL SELECT doc_b AS {a}, doc_a AS {b} FROM pairs)"""
+
+
 def _cc_labels_sql(pair_ctes: str, pair_select: str) -> str:
     """DuckDB twin of :func:`_component_labels`: the ``WITH RECURSIVE``
     head ending in ``labels(doc_id, cluster_id)`` — each document's
     minimum reachable doc id over the symmetric edges of the pair set
     ``pair_select`` (a ``doc_a, doc_b`` select over ``pair_ctes``)."""
-    return f"""WITH RECURSIVE {pair_ctes},
-pairs AS ({pair_select}),
-edges AS (SELECT doc_a AS a, doc_b AS b FROM pairs
-          UNION ALL SELECT doc_b AS a, doc_a AS b FROM pairs),
+    return f"""WITH RECURSIVE {_pair_edges_sql(pair_ctes, pair_select, "a", "b")},
 reach AS (SELECT doc_id, doc_id AS r FROM documents
           UNION
           SELECT reach.doc_id, e.b AS r FROM reach JOIN edges e ON reach.r = e.a),
@@ -4514,8 +4519,8 @@ SELECT doc_id, shard, n_tokens,
   CAST((cum - n_tokens) % 2048 AS BIGINT) AS token_offset
 FROM c"""
 
-_X26_SQL = """WITH toks AS (SELECT doc_id,
-  list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '') AS ws
+_X26_SQL = f"""WITH toks AS (SELECT doc_id,
+  {_words_sql()} AS ws
   FROM documents),
 sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ws) - 2),
          i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3]))
@@ -4774,8 +4779,8 @@ LEFT JOIN shr s ON p.doc_a = s.doc_a AND p.doc_b = s.doc_b
 JOIN sizes sa ON p.doc_a = sa.doc_id
 JOIN sizes sb ON p.doc_b = sb.doc_id"""
 
-_X47_SQL = """WITH toks AS (SELECT doc_id,
-  list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '') AS ws
+_X47_SQL = f"""WITH toks AS (SELECT doc_id,
+  {_words_sql()} AS ws
   FROM documents),
 sh4 AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ws) - 2),
           i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3]))
@@ -4815,23 +4820,21 @@ FROM f"""
 
 _X48_SQL = f"WITH {_TOKS_CTE},\n{_X48_SCORE_SQL}"
 
-_X49_SQL = """WITH toks AS (SELECT source,
-  list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '') AS ws
+_X49_SQL = f"""WITH toks AS (SELECT source,
+  {_words_sql()} AS ws
   FROM documents),
 per AS (SELECT source, COUNT(*) AS n_docs,
                CAST(SUM(len(ws)) AS BIGINT) AS n_tokens
         FROM toks GROUP BY 1),
 tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS n_sources FROM per)
 SELECT source, n_docs, n_tokens,
-  LEAST(CAST({cap} AS BIGINT),
-        (CAST({budget} AS BIGINT) // n_sources) * 1000000 // n_tokens)
+  LEAST(CAST({X49_MAX_EPOCHS_PPM} AS BIGINT),
+        (CAST({X49_BUDGET_TOKENS} AS BIGINT) // n_sources) * 1000000 // n_tokens)
     AS epochs_ppm,
-  n_tokens * LEAST(CAST({cap} AS BIGINT),
-        (CAST({budget} AS BIGINT) // n_sources) * 1000000 // n_tokens)
+  n_tokens * LEAST(CAST({X49_MAX_EPOCHS_PPM} AS BIGINT),
+        (CAST({X49_BUDGET_TOKENS} AS BIGINT) // n_sources) * 1000000 // n_tokens)
     // 1000000 AS allocated_tokens
-FROM per CROSS JOIN tot""".format(
-    cap=X49_MAX_EPOCHS_PPM, budget=X49_BUDGET_TOKENS
-)
+FROM per CROSS JOIN tot"""
 
 _X50_SQL = f"""WITH {_IVF_ASSIGN_CTES},
 prior AS (SELECT a.vec_id,
@@ -4843,8 +4846,8 @@ SELECT a.vec_id, a.cid, p.max_prior_cos,
   COALESCE(p.max_prior_cos >= {X50_TAU}, FALSE) AS is_removed
 FROM assigned a LEFT JOIN prior p USING (vec_id)"""
 
-_X51_SQL = """WITH toks AS (SELECT doc_id, source,
-  list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '') AS ws
+_X51_SQL = f"""WITH toks AS (SELECT doc_id, source,
+  {_words_sql()} AS ws
   FROM documents),
 tok AS (SELECT doc_id, source, unnest(ws) AS tok FROM toks),
 t_tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS t_n FROM tok WHERE source = 'src1'),
@@ -4894,27 +4897,38 @@ SELECT c.vec_id, c.maxabs, array_to_string(c.codes, ',') AS codes_str,
 FROM c, qv WHERE c.vec_id <> 0
 ORDER BY qdot DESC, c.vec_id ASC LIMIT 20"""
 
-_X54_SQL = f"""WITH ms AS (SELECT unnest(range(0, {X54_M})) AS m),
-cent AS (
+def _pq_codes_sql(cent: str, corpus_from: str) -> str:
+    """DuckDB twin of the PQ encoder (x54, x90): the ``ms`` sub-space ids,
+    per-sub-space codebooks ``cent(cid, m, csub)`` drawn by
+    ``_CENTROID_FILTER``, the ``corpus`` sub-vectors of the vectors in
+    ``corpus_from``, every sub-space distance ``dists``, and each
+    vector's nearest code per sub-space ``codes(vec_id, m, code)`` (ties
+    go to the lower cid)."""
+    sub = f"embedding[m * {X54_SUB} + 1 : m * {X54_SUB} + {X54_SUB}]"
+    return f"""ms AS (SELECT unnest(range(0, {X54_M})) AS m),
+{cent} AS (
   SELECT vec_id AS cid, m,
-         embedding[m * {X54_SUB} + 1 : m * {X54_SUB} + {X54_SUB}] AS csub
+         {sub} AS csub
   FROM embeddings, ms {_CENTROID_FILTER}),
 corpus AS (
   SELECT vec_id, m,
-         embedding[m * {X54_SUB} + 1 : m * {X54_SUB} + {X54_SUB}] AS vsub
-  FROM embeddings, ms),
+         {sub} AS vsub
+  FROM {corpus_from}, ms),
 dists AS (
   SELECT vec_id, corpus.m AS m, cid,
     list_aggregate(list_transform(list_zip(vsub, csub),
       p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
          * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))), 'sum') AS dist
-  FROM corpus JOIN cent ON corpus.m = cent.m),
+  FROM corpus JOIN {cent} ON corpus.m = {cent}.m),
 codes AS (
   SELECT vec_id, m, cid AS code FROM (
     SELECT vec_id, m, cid,
       ROW_NUMBER() OVER (PARTITION BY vec_id, m
                          ORDER BY dist ASC, cid ASC) AS rn
-    FROM dists) r WHERE rn = 1),
+    FROM dists) r WHERE rn = 1)"""
+
+
+_X54_SQL = f"""WITH {_pq_codes_sql("cent", "embeddings")},
 dtab AS (SELECT m, cid, dist AS qd FROM dists WHERE vec_id = 0),
 per AS (
   SELECT c.vec_id,
@@ -5006,8 +5020,7 @@ FROM b"""
 
 _X56_SQL = f"""WITH t AS (
   SELECT doc_id, source,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                w -> w <> '') AS ws
+    {_words_sql()} AS ws
   FROM documents),
 per AS (SELECT source, CAST(SUM(len(ws)) AS BIGINT) AS n_tokens FROM t
         GROUP BY source),
@@ -5028,8 +5041,7 @@ FROM draw WHERE n_copies > 0"""
 
 _X57_SQL = f"""WITH t AS (
   SELECT doc_id, sha256(lower(trim(text))) AS text_hash,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                w -> w <> '') AS ws
+    {_words_sql()} AS ws
   FROM documents),
 f AS (SELECT doc_id, text_hash,
     CAST(len(ws) AS BIGINT) AS n_tok,
@@ -5068,10 +5080,9 @@ UNION ALL
 SELECT '03_exact_dedup', CAST(COUNT(*) AS BIGINT),
        CAST(SUM(n_tok) AS BIGINT) FROM canon"""
 
-_X55_SQL = """WITH t AS (
+_X55_SQL = f"""WITH t AS (
   SELECT source,
-    unnest(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-                       w -> w <> '')) AS tok
+    unnest({_words_sql()}) AS tok
   FROM documents),
 c_tot AS (SELECT CAST(COUNT(*) AS BIGINT) AS c_n FROM t),
 c_freq AS (SELECT tok, CAST(COUNT(*) AS BIGINT) * 1000000 // c_n AS c_ppm
@@ -5158,10 +5169,7 @@ def _pr_iter_sql(prev: str, cur: str) -> str:
     )
 
 
-_X74_SQL = f"""WITH {_X11_CTES},
-jpairs AS ({_X11_FINAL}),
-edges AS (SELECT doc_a AS src, doc_b AS dst FROM jpairs
-          UNION ALL SELECT doc_b AS src, doc_a AS dst FROM jpairs),
+_X74_SQL = f"""WITH {_pair_edges_sql(_X11_CTES, _X11_FINAL, "src", "dst")},
 deg AS (SELECT src, COUNT(*) AS deg FROM edges GROUP BY 1),
 r0 AS (SELECT doc_id, CAST(1000000 AS BIGINT) AS rank FROM documents),
 {_pr_iter_sql("0", "1")},
@@ -6230,27 +6238,7 @@ probes AS (SELECT cid FROM cent CROSS JOIN q
            ORDER BY {_cos_sql('cemb', 'qe')} DESC, cid ASC LIMIT 2),
 cand AS (SELECT vec_id, cid AS coarse_cid FROM assigned JOIN probes
          USING (cid) WHERE vec_id <> 0),
-ms AS (SELECT unnest(range(0, {X54_M})) AS m),
-centpq AS (
-  SELECT vec_id AS cid, m,
-         embedding[m * {X54_SUB} + 1 : m * {X54_SUB} + {X54_SUB}] AS csub
-  FROM embeddings, ms {_CENTROID_FILTER}),
-corpus AS (
-  SELECT e.vec_id, m,
-         embedding[m * {X54_SUB} + 1 : m * {X54_SUB} + {X54_SUB}] AS vsub
-  FROM embeddings e JOIN (SELECT vec_id FROM cand) cv USING (vec_id), ms),
-dists AS (
-  SELECT vec_id, corpus.m AS m, cid,
-    list_aggregate(list_transform(list_zip(vsub, csub),
-      p -> (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))
-         * (CAST(p[1] AS DOUBLE) - CAST(p[2] AS DOUBLE))), 'sum') AS dist
-  FROM corpus JOIN centpq ON corpus.m = centpq.m),
-codes AS (
-  SELECT vec_id, m, cid AS code FROM (
-    SELECT vec_id, m, cid,
-      ROW_NUMBER() OVER (PARTITION BY vec_id, m
-                         ORDER BY dist ASC, cid ASC) AS rn
-    FROM dists) r WHERE rn = 1),
+{_pq_codes_sql("centpq", "embeddings JOIN (SELECT vec_id FROM cand) cv USING (vec_id)")},
 qd AS (
   SELECT centpq.m AS m, cid,
     list_aggregate(list_transform(
@@ -6326,8 +6314,7 @@ def x91_shard_pack(spark, sf_dir):
 _X91_SQL = f"""WITH t AS (
   SELECT CAST(concat('0x', substr(sha256('shard:' || CAST(doc_id AS VARCHAR)),
          1, 15)) AS BIGINT) % {X91_SHARDS} AS shard,
-    CAST(len(list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-         w -> w <> '')) AS BIGINT) AS n_tokens,
+    CAST(len({_words_sql()}) AS BIGINT) AS n_tokens,
     n_chars
   FROM documents),
 s AS (SELECT shard, COUNT(*) AS n_docs,
@@ -8891,8 +8878,7 @@ def x119_template_prefix_cluster(spark, sf_dir):
 
 
 _X119_SQL = f"""WITH toks AS (SELECT doc_id, source,
-    list_filter(string_split_regex(lower(text), '[^a-z0-9]+'),
-      w -> w <> '') AS ws
+    {_words_sql()} AS ws
   FROM documents),
 occ AS (SELECT doc_id, source,
     CAST(concat('0x', substr(sha256(

@@ -24,7 +24,11 @@ from scylladb_redpanda_cdc_spark.plans.cdc_queries import (
     _A20_SQL as _A20_ORACLE,
     _A30_SQL as _A30_ORACLE,
 )
-from scylladb_redpanda_cdc_spark.plans.llm_queries import _X48_SCORE_SQL, _X87_SQL
+from scylladb_redpanda_cdc_spark.plans.llm_queries import (
+    _X48_SCORE_SQL,
+    _X87_SQL,
+    _words_sql,
+)
 from scylladb_redpanda_cdc_spark.plans.window_queries import _W6_SQL
 from scylladb_redpanda_cdc_spark.sources.changelog import CHANGELOG_SQL_CTE
 from scylladb_redpanda_cdc_spark.sources.tables import load_table as _T
@@ -546,7 +550,7 @@ _S16_SQL = f"""WITH aug AS (
   UNION ALL
   SELECT doc_id + 1000000, text FROM documents WHERE doc_id % 10 IN (0, 5)),
 toks AS (SELECT doc_id,
-  list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')
+  {_words_sql()}
     AS ws FROM aug),
 {_X48_SCORE_SQL}"""
 
@@ -913,13 +917,12 @@ FROM h JOIN fa USING (text_hash) JOIN fb USING (text_hash, b)""",
         "S",
         "streaming top-20 token counts via per-batch state merge (exact)",
         s15_stream_heavy_hitters,
-        """WITH aug AS (
+        f"""WITH aug AS (
   SELECT text FROM documents
   UNION ALL
   SELECT text FROM documents WHERE doc_id % 10 IN (0, 5)
 ),
-t AS (SELECT unnest(list_filter(
-        string_split_regex(lower(text), '[^a-z0-9]+'), w -> w <> '')) AS tok
+t AS (SELECT unnest({_words_sql()}) AS tok
       FROM aug)
 SELECT tok, CAST(COUNT(*) AS BIGINT) AS n
 FROM t GROUP BY tok

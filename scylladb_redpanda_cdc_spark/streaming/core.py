@@ -40,50 +40,12 @@ from scylladb_redpanda_cdc_spark.operators.scale import (
     sized_count,
 )
 
-#: Explicit source schema (file streams cannot infer; SURVEY.md §1.3 —
-#: schema drift must fail loudly, as in Kafka Connect). ``ts``'s physical
-#: type has varied across fixture vintages (TIMESTAMP(NANOS) -> long under
-#: the legacy conf; TIMESTAMP(MICROS) without UTC annotation -> ntz), so
-#: the per-dataset DDL is derived from the parquet footer via
-#: :func:`events_stream_ddl`; after :func:`normalize_event_ts` the frame is
-#: always this canonical shape.
+#: The events stream after :func:`normalize_event_ts`, whatever the
+#: fixture vintage's raw ``ts`` type (see :func:`events_stream`).
 EVENTS_NORMALIZED_DDL = (
     "event_id bigint, ts timestamp, user_id bigint, "
     "event_type string, value double, props string"
 )
-
-_events_ts_sql_types: dict[str, str] = {}
-
-
-def _events_ts_sql_type(sf_dir: str) -> str:
-    """Spark SQL type the raw ``ts`` column loads as, probed once per
-    dataset from the parquet footer (file streams need a declared schema
-    up front, so the batch reader's footer-driven inference is replayed
-    here by hand)."""
-    if sf_dir not in _events_ts_sql_types:
-        import pyarrow.parquet as pq
-
-        t = str(
-            pq.read_schema(os.path.join(sf_dir, "events.parquet"))
-            .field("ts")
-            .type
-        )
-        if t == "int64" or t.startswith("timestamp[ns"):
-            kind = "bigint"  # read as long nanos under nanosAsLong
-        elif "tz=" in t:
-            kind = "timestamp"
-        else:
-            kind = "timestamp_ntz"
-        _events_ts_sql_types[sf_dir] = kind
-    return _events_ts_sql_types[sf_dir]
-
-
-def events_stream_ddl(sf_dir: str) -> str:
-    """Source DDL for ``events.parquet`` under ``sf_dir`` (raw, pre-normalize)."""
-    return (
-        f"event_id bigint, ts {_events_ts_sql_type(sf_dir)}, user_id bigint, "
-        "event_type string, value double, props string"
-    )
 
 _name_counter = itertools.count()
 
@@ -222,7 +184,12 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # dir, zero bytes copied, no hint needed.
     src = staged(spark, "events_src", (sf_dir,), None, link)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    raw = spark.readStream.schema(events_stream_ddl(sf_dir)).parquet(src)
+    # File streams cannot infer a schema (SURVEY.md §1.3 — drift must fail
+    # loudly, as in Kafka Connect), and ``ts``'s physical type varies across
+    # fixture vintages, so the stream declares what the batch reader reads
+    # from this dataset's footer under the same confs.
+    schema = spark.read.parquet(os.path.join(sf_dir, "events.parquet")).schema
+    raw = spark.readStream.schema(schema).parquet(src)
     return normalize_event_ts(raw)
 
 

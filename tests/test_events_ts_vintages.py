@@ -7,7 +7,9 @@ TIMESTAMP_NTZ), and the plain UTC-adjusted TIMESTAMP(MICROS) any external
 producer would write. The round-4 vintage flip cost a full round because
 only the shipped layout was exercised; this file synthesizes a mini
 events table in ALL THREE vintages and proves ``load_table`` normalizes
-every one to identical epoch micros.
+every one to identical epoch micros — through the batch loader and
+through the events file stream, which declares the schema it reads from
+the same footer.
 """
 
 from __future__ import annotations
@@ -19,6 +21,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from scylladb_redpanda_cdc_spark.sources.tables import load_table
+from scylladb_redpanda_cdc_spark.streaming.core import events_stream, run_to_table
 
 #: Three instants incl. a non-midnight, non-second-aligned value with
 #: sub-millisecond micros — the part a ms-rounding bug would destroy.
@@ -60,20 +63,27 @@ def vintage_dirs(tmp_path_factory):
     }
 
 
+_READERS = {
+    "batch": lambda spark, d: load_table(spark, d, "events"),
+    "stream": lambda spark, d: run_to_table(events_stream(spark, d)),
+}
+
+
 def test_all_vintages_normalize_to_identical_epoch_micros(spark, vintage_dirs):
     results = {}
     for vintage, d in vintage_dirs.items():
-        df = load_table(spark, d, "events")
-        assert dict(df.dtypes)["ts"] == "timestamp", (vintage, df.dtypes)
-        rows = (
-            df.select("event_id", F.unix_micros("ts").alias("us"))
-            .orderBy("event_id")
-            .collect()
-        )
-        results[vintage] = [(r["event_id"], r["us"]) for r in rows]
+        for reader, read in _READERS.items():
+            df = read(spark, d)
+            assert dict(df.dtypes)["ts"] == "timestamp", (vintage, reader, df.dtypes)
+            rows = (
+                df.select("event_id", F.unix_micros("ts").alias("us"))
+                .orderBy("event_id")
+                .collect()
+            )
+            results[vintage, reader] = [(r["event_id"], r["us"]) for r in rows]
     expected = list(zip([1, 2, 3], _EPOCH_US))
-    for vintage, got in results.items():
-        assert got == expected, (vintage, got)
+    for key, got in results.items():
+        assert got == expected, (key, got)
 
 
 def test_vintages_survive_hostile_session_timezone(spark, vintage_dirs):

@@ -377,7 +377,13 @@ _TWINS = {
         "reach AS (SELECT doc_id, doc_id AS r FROM documents",
         ("plans/llm_queries.py", "_cc_labels_sql"),
     ),
+    "pair_edges": (
+        "edges AS (SELECT doc_a AS",
+        ("plans/llm_queries.py", "_pair_edges_sql"),
+    ),
     "ivf_centroids": ("WHERE vec_id % 25 = 0", ("plans/llm_queries.py", None)),
+    "pq_codes": ("ORDER BY dist ASC, cid ASC", ("plans/llm_queries.py", "_pq_codes_sql")),
+    "words": ("string_split_regex(lower(", ("plans/llm_queries.py", "_words_sql")),
     "minhash_sigs": (
         "bands(band, a, c) AS (VALUES",
         ("plans/llm_queries.py", "_minhash_sigs_sql"),
