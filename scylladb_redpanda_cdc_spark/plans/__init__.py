@@ -106,6 +106,39 @@ _REWRITTEN: tuple[str, ...] = (
     "x72_rank_fusion",
     "a20_incremental_mv",
     "a30_scd2_dimension_history",
+    # Copies the winnowing clone guard found, collapsed to one builder
+    # each (plans byte-identical; builder bodies changed): the two-phase
+    # top-k (x32/x45/x62/x70), the PQ lookup and coarse IVF probe
+    # (x54/x90, x13; x3 shares x13's cosine top-k), the quality-score
+    # terms (x15/x20), the unigram mass (x28/x78), the 4-shingle rows
+    # (x26/x47), the MinHash shingle hashes, band mins and band pairs
+    # (x46/x84), the embedding centering (x112), the hourly windows
+    # (s3/s18, s6/s12) and the day-keyed events (o5/o8). Not entered:
+    # x2/x89/x92/x97 and x111, which reach a changed kernel through an
+    # unchanged plan.
+    "x3_sim_cosine_topk",
+    "x13_sim_ivf_probe",
+    "x15_text_quality_score",
+    "x20_corpus_prep",
+    "x26_decontaminate",
+    "x28_unigram_lm_score",
+    "x32_knn_join",
+    "x45_ann_recall_eval",
+    "x46_dedup_est_quality",
+    "x47_contamination_score",
+    "x54_pq_ann",
+    "x62_hard_negatives",
+    "x70_retrieval_mrr",
+    "x78_ccnet_buckets",
+    "x84_source_minhash_overlap",
+    "x90_ivf_pq_ann",
+    "x112_common_direction_removal",
+    "s3_stream_tumbling_agg",
+    "s6_watermark_late_drop",
+    "s12_watermark_late_drop_observed",
+    "s18_stream_batch_invariance",
+    "o5_dynamic_partition_overwrite",
+    "o8_partition_evolution",
 )
 
 # The round-9 name `_REPROOF` was kept as an alias through rounds 10-11

@@ -19,8 +19,9 @@ from scylladb_redpanda_cdc_spark.plans import QuerySpec
 from scylladb_redpanda_cdc_spark.sources.cdc_fixture import (
     TOPIC,
     golden_raw_cte,
+    golden_records,
     golden_stream_df,
-    golden_values_sql,
+    values_sql,
 )
 from scylladb_redpanda_cdc_spark.sources.changelog import CHANGELOG_SQL_CTE, synth_changelog
 
@@ -511,18 +512,6 @@ def a17_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark.createDataFrame(_v2_records(), RECORD_SCHEMA)
     )
     return evolution_decode(raw)
-
-
-def _v2_values_sql() -> str:
-    rows = []
-    for r in _v2_records():
-        key_lit = r["key"].replace("'", "''")
-        val_lit = r["value"].replace("'", "''")
-        rows.append(
-            f"('{r['topic']}', '{key_lit}', '{val_lit}', "
-            f"{r['timestamp']}, {r['partition']}, {r['offset']})"
-        )
-    return ",\n    ".join(rows)
 
 
 #: A18's literal replay points over the extended 8-event log (offsets 0-7):
@@ -1359,7 +1348,7 @@ def flagship_cdc_materialize(spark: SparkSession, sf_dir: str) -> DataFrame:
 EVOLUTION_SQL = (
     'WITH raw(topic, "key", "value", "timestamp", "partition", "offset")'
     " AS (\n  VALUES\n    "
-    f"{golden_values_sql()},\n    {_v2_values_sql()}\n)\n"
+    f"{values_sql(golden_records() + _v2_records())}\n)\n"
     'SELECT "offset",\n'
     "  CASE WHEN json_extract_string(\"value\", '$.schema.name')"
     " LIKE '%.v2' THEN 2 ELSE 1 END AS schema_version,\n"

@@ -135,6 +135,38 @@ _PROBE_SQL = (
     f" 1, 15)) AS BIGINT) ASC, vec_id ASC LIMIT {X_PROBE_K}"
 )
 
+
+def _two_phase_topk(scored, k: int, rank_col: str):
+    """Per-query top-``k`` of ``scored`` (qid, vec_id, cos_sim, ...) by
+    (cos_sim DESC, vec_id ASC), ranked in ``rank_col``: local top-k per
+    (qid, vec_id % 16) salt, then a re-rank of the <= 16k survivors per
+    qid — the shuffle carries candidates, never the scored corpus (x25's
+    two-phase pattern). The salt cell holds every global top-k member it
+    owns, so the cut is exact."""
+    order = (F.col("cos_sim").desc(), F.col("vec_id").asc())
+    w1 = Window.partitionBy("qid", F.col("vec_id") % 16).orderBy(*order)
+    cand = scored.withColumn("r1", F.row_number().over(w1)).filter(
+        F.col("r1") <= k
+    )
+    w2 = Window.partitionBy("qid").orderBy(*order)
+    return cand.withColumn(rank_col, F.row_number().over(w2)).filter(
+        F.col(rank_col) <= k
+    )
+
+
+def _cos_sql(a: str, b: str) -> str:
+    """DuckDB twin of operators.llm.cosine: same double-promotion order, so
+    values are bit-identical (the idiom x3's strict oracle already proves)."""
+    return (
+        f"list_aggregate(list_transform(list_zip({a}, {b}),"
+        " p -> CAST(p[1] * p[2] AS DOUBLE)), 'sum')"
+        f" / (sqrt(list_aggregate(list_transform({a},"
+        " x -> CAST(x * x AS DOUBLE)), 'sum'))"
+        f" * sqrt(list_aggregate(list_transform({b},"
+        " x -> CAST(x * x AS DOUBLE)), 'sum')))"
+    )
+
+
 # ---------------------------------------------------------------------------
 # Deduplication
 # ---------------------------------------------------------------------------
@@ -203,6 +235,27 @@ def x2_dedup_fuzzy_minhash(spark, sf_dir):
     return _x2_pairs(spark, sf_dir).filter(F.col("n_shared_bands") >= 4)
 
 
+def _shingle_h60(d, key: str):
+    """(key, h): the ``hash60`` of every distinct word 3-shingle of each
+    row of ``d`` — MinHash's base hash, sha-prefix so DuckDB recomputes
+    it bit for bit (x2's family per doc, x84 per source)."""
+    return d.select(key, words(F.col("text")).alias("_ws")).select(
+        key, F.explode(word_shingles(F.col("_ws"))).alias("s")
+    ).select(key, hash60(F.col("s")).alias("h"))
+
+
+def _band_mins(sh, key: str):
+    """One row per ``key`` of the shingle hashes ``sh``: its 16 MinHash
+    band signatures sig_0..sig_15 (min of each literal re-mix) — a
+    partial-agg-able min, so signatures merge across rows."""
+    return sh.groupBy(key).agg(
+        *[
+            F.min(minhash_remix(F.col("h"), b)).alias(f"sig_{b}")
+            for b in range(16)
+        ]
+    )
+
+
 @session_frame
 def _minhash_bands(spark, sf_dir):
     """(doc_id, band, sig): every document's 16 MinHash band signatures,
@@ -212,15 +265,9 @@ def _minhash_bands(spark, sf_dir):
     shingle->sha60->16-band-min signature pass is the expensive stage,
     and each consumer otherwise re-tokenizes and re-hashes the corpus.
     The cached frame is 16 narrow rows per doc — bounded."""
-    d = _fanned(spark, sf_dir, "documents", "doc_id")
-    sh = d.select("doc_id", words(F.col("text")).alias("_ws")).select(
-        "doc_id", F.explode(word_shingles(F.col("_ws"))).alias("s")
-    ).select("doc_id", hash60(F.col("s")).alias("h"))
-    sigs = sh.groupBy("doc_id").agg(
-        *[
-            F.min(minhash_remix(F.col("h"), b)).alias(f"sig_{b}")
-            for b in range(16)
-        ]
+    sigs = _band_mins(
+        _shingle_h60(_fanned(spark, sf_dir, "documents", "doc_id"), "doc_id"),
+        "doc_id",
     )
     out = sigs.select(
         "doc_id",
@@ -268,9 +315,14 @@ def _x2_pairs_plan(spark, sf_dir):
         .filter(F.col("bucket_df") <= X2_BUCKET_CAP)
         .select("band", "sig")
     )
-    bands = bands.join(bucket_ok, ["band", "sig"], "left_semi")
-    a = bands.alias("a")
-    b = bands.alias("b")
+    return _band_pairs(bands.join(bucket_ok, ["band", "sig"], "left_semi"))
+
+
+def _band_pairs(bands):
+    """(doc_a, doc_b, n_shared_bands) for every doc pair sharing a
+    (band, sig) of ``bands`` — the equi-join on the band bucket, never a
+    cross product (x2's candidate join; x46's sampled twin)."""
+    a, b = bands.alias("a"), bands.alias("b")
     return (
         a.join(
             b,
@@ -496,13 +548,38 @@ def x3_sim_cosine_topk(spark, sf_dir):
     (no global sort)."""
     e = _T(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
+    return _cosine_topk(e.filter(F.col("vec_id") != 0), q, 10)
+
+
+def _cosine_topk(cands, q, k: int):
+    """Top-``k`` of ``cands`` (vec_id, embedding) by cosine to the 1-row
+    query ``q`` (qe), ties to the lower vec_id: ``q`` is broadcast and
+    the cut plans as TakeOrdered, never a global sort (x3, x13)."""
     return (
-        e.filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
+        cands.crossJoin(F.broadcast(q))
         .select("vec_id", cosine(F.col("embedding"), F.col("qe")).alias("cos_sim"))
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(10)
+        .limit(k)
     )
+
+
+def _ivf_probe(spark, sf_dir, pre, cent):
+    """The coarse IVF stage of x13 and x90 over their staged pre-pass
+    ``pre`` (holding vec_id 0, the query) and its centroids ``cent``
+    (cid, cemb): (assigned, q, probes) — every vector of the fanned scan
+    with its nearest centroid (vec_id, embedding, cid; _kmeans_assign's
+    map-only argmin), the query (qe), and the query's 2 nearest lists
+    (cid, q_cos; ties to the lower cid)."""
+    ef = _fanned(spark, sf_dir, "embeddings", "vec_id").select("vec_id", "embedding")
+    assigned = _kmeans_assign(ef, cent)
+    q = pre.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
+    probes = (
+        cent.crossJoin(F.broadcast(q))
+        .select("cid", cosine(F.col("cemb"), F.col("qe")).alias("q_cos"))
+        .orderBy(F.col("q_cos").desc(), F.col("cid").asc())
+        .limit(2)
+    )
+    return assigned, q, probes
 
 
 def x4_sim_lsh_approx(spark, sf_dir):
@@ -546,26 +623,14 @@ def x13_sim_ivf_probe(spark, sf_dir):
     # same bit-exact dot/(na*nb) arithmetic as the cosine kernel. The
     # assignment stream is _fanned (the pre-pass stays on the raw
     # scan: index structures are tiny, only the full pass needs cores).
-    ef = _fanned(spark, sf_dir, "embeddings", "vec_id").select("vec_id", "embedding")
-    assigned = _kmeans_assign(ef, cent).select("vec_id", "cid", "embedding")
-    # the query's 2 nearest centroids
-    q = pre.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-    probes = (
-        cent.crossJoin(F.broadcast(q))
-        .select("cid", cosine(F.col("cemb"), F.col("qe")).alias("q_cos"))
-        .orderBy(F.col("q_cos").desc(), F.col("cid").asc())
-        .limit(2)
-        .select("cid")
-    )
-    # exact search within probed clusters
-    return (
-        assigned.join(F.broadcast(probes), "cid")
+    # Then the exact search within the query's 2 nearest clusters.
+    assigned, q, probes = _ivf_probe(spark, sf_dir, pre, cent)
+    probed = (
+        assigned.select("vec_id", "cid", "embedding")
+        .join(F.broadcast(probes.select("cid")), "cid")
         .filter(F.col("vec_id") != 0)
-        .crossJoin(F.broadcast(q))
-        .select("vec_id", cosine(F.col("embedding"), F.col("qe")).alias("cos_sim"))
-        .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
-        .limit(5)
     )
+    return _cosine_topk(probed, q, 5)
 
 
 def x5_embed_normalize(spark, sf_dir):
@@ -692,22 +757,7 @@ def x15_text_quality_score(spark, sf_dir):
     the whole text-statistics family; integer->double casts are exact,
     so the ratios and blended score are bit-identical to the inline
     form)."""
-    alpha_ratio = F.coalesce(
-        F.col("n_alpha").cast("double")
-        / F.nullif(F.col("n_chars"), F.lit(0)).cast("double"),
-        F.lit(0.0),
-    )
-    stop_ratio = F.coalesce(
-        F.col("n_stop").cast("double")
-        / F.nullif(F.col("n_words"), F.lit(0)).cast("double"),
-        F.lit(0.0),
-    )
-    len_score = F.least(
-        F.col("n_words").cast("double") / F.lit(100.0), F.lit(1.0)
-    )
-    score = (
-        alpha_ratio * 0.4 + (F.lit(1.0) - stop_ratio) * 0.3 + len_score * 0.3
-    )
+    alpha_ratio, stop_ratio, score = _stats_quality_score()
     return _doc_stats(spark, sf_dir).select(
         "doc_id",
         # original emitted F.size()'s INT — keep the published dtype
@@ -985,6 +1035,16 @@ def x25_stratified_sample(spark, sf_dir):
     )
 
 
+def _eval_shingles(d):
+    """(doc_id, s): every distinct 4-word shingle of each document of
+    ``d`` — the rows x26 and x47 split into the held-out eval set
+    (doc_id % 97 == 0) and the corpus."""
+    return d.select("doc_id", words(F.col("text")).alias("_ws")).select(
+        "doc_id",
+        F.explode(word_shingles(F.col("_ws"), 4)).alias("s"),
+    )
+
+
 def x26_decontaminate(spark, sf_dir):
     """Benchmark decontamination: find corpus documents sharing any 4-word
     shingle with a held-out evaluation set (docs with doc_id % 97 == 0 — a
@@ -998,10 +1058,7 @@ def x26_decontaminate(spark, sf_dir):
     the corpus side streams through one explode + broadcast hash join +
     partial agg, never shuffling the corpus. Plan-asserted."""
     d = _T(spark, sf_dir, "documents")
-    grams = d.select("doc_id", words(F.col("text")).alias("_ws")).select(
-        "doc_id",
-        F.explode(word_shingles(F.col("_ws"), 4)).alias("s"),
-    )
+    grams = _eval_shingles(d)
     ev = grams.filter(F.col("doc_id") % 97 == 0).select(
         F.col("doc_id").alias("eval_doc_id"), "s"
     )
@@ -1042,6 +1099,24 @@ def x27_domain_mixture(spark, sf_dir):
     )
 
 
+def _unigram_mass(d):
+    """(tok, per_doc) of the unigram LM proxy over documents ``d``: one
+    row per token (doc_id, term), and per doc the BIGINT sum of its
+    tokens' corpus frequencies (freq_mass) and its token count — the
+    vocabulary-sized frequency table is broadcast (x28, x78)."""
+    tok = d.select("doc_id", F.explode(words(F.col("text"))).alias("term"))
+    tf = tok.groupBy("term").agg(F.count("*").alias("cnt"))
+    per_doc = (
+        tok.join(F.broadcast(tf), "term")
+        .groupBy("doc_id")
+        .agg(
+            F.sum("cnt").alias("freq_mass"),
+            F.count("*").alias("n_tokens"),
+        )
+    )
+    return tok, per_doc
+
+
 def x28_unigram_lm_score(spark, sf_dir):
     """CCNet-style language-model quality proxy, unigram form: score each
     document by the average corpus frequency of its tokens. Fluent text
@@ -1059,18 +1134,8 @@ def x28_unigram_lm_score(spark, sf_dir):
     it is BROADCAST to the token stream (skew-proof: the 'the' hot key
     never shuffles); a real deployment additionally df-caps the vocab and
     defaults OOV terms to frequency 1."""
-    d = _T(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(words(F.col("text"))).alias("term"))
-    tf = tok.groupBy("term").agg(F.count("*").alias("cnt"))
+    tok, per_doc = _unigram_mass(_T(spark, sf_dir, "documents"))
     total = tok.agg(F.count("*").alias("n_total"))
-    per_doc = (
-        tok.join(F.broadcast(tf), "term")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").alias("freq_mass"),
-            F.count("*").alias("n_tokens"),
-        )
-    )
     return per_doc.crossJoin(F.broadcast(total)).select(
         "doc_id",
         "freq_mass",
@@ -1294,19 +1359,8 @@ def x32_knn_join(spark, sf_dir):
         .filter(F.col("vec_id") != F.col("qid"))
         .select("qid", "vec_id", cosine(F.col("embedding"), F.col("qe")).alias("cos_sim"))
     )
-    w1 = Window.partitionBy("qid", F.col("vec_id") % 16).orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    cand = scored.withColumn("r1", F.row_number().over(w1)).filter(
-        F.col("r1") <= 5
-    )
-    w2 = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("knn_rank", F.row_number().over(w2))
-        .filter(F.col("knn_rank") <= 5)
-        .select("qid", "vec_id", "cos_sim", "knn_rank")
+    return _two_phase_topk(scored, 5, "knn_rank").select(
+        "qid", "vec_id", "cos_sim", "knn_rank"
     )
 
 
@@ -1989,18 +2043,7 @@ def x45_ann_recall_eval(spark, sf_dir):
             cosine(F.col("embedding"), F.col("qe")).alias("cos_sim"),
         )
     )
-    w1 = Window.partitionBy("qid", F.col("vec_id") % 16).orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    cand = scored.withColumn("r1", F.row_number().over(w1)).filter(
-        F.col("r1") <= 5
-    )
-    w2 = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    top = cand.withColumn("knn_rank", F.row_number().over(w2)).filter(
-        F.col("knn_rank") <= 5
-    )
+    top = _two_phase_topk(scored, 5, "knn_rank")
     return top.groupBy("qid").agg(
         F.count("*").alias("k"),
         F.sum(F.when(F.col("bucket") == F.col("qbucket"), 1).otherwise(0))
@@ -2048,10 +2091,7 @@ def x46_dedup_est_quality(spark, sf_dir):
     reservoir, per bucket), so hot strata are measured without the
     m²/2 fan-out the uncapped round-10 eval paid inside its own run;
     the DuckDB twin mirrors the identical draw."""
-    d = _fanned(spark, sf_dir, "documents", "doc_id")
-    sh = d.select("doc_id", words(F.col("text")).alias("_ws")).select(
-        "doc_id", F.explode(word_shingles(F.col("_ws"))).alias("s")
-    ).select("doc_id", hash60(F.col("s")).alias("h"))
+    sh = _shingle_h60(_fanned(spark, sf_dir, "documents", "doc_id"), "doc_id")
     bands = _minhash_bands(spark, sf_dir)
     # Bound the estimator run (round 11): enumerate every bucket up to
     # X2_BUCKET_CAP members; an OVER-cap bucket contributes its CAP
@@ -2070,18 +2110,8 @@ def x46_dedup_est_quality(spark, sf_dir):
         .filter(F.col("_rn") <= X2_BUCKET_CAP)
         .drop("_rn")
     )
-    ba, bb = kept.alias("a"), kept.alias("b")
     pairs = (
-        ba.join(
-            bb,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.sig") == F.col("b.sig"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .groupBy(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .agg(F.count("*").alias("n_shared_bands"))
+        _band_pairs(kept)
         .filter(F.col("n_shared_bands") >= 4)
         .transform(stage_checkpoint)
     )
@@ -2148,10 +2178,7 @@ def x47_contamination_score(spark, sf_dir):
     shuffling corpus-sized data (the agg key is doc_id, whose partial agg
     collapses map-side to one row per doc)."""
     d = _fanned(spark, sf_dir, "documents", "doc_id")
-    grams = d.select("doc_id", words(F.col("text")).alias("_ws")).select(
-        "doc_id",
-        F.explode(word_shingles(F.col("_ws"), 4)).alias("s"),
-    )
+    grams = _eval_shingles(d)
     ev = grams.filter(F.col("doc_id") % 97 == 0).select("s").distinct()
     corpus = grams.filter(F.col("doc_id") % 97 != 0)
     sizes = corpus.groupBy("doc_id").agg(F.count("*").alias("n_shingles"))
@@ -2239,10 +2266,11 @@ def _doc_stats(spark, sf_dir):
     return out
 
 
-#: x15's blended quality score, derived from _doc_stats integer columns
-#: in the exact expression order every consumer (x20/x120) used inline —
-#: integer->double casts are exact, so the doubles are bit-identical to
-#: the pre-round-13 per-query computation and to the DuckDB oracles.
+#: x15's (alpha ratio, stop ratio, blended quality score), derived from
+#: _doc_stats integer columns in the exact expression order every
+#: consumer (x15/x20) used inline — integer->double casts are exact, so
+#: the doubles are bit-identical to the pre-round-13 per-query
+#: computation and to the DuckDB oracles.
 def _stats_quality_score():
     alpha_ratio = F.coalesce(
         F.col("n_alpha").cast("double")
@@ -2258,7 +2286,9 @@ def _stats_quality_score():
         F.col("n_words").cast("double") / F.lit(100.0), F.lit(1.0)
     )
     return (
-        alpha_ratio * 0.4 + (F.lit(1.0) - stop_ratio) * 0.3 + len_score * 0.3
+        alpha_ratio,
+        stop_ratio,
+        alpha_ratio * 0.4 + (F.lit(1.0) - stop_ratio) * 0.3 + len_score * 0.3,
     )
 
 
@@ -2280,7 +2310,7 @@ def x20_corpus_prep(spark, sf_dir):
             "doc_id",
             "lang",
             "text_hash",
-            _stats_quality_score().alias("quality_score"),
+            _stats_quality_score()[2].alias("quality_score"),
         )
         .filter(
             (F.col("quality_score") >= 0.55)
@@ -2777,6 +2807,56 @@ def _pq_l2sq(a, b):
     return acc
 
 
+def _pq_lookup(src, corpus):
+    """PQ/ADC over the codebook vectors ``src`` (cid = vec_id; its vec_id
+    0 is the query): (vec_id, m, code, qd) per ``corpus`` vector and
+    subspace — ``code`` the nearest codeword, argmin by (dist ASC, cid
+    ASC) as a lexicographic struct-MIN (partial-agg-able) against the
+    broadcast codebook, ``qd`` the query's sub-distance to it, looked up
+    in the broadcast distance table. Shared by x54 (PQ flat) and x90
+    (IVF-PQ)."""
+    ms = F.explode(F.array(*[F.lit(i) for i in range(X54_M)])).alias("m")
+    sub = F.expr(f"slice(embedding, m * {X54_SUB} + 1, {X54_SUB})")
+    cent = src.select(F.col("vec_id").alias("cid"), "embedding", ms).select(
+        "cid", "m", sub.alias("csub")
+    )
+    codes = (
+        corpus.select("vec_id", "embedding", ms)
+        .select("vec_id", "m", sub.alias("vsub"))
+        .join(F.broadcast(cent), "m")
+        .select(
+            "vec_id",
+            "m",
+            F.struct(
+                _pq_l2sq(F.col("vsub"), F.col("csub")).alias("dist"),
+                F.col("cid").alias("cid"),
+            ).alias("dc"),
+        )
+        .groupBy("vec_id", "m")
+        .agg(F.min("dc").alias("best"))
+        .select("vec_id", "m", F.col("best.cid").alias("code"))
+    )
+    q = src.filter(F.col("vec_id") == 0).select("embedding", ms).select(
+        "m", sub.alias("qsub")
+    )
+    dtab = q.join(cent, "m").select(
+        "m", "cid", _pq_l2sq(F.col("qsub"), F.col("csub")).alias("qd")
+    )
+    return codes.join(
+        F.broadcast(dtab), (codes.m == dtab.m) & (codes.code == dtab.cid)
+    ).select("vec_id", codes.m.alias("m"), "code", "qd")
+
+
+def _adc_dist():
+    """The ADC distance: the per-subspace ``_md`` (m, qd) structs summed
+    in m order, so both engines add in the same sequence."""
+    return F.aggregate(
+        F.transform(F.col("_md"), lambda s: s.qd),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    ).alias("adc_dist")
+
+
 def x54_pq_ann(spark, sf_dir):
     """Product quantization + asymmetric-distance (ADC) retrieval — the
     codebook half of IVF-PQ (Jegou et al. 2011), THE standard way a 100 TB
@@ -2797,49 +2877,14 @@ def x54_pq_ann(spark, sf_dir):
     streams past the broadcast codebook, and partial-aggs the argmin —
     shuffles carry 1 row per (vec, subspace) then 1 row per vec. Nothing
     is ever all-pairs; top-k is TakeOrdered."""
-    e = _T(spark, sf_dir, "embeddings")
-    ms = F.explode(F.array(*[F.lit(i) for i in range(X54_M)])).alias("m")
-    sub = F.expr(f"slice(embedding, m * {X54_SUB} + 1, {X54_SUB})")
-    cent = (
-        e.filter(F.col("vec_id") % 25 == 0)
-        .select(F.col("vec_id").alias("cid"), "embedding", ms)
-        .select("cid", "m", sub.alias("csub"))
-    )
-    l2sq = _pq_l2sq
     # the corpus pass (x8 explode + per-(vec, m) L2 folds) rides the
     # fanned scan; the codebook/query branches stay on the raw read
-    corpus = (
-        _fanned(spark, sf_dir, "embeddings", "vec_id")
-        .select("vec_id", "embedding", ms)
-        .select("vec_id", "m", sub.alias("vsub"))
-    )
-    codes = (
-        corpus.join(F.broadcast(cent), "m")
-        .select(
-            "vec_id",
-            "m",
-            F.struct(
-                l2sq(F.col("vsub"), F.col("csub")).alias("dist"),
-                F.col("cid").alias("cid"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id", "m")
-        .agg(F.min("dc").alias("best"))
-        .select("vec_id", "m", F.col("best.cid").alias("code"))
-    )
-    q = (
-        e.filter(F.col("vec_id") == 0)
-        .select("embedding", ms)
-        .select("m", sub.alias("qsub"))
-    )
-    dtab = (
-        q.join(cent, "m")
-        .select("m", "cid", l2sq(F.col("qsub"), F.col("csub")).alias("qd"))
+    looked = _pq_lookup(
+        _T(spark, sf_dir, "embeddings").filter(F.col("vec_id") % 25 == 0),
+        _fanned(spark, sf_dir, "embeddings", "vec_id"),
     )
     return (
-        codes.filter(F.col("vec_id") != 0)
-        .join(F.broadcast(dtab), (codes.m == dtab.m) & (codes.code == dtab.cid))
-        .select("vec_id", codes.m.alias("m"), "code", "qd")
+        looked.filter(F.col("vec_id") != 0)
         .groupBy("vec_id")
         .agg(
             F.sort_array(F.collect_list(F.struct("m", "code"))).alias("_mc"),
@@ -2850,11 +2895,7 @@ def x54_pq_ann(spark, sf_dir):
             F.array_join(
                 F.transform(F.col("_mc"), lambda s: s.code.cast("string")), ","
             ).alias("codes_str"),
-            F.aggregate(
-                F.transform(F.col("_md"), lambda s: s.qd),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("adc_dist"),
+            _adc_dist(),
         )
         .orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
         .limit(20)
@@ -3194,6 +3235,18 @@ def x61_boilerplate_strip(spark, sf_dir):
     )
 
 
+def _labeled_probe(spark, sf_dir):
+    """The labeled corpus (vec_id, embedding, label) and its probe batch
+    (qid, qe, qlabel) — the two inputs of x62's and x70's scored pass."""
+    e = _T(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
+    q = _probe_batch(e).select(
+        F.col("vec_id").alias("qid"),
+        F.col("embedding").alias("qe"),
+        F.col("label").alias("qlabel"),
+    )
+    return e, q
+
+
 def x62_hard_negatives(spark, sf_dir):
     """Hard-negative mining for contrastive training: for each query
     vector, the top-5 most-similar vectors with a DIFFERENT class label —
@@ -3205,12 +3258,7 @@ def x62_hard_negatives(spark, sf_dir):
     past map-side (the |corpus|x|Q| scoring is inherent to mining, all
     narrow), label filter prunes before ranking, two-phase top-k so the
     shuffle carries candidates (<=80/query), never the corpus."""
-    e = _T(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-    q = _probe_batch(e).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("label").alias("qlabel"),
-    )
+    e, q = _labeled_probe(spark, sf_dir)
     scored = (
         e.crossJoin(F.broadcast(q))
         .filter(F.col("label") != F.col("qlabel"))
@@ -3221,19 +3269,8 @@ def x62_hard_negatives(spark, sf_dir):
             cosine(F.col("embedding"), F.col("qe")).alias("cos_sim"),
         )
     )
-    w1 = Window.partitionBy("qid", F.col("vec_id") % 16).orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    cand = scored.withColumn("r1", F.row_number().over(w1)).filter(
-        F.col("r1") <= 5
-    )
-    w2 = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    return (
-        cand.withColumn("neg_rank", F.row_number().over(w2))
-        .filter(F.col("neg_rank") <= 5)
-        .select("qid", "vec_id", "neg_label", "cos_sim", "neg_rank")
+    return _two_phase_topk(scored, 5, "neg_rank").select(
+        "qid", "vec_id", "neg_label", "cos_sim", "neg_rank"
     )
 
 
@@ -3273,18 +3310,22 @@ def x63_class_prototypes(spark, sf_dir):
     )
 
 
-_X62_SQL = f"""WITH q AS (
+def _labeled_scored_sql(cols: str, where: str) -> str:
+    """``q`` (the probe batch as qid, qe, qlabel) and ``scored`` (``cols``
+    plus cos_sim, over the embeddings rows ``e`` that pass ``where``) —
+    the DuckDB twin of :func:`_labeled_probe` and the scored pass of x62
+    and x70."""
+    return f"""q AS (
   SELECT vec_id AS qid, embedding AS qe, label AS qlabel
   FROM embeddings {_PROBE_SQL}),
 scored AS (
-  SELECT qid, vec_id, e.label AS neg_label,
-    list_aggregate(list_transform(list_zip(e.embedding, qe),
-      p -> CAST(p[1] * p[2] AS DOUBLE)), 'sum')
-    / (sqrt(list_aggregate(list_transform(e.embedding,
-        x -> CAST(x * x AS DOUBLE)), 'sum'))
-       * sqrt(list_aggregate(list_transform(qe,
-        x -> CAST(x * x AS DOUBLE)), 'sum'))) AS cos_sim
-  FROM embeddings e, q WHERE e.label <> qlabel)
+  SELECT {cols},
+    {_cos_sql("e.embedding", "qe")} AS cos_sim
+  FROM embeddings e, q WHERE {where})"""
+
+
+_X62_SQL = f"""WITH {_labeled_scored_sql(
+    "qid, vec_id, e.label AS neg_label", "e.label <> qlabel")}
 SELECT qid, vec_id, neg_label, cos_sim, neg_rank FROM (
   SELECT *, CAST(ROW_NUMBER() OVER (PARTITION BY qid
     ORDER BY cos_sim DESC, vec_id ASC) AS INT) AS neg_rank
@@ -3738,12 +3779,7 @@ def x70_retrieval_mrr(spark, sf_dir):
 
     Scale shape: x32's discipline (query batch broadcast, two-phase
     top-k), then a 10-rows-per-query metric agg — evaluation-sized."""
-    e = _T(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-    q = _probe_batch(e).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("label").alias("qlabel"),
-    )
+    e, q = _labeled_probe(spark, sf_dir)
     scored = (
         e.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("qid"))
@@ -3755,18 +3791,7 @@ def x70_retrieval_mrr(spark, sf_dir):
             cosine(F.col("embedding"), F.col("qe")).alias("cos_sim"),
         )
     )
-    w1 = Window.partitionBy("qid", F.col("vec_id") % 16).orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    cand = scored.withColumn("r1", F.row_number().over(w1)).filter(
-        F.col("r1") <= 10
-    )
-    w2 = Window.partitionBy("qid").orderBy(
-        F.col("cos_sim").desc(), F.col("vec_id").asc()
-    )
-    top = cand.withColumn("rnk", F.row_number().over(w2)).filter(
-        F.col("rnk") <= 10
-    )
+    top = _two_phase_topk(scored, 10, "rnk")
     rel = F.col("label") == F.col("qlabel")
     return top.groupBy("qid").agg(
         F.min(F.when(rel, F.col("rnk"))).cast("int").alias("first_rel_rank"),
@@ -3781,18 +3806,8 @@ def x70_retrieval_mrr(spark, sf_dir):
     )
 
 
-_X70_SQL = f"""WITH q AS (
-  SELECT vec_id AS qid, embedding AS qe, label AS qlabel
-  FROM embeddings {_PROBE_SQL}),
-scored AS (
-  SELECT qid, qlabel, vec_id, e.label AS label,
-    list_aggregate(list_transform(list_zip(e.embedding, qe),
-      p -> CAST(p[1] * p[2] AS DOUBLE)), 'sum')
-    / (sqrt(list_aggregate(list_transform(e.embedding,
-        x -> CAST(x * x AS DOUBLE)), 'sum'))
-       * sqrt(list_aggregate(list_transform(qe,
-        x -> CAST(x * x AS DOUBLE)), 'sum'))) AS cos_sim
-  FROM embeddings e, q WHERE e.vec_id <> qid),
+_X70_SQL = f"""WITH {_labeled_scored_sql(
+    "qid, qlabel, vec_id, e.label AS label", "e.vec_id <> qid")},
 top AS (
   SELECT * FROM (
     SELECT *, ROW_NUMBER() OVER (PARTITION BY qid
@@ -4204,19 +4219,6 @@ _X11_LABELS_SQL = _cc_labels_sql(_X11_CTES, _X11_FINAL)
 _X21_SQL = f"""{_X11_LABELS_SQL}
 SELECT doc_id, cluster_id, cluster_id = doc_id AS is_canonical FROM labels"""
 
-def _cos_sql(a: str, b: str) -> str:
-    """DuckDB twin of operators.llm.cosine: same double-promotion order, so
-    values are bit-identical (the idiom x3's strict oracle already proves)."""
-    return (
-        f"list_aggregate(list_transform(list_zip({a}, {b}),"
-        " p -> CAST(p[1] * p[2] AS DOUBLE)), 'sum')"
-        f" / (sqrt(list_aggregate(list_transform({a},"
-        " x -> CAST(x * x AS DOUBLE)), 'sum'))"
-        f" * sqrt(list_aggregate(list_transform({b},"
-        " x -> CAST(x * x AS DOUBLE)), 'sum')))"
-    )
-
-
 def _lsh_bucket_sql(n_planes: int, emb: str = "embedding") -> str:
     """DuckDB twin of operators.llm.lsh_bucket: the SAME literal integer
     planes (lsh_plane_ints), the same ``v/500.0 - 1.0`` component map, and
@@ -4519,13 +4521,17 @@ SELECT doc_id, shard, n_tokens,
   CAST((cum - n_tokens) % 2048 AS BIGINT) AS token_offset
 FROM c"""
 
-_X26_SQL = f"""WITH toks AS (SELECT doc_id,
+#: ``toks`` + ``sh(doc_id, shingles)``: every document's distinct 4-word
+#: shingles — the DuckDB twin of :func:`_eval_shingles` (x26, x47).
+_SHINGLES4_CTES = f"""toks AS (SELECT doc_id,
   {_words_sql()} AS ws
   FROM documents),
 sh AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ws) - 2),
          i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3]))
          AS shingles
-       FROM toks WHERE len(ws) >= 4),
+       FROM toks WHERE len(ws) >= 4)"""
+
+_X26_SQL = f"""WITH {_SHINGLES4_CTES},
 eg AS (SELECT doc_id AS eval_doc_id, unnest(shingles) AS s FROM sh
        WHERE doc_id % 97 = 0),
 cg AS (SELECT doc_id, unnest(shingles) AS s FROM sh WHERE doc_id % 97 <> 0)
@@ -4779,14 +4785,8 @@ LEFT JOIN shr s ON p.doc_a = s.doc_a AND p.doc_b = s.doc_b
 JOIN sizes sa ON p.doc_a = sa.doc_id
 JOIN sizes sb ON p.doc_b = sb.doc_id"""
 
-_X47_SQL = f"""WITH toks AS (SELECT doc_id,
-  {_words_sql()} AS ws
-  FROM documents),
-sh4 AS (SELECT doc_id, list_distinct(list_transform(range(1, len(ws) - 2),
-          i -> ws[i] || ' ' || ws[i+1] || ' ' || ws[i+2] || ' ' || ws[i+3]))
-          AS shingles
-        FROM toks WHERE len(ws) >= 4),
-g AS (SELECT doc_id, unnest(shingles) AS s FROM sh4),
+_X47_SQL = f"""WITH {_SHINGLES4_CTES},
+g AS (SELECT doc_id, unnest(shingles) AS s FROM sh),
 ev AS (SELECT DISTINCT s FROM g WHERE doc_id % 97 = 0),
 corpus AS (SELECT * FROM g WHERE doc_id % 97 <> 0),
 sizes AS (SELECT doc_id, CAST(COUNT(*) AS BIGINT) AS n_shingles
@@ -5349,16 +5349,7 @@ def x78_ccnet_buckets(spark, sf_dir):
     distribution — with broadcast per-(lang, range) offsets; the tercile
     is NTILE(3) arithmetic on the exact rank (x121's law)."""
     d = _T(spark, sf_dir, "documents")
-    tok = d.select("doc_id", F.explode(words(F.col("text"))).alias("term"))
-    tf = tok.groupBy("term").agg(F.count("*").alias("cnt"))
-    per_doc = (
-        tok.join(F.broadcast(tf), "term")
-        .groupBy("doc_id")
-        .agg(
-            F.sum("cnt").alias("freq_mass"),
-            F.count("*").alias("n_tokens"),
-        )
-    )
+    _, per_doc = _unigram_mass(d)
     scored = per_doc.join(d.select("doc_id", "lang"), "doc_id").select(
         "doc_id",
         "lang",
@@ -5729,15 +5720,8 @@ def x84_source_minhash_overlap(spark, sf_dir):
     Scale: one shingle pass + a sources-sized signature table; the pair
     comparison is |sources|² over a tiny frame (declared bounded cross
     join) — never doc-pairwise."""
-    d = _T(spark, sf_dir, "documents")
-    sh = d.select("source", words(F.col("text")).alias("_ws")).select(
-        "source", F.explode(word_shingles(F.col("_ws"))).alias("s")
-    ).select("source", hash60(F.col("s")).alias("h"))
-    sigs = sh.groupBy("source").agg(
-        *[
-            F.min(minhash_remix(F.col("h"), b)).alias(f"sig_{b}")
-            for b in range(16)
-        ]
+    sigs = _band_mins(
+        _shingle_h60(_T(spark, sf_dir, "documents"), "source"), "source"
     )
     a, b = sigs.alias("a"), sigs.alias("b")
     agree = sum(
@@ -6164,68 +6148,27 @@ def x90_ivf_pq_ann(spark, sf_dir):
     # coarse assignment = _kmeans_assign's map-only array_max argmin over
     # the broadcast centroid array (zero exchanges, no materialized
     # fan-out); the full pass runs over the fanned scan
-    ef = _fanned(spark, sf_dir, "embeddings", "vec_id").select("vec_id", "embedding")
-    assigned = _kmeans_assign(ef, cent).select(
-        "vec_id", F.col("cid").alias("coarse_cid")
-    )
-    q = pre.filter(F.col("vec_id") == 0).select(F.col("embedding").alias("qe"))
-    probes = (
-        cent.crossJoin(F.broadcast(q))
-        .select("cid", cosine(F.col("cemb"), F.col("qe")).alias("q_cos"))
-        .orderBy(F.col("q_cos").desc(), F.col("cid").asc())
-        .limit(2)
-        .select(F.col("cid").alias("coarse_cid"))
-    )
-    cand = assigned.join(F.broadcast(probes), "coarse_cid").filter(
-        F.col("vec_id") != 0
+    assigned, _, probes = _ivf_probe(spark, sf_dir, pre, cent)
+    cand = (
+        assigned.select("vec_id", F.col("cid").alias("coarse_cid"))
+        .join(
+            F.broadcast(probes.select(F.col("cid").alias("coarse_cid"))),
+            "coarse_cid",
+        )
+        .filter(F.col("vec_id") != 0)
     )
     # --- PQ/ADC stage (x54's kernel) over the probed lists only ---
-    ms = F.explode(F.array(*[F.lit(i) for i in range(X54_M)])).alias("m")
-    sub = F.expr(f"slice(embedding, m * {X54_SUB} + 1, {X54_SUB})")
-    centpq = pre.select(F.col("vec_id").alias("cid"), "embedding", ms).select(
-        "cid", "m", sub.alias("csub")
-    )
-    corpus = (
-        e.join(F.broadcast(cand.select("vec_id")), "vec_id")
-        .select("vec_id", "embedding", ms)
-        .select("vec_id", "m", sub.alias("vsub"))
-    )
-    codes = (
-        corpus.join(F.broadcast(centpq), "m")
-        .select(
-            "vec_id",
-            "m",
-            F.struct(
-                _pq_l2sq(F.col("vsub"), F.col("csub")).alias("dist"),
-                F.col("cid").alias("cid"),
-            ).alias("dc"),
-        )
-        .groupBy("vec_id", "m")
-        .agg(F.min("dc").alias("best"))
-        .select("vec_id", "m", F.col("best.cid").alias("code"))
-    )
-    qsub = (
-        pre.filter(F.col("vec_id") == 0)
-        .select("embedding", ms)
-        .select("m", sub.alias("qsub"))
-    )
-    dtab = qsub.join(centpq, "m").select(
-        "m", "cid", _pq_l2sq(F.col("qsub"), F.col("csub")).alias("qd")
+    looked = _pq_lookup(
+        pre, e.join(F.broadcast(cand.select("vec_id")), "vec_id")
     )
     return (
-        codes.join(F.broadcast(dtab), (codes.m == dtab.m) & (codes.code == dtab.cid))
-        .select("vec_id", codes.m.alias("m"), "qd")
-        .groupBy("vec_id")
+        looked.groupBy("vec_id")
         .agg(F.sort_array(F.collect_list(F.struct("m", "qd"))).alias("_md"))
         .join(F.broadcast(cand), "vec_id")
         .select(
             "vec_id",
             "coarse_cid",
-            F.aggregate(
-                F.transform(F.col("_md"), lambda s: s.qd),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("adc_dist"),
+            _adc_dist(),
         )
         .orderBy(F.col("adc_dist").asc(), F.col("vec_id").asc())
         .limit(10)
@@ -7907,14 +7850,10 @@ def x111_top_pc_power_iteration(spark, sf_dir):
     )
 
 
-@session_frame
-def _x111_varr(spark, sf_dir):
-    """The 1-row (varr: array<long>) top-PC frame x111 emits and x112
-    consumes for common-direction removal. Cached per (session, dataset):
-    the eigen chain runs once even when both queries grade in one pass
-    (the ``_cc_labels`` rationale)."""
-    # the Gram pass is the one corpus scan — fan it out (splits < cores
-    # otherwise serialize the d² accumulator work on one task)
+def _micros_mean(spark, sf_dir):
+    """(e, marr): the fanned embeddings as integer micros (vec_id, vm)
+    and the 1-row per-dimension floor mean array (marr) — the centering
+    input of x111's eigen chain and x112's removal."""
     e = _fanned(spark, sf_dir, "embeddings", "vec_id").select(
         "vec_id", _vm_micros(F.col("embedding")).alias("vm")
     )
@@ -7928,6 +7867,18 @@ def _x111_varr(spark, sf_dir):
             lambda s: s["m"],
         ).alias("marr")
     )
+    return e, marr
+
+
+@session_frame
+def _x111_varr(spark, sf_dir):
+    """The 1-row (varr: array<long>) top-PC frame x111 emits and x112
+    consumes for common-direction removal. Cached per (session, dataset):
+    the eigen chain runs once even when both queries grade in one pass
+    (the ``_cc_labels`` rationale)."""
+    # the Gram pass is the one corpus scan — fan it out (splits < cores
+    # otherwise serialize the d² accumulator work on one task)
+    e, marr = _micros_mean(spark, sf_dir)
     cent = e.crossJoin(F.broadcast(marr)).select(
         F.zip_with("vm", "marr", lambda a, b: a - b).alias("c")
     )
@@ -8072,19 +8023,7 @@ def x112_common_direction_removal(spark, sf_dir):
     engines. Scale shape: x111's cached 1-row direction broadcasts; the
     removal is map-only over the fanned scan; retrieval is x3's
     broadcast-query + TakeOrdered shape — one corpus pass end to end."""
-    e = _fanned(spark, sf_dir, "embeddings", "vec_id").select(
-        "vec_id", _vm_micros(F.col("embedding")).alias("vm")
-    )
-    dims = e.select("vec_id", F.posexplode("vm").alias("dim", "val"))
-    mean = dims.groupBy("dim").agg(
-        F.floor(F.sum("val") / F.count("*")).cast("long").alias("m")
-    )
-    marr = mean.agg(
-        F.transform(
-            F.sort_array(F.collect_list(F.struct("dim", "m"))),
-            lambda s: s["m"],
-        ).alias("marr")
-    )
+    e, marr = _micros_mean(spark, sf_dir)
     idot = lambda a, b: F.aggregate(  # noqa: E731
         F.zip_with(a, b, lambda x, y: x * y),
         F.lit(0).cast("long"),
@@ -9303,13 +9242,7 @@ SPECS = [
         "exact top-10 cosine neighbors of query vector",
         x3_sim_cosine_topk,
         "WITH q AS (SELECT embedding AS qe FROM embeddings WHERE vec_id = 0)\n"
-        "SELECT vec_id,\n"
-        "  list_aggregate(list_transform(list_zip(embedding, qe),"
-        " p -> CAST(p[1] * p[2] AS DOUBLE)), 'sum')\n"
-        "  / (sqrt(list_aggregate(list_transform(embedding,"
-        " x -> CAST(x * x AS DOUBLE)), 'sum'))\n"
-        "     * sqrt(list_aggregate(list_transform(qe,"
-        " x -> CAST(x * x AS DOUBLE)), 'sum'))) AS cos_sim\n"
+        f"SELECT vec_id,\n  {_cos_sql('embedding', 'qe')} AS cos_sim\n"
         "FROM embeddings, q WHERE vec_id <> 0\n"
         "ORDER BY cos_sim DESC, vec_id ASC LIMIT 10",
     ),

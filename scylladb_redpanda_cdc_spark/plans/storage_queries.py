@@ -341,17 +341,8 @@ def o5_dynamic_partition_overwrite(spark, sf_dir):
     table's; no read-modify-write of the full dataset. The overwrite mode
     is per-write (option), not session config, so concurrent full
     overwrites elsewhere keep their semantics."""
-    day = "(unix_micros(ts) - pmod(unix_micros(ts), 86400000000)) DIV 86400000000"
-
     def write(base: str) -> None:
-        e = (
-            _T(spark, sf_dir, "events")
-            .withColumn("day", F.expr(day))
-            .withColumn(
-                "vm", F.floor(F.col("value") * 1_000_000).cast("long")
-            )
-            .select("event_id", "day", "vm")
-        )
+        e = _day_events(spark, sf_dir)
         (
             e.repartition("day")
             .write.mode("overwrite")
@@ -374,18 +365,36 @@ def o5_dynamic_partition_overwrite(spark, sf_dir):
         )
 
     base = staged(spark, "o_o5", (sf_dir,), table_bytes(spark, sf_dir, "events"), write)
-    back = spark.read.parquet(base)
-    return back.groupBy(F.col("day").cast("long").alias("day")).agg(
-        F.count("*").alias("n_events"),
-        F.sum("vm").alias("value_micros"),
+    return _per_day(spark.read.parquet(base))
+
+
+def _day_events(spark, sf_dir):
+    """events as (event_id, day, vm): the UTC epoch day and the value in
+    integer micros — the table o5 restates and o8 splits by scheme."""
+    day = "(unix_micros(ts) - pmod(unix_micros(ts), 86400000000)) DIV 86400000000"
+    return (
+        _T(spark, sf_dir, "events")
+        .withColumn("day", F.expr(day))
+        .withColumn("vm", F.floor(F.col("value") * 1_000_000).cast("long"))
+        .select("event_id", "day", "vm")
     )
 
 
-_O5_SQL = """WITH e AS (
+def _per_day(back):
+    """Per-day event count and value-micros sum of a read-back (day, vm)."""
+    return back.groupBy(F.col("day").cast("long").alias("day")).agg(
+        F.count("*").alias("n_events"), F.sum("vm").alias("value_micros")
+    )
+
+
+#: DuckDB twin of :func:`_day_events` as CTE ``e`` (day, vm).
+_DAY_EVENTS_SQL = """e AS (
   SELECT (epoch_us(ts) - ((epoch_us(ts) % 86400000000) + 86400000000)
           % 86400000000) // 86400000000 AS day,
     CAST(FLOOR(value * 1000000) AS BIGINT) AS vm
-  FROM events),
+  FROM events)"""
+
+_O5_SQL = f"""WITH {_DAY_EVENTS_SQL},
 d0 AS (SELECT MIN(day) AS d0 FROM e)
 SELECT day, COUNT(*) AS n_events,
   CAST(SUM(CASE WHEN day = (SELECT d0 FROM d0) THEN vm * 2 ELSE vm END)
@@ -488,15 +497,8 @@ def o8_partition_evolution(spark, sf_dir):
 
     Scale: each vintage prunes within its own convention; the union is
     scan-level (no shuffle added); migration never rewrites history."""
-    day = "(unix_micros(ts) - pmod(unix_micros(ts), 86400000000)) DIV 86400000000"
-
     def write(base: str) -> None:
-        e = (
-            _T(spark, sf_dir, "events")
-            .withColumn("day", F.expr(day))
-            .withColumn("vm", F.floor(F.col("value") * 1_000_000).cast("long"))
-            .select("event_id", "day", "vm")
-        )
+        e = _day_events(spark, sf_dir)
         stats = e.agg(
             F.min("day").alias("d0"), F.max("day").alias("d1")
         )
@@ -528,18 +530,10 @@ def o8_partition_evolution(spark, sf_dir):
     base = staged(spark, "o_o8", (sf_dir,), table_bytes(spark, sf_dir, "events"), write)
     v1 = spark.read.parquet(base + "/v_month").select("day", "vm")
     v2 = spark.read.parquet(base + "/v_day").select("day", "vm")
-    return (
-        v1.unionByName(v2)
-        .groupBy(F.col("day").cast("long").alias("day"))
-        .agg(F.count("*").alias("n_events"), F.sum("vm").alias("value_micros"))
-    )
+    return _per_day(v1.unionByName(v2))
 
 
-_O8_SQL = """WITH e AS (
-  SELECT (epoch_us(ts) - ((epoch_us(ts) % 86400000000) + 86400000000)
-          % 86400000000) // 86400000000 AS day,
-    CAST(FLOOR(value * 1000000) AS BIGINT) AS vm
-  FROM events)
+_O8_SQL = f"""WITH {_DAY_EVENTS_SQL}
 SELECT day, COUNT(*) AS n_events,
   CAST(SUM(vm) AS BIGINT) AS value_micros
 FROM e GROUP BY day"""

@@ -116,16 +116,24 @@ def s3_stream_tumbling_agg(spark, sf_dir):
     payload ts, distinct from broker timestamp — rpk_topic_consume.json:4-5).
     Complete output mode: availableNow finishes before windows close, and
     the memory sink holds the final aggregate per window."""
-    ev = events_stream(spark, sf_dir)
+    return _hourly_sums(events_stream(spark, sf_dir))
+
+
+def _hourly_windows(ev, *aggs):
+    """Per 1-hour tumbling event-time window of the stream ``ev``: its
+    start (win_start_ms), its event count (n_events) and ``aggs``."""
     agg = ev.groupBy(F.window("ts", "1 hour").alias("win")).agg(
-        F.count("*").alias("n_events"),
-        F.sum(_val_micros()).alias("sum_value_micros"),
+        F.count("*").alias("n_events"), *aggs
     )
-    out = agg.select(
-        F.unix_millis("win.start").alias("win_start_ms"),
-        "n_events",
-        "sum_value_micros",
+    return agg.select(
+        F.unix_millis("win.start").alias("win_start_ms"), *agg.columns[1:]
     )
+
+
+def _hourly_sums(ev):
+    """s3's hourly count and value sum over ``ev``, run to completion in
+    complete mode — s18 runs the same aggregate over a split source."""
+    out = _hourly_windows(ev, F.sum(_val_micros()).alias("sum_value_micros"))
     return run_to_table(out, mode="complete")
 
 
@@ -169,13 +177,7 @@ def s6_watermark_late_drop(spark, sf_dir):
     equals the full aggregate — which is exactly what makes it strictly
     verifiable here."""
     ev = events_stream(spark, sf_dir).withWatermark("ts", "10 minutes")
-    agg = ev.groupBy(F.window("ts", "1 hour").alias("win")).agg(
-        F.count("*").alias("n_events")
-    )
-    out = agg.select(
-        F.unix_millis("win.start").alias("win_start_ms"), "n_events"
-    )
-    return run_to_table(out, mode="complete")
+    return run_to_table(_hourly_windows(ev), mode="complete")
 
 
 def s7_stream_dedup(spark, sf_dir):
@@ -326,13 +328,7 @@ def s12_watermark_late_drop_observed(spark, sf_dir):
     ev = stage_late_events_stream(spark, sf_dir).withWatermark(
         "ts", "10 minutes"
     )
-    agg = ev.groupBy(F.window("ts", "1 hour").alias("win")).agg(
-        F.count("*").alias("n_events")
-    )
-    out = agg.select(
-        F.unix_millis("win.start").alias("win_start_ms"), "n_events"
-    )
-    updates = run_to_table(out, mode="update")
+    updates = run_to_table(_hourly_windows(ev), mode="update")
     return updates.groupBy("win_start_ms").agg(
         F.max("n_events").alias("n_events")
     )
@@ -431,17 +427,7 @@ def s18_stream_batch_invariance(spark, sf_dir):
     analog of a20/s17's equality claim, applied to windows — and the
     property a 1000-executor deployment leans on every time a backlog
     drain changes its batch sizes."""
-    ev = stage_events_split_stream(spark, sf_dir, n_files=4)
-    agg = ev.groupBy(F.window("ts", "1 hour").alias("win")).agg(
-        F.count("*").alias("n_events"),
-        F.sum(_val_micros()).alias("sum_value_micros"),
-    )
-    out = agg.select(
-        F.unix_millis("win.start").alias("win_start_ms"),
-        "n_events",
-        "sum_value_micros",
-    )
-    return run_to_table(out, mode="complete")
+    return _hourly_sums(stage_events_split_stream(spark, sf_dir, n_files=4))
 
 
 def s19_stream_redelivery_dedup(spark, sf_dir):

@@ -154,15 +154,15 @@ def golden_stream_df(spark: SparkSession, extended: bool = False) -> DataFrame:
     return spark.createDataFrame(golden_records(extended), RECORD_SCHEMA)
 
 
-def golden_values_sql(extended: bool = False) -> str:
-    """The same records as a DuckDB-ready VALUES relation.
+def values_sql(records: list[dict[str, Any]]) -> str:
+    """Kafka-frame ``records`` as the rows of a DuckDB VALUES relation.
 
     Used inside oracle SQL as
     ``WITH raw(topic, key, value, timestamp, partition, offset) AS (VALUES …)``
     so DuckDB decodes byte-identical JSON to what Spark decodes.
     """
     rows = []
-    for r in golden_records(extended):
+    for r in records:
         key_lit = r["key"].replace("'", "''")
         val_lit = r["value"].replace("'", "''")
         rows.append(
@@ -176,5 +176,5 @@ def golden_raw_cte(extended: bool = False) -> str:
     """``raw(...) AS (VALUES ...)`` CTE body for oracle SQL strings."""
     return (
         'raw(topic, "key", "value", "timestamp", "partition", "offset") AS (\n'
-        f"  VALUES\n    {golden_values_sql(extended)}\n)"
+        f"  VALUES\n    {values_sql(golden_records(extended))}\n)"
     )

@@ -371,6 +371,11 @@ def test_session_frames_have_one_memo():
 
 
 #: twin name -> (shared fragment, its one (module, enclosing def) owner).
+#: Only fragments the winnowing clone guard (tests/test_clone_guard.py)
+#: cannot see: each is too short for its K-token grams, or its owner
+#: renders it through f-string fields that break every K-token run. A
+#: re-copied PQ codebook, SCD2 history, sessionization, BM25 scorer or MV
+#: apply fails the clone guard instead.
 _TWINS = {
     # DuckDB oracle twins
     "cc_labels": (
@@ -382,18 +387,14 @@ _TWINS = {
         ("plans/llm_queries.py", "_pair_edges_sql"),
     ),
     "ivf_centroids": ("WHERE vec_id % 25 = 0", ("plans/llm_queries.py", None)),
-    "pq_codes": ("ORDER BY dist ASC, cid ASC", ("plans/llm_queries.py", "_pq_codes_sql")),
     "words": ("string_split_regex(lower(", ("plans/llm_queries.py", "_words_sql")),
     "minhash_sigs": (
         "bands(band, a, c) AS (VALUES",
         ("plans/llm_queries.py", "_minhash_sigs_sql"),
     ),
-    "sessions": ("lag(ts) OVER w IS NULL", ("plans/window_queries.py", None)),
-    "scd2_history_sql": ('LEAD("offset") OVER', ("plans/cdc_queries.py", None)),
+    "cos": ("p -> CAST(p[1] * p[2] AS DOUBLE)", ("plans/llm_queries.py", "_cos_sql")),
     # Spark kernel twins
-    "bm25_score": ("def term_score", ("plans/llm_queries.py", "_bm25_scored")),
     "scd2_next_offset": ('F.lead("offset")', ("operators/cdc.py", "with_next_offset")),
-    "mv_apply": ('F.coalesce("n_live", z)', ("operators/cdc.py", "apply_mv_diff")),
 }
 
 
