@@ -13,7 +13,6 @@ from __future__ import annotations
 
 import os
 import sys
-import tempfile
 import zipfile
 from collections.abc import Callable
 
@@ -25,6 +24,7 @@ if _REPO_DIR not in sys.path:
 from pyspark.sql import DataFrame, SparkSession
 
 from scylladb_redpanda_cdc_spark.plans import registry
+from scylladb_redpanda_cdc_spark.streaming.core import tmpdir
 
 SMOKE_SF_DIR = "/root/testdata/sf0.001"
 
@@ -40,9 +40,7 @@ def _ensure_dist(spark: SparkSession) -> None:
     if app_id in _dist_for:
         return
     pkg_dir = os.path.join(_REPO_DIR, "scylladb_redpanda_cdc_spark")
-    zip_path = os.path.join(
-        tempfile.mkdtemp(prefix="sg_dist_"), "scylladb_redpanda_cdc_spark.zip"
-    )
+    zip_path = os.path.join(tmpdir("dist"), "scylladb_redpanda_cdc_spark.zip")
     with zipfile.ZipFile(zip_path, "w") as zf:
         for root, _dirs, files in os.walk(pkg_dir):
             for f in files:

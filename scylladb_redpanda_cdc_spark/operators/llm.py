@@ -284,6 +284,10 @@ def rolling_fingerprint(text: Column) -> Column:
     )
 
 
+#: Shuffle width of :func:`connected_components_min_label`'s rounds.
+CC_LOOP_SHUFFLE = 8
+
+
 def connected_components_min_label(edges, node_col: str = "doc_a", nbr_col: str = "doc_b"):
     """Connected components by iterative min-label propagation over a
     SYMMETRIC edge list: every node that appears in ``node_col`` is labeled
@@ -295,21 +299,17 @@ def connected_components_min_label(edges, node_col: str = "doc_a", nbr_col: str 
     label < old label — is computed inside the aggregate), so one Spark
     action materializes the round AND answers "did anything change".
     Rounds needed = component diameter, capped at 50. The loop scopes
-    ``spark.sql.shuffle.partitions`` to ``SG_CC_LOOP_SHUFFLE`` (default 8)
-    while it runs: the label frame is nodes-in-edges sized, orders of
-    magnitude below the corpus, and labels are partitioning-invariant —
-    cluster deployments size the knob, results never change.
+    ``spark.sql.shuffle.partitions`` to :data:`CC_LOOP_SHUFFLE` while it
+    runs: the label frame is nodes-in-edges sized, orders of magnitude
+    below the corpus, and labels are partitioning-invariant — the width
+    never changes a result.
 
     Returns (node_col, cluster_id), one row per distinct ``node_col``.
     """
-    import os as _os
-
     from scylladb_redpanda_cdc_spark.streaming.core import scoped_conf
 
     with scoped_conf(
-        edges.sparkSession,
-        "spark.sql.shuffle.partitions",
-        _os.environ.get("SG_CC_LOOP_SHUFFLE", "8"),
+        edges.sparkSession, "spark.sql.shuffle.partitions", str(CC_LOOP_SHUFFLE)
     ):
         # Eager stage_checkpoint, NOT persist: persist caches execution but
         # the LOGICAL plan still nests — each round's plan embeds the

@@ -9,8 +9,7 @@ join — is one :func:`sized_count` call on driver-side byte metadata
 fixed floor, so fixture plans stay byte-identical; above it the count
 targets a per-task byte budget, capped. In-flight expansion multipliers
 fold into the per-task divisor, so the gate always applies to the
-caller's source bytes. Scratch placement (``streaming/core.py::tmpdir``)
-uses the same gate.
+caller's source bytes.
 """
 
 from __future__ import annotations

@@ -74,8 +74,8 @@ _REWRITTEN: tuple[str, ...] = (
     # changed, so they re-prove.
     #
     # Exemption note (ADVICE r15): scratch-PLACEMENT-only hint changes
-    # (round 15's `_stage table=` / b43 8x hints) do not enter this
-    # list — they alter where a staging dir lands on disk, never the
+    # (round 15's `_stage table=` / b43 8x hints, and their deletion
+    # with the one scratch root) do not enter this list — they alter where a staging dir lands on disk, never the
     # logical plan, the physical plan, or any result at any SF, so
     # there is nothing a re-proof would exercise that the plain oracle
     # drive does not already. Anything that touches a builder's PLAN
@@ -139,6 +139,11 @@ _REWRITTEN: tuple[str, ...] = (
     "s18_stream_batch_invariance",
     "o5_dynamic_partition_overwrite",
     "o8_partition_evolution",
+    # The copies the clone guard cannot see, routed through their owners
+    # (projection lists changed; rows identical): x113's probe batch is
+    # ``_labeled_probe``'s, x120's score is ``_stats_quality_score``'s.
+    "x113_knn_label_eval",
+    "x120_filter_funnel",
 )
 
 # The round-9 name `_REPROOF` was kept as an alias through rounds 10-11

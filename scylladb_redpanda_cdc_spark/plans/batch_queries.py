@@ -1388,7 +1388,7 @@ def stage_bucketed_tables(spark, sf_dir) -> tuple[str, str]:
     pruning): both are read-side dividends of the same ingest-time
     layout. The names derive from the staged dir, so a re-stage (reaped
     scratch) registers fresh tables instead of reading vanished paths."""
-    from scylladb_redpanda_cdc_spark.streaming.core import staged, table_bytes
+    from scylladb_redpanda_cdc_spark.streaming.core import staged
 
     def write(loc: str) -> None:
         for (table, cols), name in zip(_BUCKETED, _bucketed_names(loc)):
@@ -1402,8 +1402,7 @@ def stage_bucketed_tables(spark, sf_dir) -> tuple[str, str]:
                 .saveAsTable(name)
             )
 
-    hint = table_bytes(spark, sf_dir, "lineitem")
-    return _bucketed_names(staged(spark, "bucketed", (sf_dir,), hint, write))
+    return _bucketed_names(staged(spark, "bucketed", (sf_dir,), write))
 
 
 def b32_join_bucketed_colocated(spark, sf_dir):
@@ -2349,22 +2348,14 @@ def b43_multiformat_scan(spark, sf_dir):
     by line); explicit schema keeps a single pass; the verdict agg is
     formats x sources-sized with map-side combine. Staged once per
     (session, dataset)."""
-    from scylladb_redpanda_cdc_spark.streaming.core import staged, table_bytes
+    from scylladb_redpanda_cdc_spark.streaming.core import staged
 
     def write(base: str) -> None:
         d = _T(spark, sf_dir, "documents")
         d.write.mode("overwrite").option("header", True).csv(base + "/csv")
         d.write.mode("overwrite").json(base + "/jsonl")
 
-    # CSV + JSONL are UNCOMPRESSED text: the staged dir holds several
-    # times the parquet bytes (estimated ~6.3x at sf0.1: ~3.7 MB of
-    # csv+jsonl content from 0.59 MB of parquet), so the tmpfs-routing
-    # hint scales the source bytes accordingly (round-14 advice; 8x
-    # adds headroom — hint errors only shift scratch placement).
-    _hint = table_bytes(spark, sf_dir, "documents")
-    base = staged(
-        spark, "multiformat", (sf_dir,), None if _hint is None else 8 * _hint, write
-    )
+    base = staged(spark, "multiformat", (sf_dir,), write)
     ddl = (
         "doc_id bigint, text string, lang string, source string, "
         "n_chars bigint"

@@ -2268,7 +2268,7 @@ def _doc_stats(spark, sf_dir):
 
 #: x15's (alpha ratio, stop ratio, blended quality score), derived from
 #: _doc_stats integer columns in the exact expression order every
-#: consumer (x15/x20) used inline — integer->double casts are exact, so
+#: consumer (x15/x20/x120) used inline — integer->double casts are exact, so
 #: the doubles are bit-identical to the pre-round-13 per-query
 #: computation and to the DuckDB oracles.
 def _stats_quality_score():
@@ -3237,7 +3237,7 @@ def x61_boilerplate_strip(spark, sf_dir):
 
 def _labeled_probe(spark, sf_dir):
     """The labeled corpus (vec_id, embedding, label) and its probe batch
-    (qid, qe, qlabel) — the two inputs of x62's and x70's scored pass."""
+    (qid, qe, qlabel) — the inputs of x62's, x70's and x113's scored pass."""
     e = _T(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
     q = _probe_batch(e).select(
         F.col("vec_id").alias("qid"),
@@ -8368,12 +8368,7 @@ def x113_knn_label_eval(spark, sf_dir):
     map-side), two-phase per-probe top-k so the shuffle carries
     candidates; the vote is a groupBy over 5 rows per probe. Cosines are
     the shared bit-exact double fold."""
-    e = _T(spark, sf_dir, "embeddings").select("vec_id", "embedding", "label")
-    q = _probe_batch(e).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("label").alias("true_label"),
-    )
+    _, q = _labeled_probe(spark, sf_dir)
     # corpus side of the scored pass rides the fanned scan (probe batch
     # broadcasts either way); WindowGroupLimit prunes to top-k per task
     corpus = _fanned(spark, sf_dir, "embeddings", "vec_id").select(
@@ -8384,7 +8379,7 @@ def x113_knn_label_eval(spark, sf_dir):
         .filter(F.col("vec_id") != F.col("qid"))
         .select(
             "qid",
-            "true_label",
+            "qlabel",
             "vec_id",
             "label",
             cosine(F.col("embedding"), F.col("qe")).alias("cos_sim"),
@@ -8396,7 +8391,7 @@ def x113_knn_label_eval(spark, sf_dir):
     topk = scored.withColumn("rn", F.row_number().over(w)).filter(
         F.col("rn") <= X113_K
     )
-    votes = topk.groupBy("qid", "true_label", "label").agg(
+    votes = topk.groupBy("qid", "qlabel", "label").agg(
         F.count("*").alias("n_votes")
     )
     wv = Window.partitionBy("qid").orderBy(
@@ -8407,10 +8402,10 @@ def x113_knn_label_eval(spark, sf_dir):
         .filter(F.col("vr") == 1)
         .select(
             "qid",
-            "true_label",
+            F.col("qlabel").alias("true_label"),
             F.col("label").alias("predicted_label"),
             "n_votes",
-            (F.col("label") == F.col("true_label")).alias("correct"),
+            (F.col("label") == F.col("qlabel")).alias("correct"),
         )
     )
 
@@ -8861,20 +8856,7 @@ def x120_filter_funnel(spark, sf_dir):
         F.col("bg_total").alias("_bg_total"),
         F.col("bg_distinct").alias("_bg_distinct"),
         F.col("text_hash").alias("_th"),
-        # x15's exact score chain (bit-identical doubles both engines).
-        F.coalesce(
-            F.col("n_alpha").cast("double")
-            / F.nullif(F.col("n_chars"), F.lit(0)).cast("double"),
-            F.lit(0.0),
-        ).alias("_alpha_ratio"),
-        F.coalesce(
-            F.col("n_stop").cast("double")
-            / F.nullif(F.col("n_words"), F.lit(0)).cast("double"),
-            F.lit(0.0),
-        ).alias("_stop_ratio"),
-        F.least(
-            F.col("n_words").cast("double") / F.lit(100.0), F.lit(1.0)
-        ).alias("_len_score"),
+        _stats_quality_score()[2].alias("_score"),
     )
     g_gopher = (
         (F.col("n_words") >= 5)
@@ -8892,14 +8874,9 @@ def x120_filter_funnel(spark, sf_dir):
             <= F.col("_bg_total")
         )
     )
-    score = (
-        F.col("_alpha_ratio") * 0.4
-        + (F.lit(1.0) - F.col("_stop_ratio")) * 0.3
-        + F.col("_len_score") * 0.3
-    )
     wdup = Window.partitionBy("_th").orderBy(F.col("doc_id").asc())
     flags = base.withColumn("_g1", g_gopher).withColumn(
-        "_g2", score >= F.lit(0.5)
+        "_g2", F.col("_score") >= F.lit(0.5)
     ).withColumn("_g3", F.row_number().over(wdup) == 1)
     staged = flags.select(
         "doc_id",

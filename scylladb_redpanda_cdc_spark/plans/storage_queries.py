@@ -13,9 +13,7 @@ can never silently drop or duplicate rows.
 
 Each layout is staged once per (session, sf_dir) through
 ``streaming.core.staged``: bench best-of-2 and repeated grading calls
-re-read the same layout instead of re-writing it. Its tmpfs-vs-disk
-routing hint is the parquet bytes of the fixture table the layout
-re-encodes.
+re-read the same layout instead of re-writing it.
 
 Determinism rules (same contract as batch_queries): partition/bucket keys
 are exact integer floor-division buckets (never sampled range boundaries
@@ -41,7 +39,6 @@ from scylladb_redpanda_cdc_spark.sources.tables import load_table as _T
 from scylladb_redpanda_cdc_spark.streaming.core import (
     scoped_conf,
     staged,
-    table_bytes,
 )
 
 
@@ -62,7 +59,7 @@ def _o1_layout(spark, sf_dir) -> str:
             .parquet(base)
         )
 
-    return staged(spark, "o_o1", (sf_dir,), table_bytes(spark, sf_dir, "lineitem"), write)
+    return staged(spark, "o_o1", (sf_dir,), write)
 
 
 def o1_partitioned_write(spark, sf_dir):
@@ -137,7 +134,7 @@ def o2_compact_small_files(spark, sf_dir):
                     .parquet(base + "/compact")
                 )
 
-    base = staged(spark, "o_o2", (sf_dir,), table_bytes(spark, sf_dir, "documents"), write)
+    base = staged(spark, "o_o2", (sf_dir,), write)
     # Before/after stats in ONE aggregation over a side-tagged union — no
     # join of any kind (the former 1-row x 1-row crossJoin planned as a
     # BroadcastNestedLoopJoin and needed a plan-sweep exemption). Partial
@@ -207,7 +204,7 @@ def _o3_layout(spark, sf_dir) -> str:
             .parquet(base)
         )
 
-    return staged(spark, "o_o3", (sf_dir,), table_bytes(spark, sf_dir, "lineitem"), write)
+    return staged(spark, "o_o3", (sf_dir,), write)
 
 
 def o3_clustered_write(spark, sf_dir):
@@ -297,7 +294,7 @@ def o4_zorder_layout(spark, sf_dir):
             .parquet(base)
         )
 
-    base = staged(spark, "o_o4", (sf_dir,), table_bytes(spark, sf_dir, "lineitem"), write)
+    base = staged(spark, "o_o4", (sf_dir,), write)
     back = spark.read.parquet(base)
     return back.groupBy(
         F.col("zbucket").cast("long").alias("zbucket")
@@ -364,7 +361,7 @@ def o5_dynamic_partition_overwrite(spark, sf_dir):
             .parquet(base)
         )
 
-    base = staged(spark, "o_o5", (sf_dir,), table_bytes(spark, sf_dir, "events"), write)
+    base = staged(spark, "o_o5", (sf_dir,), write)
     return _per_day(spark.read.parquet(base))
 
 
@@ -431,7 +428,7 @@ def o6_schema_merge_read(spark, sf_dir):
         old.write.mode("overwrite").parquet(base + "/batch=0")
         new.write.mode("overwrite").parquet(base + "/batch=1")
 
-    base = staged(spark, "o_o6", (sf_dir,), table_bytes(spark, sf_dir, "documents"), write)
+    base = staged(spark, "o_o6", (sf_dir,), write)
     back = spark.read.option("mergeSchema", "true").parquet(base)
     return back.groupBy(
         F.coalesce("lang", F.lit("missing")).alias("lang_out")
@@ -527,7 +524,7 @@ def o8_partition_evolution(spark, sf_dir):
             .parquet(base + "/v_day")
         )
 
-    base = staged(spark, "o_o8", (sf_dir,), table_bytes(spark, sf_dir, "events"), write)
+    base = staged(spark, "o_o8", (sf_dir,), write)
     v1 = spark.read.parquet(base + "/v_month").select("day", "vm")
     v2 = spark.read.parquet(base + "/v_day").select("day", "vm")
     return _per_day(v1.unionByName(v2))
@@ -637,7 +634,7 @@ def o10_compaction_planner(spark, sf_dir):
                 .parquet(f"{base}/o_orderpriority={prio}")
             )
 
-    base = staged(spark, "o_o10", (sf_dir,), table_bytes(spark, sf_dir, "orders"), write)
+    base = staged(spark, "o_o10", (sf_dir,), write)
     back = spark.read.parquet(base).select(
         "o_orderpriority", F.col("_metadata.file_path").alias("fp")
     )
@@ -745,7 +742,7 @@ def o12_max_records_per_file(spark, sf_dir):
             .parquet(base)
         )
 
-    base = staged(spark, "o_o12", (sf_dir,), table_bytes(spark, sf_dir, "lineitem"), write)
+    base = staged(spark, "o_o12", (sf_dir,), write)
     per_file = (
         spark.read.parquet(base)
         .select(F.col("_metadata.file_path").alias("fp"))
@@ -1008,9 +1005,8 @@ def o16_dynamic_partition_pruning(spark, sf_dir):
             .parquet(base)
         )
 
-    hint = table_bytes(spark, sf_dir, "orders")
-    fact = spark.read.parquet(staged(spark, "o_o16_fact", (sf_dir,), hint, write_fact))
-    dim = spark.read.parquet(staged(spark, "o_o16_dim", (sf_dir,), hint, write_dim))
+    fact = spark.read.parquet(staged(spark, "o_o16_fact", (sf_dir,), write_fact))
+    dim = spark.read.parquet(staged(spark, "o_o16_dim", (sf_dir,), write_dim))
     picked = dim.filter(F.col("pri_code") <= 2)
     joined = fact.join(
         F.broadcast(picked), fact["o_orderpriority"] == picked["pri"]

@@ -38,7 +38,6 @@ from scylladb_redpanda_cdc_spark.streaming.core import (
     run_to_parquet,
     run_to_table,
     staged,
-    table_bytes,
     tmpdir,
 )
 from scylladb_redpanda_cdc_spark.streaming.ops import (
@@ -90,10 +89,7 @@ def s2_checkpointed_offsets(spark, sf_dir):
     /tmp/connect.offsets contract, connect-standalone.properties:4-5).
     Returns the sink's contents — any reprocessing would double the count
     and fail the exactly-once oracle."""
-    out, ckpt = (
-        tmpdir("s2_out", bytes_hint=table_bytes(spark, sf_dir, "events")),
-        tmpdir("s2_ckpt"),
-    )
+    out, ckpt = tmpdir("s2_out"), tmpdir("s2_ckpt")
     for _ in range(2):
         ev = events_stream(spark, sf_dir).select(
             "event_id", "user_id", F.unix_millis("ts").alias("ts_ms")
@@ -299,13 +295,12 @@ def s21_stream_corpus_sync(spark, sf_dir):
             "overwrite"
         ).parquet(stage)
 
-    hint = table_bytes(spark, sf_dir, "orders")
     changes = (
         spark.readStream.schema(
             "doc_id bigint, text string, op string, offset bigint"
         )
         .option("maxFilesPerTrigger", 1)
-        .parquet(staged(spark, "x87log", (sf_dir,), hint, write))
+        .parquet(staged(spark, "x87log", (sf_dir,), write))
     )
     state = foreachbatch_upsert(changes, ["doc_id"])
     return x87_project_state(state)
@@ -360,7 +355,7 @@ def s13_stream_schema_evolution(spark, sf_dir):
                 f.write(_json.dumps(r) + "\n")
 
     raw = spark.readStream.schema(RECORD_SCHEMA).json(
-        staged(spark, "evo_src", (), None, write)
+        staged(spark, "evo_src", (), write)
     )
     return run_to_table(evolution_decode(raw))
 
@@ -401,7 +396,7 @@ def s16_stream_quality_filter(spark, sf_dir):
     from scylladb_redpanda_cdc_spark.plans.llm_queries import quality_classify
 
     docs = stage_documents_stream(spark, sf_dir)
-    out = tmpdir("qf_out", bytes_hint=table_bytes(spark, sf_dir, "documents"))
+    out = tmpdir("qf_out")
     run_to_parquet(quality_classify(docs), out, tmpdir("qf_ckpt"))
     return spark.read.parquet(out)
 
@@ -471,7 +466,7 @@ def s20_stream_partitioned_sink(spark, sf_dir):
     touched, not tasks x days — o1's writer contract); the lake gains
     files per batch, which o2's compaction pass then bounds."""
     ev = stage_events_split_stream(spark, sf_dir, n_files=4)
-    base = tmpdir("s20_lake", bytes_hint=table_bytes(spark, sf_dir, "events"))
+    base = tmpdir("s20_lake")
     day = "(unix_micros(ts) - pmod(unix_micros(ts), 86400000000)) DIV 86400000000"
 
     def sink(batch_df, batch_id: int) -> None:
@@ -631,15 +626,10 @@ def s24_stream_state_recovery(spark, sf_dir):
     from scylladb_redpanda_cdc_spark.streaming.core import EVENTS_NORMALIZED_DDL
 
     # Stage 4 split files in scratch; reveal 2 now, 2 after the restart.
-    _ev_hint = table_bytes(spark, sf_dir, "events")
-    scratch = tmpdir("s24_scratch", bytes_hint=_ev_hint)
+    scratch = tmpdir("s24_scratch")
     _T(spark, sf_dir, "events").repartition(4).write.mode("overwrite").parquet(scratch)
     parts = sorted(_glob.glob(_os.path.join(scratch, "part-*.parquet")))
-    src, out, ckpt = (
-        tmpdir("s24_src", bytes_hint=_ev_hint),
-        tmpdir("s24_out", bytes_hint=_ev_hint),
-        tmpdir("s24_ckpt"),
-    )
+    src, out, ckpt = tmpdir("s24_src"), tmpdir("s24_out"), tmpdir("s24_ckpt")
     for p in parts[:2]:
         _shutil.move(p, _os.path.join(src, _os.path.basename(p)))
 

@@ -559,9 +559,7 @@ def u18_python_datasource_writer(spark, sf_dir):
     from pyspark.sql.datasource import DataSource, DataSourceWriter
     from scylladb_redpanda_cdc_spark.streaming.core import tmpdir
 
-    from scylladb_redpanda_cdc_spark.streaming.core import table_bytes
-
-    out_dir = tmpdir("u18_sink", bytes_hint=table_bytes(spark, sf_dir, "events"))
+    out_dir = tmpdir("u18_sink")
 
     class CsvSink(DataSource):
         @classmethod

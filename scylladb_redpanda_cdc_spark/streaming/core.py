@@ -19,13 +19,21 @@ Scale posture: state stores are keyed exactly like the shuffles they replace
 (user_id / window / PK), watermarks bound state (S6), and checkpointing
 (S2) makes every sink resumable — identical role to the reference's
 ``offset.flush.interval.ms`` + ``/tmp/connect.offsets``.
+
+Scratch: every harness checkpoint, staged input, sink and state version is
+a :func:`tmpdir` directly under one root (``SG_SCRATCH_DIR``, else the
+platform temp dir), owned by the process that made it and removed when that
+process exits — the one-owner rule Structured Streaming applies to a
+query's checkpoint and state.
 """
 
 from __future__ import annotations
 
+import atexit
 import itertools
 import os
 import re
+import shutil
 import tempfile
 from collections.abc import Callable
 from contextlib import contextmanager
@@ -33,7 +41,6 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
-from scylladb_redpanda_cdc_spark.operators import scale
 from scylladb_redpanda_cdc_spark.operators.scale import (
     _session_shuffle_partitions,
     fs_bytes,
@@ -54,49 +61,39 @@ def _fresh(prefix: str) -> str:
     return f"{prefix}_{next(_name_counter)}"
 
 
-#: Scratch root for the availableNow test/bench harness: prefer RAM-backed
-#: tmpfs when present — micro-batch checkpoints/state are MBs at fixture
-#: scale, and shared-box disk-I/O noise otherwise dominates the streaming
-#: specs' wall time. Production queries set their own durable
+#: Scratch root for the availableNow test/bench harness: ``SG_SCRATCH_DIR``
+#: if set, else the platform temp dir. Every scratch dir sits directly
+#: under it as ``sg_<prefix>_*`` (perfbench reads ``sg_state_*`` and
+#: ``sg_changelog_*`` there). Production queries set their own durable
 #: checkpointLocation (S2's whole point); this root never backs one.
-#: Override with SG_SCRATCH_DIR.
-_SCRATCH_ROOT = os.environ.get("SG_SCRATCH_DIR") or (
-    "/dev/shm" if os.path.isdir("/dev/shm") else tempfile.gettempdir()
-)
+_SCRATCH_ROOT = os.environ.get("SG_SCRATCH_DIR") or tempfile.gettempdir()
 
-#: Disk-backed fallback root for CORPUS-SCALED scratch (state versions,
-#: staging transports, corpus sinks). An explicit SG_SCRATCH_DIR wins for
-#: everything.
-_SCRATCH_DISK_ROOT = os.environ.get("SG_SCRATCH_DIR") or tempfile.gettempdir()
+#: Every dir :func:`tmpdir` created in this process, removed at exit.
+_created: list[str] = []
 
 
-def tmpdir(prefix: str, bytes_hint: int | None = None) -> str:
-    """Per-run scratch dir (checkpoints, file-stream staging, sinks). Left
-    for the OS to reap — returned DataFrames may lazily re-read them.
-
-    ``bytes_hint``: the caller's estimate of the volume this dir will
-    hold (source-table or staged-stream bytes — driver-side metadata).
-    At or above the sizing gate (``operators/scale.py::GATE_BYTES``) the
-    dir is created on disk instead of RAM-backed tmpfs — tmpfs is RAM,
-    and the round-14 ×1000 probe OOM-killed the JVM on ~8 GB state
-    versions in /dev/shm; below it (or with no hint — the metadata-sized
-    checkpoint/sink dirs) placement is unchanged."""
-    root = _SCRATCH_ROOT
-    if bytes_hint is not None and bytes_hint >= scale.GATE_BYTES:
-        root = _SCRATCH_DISK_ROOT
-    return tempfile.mkdtemp(prefix=f"sg_{prefix}_", dir=root)
+def tmpdir(prefix: str) -> str:
+    """A fresh ``sg_<prefix>_*`` scratch dir (checkpoints, file-stream
+    staging, sinks, state versions) directly under :data:`_SCRATCH_ROOT`.
+    The process owns it: it lives until interpreter exit, because
+    returned DataFrames re-read scratch lazily, and is removed then by
+    :func:`_remove_scratch`. Only this process's own dirs are removed,
+    never the shared root."""
+    path = tempfile.mkdtemp(prefix=f"sg_{prefix}_", dir=_SCRATCH_ROOT)
+    _created.append(path)
+    return path
 
 
-def table_bytes(spark: SparkSession, sf_dir: str, table: str) -> int | None:
-    """On-disk bytes of a fixture table's parquet — the standard
-    ``bytes_hint`` for scratch that stages or derives from that table."""
-    return fs_bytes(spark, os.path.join(sf_dir, f"{table}.parquet"))
+@atexit.register
+def _remove_scratch() -> None:
+    for path in _created:
+        shutil.rmtree(path, ignore_errors=True)
 
 
 def stream_source_bytes(sdf: DataFrame | None) -> int | None:
     """Total on-disk bytes of a stream's file source(s), or None when it
-    has none / cannot be priced — the standard ``bytes_hint`` for state
-    dirs whose volume tracks the drained log."""
+    has none / cannot be priced — what stream widths and state-version
+    file counts size from."""
     if sdf is None:
         return None
     total = 0
@@ -108,10 +105,11 @@ def stream_source_bytes(sdf: DataFrame | None) -> int | None:
 
 
 def staged_dir_valid(path: str | None) -> bool:
-    """True iff a cached staging dir still exists and is non-empty. Scratch
-    lives under tmpfs (/dev/shm) which the OS may reap mid-session; a cache
-    hit on a reaped path would silently yield an EMPTY stream, so
-    :func:`staged` re-stages when this is False."""
+    """True iff a cached staging dir still exists and is non-empty. The
+    process removes its scratch only at exit, but an outside cleaner
+    (``systemd-tmpfiles``, a user) may reap it mid-session; a cache hit on
+    a reaped path would silently yield an EMPTY stream, so :func:`staged`
+    re-stages when this is False."""
     try:
         return path is not None and os.path.isdir(path) and bool(os.listdir(path))
     except OSError:
@@ -146,17 +144,16 @@ def staged(
     spark: SparkSession,
     name: str,
     key: tuple,
-    bytes_hint: int | None,
     write: Callable[[str], None],
 ) -> str:
     """The scratch dir holding a stage-once input, written once per
     (session, ``name``, ``key``): on a miss, or when the cached dir fails
-    :func:`staged_dir_valid` (reaped tmpfs), ``write`` fills a fresh
-    ``tmpdir(name, bytes_hint)``. Every staged file-stream transport and
+    :func:`staged_dir_valid` (reaped scratch), ``write`` fills a fresh
+    ``tmpdir(name)``. Every staged file-stream transport and
     storage layout goes through here, so a reaped stage always re-stages."""
     k = (spark.sparkContext.applicationId, name, *key)
     if not staged_dir_valid(_staged.get(k)):
-        stage = tmpdir(name, bytes_hint)
+        stage = tmpdir(name)
         write(stage)
         _staged[k] = stage
     return _staged[k]
@@ -181,8 +178,8 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The file-stream source needs a DIRECTORY it can monitor (the fixture
     # dir holds ten unrelated tables, and a bare file path trips the
     # source's basePath/partition-inference machinery): a one-symlink
-    # dir, zero bytes copied, no hint needed.
-    src = staged(spark, "events_src", (sf_dir,), None, link)
+    # dir, zero bytes copied.
+    src = staged(spark, "events_src", (sf_dir,), link)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # File streams cannot infer a schema (SURVEY.md §1.3 — drift must fail
     # loudly, as in Kafka Connect), and ``ts``'s physical type varies across
@@ -204,14 +201,14 @@ def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: parallelism for per-store overhead. The production path (writeStream to
 #: Kafka / partitioned parquet on a real cluster) never passes through
 #: these helpers and keeps the session's own setting.
-STREAM_SINK_SHUFFLE_PARTITIONS = int(os.environ.get("SG_STREAM_SINK_SHUFFLE", "1"))
+STREAM_SINK_SHUFFLE_PARTITIONS = 1
 
 #: Target staged-source parquet bytes per micro-batch shuffle task above
 #: the gate. Parquet expands ~4x in flight (decompression + row overhead,
 #: the decade-4 b31 measurement), so 8 MB of source per task bounds
 #: in-flight volume at ~32 MB — and at the round-13 x100 corpus
 #: (~175 MB staged changelog) yields a width in the same band as the
-#: hand-set SG_STREAM_SINK_SHUFFLE=32 the decade probes validated.
+#: hand-set width of 32 the decade probes validated.
 STREAM_TARGET_TASK_SOURCE_BYTES = 8 * 1024 * 1024
 
 #: Hard cap on the adaptive width — past this a deployment resizes the
@@ -242,8 +239,8 @@ def stream_shuffle_width(spark: SparkSession, sdf: DataFrame | None) -> int:
     The round-13 decade probes showed the fixed default (1 — correct for
     KB-sized fixture batches where per-state-store overhead dominates) is
     a fixture knob, not a deployment posture: at x100 it serialized
-    5.5 M-row merge joins on one core and the probes had to hand-set
-    ``SG_STREAM_SINK_SHUFFLE=32``. This helper applies the
+    5.5 M-row merge joins on one core and the probes had to hand-set a
+    width of 32. This helper applies the
     ``state_file_count`` discipline to the PLAN width: below the sizing
     gate of staged source (every fixture SF — a driver-side Hadoop FS
     call, no Spark job) it returns the floor and

@@ -42,7 +42,6 @@ from scylladb_redpanda_cdc_spark.streaming.core import (
     staged,
     state_file_count,
     stream_source_bytes,
-    table_bytes,
     tmpdir,
 )
 
@@ -56,7 +55,7 @@ CHANGELOG_STREAM_DDL = (
 #: resume after downtime) can carry arbitrarily many keys; broadcasting
 #: those would blow the driver/executor broadcast limit, so past the cap
 #: the merge falls back to a shuffled join and lets AQE pick the strategy.
-BROADCAST_KEY_CAP = int(os.environ.get("SG_BROADCAST_KEY_CAP", "2000000"))
+BROADCAST_KEY_CAP = 2_000_000
 
 #: Measured in-flight bytes per orders-parquet byte for the synthesized
 #: changelog's staging write (round-16 ×1000 drill: 6.3 GB shuffled rows
@@ -125,7 +124,7 @@ def _changelog_files_per_batch(spark: SparkSession, sf_dir: str, n_files: int) -
     n_files): driver-side metadata only, so the reader can recompute the
     trigger cap without the stager threading it through the cache."""
     return sized_count(
-        table_bytes(spark, sf_dir, "orders") or 0,
+        fs_bytes(spark, os.path.join(sf_dir, "orders.parquet")) or 0,
         STAGE_WRITE_TARGET_TASK_BYTES * n_files / CHANGELOG_INFLIGHT_MULTIPLIER,
         1,
         256,
@@ -160,9 +159,7 @@ def stage_changelog_stream(
             # pin file→batch grouping: part files sort in partition order
             _pin_mtimes(sorted(glob.glob(os.path.join(stage, "part-*.parquet"))))
 
-    stage = staged(
-        spark, "changelog", (sf_dir, n_files), table_bytes(spark, sf_dir, "orders"), write
-    )
+    stage = staged(spark, "changelog", (sf_dir, n_files), write)
     return (
         spark.readStream.schema(CHANGELOG_STREAM_DDL)
         .option("maxFilesPerTrigger", inner)
@@ -193,8 +190,6 @@ def stage_late_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     cap rules that out. Staged once per (session, dataset)."""
     from pyspark.sql import functions as F
 
-    hint = table_bytes(spark, sf_dir, "events")
-
     def write(stage: str) -> None:
         raw = load_table(spark, sf_dir, "events")
         us = F.unix_micros(F.col("ts"))
@@ -208,7 +203,7 @@ def stage_late_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         rank = F.when(straggler, 2).when(us >= F.col("mid_us"), 1).otherwise(0)
         # One pass: write all three stream files via a partitioned layout,
         # then flatten rank=K/part-*.parquet to K.parquet.
-        scratch = tmpdir("late_scratch", bytes_hint=hint)
+        scratch = tmpdir("late_scratch")
         tagged.withColumn("file_rank", rank).drop("mid_us").repartition(
             1
         ).write.partitionBy("file_rank").mode("overwrite").parquet(scratch)
@@ -217,7 +212,7 @@ def stage_late_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         spark.readStream.schema(EVENTS_NORMALIZED_DDL)
         .option("maxFilesPerTrigger", 1)
-        .parquet(staged(spark, "late_events", (sf_dir,), hint, write))
+        .parquet(staged(spark, "late_events", (sf_dir,), write))
     )
 
 
@@ -244,7 +239,7 @@ class _StateRunner:
         self.changes = changes
         self.spark = changes.sparkSession
         self.log_bytes = stream_source_bytes(changes) or 0
-        self._dirs = {s: tmpdir(s, bytes_hint=self.log_bytes) for s in states}
+        self._dirs = {s: tmpdir(s) for s in states}
         self.path: dict[str, str | None] = dict.fromkeys(states)
         self.bytes: dict[str, int] = dict.fromkeys(states, 0)
 
@@ -453,10 +448,8 @@ def stage_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (session, dataset)."""
     from pyspark.sql import functions as F
 
-    hint = table_bytes(spark, sf_dir, "documents")
-
     def write(stage: str) -> None:
-        scratch = tmpdir("docs_scratch", bytes_hint=hint)
+        scratch = tmpdir("docs_scratch")
         d = spark.read.parquet(os.path.join(sf_dir, "documents.parquet"))
         recrawl = (
             d.filter((F.col("doc_id") % 10).isin(0, 5))
@@ -476,7 +469,7 @@ def stage_documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         spark.readStream.schema(DOCS_STREAM_DDL)
         .option("maxFilesPerTrigger", 1)
-        .parquet(staged(spark, "docs_stream", (sf_dir,), hint, write))
+        .parquet(staged(spark, "docs_stream", (sf_dir,), write))
     )
 
 
@@ -498,7 +491,7 @@ def incremental_dedup_stream(docs: DataFrame) -> DataFrame:
     from pyspark.sql import functions as F
 
     run = _StateRunner(docs, "dedup_idx")
-    out = tmpdir("dedup_out", bytes_hint=run.log_bytes)
+    out = tmpdir("dedup_out")
 
     def classify(batch_df: DataFrame, batch_id: int) -> None:
         hashed = batch_df.select(
@@ -743,10 +736,9 @@ def stage_events_split_stream(
     (the broker re-serves everything since the last offset flush,
     connect-standalone.properties:5) arriving in a LATER micro-batch —
     S19's dedup fixture. Staged once per (session, dataset, shape)."""
-    hint = table_bytes(spark, sf_dir, "events")
 
     def write(stage: str) -> None:
-        scratch = tmpdir("evsplit_scratch", bytes_hint=hint)
+        scratch = tmpdir("evsplit_scratch")
         load_table(spark, sf_dir, "events").repartition(n_files).write.mode(
             "overwrite"
         ).parquet(scratch)
@@ -756,5 +748,5 @@ def stage_events_split_stream(
     return (
         spark.readStream.schema(EVENTS_NORMALIZED_DDL)
         .option("maxFilesPerTrigger", 1)
-        .parquet(staged(spark, "evsplit", (sf_dir, n_files, redeliver), hint, write))
+        .parquet(staged(spark, "evsplit", (sf_dir, n_files, redeliver), write))
     )

@@ -32,11 +32,12 @@ def _canon(pdf: pd.DataFrame) -> list[tuple]:
 def test_cc_loop_shuffle_width_is_result_invariant(
     spark, sf_dir, specs, monkeypatch
 ):
-    """x21's min-label loop scopes shuffle width to SG_CC_LOOP_SHUFFLE
+    """x21's min-label loop scopes shuffle width to llm.CC_LOOP_SHUFFLE
     (read per call): cluster labels are partitioning-invariant. The
     session frames are cleared before each width, and a spy proves the
     loop really ran once per width (a memoized x21 frame would otherwise
     answer both builds without running the loop at all)."""
+    from scylladb_redpanda_cdc_spark.operators import llm
     from scylladb_redpanda_cdc_spark.plans import (
         clear_session_frame_caches,
         llm_queries,
@@ -46,18 +47,18 @@ def test_cc_loop_shuffle_width_is_result_invariant(
     real = llm_queries.connected_components_min_label
 
     def spy(*args, **kwargs):
-        ran.append(os.environ["SG_CC_LOOP_SHUFFLE"])
+        ran.append(llm.CC_LOOP_SHUFFLE)
         return real(*args, **kwargs)
 
     monkeypatch.setattr(llm_queries, "connected_components_min_label", spy)
     outs = []
-    for width in ("2", "16"):
-        monkeypatch.setenv("SG_CC_LOOP_SHUFFLE", width)
+    for width in (2, 16):
+        monkeypatch.setattr(llm, "CC_LOOP_SHUFFLE", width)
         clear_session_frame_caches()
         outs.append(
             _canon(specs["x21_dedup_cluster_cc"].build(spark, sf_dir).toPandas())
         )
-    assert ran == ["2", "16"]
+    assert ran == [2, 16]
     assert outs[0] == outs[1]
     assert outs[0]  # non-vacuous: the fixture has near-dup clusters
 
@@ -274,10 +275,7 @@ def test_package_env_knobs_are_exactly_the_declared_set():
             names.update(read.findall(f.read()))
     assert names == {
         "SG_SCRATCH_DIR",
-        "SG_STREAM_SINK_SHUFFLE",
-        "SG_BROADCAST_KEY_CAP",
         "SG_PACK_SHARDS",
-        "SG_CC_LOOP_SHUFFLE",
         "SPARK_MASTER",
         "SPARK_GRAFT_CPUS",
         "SPARK_GRAFT_SHUFFLE_PARTITIONS",

@@ -2,8 +2,10 @@
 
 Every staged input (file-stream transports, storage layouts, b43's
 multi-format copies, b32/o11's bucketed tables) is written once per session and re-staged when its
-scratch dir was reaped (tmpfs may be cleared mid-session). The ordered
-stagers pin their stream order by mtime; these tests pin both contracts.
+scratch dir was reaped (an outside cleaner may clear scratch mid-session).
+The ordered stagers pin their stream order by mtime, and the process
+removes every scratch dir it made when it exits; these tests pin all three
+contracts.
 """
 
 from __future__ import annotations
@@ -11,6 +13,8 @@ from __future__ import annotations
 import filecmp
 import os
 import shutil
+import subprocess
+import sys
 
 import pytest
 
@@ -26,7 +30,7 @@ def _memo_dir(spark, name: str, key: tuple) -> str:
     def unstaged(_stage: str) -> None:
         raise AssertionError(f"{name}{key} was not staged")
 
-    return core.staged(spark, name, key, None, unstaged)
+    return core.staged(spark, name, key, unstaged)
 
 
 def _stream_rows(sdf):
@@ -88,7 +92,7 @@ _INPUTS = [
     "build,name,key", [i[1:] for i in _INPUTS], ids=[i[0] for i in _INPUTS]
 )
 def test_reaped_stage_is_restaged(spark, sf_dir, build, name, key):
-    """Build once, delete the staged dir (as a tmpfs reap would), build
+    """Build once, delete the staged dir (as an outside reap would), build
     again: the second call stages a NEW non-empty dir and the rows are
     unchanged — no stager may read a reaped dir."""
     key = (sf_dir, *key)
@@ -137,3 +141,39 @@ def test_ordered_stagers_pin_strictly_increasing_mtimes(
             os.path.join(stage_dir, "99_redelivered.parquet"),
             shallow=False,
         )
+
+
+@pytest.mark.slow
+def test_process_removes_its_scratch_at_exit(tmp_path, sf_dir):
+    """A process that built s10 (state versions + checkpoint), s24 twice
+    (four fresh dirs per build) and b43 (a staged layout) leaves no
+    ``sg_*`` entry under its scratch root once it exits. The child
+    prints what it made before exiting, so an empty root is not vacuous."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = """
+import os, sys
+from scylladb_redpanda_cdc_spark.plans import registry
+from scylladb_redpanda_cdc_spark.session import get_session
+
+spark = get_session("scratch-exit")
+spark.sparkContext.setLogLevel("ERROR")
+specs, sf = registry(), sys.argv[1]
+for qid in ("s10_foreachbatch_upsert", "s24_stream_state_recovery",
+            "s24_stream_state_recovery", "b43_multiformat_scan"):
+    specs[qid].build(spark, sf).collect()
+print("made", len([n for n in os.listdir(sys.argv[2]) if n.startswith("sg_")]))
+"""
+    env = dict(os.environ, SG_SCRATCH_DIR=str(tmp_path))
+    env["PYTHONPATH"] = repo + os.pathsep + env.get("PYTHONPATH", "")
+    proc = subprocess.run(
+        [sys.executable, "-c", script, sf_dir, str(tmp_path)],
+        env=env,
+        cwd=repo,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    made = int(proc.stdout.split("made ")[-1])
+    assert made >= 10, proc.stdout
+    assert [n for n in os.listdir(tmp_path) if n.startswith("sg_")] == []

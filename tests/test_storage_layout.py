@@ -26,7 +26,7 @@ def _layout(spark, sf_dir, name):
     def unstaged(_base):
         raise AssertionError(f"layout {name} was not staged")
 
-    return core.staged(spark, f"o_{name}", (sf_dir,), None, unstaged)
+    return core.staged(spark, f"o_{name}", (sf_dir,), unstaged)
 
 
 @pytest.fixture(scope="module")

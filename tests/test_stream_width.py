@@ -98,7 +98,6 @@ def test_fs_bytes_defensive(spark):
     """The streaming layer prices sources through the shared helper: a
     missing path is unpriceable (None), never an exception."""
     assert core.fs_bytes(spark, "/root/testdata/nope/missing") is None
-    assert core.table_bytes(spark, "/root/testdata/nope", "missing") is None
 
 
 def test_width_reaches_the_micro_batch_plan(spark, sf_dir, monkeypatch):
@@ -274,7 +273,7 @@ def test_changelog_staging_bounds_write_tasks_above_gate(
     # fixture discipline: below the gate one file per batch
     assert ops._changelog_files_per_batch(spark, sf_dir, 3) == 1
     monkeypatch.setattr(scale, "GATE_BYTES", 0)
-    src = core.table_bytes(spark, sf_dir, "orders")
+    src = scale.fs_bytes(spark, os.path.join(sf_dir, "orders.parquet"))
     n_rows = synth_changelog(spark, sf_dir).count()
     # n_files values no other test stages; each stage is deleted after
     # its check, so the memo re-stages it on any later call
@@ -313,39 +312,23 @@ def test_changelog_staging_bounds_write_tasks_above_gate(
             shutil.rmtree(staged)
 
 
-def test_scratch_routing_by_bytes_hint(monkeypatch):
-    """Corpus-scaled scratch must never land on RAM-backed tmpfs: at or
-    above the gate tmpdir() routes to the disk root; below it (and with
-    no hint — checkpoint/metadata dirs) placement is unchanged. The
-    round-14 ×1000 probe bought this the hard way: ~8 GB state versions
-    on /dev/shm OOM-killed the JVM."""
-    import os
-
-    assert core.tmpdir("hint_none").startswith(core._SCRATCH_ROOT)
-    small = scale.GATE_BYTES - 1
-    assert core.tmpdir("hint_small", bytes_hint=small).startswith(
-        core._SCRATCH_ROOT
-    )
-    big = core.tmpdir("hint_big", bytes_hint=scale.GATE_BYTES)
-    assert big.startswith(core._SCRATCH_DISK_ROOT)
-    if core._SCRATCH_ROOT != core._SCRATCH_DISK_ROOT:
-        assert not big.startswith(core._SCRATCH_ROOT)
-    for d in (big,):
-        os.rmdir(d)
-
-
-def test_bytes_hint_helpers_price_fixture_sources(spark, sf_dir):
-    import os
-
-    nb = core.table_bytes(spark, sf_dir, "events")
-    assert nb == os.path.getsize(os.path.join(sf_dir, "events.parquet"))
+def test_stream_source_bytes_prices_the_staged_dir(spark, sf_dir):
     sdf, staged = _staged_stream(spark, sf_dir)
     assert core.stream_source_bytes(sdf) == scale.fs_bytes(spark, staged)
     assert core.stream_source_bytes(None) is None
 
 
 def test_fixture_staging_stays_on_preferred_root(spark, sf_dir):
-    """Every fixture SF is below the 32 MB gate, so staged transports and
-    state dirs keep today's placement — floors untouched."""
+    """Flat layout: a staged transport and a ``_StateRunner`` state dir
+    sit directly under the one scratch root, named ``sg_<prefix>_…``
+    (perfbench reads ``sg_changelog_*`` and ``sg_state_*`` entries
+    there), and each is recorded for removal at exit."""
+    from scylladb_redpanda_cdc_spark.streaming.ops import _StateRunner
+
     sdf, staged = _staged_stream(spark, sf_dir)
-    assert staged.startswith(core._SCRATCH_ROOT)
+    state = _StateRunner(sdf, "state")._dirs["state"]
+    root = os.path.normpath(core._SCRATCH_ROOT)
+    for path, prefix in ((staged, "sg_changelog_"), (state, "sg_state_")):
+        assert os.path.dirname(path) == root
+        assert os.path.basename(path).startswith(prefix)
+        assert path in core._created
