@@ -39,6 +39,7 @@ from scylladb_redpanda_cdc_spark.sources.tables import load_table as _T
 from scylladb_redpanda_cdc_spark.streaming.core import (
     scoped_conf,
     staged,
+    tmpdir,
 )
 
 
@@ -861,17 +862,12 @@ def o14_cbo_stats_join(spark, sf_dir):
     Scale: ANALYZE is one scan per table, run at write time and amortized
     over every later query; the stats rows are catalog-sized. The join
     itself is b5's broadcast shape."""
-    import shutil
-    from urllib.parse import urlparse
-
-    wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
     for name, tbl in (("sg_o14_nation", "nation"), ("sg_o14_customer", "customer")):
-        # drop BOTH halves of a stale table: the catalog entry (this
-        # session) and the warehouse directory (which outlives the
-        # in-memory catalog and trips LOCATION_ALREADY_EXISTS otherwise)
+        # external tables in scratch, not managed ones under the caller's
+        # ./spark-warehouse: the process removes scratch at exit, and a
+        # fresh location per build never trips LOCATION_ALREADY_EXISTS
         spark.sql(f"DROP TABLE IF EXISTS {name}")
-        shutil.rmtree(f"{wh}/{name}", ignore_errors=True)
-        _T(spark, sf_dir, tbl).write.saveAsTable(name)
+        _T(spark, sf_dir, tbl).write.option("path", tmpdir(name)).saveAsTable(name)
         spark.sql(f"ANALYZE TABLE {name} COMPUTE STATISTICS FOR ALL COLUMNS")
     with scoped_conf(spark, "spark.sql.cbo.enabled", "true"):
         out = spark.sql(

@@ -10,15 +10,22 @@ order-insensitive (max offset wins no matter how events are batched), the
 final state is identical for ANY micro-batch partitioning of the log — that
 invariance is what makes the streaming and batch answers provably equal.
 
-Scale: state lives as parquet partitioned by the event key; each merge
-shuffles only on that key (the topic's own partitioning). On a real
-deployment the alternating-directory swap becomes an atomic table-format
-commit (Delta/Iceberg MERGE); the DAG is the same.
+Scale: S10/S22 state is log-structured — one base parquet version plus
+ordered delta versions, each a ``v<int>`` dir of one state dir. A small
+batch writes only the keys it touched as a delta; the base is rewritten
+when the outstanding deltas grow past a fixed share of it, and once more
+at the end of a drain if deltas are left, so the returned state is a read
+of one version. Each merge shuffles only on the event key (the topic's
+own partitioning); untouched base rows are never shuffled. On a real
+deployment a version write becomes a table-format commit (Delta/Iceberg
+MERGE); the DAG is the same.
 """
 
 from __future__ import annotations
 
+import functools
 import glob
+import logging
 import os
 import shutil
 from collections.abc import Callable, Iterator
@@ -66,6 +73,19 @@ CHANGELOG_INFLIGHT_MULTIPLIER = 4
 
 #: Target in-flight bytes per staging-WRITE task above the gate.
 STAGE_WRITE_TARGET_TASK_BYTES = 128 * 1024 * 1024
+
+#: Base-rewrite ratio of the S10/S22 merge state: a batch rewrites the
+#: base once ``REWRITE_RATIO × (outstanding delta rows + batch rows) ≥
+#: base rows``, and otherwise writes only its touched keys as a delta.
+#: So a batch holding a quarter of the base's rows or more is always a
+#: rewrite: perfbench's bulk catch-up batches hold a third or more and
+#: stay rewrites with margin, while its trickle batches (~800 keys
+#: against a 50k-key base) become deltas.
+REWRITE_RATIO = 4
+
+#: One line per state decision (delta, rewrite or fold) of the S10/S22
+#: merge, with the row counts it was taken on.
+_log = logging.getLogger("scylladb_redpanda_cdc_spark.streaming")
 
 
 def _pin_mtimes(paths: list[str]) -> None:
@@ -221,7 +241,8 @@ class _StateRunner:
     (S10/S22 merge, S14 dedup index, S15 heavy hitters, S17 MV): one
     availableNow drain of ``changes`` in which each micro-batch reads the
     current parquet version of its named states and writes each as
-    ``<state dir>/v{batch_id}``. The kernels keep only their per-batch
+    ``<state dir>/v{batch_id}`` (S10/S22 also write delta versions there,
+    see :func:`_run_incremental_merge`). The kernels keep only their per-batch
     DataFrame logic; the runner owns the scratch and checkpoint dirs, the
     version pointer, each version's priced bytes, the version sizing and
     the per-batch merge-width scope.
@@ -248,15 +269,22 @@ class _StateRunner:
         path = self.path[state]
         return None if path is None else self.spark.read.parquet(path)
 
+    def version(self, state: str, df: DataFrame, version: int, n_files: int) -> str:
+        """Write ``df`` in at most ``n_files`` files as ``state``'s
+        ``v{version}`` dir and return its path; the current version is
+        unchanged."""
+        path = os.path.join(self._dirs[state], f"v{version}")
+        df.coalesce(n_files).write.mode("overwrite").parquet(path)
+        return path
+
     def write(
         self, state: str, df: DataFrame, batch_id: int, floor: int, log: bool = True
     ) -> None:
-        """Write ``df`` as ``state``'s version for ``batch_id`` in
+        """Write ``df`` as ``state``'s current version for ``batch_id`` in
         ``state_file_count(prev + log, floor)`` files (prev alone with
         ``log=False``), then price it for the next batch."""
         nbytes = self.bytes[state] + (self.log_bytes if log else 0)
-        path = os.path.join(self._dirs[state], f"v{batch_id}")
-        df.coalesce(state_file_count(nbytes, floor)).write.mode("overwrite").parquet(path)
+        path = self.version(state, df, batch_id, state_file_count(nbytes, floor))
         self.path[state] = path
         self.bytes[state] = fs_bytes(self.spark, path) or 0
 
@@ -317,65 +345,138 @@ def _split_touched(
     )
 
 
+def _parquet_rows(spark: SparkSession, path: str) -> int:
+    """Rows of the parquet dir ``path``, summed from its file footers:
+    driver-side metadata through the Hadoop FS API, never a Spark job."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    rows = 0
+    for status in hpath.getFileSystem(conf).listStatus(hpath):
+        if status.getPath().getName().startswith(("_", ".")):
+            continue
+        reader = jvm.org.apache.parquet.hadoop.ParquetFileReader.open(
+            jvm.org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(status, conf)
+        )
+        try:
+            rows += reader.getRecordCount()
+        finally:
+            reader.close()
+    return rows
+
+
 def _run_incremental_merge(changes: DataFrame, key_cols: list[str], compact) -> DataFrame:
     """Shared incremental foreachBatch MERGE skeleton (S10/S22): drain the
     change stream to completion, per batch re-deriving state rows for
     TOUCHED keys only via ``compact`` (a per-key-closed recompute: given
     every state/batch row of a key set, return that key set's new state
-    rows), passing untouched keys through, and return the final raw state.
+    rows), and return the final raw state.
 
     ``compact`` must be order-insensitive over a key's accumulated rows
     (offset authority, SURVEY.md §4.4) — that is what makes the final
-    state identical for ANY micro-batch split of the log.
+    state identical for ANY micro-batch split of the log, and what lets
+    stale copies of a key's rows in older versions be compacted away.
 
-    Known write bound: each batch rewrites the FULL state to a new
-    parquet version (compute and shuffle are touched-keys-only; the
-    WRITE is not) — O(state bytes) of sequential parquet write per
-    batch. Plain parquet has no sub-file replace, so the alternatives
-    are hash-bucketed copy-on-write (defeated by key-random CDC
-    touches: with realistic touch rates every bucket is dirtied) or
-    merge-on-read delta files with periodic compaction — which is a
-    table format's job (Delta/Iceberg/Hudi; out of scope in this
-    container). A deployment that needs sub-state write cost swaps the
-    version write for a MERGE INTO on such a table; everything above
-    the write (the touched-key discipline) transfers unchanged.
+    State is log-structured: one BASE version plus ordered DELTA versions,
+    all ``v<int>`` dirs of the runner's state dir. A newer version
+    supersedes every older row of the keys it holds (s10: the latest row;
+    s22: the key's full re-led history). Per batch, with
+    ``batch_latest = compact(batch)``:
+
+    - delta: the touched rows of base ∪ deltas (one key probe) and
+      ``batch_latest`` are compacted and written alone, sized from the
+      drained log like every batch-sized write — a trickle batch writes
+      its own keys, not the whole state;
+    - rewrite, once ``REWRITE_RATIO × (delta rows + batch rows) ≥ base
+      rows`` (and for the first batch): with K the keys of deltas ∪ batch,
+      the new base is ``base anti K ∪ compact(base semi K ∪ deltas ∪
+      batch_latest)`` — one probe, untouched base rows never shuffled —
+      sized ``state_file_count(prev + log, 16)``; its row count comes
+      from the parquet footers;
+    - fold: deltas left when the drain ends are rewritten into one base
+      ``v{last batch id + 1}`` inside this call, so the returned state is
+      a plain read of one version.
+
+    The ratio counts rows on both sides — keys for s10, events for s22 —
+    and a delta counts as the batch rows it was written for, an upper
+    bound on its new keys. Every decision logs one line on the
+    ``scylladb_redpanda_cdc_spark.streaming`` logger.
     """
     run = _StateRunner(changes, "state")
+    deltas: list[str] = []  # delta version paths over the base, oldest first
+    base_rows = delta_rows = 0
+    last_batch = -1
+    schema = None
+
+    def read(paths: list[str]) -> DataFrame:
+        # one relation over several versions; the known schema spares a
+        # schema-inference job per read
+        return run.spark.read.schema(schema).parquet(*paths)
+
+    def rewrite(newer: list[DataFrame], n_newer: int, version: int) -> None:
+        # newer = the deltas and/or the batch, n_newer their rows; K = their keys
+        nonlocal base_rows, delta_rows
+        news = functools.reduce(DataFrame.unionByName, newer)
+        base, merged = None, news
+        if run.path["state"] is not None:
+            # persist: the untouched and touched halves both read the base
+            # (perfbench bulk on 4 cores: batch p50 5.4-6.1 s with it,
+            # 6.6-6.7 s without)
+            base = read([run.path["state"]]).persist()
+            untouched, touched = _split_touched(base, news, key_cols, n_newer)
+            merged = untouched.unionByName(compact(touched.unionByName(news)))
+        run.write("state", merged, version, 16)
+        if base is not None:
+            base.unpersist()
+        deltas.clear()
+        base_rows, delta_rows = _parquet_rows(run.spark, run.path["state"]), 0
+
+    def decided(kind: str, version: int, counts: tuple[int, int, int, int]) -> None:
+        # counts: batch rows, delta rows, deltas, base rows before the decision
+        _log.info(
+            "state %s v%d: %s (batch rows %d, delta rows %d in %d deltas, base rows %d)",
+            os.path.basename(os.path.dirname(run.path["state"])), version, kind, *counts,
+        )
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        # Scale shape: the full state is NEVER shuffled. Keys untouched by
-        # this batch pass through via a broadcast anti-join; only touched
-        # keys (semi-join ∪ batch) go through the compaction window, which
-        # is batch-sized. Re-windowing prev ∪ batch wholesale would shuffle
-        # the entire state every batch — O(state x batches) at 100 TB.
-        # Offset comparison (not blind overwrite) keeps the merge
-        # order-insensitive: a key's OLDER event arriving in a LATER batch
-        # cannot regress the state (SURVEY.md §4.4 offset authority).
-        # persist: batch_latest feeds three consumers (key broadcast x2 +
-        # union) and prev two (anti + semi) — without caching each would
-        # recompute/rescan per consumer.
+        nonlocal last_batch, schema, delta_rows
+        last_batch = batch_id
+        # persist: batch_latest feeds the count, the key probe and the union
         batch_latest = compact(batch_df).persist()
-        n_batch_keys = batch_latest.count()
-        prev = run.read("state")
-        if prev is None:
-            merged = batch_latest
+        schema = batch_latest.schema
+        n_batch = batch_latest.count()
+        counts = (n_batch, delta_rows, len(deltas), base_rows)
+        if run.path["state"] is None or REWRITE_RATIO * (delta_rows + n_batch) >= base_rows:
+            newer = [read(deltas), batch_latest] if deltas else [batch_latest]
+            rewrite(newer, delta_rows + n_batch, batch_id)
+            kind = "rewrite"
         else:
-            prev = prev.persist()
-            untouched, touched = _split_touched(prev, batch_latest, key_cols, n_batch_keys)
-            merged = untouched.unionByName(compact(touched.unionByName(batch_latest)))
-        # cap state-file count: unaffected keeps prev's partitioning and
-        # affected adds the window's shuffle partitions, so without a
-        # coalesce the state gains ~shuffle.partitions files per batch
-        # (compounding read fan-out)
-        run.write("state", merged, batch_id, 16)
+            # Offset comparison (not blind overwrite) keeps the merge
+            # order-insensitive: a key's OLDER event arriving in a LATER
+            # batch cannot regress the state (SURVEY.md §4.4).
+            versions = read([run.path["state"], *deltas])
+            _, touched = _split_touched(versions, batch_latest, key_cols, n_batch)
+            # a delta is batch-sized, and the drained log bounds any batch
+            deltas.append(
+                run.version(
+                    "state",
+                    compact(touched.unionByName(batch_latest)),
+                    batch_id,
+                    state_file_count(run.log_bytes, 1),
+                )
+            )
+            delta_rows += n_batch
+            kind = "delta"
+        decided(kind, batch_id, counts)
         batch_latest.unpersist()
-        if prev is not None:
-            prev.unpersist()
 
     run.drain(merge)
-    state = run.read("state")
-    assert state is not None, "stream produced no batches"
-    return state
+    assert run.path["state"] is not None, "stream produced no batches"
+    if deltas:
+        counts = (0, delta_rows, len(deltas), base_rows)
+        rewrite([read(deltas)], delta_rows, last_batch + 1)
+        decided("fold", last_batch + 1, counts)
+    return read([run.path["state"]])
 
 
 def foreachbatch_upsert(

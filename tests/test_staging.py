@@ -177,3 +177,55 @@ print("made", len([n for n in os.listdir(sys.argv[2]) if n.startswith("sg_")]))
     made = int(proc.stdout.split("made ")[-1])
     assert made >= 10, proc.stdout
     assert [n for n in os.listdir(tmp_path) if n.startswith("sg_")] == []
+
+
+def test_o14_tables_stay_out_of_the_warehouse(tmp_path, sf_dir):
+    """o14 saves its two ANALYZE'd tables as external tables in scratch,
+    not as managed tables under ``./spark-warehouse`` of whatever cwd the
+    caller runs in: a child run from a fresh cwd leaves no ``sg_o14_*``
+    there, its rows match the oracle, and its scratch is gone at exit."""
+    import json
+
+    import pandas as pd
+    from oracle_util import duckdb_connection, normalize
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    cwd, scratch = tmp_path / "cwd", tmp_path / "scratch"
+    cwd.mkdir()
+    scratch.mkdir()
+    script = """
+import json, sys
+from scylladb_redpanda_cdc_spark.plans import registry
+from scylladb_redpanda_cdc_spark.session import get_session
+
+spark = get_session("o14-cwd")
+spark.sparkContext.setLogLevel("ERROR")
+rows = registry()["o14_cbo_stats_join"].build(spark, sys.argv[1]).toPandas()
+print(json.dumps({"warehouse": spark.conf.get("spark.sql.warehouse.dir"),
+                  "rows": rows.to_dict("records")}))
+"""
+    env = dict(os.environ, SG_SCRATCH_DIR=str(scratch))
+    env["PYTHONPATH"] = repo + os.pathsep + env.get("PYTHONPATH", "")
+    proc = subprocess.run(
+        [sys.executable, "-c", script, sf_dir],
+        env=env,
+        cwd=cwd,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    out = json.loads(proc.stdout.strip().splitlines()[-1])
+    warehouse = out["warehouse"].removeprefix("file:")
+    assert warehouse.startswith(str(cwd))
+    left = [
+        os.path.join(dp, d)
+        for dp, dirs, _ in os.walk(cwd)
+        for d in dirs
+        if d.startswith("sg_o14_")
+    ]
+    assert left == []
+    assert [n for n in os.listdir(scratch) if n.startswith("sg_")] == []
+    con = duckdb_connection(sf_dir)
+    expected = con.sql(SQ._O14_SQL).df()
+    assert normalize(pd.DataFrame(out["rows"])) == normalize(expected)
