@@ -12,13 +12,14 @@ invariance is what makes the streaming and batch answers provably equal.
 
 Scale: S10/S22 state is log-structured — one base parquet version plus
 ordered delta versions, each a ``v<int>`` dir of one state dir. A small
-batch writes only the keys it touched as a delta; the base is rewritten
-when the outstanding deltas grow past a fixed share of it, and once more
-at the end of a drain if deltas are left, so the returned state is a read
-of one version. Each merge shuffles only on the event key (the topic's
-own partitioning); untouched base rows are never shuffled. On a real
-deployment a version write becomes a table-format commit (Delta/Iceberg
-MERGE); the DAG is the same.
+batch writes its own compacted rows as a delta and never reads the base;
+the base is rewritten when the outstanding deltas grow past a fixed share
+of it, and once more at the end of a drain if deltas are left, so the
+returned state is a read of one version. Each rewrite shuffles only on
+the event key (the topic's own partitioning); untouched base rows are
+never shuffled. On a real deployment a delta is a state store's per-batch
+delta file and a rewrite its snapshot (or a table-format commit); the
+DAG is the same.
 """
 
 from __future__ import annotations
@@ -32,6 +33,7 @@ from collections.abc import Callable, Iterator
 from contextlib import ExitStack
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from scylladb_redpanda_cdc_spark.operators.cdc import (
     apply_mv_diff,
@@ -76,7 +78,7 @@ STAGE_WRITE_TARGET_TASK_BYTES = 128 * 1024 * 1024
 
 #: Base-rewrite ratio of the S10/S22 merge state: a batch rewrites the
 #: base once ``REWRITE_RATIO × (outstanding delta rows + batch rows) ≥
-#: base rows``, and otherwise writes only its touched keys as a delta.
+#: base rows``, and otherwise writes its compacted rows alone as a delta.
 #: So a batch holding a quarter of the base's rows or more is always a
 #: rewrite: perfbench's bulk catch-up batches hold a third or more and
 #: stay rewrites with margin, while its trickle batches (~800 keys
@@ -244,8 +246,9 @@ class _StateRunner:
     ``<state dir>/v{batch_id}`` (S10/S22 also write delta versions there,
     see :func:`_run_incremental_merge`). The kernels keep only their per-batch
     DataFrame logic; the runner owns the scratch and checkpoint dirs, the
-    version pointer, each version's priced bytes, the version sizing and
-    the per-batch merge-width scope.
+    version pointer, each state's schema (so a read infers none), each
+    version's priced bytes, the version sizing and the per-batch
+    merge-width scope.
 
     Sizing: ``log_bytes`` is the staged log's on-disk size, priced once
     per drain. The drain is availableNow, so every batch is a subset of
@@ -261,13 +264,20 @@ class _StateRunner:
         self.spark = changes.sparkSession
         self.log_bytes = stream_source_bytes(changes) or 0
         self._dirs = {s: tmpdir(s) for s in states}
+        self._schema: dict[str, StructType] = {}
         self.path: dict[str, str | None] = dict.fromkeys(states)
         self.bytes: dict[str, int] = dict.fromkeys(states, 0)
 
-    def read(self, state: str) -> DataFrame | None:
-        """The current version of ``state``, or None before its first write."""
-        path = self.path[state]
-        return None if path is None else self.spark.read.parquet(path)
+    def read(self, state: str, *paths: str) -> DataFrame | None:
+        """``state``'s versions ``paths`` as one relation (its current
+        version if none are given), or None before its first write. The
+        read takes the schema its writes recorded, so it starts no
+        schema-inference job."""
+        if not paths:
+            if self.path[state] is None:
+                return None
+            paths = (self.path[state],)
+        return self.spark.read.schema(self._schema[state]).parquet(*paths)
 
     def version(self, state: str, df: DataFrame, version: int, n_files: int) -> str:
         """Write ``df`` in at most ``n_files`` files as ``state``'s
@@ -275,6 +285,7 @@ class _StateRunner:
         unchanged."""
         path = os.path.join(self._dirs[state], f"v{version}")
         df.coalesce(n_files).write.mode("overwrite").parquet(path)
+        self._schema[state] = df.schema
         return path
 
     def write(
@@ -367,26 +378,25 @@ def _parquet_rows(spark: SparkSession, path: str) -> int:
 
 def _run_incremental_merge(changes: DataFrame, key_cols: list[str], compact) -> DataFrame:
     """Shared incremental foreachBatch MERGE skeleton (S10/S22): drain the
-    change stream to completion, per batch re-deriving state rows for
-    TOUCHED keys only via ``compact`` (a per-key-closed recompute: given
-    every state/batch row of a key set, return that key set's new state
-    rows), and return the final raw state.
+    change stream to completion, folding each batch into the state via
+    ``compact`` (a per-key-closed recompute: given every state/batch row
+    of a key set, return that key set's new state rows), and return the
+    final raw state.
 
     ``compact`` must be order-insensitive over a key's accumulated rows
-    (offset authority, SURVEY.md §4.4) — that is what makes the final
-    state identical for ANY micro-batch split of the log, and what lets
-    stale copies of a key's rows in older versions be compacted away.
+    (offset authority, SURVEY.md §4.4: a key's OLDER event arriving in a
+    LATER batch cannot regress the state) — that is what makes the final
+    state identical for ANY micro-batch split of the log, and what lets a
+    key's rows spread over several versions be compacted together.
 
     State is log-structured: one BASE version plus ordered DELTA versions,
-    all ``v<int>`` dirs of the runner's state dir. A newer version
-    supersedes every older row of the keys it holds (s10: the latest row;
-    s22: the key's full re-led history). Per batch, with
+    all ``v<int>`` dirs of the runner's state dir. Per batch, with
     ``batch_latest = compact(batch)``:
 
-    - delta: the touched rows of base ∪ deltas (one key probe) and
-      ``batch_latest`` are compacted and written alone, sized from the
-      drained log like every batch-sized write — a trickle batch writes
-      its own keys, not the whole state;
+    - delta: ``batch_latest`` itself is written, sized from the drained
+      log like every batch-sized write — batch-sized work that never
+      reads the base or the older deltas. A delta is read only by the
+      next rewrite's compaction;
     - rewrite, once ``REWRITE_RATIO × (delta rows + batch rows) ≥ base
       rows`` (and for the first batch): with K the keys of deltas ∪ batch,
       the new base is ``base anti K ∪ compact(base semi K ∪ deltas ∪
@@ -398,20 +408,13 @@ def _run_incremental_merge(changes: DataFrame, key_cols: list[str], compact) -> 
       a plain read of one version.
 
     The ratio counts rows on both sides — keys for s10, events for s22 —
-    and a delta counts as the batch rows it was written for, an upper
-    bound on its new keys. Every decision logs one line on the
-    ``scylladb_redpanda_cdc_spark.streaming`` logger.
+    and a delta counts the rows it wrote. Every decision logs one line on
+    the ``scylladb_redpanda_cdc_spark.streaming`` logger.
     """
     run = _StateRunner(changes, "state")
     deltas: list[str] = []  # delta version paths over the base, oldest first
     base_rows = delta_rows = 0
     last_batch = -1
-    schema = None
-
-    def read(paths: list[str]) -> DataFrame:
-        # one relation over several versions; the known schema spares a
-        # schema-inference job per read
-        return run.spark.read.schema(schema).parquet(*paths)
 
     def rewrite(newer: list[DataFrame], n_newer: int, version: int) -> None:
         # newer = the deltas and/or the batch, n_newer their rows; K = their keys
@@ -422,7 +425,7 @@ def _run_incremental_merge(changes: DataFrame, key_cols: list[str], compact) -> 
             # persist: the untouched and touched halves both read the base
             # (perfbench bulk on 4 cores: batch p50 5.4-6.1 s with it,
             # 6.6-6.7 s without)
-            base = read([run.path["state"]]).persist()
+            base = run.read("state").persist()
             untouched, touched = _split_touched(base, news, key_cols, n_newer)
             merged = untouched.unionByName(compact(touched.unionByName(news)))
         run.write("state", merged, version, 16)
@@ -439,31 +442,21 @@ def _run_incremental_merge(changes: DataFrame, key_cols: list[str], compact) -> 
         )
 
     def merge(batch_df: DataFrame, batch_id: int) -> None:
-        nonlocal last_batch, schema, delta_rows
+        nonlocal last_batch, delta_rows
         last_batch = batch_id
-        # persist: batch_latest feeds the count, the key probe and the union
+        # persist: batch_latest feeds the count and the write (a rewrite
+        # also probes its keys and unions it)
         batch_latest = compact(batch_df).persist()
-        schema = batch_latest.schema
         n_batch = batch_latest.count()
         counts = (n_batch, delta_rows, len(deltas), base_rows)
         if run.path["state"] is None or REWRITE_RATIO * (delta_rows + n_batch) >= base_rows:
-            newer = [read(deltas), batch_latest] if deltas else [batch_latest]
+            newer = [run.read("state", *deltas), batch_latest] if deltas else [batch_latest]
             rewrite(newer, delta_rows + n_batch, batch_id)
             kind = "rewrite"
         else:
-            # Offset comparison (not blind overwrite) keeps the merge
-            # order-insensitive: a key's OLDER event arriving in a LATER
-            # batch cannot regress the state (SURVEY.md §4.4).
-            versions = read([run.path["state"], *deltas])
-            _, touched = _split_touched(versions, batch_latest, key_cols, n_batch)
             # a delta is batch-sized, and the drained log bounds any batch
             deltas.append(
-                run.version(
-                    "state",
-                    compact(touched.unionByName(batch_latest)),
-                    batch_id,
-                    state_file_count(run.log_bytes, 1),
-                )
+                run.version("state", batch_latest, batch_id, state_file_count(run.log_bytes, 1))
             )
             delta_rows += n_batch
             kind = "delta"
@@ -474,9 +467,9 @@ def _run_incremental_merge(changes: DataFrame, key_cols: list[str], compact) -> 
     assert run.path["state"] is not None, "stream produced no batches"
     if deltas:
         counts = (0, delta_rows, len(deltas), base_rows)
-        rewrite([read(deltas)], delta_rows, last_batch + 1)
+        rewrite([run.read("state", *deltas)], delta_rows, last_batch + 1)
         decided("fold", last_batch + 1, counts)
-    return read([run.path["state"]])
+    return run.read("state")
 
 
 def foreachbatch_upsert(
@@ -503,8 +496,9 @@ def foreachbatch_scd2(
     """S22: incremental SCD Type-2 MERGE — state is the key's full event
     history with each row's successor offset maintained (A30's validity
     clock). The compact step recomputes ``next_offset`` by a lead() over
-    the touched keys' accumulated events only — batch-sized work, history
-    never re-shuffled; (key, offset) dedup makes redelivery idempotent
+    a batch's own events (a delta) or the touched keys' accumulated events
+    (a rewrite) — untouched history never re-shuffled; (key, offset)
+    dedup makes redelivery idempotent
     (events are immutable per offset, A21's contract). Because lead()
     over a key's complete event set is order-insensitive to arrival
     batching, the final table equals A30's one-pass batch build for ANY

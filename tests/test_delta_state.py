@@ -7,8 +7,10 @@ rewrite the base; these tests drain a trickle-shaped log instead (a
 snapshot, then 12 small batches) so every path runs: deltas, a mid-drain
 base rewrite and the end-of-drain fold. The result must equal the batch
 build, the state dir must show the three paths and hold nothing but
-``v<int>`` dirs (perfbench counts state bytes there), and each key's
-newest version must hold its whole state.
+``v<int>`` dirs (perfbench counts state bytes there), every delta must be
+the compaction of its own batch alone, and at every batch boundary the
+live base plus its deltas must compact to the compaction of the log so
+far. The runner reads a written version without a schema-inference job.
 """
 
 from __future__ import annotations
@@ -21,7 +23,7 @@ import re
 import pytest
 from pyspark.sql import functions as F
 
-from scylladb_redpanda_cdc_spark.operators.cdc import materialize_latest
+from scylladb_redpanda_cdc_spark.operators.cdc import materialize_latest, with_next_offset
 from scylladb_redpanda_cdc_spark.plans.cdc_queries import a30_scd2_dimension_history
 from scylladb_redpanda_cdc_spark.sources.changelog import synth_changelog
 from scylladb_redpanda_cdc_spark.streaming import ops
@@ -111,21 +113,37 @@ def _assert_all_paths_ran(kinds: dict[int, str]) -> None:
     assert kinds[last + 1] == "base"
 
 
-def _assert_newest_version_wins(spark, state_dir: str) -> None:
-    """A newer version supersedes every older row of the keys it holds:
-    taking each key's rows from the newest batch version that holds it
-    gives exactly the folded state."""
-    from pyspark.sql import Window
+def _s10_compact(df):
+    return materialize_latest(df, KEYS, drop_deletes=False)
 
-    last = N_SMALL
-    frames = [
-        spark.read.parquet(os.path.join(state_dir, f"v{v}")).withColumn("__v", F.lit(v))
-        for v in range(last + 1)
-    ]
-    every = functools.reduce(lambda a, b: a.unionByName(b), frames)
-    newest = every.withColumn("__top", F.max("__v").over(Window.partitionBy(*KEYS)))
-    newest = newest.filter(F.col("__v") == F.col("__top")).drop("__v", "__top")
-    assert _canon(newest) == _canon(spark.read.parquet(os.path.join(state_dir, f"v{last + 1}")))
+
+def _s22_compact(df):
+    return with_next_offset(df.drop("next_offset").dropDuplicates([*KEYS, "offset"]), KEYS)
+
+
+def _assert_versions_compact_the_log(spark, trickle_dir, state_dir, kinds, compact) -> None:
+    """Every delta ``v<b>`` is ``compact(log file b)`` exactly, and after
+    every version ``v<b>`` the live base plus its deltas up to ``v<b>``
+    compact to ``compact(log files 0..b)`` — every intermediate layout,
+    not only the folded one (the fold ``v{N_SMALL + 1}`` covers the whole
+    log)."""
+    files = [os.path.join(trickle_dir, n) for n in sorted(os.listdir(trickle_dir))]
+
+    def log(paths):
+        return spark.read.schema(ops.CHANGELOG_STREAM_DDL).parquet(*paths)
+
+    def version(v):
+        return spark.read.parquet(os.path.join(state_dir, f"v{v}"))
+
+    live: list[int] = []  # the live base, then its deltas
+    for v in sorted(kinds):
+        if kinds[v] == "delta":
+            assert _canon(version(v)) == _canon(compact(log(files[v : v + 1]))), v
+            live.append(v)
+        else:
+            live = [v]
+        layout = functools.reduce(lambda a, b: a.unionByName(b), map(version, live))
+        assert _canon(compact(layout)) == _canon(compact(log(files[: v + 1]))), v
 
 
 #: One decision line of the ``scylladb_redpanda_cdc_spark.streaming`` logger.
@@ -142,7 +160,7 @@ def test_s10_delta_path_equals_batch_build(spark, sf_dir, trickle_dir, caplog):
     assert _canon(state) == _canon(expected)
     kinds = _layout(spark, _state_dir(state))
     _assert_all_paths_ran(kinds)
-    _assert_newest_version_wins(spark, _state_dir(state))
+    _assert_versions_compact_the_log(spark, trickle_dir, _state_dir(state), kinds, _s10_compact)
 
     # one log line per batch plus the fold, naming what the dir shows and
     # carrying the counts the decision was taken on: a delta only while
@@ -172,8 +190,9 @@ def test_s10_delta_path_equals_batch_build(spark, sf_dir, trickle_dir, caplog):
 def test_s22_delta_path_equals_a30(spark, sf_dir, trickle_dir):
     state = ops.foreachbatch_scd2(_stream(spark, trickle_dir), KEYS)
     assert _canon(state) == _canon(a30_scd2_dimension_history(spark, sf_dir))
-    _assert_all_paths_ran(_layout(spark, _state_dir(state)))
-    _assert_newest_version_wins(spark, _state_dir(state))
+    kinds = _layout(spark, _state_dir(state))
+    _assert_all_paths_ran(kinds)
+    _assert_versions_compact_the_log(spark, trickle_dir, _state_dir(state), kinds, _s22_compact)
 
 
 @pytest.mark.parametrize("qid", ["s10_foreachbatch_upsert", "s22_stream_scd2"])
@@ -185,3 +204,27 @@ def test_registry_state_dirs_hold_only_versions(spark, sf_dir, qid):
     state = registry()[qid].build(spark, sf_dir)
     kinds = _layout(spark, _state_dir(state))
     assert set(kinds.values()) == {"base"}  # 2-3 large batches: all rewrites
+
+
+def test_runner_reads_a_version_without_a_job(spark, trickle_dir):
+    """A version read through the runner takes the schema its write
+    recorded: it starts no Spark job (a schema-less parquet read starts a
+    schema-inference job per call)."""
+    run = ops._StateRunner(_stream(spark, trickle_dir), "probe")
+    rows = spark.range(100).selectExpr("id", "id % 7 AS bucket", "cast(id AS string) AS tag")
+    run.write("probe", rows, 0, 1)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def jobs(group: str, action) -> list[int]:
+        sc.setJobGroup(group, group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return list(tracker.getJobIdsForGroup(group))
+
+    assert jobs("sg_runner_read", lambda: run.read("probe")) == []
+    # the tracker does see this group's jobs once one runs
+    assert jobs("sg_runner_count", lambda: run.read("probe").count())
+    assert _canon(run.read("probe")) == _canon(rows)
